@@ -348,24 +348,9 @@ object Main {
           .option("maxFilesPerTrigger",
             opt(spec, "maxFilesPerTrigger").getOrElse("10"))
           .parquet(req(spec, "path"))
-      case "es-stream" =>
-        withHeaderOptions(spec,
-          spark.readStream.format("graft.sources.es.EsStoreProvider")
-            .schema(StructType.fromDDL(req(spec, "schema")))
-            .option("base", req(spec, "base"))
-            .option("index", req(spec, "index"))
-            .option("wmcol", req(spec, "wmcol"))
-            .option("slices", opt(spec, "slices").getOrElse("8"))
-            .option("readmode", opt(spec, "readMode").getOrElse("scroll")))
-          .load()
-      case "http-stream" =>
-        withHeaderOptions(spec,
-          spark.readStream.format("graft.sources.http.HttpStoreProvider")
-            .schema(StructType.fromDDL(req(spec, "schema")))
-            .option("base", req(spec, "base"))
-            .option("wmcol", req(spec, "wmcol"))
-            .option("slices", opt(spec, "slices").getOrElse("8")))
-          .load()
+      case "es-stream" | "http-stream" =>
+        val (format, schema, options) = connectorRead(spec, "index", "wmcol")
+        spark.readStream.format(format).schema(schema).options(options).load()
       case other => sys.error(
         s"unknown streaming source type '$other' " +
           "(parquet-stream | es-stream | http-stream)")
@@ -386,29 +371,11 @@ object Main {
       // predicate then pushes down as a server-side range inside the
       // scroll — WITHOUT this, every incremental run would scroll the
       // ENTIRE remote index and filter client-side
-      case "es" if spec.hasNonNull("wmCol") =>
+      case "es" | "http" if spec.hasNonNull("wmCol") =>
+        val (format, schema, options) = connectorRead(spec, "alias", "wmCol")
         new DocumentSource {
           override def scan(s: SparkSession): DataFrame =
-            withHeaderOptions(spec, s.read
-              .format("graft.sources.es.EsStoreProvider")
-              .schema(StructType.fromDDL(req(spec, "schema")))
-              .option("base", req(spec, "base"))
-              .option("index", req(spec, "alias"))
-              .option("wmcol", req(spec, "wmCol"))
-              .option("slices", opt(spec, "slices").getOrElse("8"))
-              .option("readmode", opt(spec, "readMode").getOrElse("scroll")))
-            .load()
-        }
-      case "http" if spec.hasNonNull("wmCol") =>
-        new DocumentSource {
-          override def scan(s: SparkSession): DataFrame =
-            withHeaderOptions(spec, s.read
-              .format("graft.sources.http.HttpStoreProvider")
-              .schema(StructType.fromDDL(req(spec, "schema")))
-              .option("base", req(spec, "base"))
-              .option("wmcol", req(spec, "wmCol"))
-              .option("slices", opt(spec, "slices").getOrElse("8")))
-            .load()
+            s.read.format(format).schema(schema).options(options).load()
         }
       case _ => storeOf(spec)
     }
@@ -451,17 +418,26 @@ object Main {
       out.result()
     }.getOrElse(Map.empty)
 
-  /** Fold the spec's headers into `header.<name>` DSv2 options so the
-    * connector carries them on every exchange.
+  /** An es/http source spec as a DSv2 connector read: format, schema
+    * and options, the spec's headers folded into `header.<name>`
+    * options so the connector carries them on every exchange. The
+    * batch and stream specs name the index and watermark fields
+    * differently (`alias`/`wmCol` vs `index`/`wmcol`).
     */
-  private def withHeaderOptions(spec: JsonNode,
-      r: org.apache.spark.sql.DataFrameReader): org.apache.spark.sql.DataFrameReader =
-    headersOf(spec).foldLeft(r) { case (acc, (k, v)) => acc.option(s"header.$k", v) }
-
-  private def withHeaderOptions(spec: JsonNode,
-      r: org.apache.spark.sql.streaming.DataStreamReader)
-      : org.apache.spark.sql.streaming.DataStreamReader =
-    headersOf(spec).foldLeft(r) { case (acc, (k, v)) => acc.option(s"header.$k", v) }
+  private def connectorRead(spec: JsonNode, indexField: String,
+      wmField: String): (String, StructType, Map[String, String]) = {
+    val es = req(spec, "type").startsWith("es")
+    val format =
+      if (es) "graft.sources.es.EsStoreProvider"
+      else "graft.sources.http.HttpStoreProvider"
+    val options = Map("base" -> req(spec, "base"), "wmcol" -> req(spec, wmField),
+        "slices" -> opt(spec, "slices").getOrElse("8")) ++
+      (if (es) Map("index" -> req(spec, indexField),
+        "readmode" -> opt(spec, "readMode").getOrElse("scroll"))
+      else Map.empty) ++
+      headersOf(spec).map { case (k, v) => s"header.$k" -> v }
+    (format, StructType.fromDDL(req(spec, "schema")), options)
+  }
 
   /** The jx document for the query endpoints: inline `"query"` object
     * or a `"queryFile"` path.

@@ -205,6 +205,20 @@ object Hierarchy extends QueryPack {
     * relation. Worst case (deleting a root-adjacent edge of one huge
     * component) degrades to re-closing that component — exactly the
     * reference's behavior.
+    *
+    * Precondition: the result is exactly `closure(remainingEdges)`
+    * when (1) `existing` agrees with that closure on every ancestor
+    * outside the affected set, and (2) every node an affected ancestor
+    * reaches over `remainingEdges` is already stored as its
+    * descendant. A caller that folds additions in afterwards
+    * ([[incrementalClosure]]) therefore passes only the surviving OLD
+    * edges as `remainingEdges` — an added edge would break (2): it is
+    * re-closed only within the old descendant scope, and the add fold
+    * then finds it stored and never propagates it further. Where the
+    * stored closure may already hold pairs through the added edges (a
+    * rerun after a partially applied patch), the added edges join
+    * `removedEdges` so their parents' ancestors are affected too,
+    * which restores (1).
     */
   def incrementalClosureDelete(existing: DataFrame, remainingEdges: DataFrame,
       removedEdges: DataFrame): DataFrame = {

@@ -247,8 +247,8 @@ object Multimodal extends QueryPack {
       * `drawImage` blit into TYPE_INT_RGB (AWT's optimized conversion
       * loop, same sRGB values `getRGB` produces) and then index the
       * backing DataBufferInt directly. Values identical —
-      * MultimodalSpec pins them; tools/DecodeBench is the A/B
-      * harness.
+      * MultimodalSpec pins them; the A/B is recorded in BASELINE.md
+      * (Round 18, "ImageIoDecoder raster-once pixel reads").
       */
     private def pixels(img: java.awt.image.BufferedImage): Array[Int] = {
       import java.awt.image.{BufferedImage, DataBufferInt}

@@ -287,7 +287,7 @@ object EtlPipeline {
           StructField("parent", LongType),
           StructField("op", org.apache.spark.sql.types.StringType),
           StructField("seq", LongType))))
-      ).localCheckpoint() // read for the transition AND the live union
+      ).localCheckpoint() // read for the transition AND the survivors
     // added/removed are the STORE TRANSITION on the touched keys, not
     // the batch's face value: a STALE event (older seq than the stored
     // row — cross-batch reordering, redelivery) loses the latest-wins
@@ -310,19 +310,21 @@ object EtlPipeline {
     val liveTouched = postTouched.where(col("op") === "add")
       .select(col("child"), col("parent"))
       .localCheckpoint()
-    // Full surviving edge set for the scoped delete re-close: the
-    // stored live edges on untouched keys ∪ the post-state live edges
-    // on touched keys — identical to what a post-upsert scan would
-    // return, without needing the upsert to have run.
-    val live = prevEdges.where(col("op") === "add")
-      .select(col("child"), col("parent"))
-      .join(batchKeys, Seq("child", "parent"), "left_anti")
-      .unionByName(liveTouched)
-      .localCheckpoint()
     val removed = prevLiveTouched
       .join(liveTouched, Seq("child", "parent"), "left_anti")
     val added = liveTouched
       .join(prevLiveTouched, Seq("child", "parent"), "left_anti")
+    // The delete step rebuilds closure(survivors) exactly, so the add
+    // fold below starts from a closed relation: it re-closes over the
+    // SURVIVING OLD edges (stored live minus removed, never the added
+    // ones — an added edge re-closed inside the old descendant scope
+    // would be stored already and the fold would never propagate it
+    // beyond that scope), and the added edges' parents seed the
+    // re-close region too (a rerun after a partially applied patch
+    // finds pairs through the added edges already stored).
+    val survivors = prevEdges.where(col("op") === "add")
+      .select(col("child"), col("parent"))
+      .join(removed, Seq("child", "parent"), "left_anti")
     val existing = (
       if (dest.exists(s))
         dest.scan(s).select(col("ancestor"), col("descendant"), col("depth"))
@@ -331,7 +333,8 @@ object EtlPipeline {
       ).localCheckpoint() // diffed against twice below
     val afterDel =
       if (removed.head(1).isEmpty) existing
-      else Hierarchy.incrementalClosureDelete(existing, live, removed)
+      else Hierarchy.incrementalClosureDelete(existing, survivors,
+        removed.unionByName(added))
     val updated = (
       if (added.head(1).isEmpty) afterDel
       else Hierarchy.incrementalClosure(afterDel, added)

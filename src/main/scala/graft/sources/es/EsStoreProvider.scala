@@ -1,38 +1,18 @@
 package graft.sources.es
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import graft.sources.EsDocumentStore
+import graft.sources.{ConnectorOptions, ConnectorProvider, EsDocumentStore, Wire}
 import graft.sources.http.HttpRows
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual}
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.types._
 
-/** DataSource V2 connector for a REAL Elasticsearch endpoint — the
-  * [[graft.sources.http.HttpStoreProvider]] design speaking
-  * [[graft.sources.EsDocumentStore]]'s wire format, so Catalyst
-  * drives what reaches the cluster:
-  *
-  *  - **watermark pushdown**: an extract's `wm > bookmark` predicate
-  *    becomes a `range` query INSIDE the sliced scroll body —
-  *    evaluated by ES, exactly the reference's incremental pull.
-  *    Pushed filters stay residual (Spark re-checks them), so a
-  *    mapping where the field isn't indexed costs bandwidth, never
-  *    correctness.
-  *  - **column pruning**: only requested fields parse out of each
-  *    hit's `_source`.
-  *  - **slice-per-partition**: one `InputPartition` per scroll slice
-  *    (`"slice":{"id":i,"max":n}`), each task walking its own scroll
-  *    cursor with the per-page retry underneath.
-  *  - **streaming**: `readStream` polls the max-aggregation watermark
-  *    and reads the half-open `(lastOffset, maxWm]` bracket
-  *    server-side per micro-batch — the reference's ES polling loop
-  *    as a real Structured Streaming source, with the same
-  *    server-assigned-monotone-watermark contract as the HTTP
-  *    source's scaladoc spells out.
+/** The [[graft.sources.ConnectorProvider]] connector over a REAL
+  * Elasticsearch endpoint, speaking [[graft.sources.EsDocumentStore]]'s
+  * wire format: the watermark bound becomes a `range` query INSIDE the
+  * sliced scroll (or PIT, `readmode=pit`) body — evaluated by ES,
+  * exactly the reference's incremental pull — with one scroll slice
+  * (`"slice":{"id":i,"max":n}`) per partition; the streaming offsets
+  * are the max-aggregation watermark; writes bulk external_gte with
+  * the per-item 429 retry.
   *
   * Usage:
   * {{{
@@ -45,172 +25,83 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .load()
   * }}}
   */
-class EsStoreProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+class EsStoreProvider extends ConnectorProvider("es") {
   /** `spark.read.format("graft-es")` — registered via
     * META-INF/services like every built-in source. */
   override def shortName(): String = "graft-es"
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    throw new IllegalArgumentException(
-      "graft es source: schema is required (.schema(...)) — a store's schema " +
-        "is configuration, and inferring it would read data on the driver")
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val base = properties.get("base")
-    val index = properties.get("index")
-    require(base != null && base.nonEmpty, "graft es source: 'base' option is required")
-    require(index != null && index.nonEmpty, "graft es source: 'index' option is required")
-    schema.fields.foreach(f => require(HttpRows.supported(f.dataType),
-      s"graft es source: unsupported field type ${f.name}: ${f.dataType.simpleString} " +
-        "(supported: long, int, double, string, boolean; send timestamps as epoch longs)"))
-    EsStoreTable(schema, base, index,
-      Option(properties.get("wmcol")).filter(_.nonEmpty),
-      Option(properties.get("slices")).map(_.toInt).getOrElse(8),
-      Option(properties.get("pagesize")).map(_.toInt).getOrElse(500),
-      graft.sources.ConnectorOptions.headers(properties),
-      Option(properties.get("keycols")).filter(_.nonEmpty)
-        .map(_.split(",").toSeq.map(_.trim)).getOrElse(Seq.empty),
-      Option(properties.get("versioncol")).filter(_.nonEmpty),
-      Option(properties.get("batchsize")).map(_.toInt).getOrElse(500),
-      Option(properties.get("readmode")).getOrElse("scroll"))
+  override protected def wire(o: ConnectorOptions): Wire = {
+    val base = o.required("base")
+    val index = o.required("index")
+    EsWire(base, index, o.nonEmpty("wmcol"),
+      o.positive("slices", 8), o.positive("pagesize", 500), o.headers,
+      o.nonEmpty("keycols").map(_.split(",").toSeq.map(_.trim)).getOrElse(Seq.empty),
+      o.nonEmpty("versioncol"), o.positive("batchsize", 500),
+      o.raw("readmode").getOrElse("scroll"))
   }
 }
 
-
-case class EsStoreTable(tableSchema: StructType, base: String, index: String,
-    wmCol: Option[String], slices: Int, pageSize: Int,
-    headers: Map[String, String] = Map.empty,
-    keyCols: Seq[String] = Seq.empty, versionCol: Option[String] = None,
-    batchSize: Int = 500, readMode: String = "scroll")
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"graft-es($base/$index)"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.STREAMING_WRITE)
+case class EsWire(base: String, index: String, wmCol: Option[String],
+    slices: Int, pageSize: Int, headers: Map[String, String],
+    keyCols: Seq[String], versionCol: Option[String], batchSize: Int,
+    readMode: String) extends Wire {
   require(readMode == "scroll" || readMode == "pit",
     s"graft es source: readmode must be scroll|pit, got '$readMode'")
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EsScanBuilder(tableSchema, base, index, wmCol, slices, pageSize,
-      headers, readMode)
 
-  /** DSv2 WRITE: `df.write.format(...).option("keycols","id")
-    * .option("versioncol","rev").mode("append").save()` — every
-    * partition bulks its rows latest-wins (external_gte) straight to
-    * the cluster with the per-item 429 retry underneath. Append-only
-    * by design: "overwrite" is [[graft.sources.EsDocumentStore.sync]]
-    * (a staged reindex behind an atomic alias swap), not a TRUNCATE a
-    * writer could half-finish. A failed/retried write task re-sends
-    * its rows — idempotent under external versioning, the same
-    * contract as every push in the engine.
-    */
-  override def newWriteBuilder(info:
-      org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
+  override def label: String = "es"
+  override def name: String = s"graft-es($base/$index)"
+  override def describe(since: Option[Long]): String =
+    s"graft-es scan $base/$index slices=$slices" +
+      since.fold("")(v => s" since=$v (pushed range)")
+
+  /** close() releases the slice's live scroll/PIT context — an
+    * early-terminated read must not pin index segments for the
+    * keepalive window (default clusters cap open scroll contexts at
+    * 500). */
+  override def openSlice(slice: Int, since: Option[Long],
+      until: Option[Long]): (Iterator[String], () => Unit) = {
+    @volatile var release: () => Unit = () => ()
+    val pages =
+      if (readMode == "pit")
+        EsDocumentStore.pitSlice(base, index, slice, slices, pageSize, wmCol,
+          since, until, headers = headers,
+          onPitId = id => release = () => EsDocumentStore.releasePit(base, id, headers))
+      else
+        EsDocumentStore.scrollSlice(base, index, slice, slices, pageSize, wmCol,
+          since, until, headers = headers,
+          onScrollId = id => release = () => EsDocumentStore.releaseScroll(base, id, headers))
+    (pages, () => release())
+  }
+
+  override def checkStream(): Unit =
+    require(wmCol.nonEmpty,
+      "graft es source: streaming reads need the 'wmcol' option (the watermark " +
+        "field that brackets each micro-batch server-side)")
+  override def maxWatermark(): Option[Long] =
+    EsDocumentStore.maxWatermarkAt(base, index, wmCol.get, headers)
+
+  override def checkWrite(ws: StructType): Unit = {
     require(keyCols.nonEmpty,
       "graft es sink: 'keycols' option is required (comma-separated key columns)")
     val vc = versionCol.getOrElse(sys.error(
       "graft es sink: 'versioncol' option is required (non-negative long)"))
-    val ws = info.schema()
     keyCols.foreach(k => require(ws.fieldNames.contains(k),
       s"graft es sink: key column '$k' not in write schema ${ws.fieldNames.mkString(",")}"))
     require(ws.fieldNames.contains(vc),
       s"graft es sink: version column '$vc' not in write schema")
-    ws.fields.foreach(f => require(HttpRows.supported(f.dataType),
-      s"graft es sink: unsupported field type ${f.name}: ${f.dataType.simpleString}"))
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            EsBatchWrite(base, index, keyCols, vc, ws, batchSize, headers)
-          // writeStream straight into the cluster: each micro-batch's
-          // partitions bulk as they produce rows; a replayed epoch
-          // re-sends them and external versioning keeps the stored
-          // state exactly-once — the same contract every batch push
-          // in the engine relies on (no sink-side epoch log needed)
-          override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            EsStreamingWrite(base, index, keyCols, vc, ws, batchSize, headers)
-        }
-    }
   }
-}
 
-case class EsStreamingWrite(base: String, index: String, keyCols: Seq[String],
-    versionCol: String, writeSchema: StructType, batchSize: Int,
-    headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write._
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : streaming.StreamingDataWriterFactory = {
+  /** Generation 1 + alias if absent, once per write. */
+  override def prepareWrite(): Unit =
     EsDocumentStore.ensureIndexAt(base, index, headers)
-    EsStreamingWriterFactory(base, index, keyCols.toArray, versionCol,
-      writeSchema, batchSize, headers)
-  }
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
 
-case class EsStreamingWriterFactory(base: String, index: String,
-    keyCols: Array[String], versionCol: String, writeSchema: StructType,
-    batchSize: Int, headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new EsDataWriter(base, index, keyCols, versionCol, writeSchema,
-      batchSize, headers)
-}
-
-case class EsBatchWrite(base: String, index: String, keyCols: Seq[String],
-    versionCol: String, writeSchema: StructType, batchSize: Int,
-    headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // driver-side, once per write: generation 1 + alias if absent
-    EsDocumentStore.ensureIndexAt(base, index, headers)
-    EsWriterFactory(base, index, keyCols.toArray, versionCol, writeSchema,
-      batchSize, headers)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  // rows already bulked stay: a Spark retry re-sends them and
-  // external_gte keeps latest-wins idempotent (same as push())
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-case class EsWriterFactory(base: String, index: String, keyCols: Array[String],
-    versionCol: String, writeSchema: StructType, batchSize: Int,
-    headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new EsDataWriter(base, index, keyCols, versionCol, writeSchema,
-      batchSize, headers)
-}
-
-private object EsWriteCommit
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-/** Executor-side writer: buffers `batchSize` action units and bulks
-  * them with the per-item transient retry. Key/version extraction
-  * mirrors EsDocumentStore.composedId (percent-escaped injective
-  * join; null keys fail loudly).
-  */
-class EsDataWriter(base: String, index: String, keyCols: Array[String],
-    versionCol: String, writeSchema: StructType, batchSize: Int,
-    headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  import org.apache.spark.sql.types._
-
-  // per-column extractors resolved ONCE at writer construction — the
-  // datatype dispatch must not re-run per row in the hot write loop
-  private val keyExtract: Array[InternalRow => String] =
-    keyCols.map { n =>
-      val i = writeSchema.fieldIndex(n)
-      val get: InternalRow => String = writeSchema.fields(i).dataType match {
+  /** An index action line plus the source line. Key/version
+    * extraction mirrors EsDocumentStore.composedId (percent-escaped
+    * injective join; null keys fail loudly).
+    */
+  override def bulkLine(ws: StructType): InternalRow => String = {
+    val keyExtract: Array[InternalRow => String] = keyCols.toArray.map { n =>
+      val i = ws.fieldIndex(n)
+      val get: InternalRow => String = ws.fields(i).dataType match {
         case StringType => r => r.getUTF8String(i).toString
         case LongType => r => r.getLong(i).toString
         case IntegerType => r => r.getInt(i).toString
@@ -225,208 +116,23 @@ class EsDataWriter(base: String, index: String, keyCols: Array[String],
         get(r).replace("%", "%25").replace(":", "%3A")
       }
     }
-  private val verIdx = writeSchema.fieldIndex(versionCol)
-  private val verIsLong = writeSchema.fields(verIdx).dataType match {
-    case LongType => true
-    case IntegerType => false
-    case other => sys.error(
-      s"graft es sink: version column '$versionCol' must be integral, got $other")
-  }
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-
-  private def composeId(row: InternalRow): String =
-    keyExtract.map(_(row)).mkString(":")
-
-  private def version(row: InternalRow): Long = {
-    require(!row.isNullAt(verIdx),
-      s"graft es sink: null version column '$versionCol'")
-    if (verIsLong) row.getLong(verIdx) else row.getInt(verIdx).toLong
-  }
-
-  override def write(row: InternalRow): Unit = {
-    buf += EsDocumentStore.actionLine("index", index, composeId(row), version(row)) +
-      "\n" + HttpRows.json(row, writeSchema)
-    if (buf.size >= batchSize) flush()
-  }
-
-  private def flush(): Unit =
-    if (buf.nonEmpty) {
-      EsDocumentStore.bulkWithRetry(base, headers, buf.toIndexedSeq)
-      buf.clear()
+    val vc = versionCol.get
+    val verIdx = ws.fieldIndex(vc)
+    val verIsLong = ws.fields(verIdx).dataType match {
+      case LongType => true
+      case IntegerType => false
+      case other => sys.error(
+        s"graft es sink: version column '$vc' must be integral, got $other")
     }
-
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    flush(); EsWriteCommit
-  }
-  override def abort(): Unit = buf.clear()
-  override def close(): Unit = ()
-}
-
-class EsScanBuilder(schema: StructType, base: String, index: String,
-    wmCol: Option[String], slices: Int, pageSize: Int,
-    headers: Map[String, String] = Map.empty, readMode: String = "scroll")
-  extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var since: Option[Long] = None
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = schema
-
-  /** Same pushdown contract as the HTTP provider: watermark lower
-    * bounds fold into the scroll's range query (`>` exact, `>=` via
-    * v−1 for integral watermarks); everything stays residual.
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    wmCol.foreach { wc =>
-      filters.foreach {
-        case GreaterThan(c, v: Long) if c == wc =>
-          since = Some(since.fold(v)(math.max(_, v)))
-          pushed :+= GreaterThan(c, v)
-        case GreaterThanOrEqual(c, v: Long) if c == wc && v != Long.MinValue =>
-          // v−1 would WRAP at Long.MinValue, pushing a range that
-          // excludes every row — the filter is a tautology anyway, so
-          // it stays residual-only (the guard skips the pushdown)
-          since = Some(since.fold(v - 1)(math.max(_, v - 1)))
-          pushed :+= GreaterThanOrEqual(c, v)
-        case _ => ()
-      }
+    row => {
+      val id = keyExtract.map(_(row)).mkString(":")
+      require(!row.isNullAt(verIdx), s"graft es sink: null version column '$vc'")
+      val version = if (verIsLong) row.getLong(verIdx) else row.getInt(verIdx).toLong
+      EsDocumentStore.actionLine("index", index, id, version) + "\n" +
+        HttpRows.json(row, ws)
     }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    EsScanDef(base, index, slices, pageSize, wmCol, since, required, headers,
-      readMode)
-}
-
-case class EsScanDef(base: String, index: String, slices: Int, pageSize: Int,
-    wmCol: Option[String], since: Option[Long], required: StructType,
-    headers: Map[String, String] = Map.empty, readMode: String = "scroll")
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-es scan $base/$index slices=$slices" +
-      since.fold("")(v => s" since=$v (pushed range)")
-  override def planInputPartitions(): Array[InputPartition] =
-    (0 until slices).map(i =>
-      EsSlicePartition(i, since, None): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    EsReaderFactory(base, index, slices, pageSize, wmCol, required, headers,
-      readMode)
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new EsMicroBatchStream(base, index, slices, pageSize, wmCol, since,
-      required, headers, readMode)
-}
-
-/** Streaming micro-batch source over the ES wire: latestOffset is the
-  * max-aggregation watermark poll; each batch reads the (since, until]
-  * bracket as a server-side range inside the sliced scroll. Requires
-  * `wmcol` (there is no bracket without a watermark field).
-  */
-class EsMicroBatchStream(base: String, index: String, slices: Int,
-    pageSize: Int, wmCol: Option[String], startSince: Option[Long],
-    required: StructType, headers: Map[String, String] = Map.empty,
-    readMode: String = "scroll")
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-
-  require(wmCol.nonEmpty,
-    "graft es source: streaming reads need the 'wmcol' option (the watermark " +
-      "field that brackets each micro-batch server-side)")
-
-  private case class WmOffset(wm: Long) extends Offset {
-    override def json(): String = wm.toString
   }
 
-  override def initialOffset(): Offset =
-    WmOffset(startSince.getOrElse(Long.MinValue))
-  override def latestOffset(): Offset =
-    EsDocumentStore.maxWatermarkAt(base, index, wmCol.get, headers)
-      .map(WmOffset(_)).getOrElse(initialOffset())
-
-  /** Trigger.AvailableNow drains to the watermark observed at QUERY
-    * START and terminates — without this, a store whose writers keep
-    * advancing the watermark would keep an "available now" drain
-    * alive forever (Spark otherwise falls back to one unbounded
-    * batch with a warning).
-    */
-  @volatile private var availableNowTarget: Option[Offset] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(latestOffset())
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
-    availableNowTarget.getOrElse(latestOffset())
-
-  override def deserializeOffset(json: String): Offset = WmOffset(json.toLong)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s0, e0) = (start.asInstanceOf[WmOffset].wm, end.asInstanceOf[WmOffset].wm)
-    if (s0 >= e0) Array.empty
-    else (0 until slices).map(i =>
-      EsSlicePartition(i, Some(s0), Some(e0)): InputPartition).toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    EsReaderFactory(base, index, slices, pageSize, wmCol, required, headers,
-      readMode)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-case class EsSlicePartition(slice: Int, since: Option[Long],
-    until: Option[Long]) extends InputPartition
-
-case class EsReaderFactory(base: String, index: String, slices: Int,
-    pageSize: Int, wmCol: Option[String], required: StructType,
-    headers: Map[String, String] = Map.empty, readMode: String = "scroll")
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[EsSlicePartition]
-    new EsPartitionReader(base, index, p.slice, slices, pageSize, wmCol,
-      p.since, p.until, required, headers, readMode)
-  }
-}
-
-/** Executor-side reader: one scroll slice walked lazily, `_source`
-  * parsed to the pruned schema. close() releases the slice's live
-  * scroll context — an early-terminated read (LIMIT, task abort)
-  * must not pin index segments for the keepalive window (default
-  * clusters cap open scroll contexts at 500).
-  */
-class EsPartitionReader(base: String, index: String, slice: Int, slices: Int,
-    pageSize: Int, wmCol: Option[String], since: Option[Long],
-    until: Option[Long], required: StructType,
-    headers: Map[String, String] = Map.empty, readMode: String = "scroll")
-  extends PartitionReader[InternalRow] {
-
-  private val mapper = new ObjectMapper()
-  @volatile private var liveScrollId: String = _
-  @volatile private var livePitId: String = _
-  private val lines =
-    if (readMode == "pit")
-      EsDocumentStore.pitSlice(base, index, slice, slices,
-        pageSize, wmCol, since, until, onPitId = id => livePitId = id,
-        headers = headers)
-    else
-      EsDocumentStore.scrollSlice(base, index, slice, slices,
-        pageSize, wmCol, since, until, onScrollId = id => liveScrollId = id,
-        headers = headers)
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (!lines.hasNext) false
-    else {
-      current = HttpRows.parse(mapper.readTree(lines.next()), required)
-      true
-    }
-  override def get(): InternalRow = current
-  override def close(): Unit = {
-    val sid = liveScrollId
-    if (sid != null) EsDocumentStore.releaseScroll(base, sid, headers)
-    val pid = livePitId
-    if (pid != null) EsDocumentStore.releasePit(base, pid, headers)
-  }
+  override def postBulk(lines: IndexedSeq[String]): Unit =
+    EsDocumentStore.bulkWithRetry(base, headers, lines)
 }

@@ -1,38 +1,22 @@
 package graft.sources.http
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import graft.sources.HttpDocumentStore
+import com.fasterxml.jackson.databind.JsonNode
+import graft.sources.{ConnectorOptions, ConnectorProvider, HttpDocumentStore, Wire}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{Filter, GreaterThan, GreaterThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** DataSource V2 connector for the HTTP document store — the scan
-  * half of [[graft.sources.HttpDocumentStore]] lifted into Spark's
-  * connector API so CATALYST, not the caller, decides what reaches
-  * the server:
+/** The [[graft.sources.ConnectorProvider]] connector over the HTTP
+  * document store — the scan half of [[graft.sources.HttpDocumentStore]]
+  * lifted into Spark's connector API: the watermark bound travels as
+  * the scroll protocol's `since`/`until` parameters, the streaming
+  * offsets are the store's `GET /wm`, and writes POST NDJSON to
+  * `{base}/bulk` (the server's keyed latest-wins makes a retried
+  * task's re-send idempotent, the same contract as
+  * [[graft.sources.HttpDocumentStore.push]]).
   *
-  *  - **watermark filter pushdown**: an extract's `wm > bookmark`
-  *    predicate (what [[graft.sources.ExtractBookmark.extractSince]]
-  *    plans) is translated to the scroll protocol's `since` parameter
-  *    and evaluated SERVER-SIDE — the reference pushes the same range
-  *    query into its ES scroll, and at 100 TB this is the difference
-  *    between shipping a nightly delta and re-shipping the index.
-  *    Pushed filters stay residual too (Spark re-checks them), so a
-  *    server that ignores `since` costs bandwidth, never correctness.
-  *  - **column pruning**: only requested fields are parsed out of the
-  *    NDJSON (`SupportsPushDownRequiredColumns`).
-  *  - **slice-per-partition planning**: one `InputPartition` per
-  *    scroll slice; each task walks its own cursor chain with the
-  *    store's per-page retry.
-  *
-  * Usage (schema is configuration, never inferred — a driver-side
-  * sniff of page one is exactly what a distributed scan must not do):
+  * Usage:
   * {{{
   *   spark.read.format("graft.sources.http.HttpStoreProvider")
   *     .schema(schema)
@@ -41,290 +25,40 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     .option("slices", "8")
   *     .load()
   * }}}
-  *
-  * Supported field types: LONG/INT/DOUBLE/STRING/BOOLEAN (the document
-  * store contract's scalar payload; timestamps travel as epoch longs
-  * — the jx date family consumes them via timestamp_seconds). Missing
-  * fields and explicit JSON nulls read as SQL NULL.
   */
-class HttpStoreProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+class HttpStoreProvider extends ConnectorProvider("http") {
   /** `spark.read.format("graft-http")`. */
   override def shortName(): String = "graft-http"
-  override def supportsExternalMetadata(): Boolean = true
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    throw new IllegalArgumentException(
-      "graft http source: schema is required (.schema(...)) — a store's schema " +
-        "is configuration, and inferring it would read data on the driver")
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val base = properties.get("base")
-    require(base != null && base.nonEmpty, "graft http source: 'base' option is required")
-    schema.fields.foreach(f => require(HttpRows.supported(f.dataType),
-      s"graft http source: unsupported field type ${f.name}: ${f.dataType.simpleString} " +
-        "(supported: long, int, double, string, boolean; send timestamps as epoch longs)"))
-    HttpStoreTable(schema, base,
-      Option(properties.get("wmcol")).filter(_.nonEmpty),
-      Option(properties.get("slices")).map(_.toInt).getOrElse(8),
-      graft.sources.ConnectorOptions.headers(properties),
-      Option(properties.get("batchsize")).map(_.toInt).getOrElse(500))
-  }
+  override protected def wire(o: ConnectorOptions): Wire =
+    HttpWire(o.required("base"), o.nonEmpty("wmcol"), o.positive("slices", 8),
+      o.headers, o.positive("batchsize", 500))
 }
 
-case class HttpStoreTable(tableSchema: StructType, base: String,
-    wmCol: Option[String], slices: Int,
-    headers: Map[String, String] = Map.empty,
-    batchSize: Int = 500) extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"graft-http($base)"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new HttpScanBuilder(tableSchema, base, wmCol, slices, headers)
-
-  /** DSv2 WRITE: each partition POSTs its rows to `{base}/bulk` as
-    * NDJSON in `batchsize` chunks — the server's keyed latest-wins
-    * makes a retried task's re-send idempotent (the same contract as
-    * [[graft.sources.HttpDocumentStore.push]]). Append-only: a full
-    * replace is the store's epoch sync, not a TRUNCATE.
-    */
-  override def newWriteBuilder(info:
-      org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    val ws = info.schema()
-    ws.fields.foreach(f => require(HttpRows.supported(f.dataType),
-      s"graft http sink: unsupported field type ${f.name}: ${f.dataType.simpleString}"))
-    new org.apache.spark.sql.connector.write.WriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.Write =
-        new org.apache.spark.sql.connector.write.Write {
-          override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
-            HttpBatchWrite(base, ws, batchSize, headers)
-          // streaming sink: idempotent under epoch replay because the
-          // server's keyed latest-wins absorbs re-sent rows
-          override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            HttpStreamingWrite(base, ws, batchSize, headers)
-        }
-    }
-  }
-}
-
-case class HttpStreamingWrite(base: String, writeSchema: StructType,
-    batchSize: Int, headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write._
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : streaming.StreamingDataWriterFactory =
-    HttpStreamingWriterFactory(base, writeSchema, batchSize, headers)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-case class HttpStreamingWriterFactory(base: String, writeSchema: StructType,
-    batchSize: Int, headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new HttpDataWriter(base, writeSchema, batchSize, headers)
-}
-
-case class HttpBatchWrite(base: String, writeSchema: StructType,
-    batchSize: Int, headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.BatchWrite {
-  import org.apache.spark.sql.connector.write._
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    HttpWriterFactory(base, writeSchema, batchSize, headers)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-case class HttpWriterFactory(base: String, writeSchema: StructType,
-    batchSize: Int, headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new HttpDataWriter(base, writeSchema, batchSize, headers)
-}
-
-private object HttpWriteCommit
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-class HttpDataWriter(base: String, writeSchema: StructType,
-    batchSize: Int, headers: Map[String, String])
-    extends org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-  private val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-  override def write(row: InternalRow): Unit = {
-    buf += HttpRows.json(row, writeSchema)
-    if (buf.size >= batchSize) flush()
-  }
-  private def flush(): Unit =
-    if (buf.nonEmpty) {
-      HttpDocumentStore.request("POST", s"$base/bulk",
-        buf.mkString("\n"), headers)
-      buf.clear()
-    }
-  override def commit(): org.apache.spark.sql.connector.write.WriterCommitMessage = {
-    flush(); HttpWriteCommit
-  }
-  override def abort(): Unit = buf.clear()
-  override def close(): Unit = ()
-}
-
-class HttpScanBuilder(schema: StructType, base: String,
-    wmCol: Option[String], slices: Int,
-    headers: Map[String, String] = Map.empty)
-  extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-
-  private var since: Option[Long] = None
-  private var pushed: Array[Filter] = Array.empty
-  private var required: StructType = schema
-
-  /** Consume watermark lower bounds into the scroll's `since`
-    * (exclusive). `wm > v` → since=v; `wm >= v` → since=v−1 (exact
-    * for integral watermarks). EVERY filter is also returned as
-    * residual: the server prune is an optimization the engine never
-    * has to trust — Spark re-applies the predicate over what arrives.
-    */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    wmCol.foreach { wc =>
-      filters.foreach {
-        case GreaterThan(c, v: Long) if c == wc =>
-          since = Some(since.fold(v)(math.max(_, v)))
-          pushed :+= GreaterThan(c, v)
-        case GreaterThanOrEqual(c, v: Long) if c == wc && v != Long.MinValue =>
-          // v−1 would wrap at Long.MinValue and push a row-excluding
-          // range; the tautological filter stays residual-only
-          since = Some(since.fold(v - 1)(math.max(_, v - 1)))
-          pushed :+= GreaterThanOrEqual(c, v)
-        case _ => ()
-      }
-    }
-    filters // all residual — see above
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan =
-    HttpScanDef(base, slices, since, required, headers)
-}
-
-case class HttpScanDef(base: String, slices: Int, since: Option[Long],
-    required: StructType,
-    headers: Map[String, String] = Map.empty) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
+case class HttpWire(base: String, wmCol: Option[String], slices: Int,
+    headers: Map[String, String], batchSize: Int) extends Wire {
+  override def label: String = "http"
+  override def name: String = s"graft-http($base)"
+  override def describe(since: Option[Long]): String =
     s"graft-http scan base=$base slices=$slices" +
       since.fold("")(v => s" since=$v (pushed)")
-  override def planInputPartitions(): Array[InputPartition] =
-    (0 until slices).map(i =>
-      HttpSlicePartition(i, since, None): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    HttpReaderFactory(base, slices, required, headers)
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new HttpMicroBatchStream(base, slices, since, required, headers)
-}
 
-/** The HTTP store as a STRUCTURED STREAMING micro-batch source — the
-  * reference's ES polling loop as a real `readStream`: each trigger
-  * polls the store's max watermark (`GET /wm`) and reads the
-  * half-open bracket (lastOffset, maxWm] server-side, sliced across
-  * executors like the batch scan.
-  *
-  * Exactly-once per row under the contract the reference's extract
-  * already imposes: the watermark must be SERVER-ASSIGNED and
-  * monotone (an ES `_seq_no`-like revision — never a client clock). A
-  * writer that backfills wm values at or below a committed offset
-  * loses those rows, exactly as it would against the reference's
-  * max-modified bookmark. Offsets are plain watermark longs in the
-  * checkpoint, so a restarted query resumes the bracket where it
-  * stopped; `since`/`until` bracket BOTH ends of every batch, so a
-  * row is read in exactly one batch no matter how many triggers
-  * or restarts happen between its arrival and its read.
-  */
-class HttpMicroBatchStream(base: String, slices: Int,
-    startSince: Option[Long], required: StructType,
-    headers: Map[String, String] = Map.empty)
-  extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-  with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+  override def openSlice(slice: Int, since: Option[Long],
+      until: Option[Long]): (Iterator[String], () => Unit) =
+    (HttpDocumentStore.slicePages(base, slice, slices, since, until, headers), () => ())
 
-  private case class WmOffset(wm: Long) extends Offset {
-    override def json(): String = wm.toString
-  }
-
-  override def initialOffset(): Offset =
-    WmOffset(startSince.getOrElse(Long.MinValue))
-  override def latestOffset(): Offset = {
+  override def maxWatermark(): Option[Long] = {
     // trim BEFORE the sentinel check — a server replying "none\n"
     // must hit the sentinel path, not NumberFormatException
     val body = HttpDocumentStore.request("GET", s"$base/wm", "", headers).trim
-    if (body == "none") initialOffset() else WmOffset(body.toLong)
+    if (body == "none") None else Some(body.toLong)
   }
-  /** Trigger.AvailableNow drains to the watermark observed at QUERY
-    * START and terminates (see EsMicroBatchStream — same contract).
-    */
-  @volatile private var availableNowTarget: Option[Offset] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowTarget = Some(latestOffset())
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
-    availableNowTarget.getOrElse(latestOffset())
 
-  override def deserializeOffset(json: String): Offset = WmOffset(json.toLong)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (s0, e0) = (start.asInstanceOf[WmOffset].wm, end.asInstanceOf[WmOffset].wm)
-    if (s0 >= e0) Array.empty
-    // the (since, until] bracket rides IN the partitions — the
-    // factory below is range-agnostic
-    else (0 until slices).map(i =>
-      HttpSlicePartition(i, Some(s0), Some(e0)): InputPartition).toArray
+  override def bulkLine(ws: StructType): InternalRow => String =
+    HttpRows.json(_, ws)
+  override def postBulk(lines: IndexedSeq[String]): Unit = {
+    HttpDocumentStore.request("POST", s"$base/bulk", lines.mkString("\n"), headers)
+    ()
   }
-  override def createReaderFactory(): PartitionReaderFactory =
-    HttpReaderFactory(base, slices, required, headers)
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
-}
-
-case class HttpSlicePartition(slice: Int, since: Option[Long],
-    until: Option[Long]) extends InputPartition
-
-case class HttpReaderFactory(base: String, slices: Int,
-    required: StructType,
-    headers: Map[String, String] = Map.empty) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[HttpSlicePartition]
-    new HttpPartitionReader(base, p.slice, slices, p.since, p.until, required,
-      headers)
-  }
-}
-
-/** Executor-side reader: walks one slice's cursor chain lazily (one
-  * page in memory at a time) and parses only the pruned fields.
-  */
-class HttpPartitionReader(base: String, slice: Int, slices: Int,
-    since: Option[Long], until: Option[Long], required: StructType,
-    headers: Map[String, String] = Map.empty)
-  extends PartitionReader[InternalRow] {
-
-  private val mapper = new ObjectMapper()
-  private val lines =
-    HttpDocumentStore.slicePages(base, slice, slices, since, until, headers)
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    if (!lines.hasNext) false
-    else {
-      current = HttpRows.parse(mapper.readTree(lines.next()), required)
-      true
-    }
-  override def get(): InternalRow = current
-  override def close(): Unit = ()
 }
 
 private[graft] object HttpRows {

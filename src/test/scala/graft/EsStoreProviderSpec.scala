@@ -293,4 +293,21 @@ class EsStoreProviderSpec extends SparkSpec {
       f.badRequests shouldBe 0
     } finally f.stop()
   }
+
+  test("non-positive slices/pagesize/batchsize fail at load for both formats, naming the option") {
+    // slices=0 used to plan zero partitions: an extract that silently
+    // read nothing. Option parsing runs before any request is made,
+    // so the base is never contacted.
+    val cases = Seq("graft-es" -> "slices", "graft-es" -> "pagesize",
+      "graft-es" -> "batchsize", "graft-http" -> "slices", "graft-http" -> "batchsize")
+    for ((format, key) <- cases; bad <- Seq("0", "-1", "x")) {
+      val e = the[IllegalArgumentException] thrownBy
+        spark.read.format(format).schema(schema)
+          .option("base", "http://127.0.0.1:1").option("index", "docs")
+          .option("wmcol", "m").option(key, bad).load()
+      withClue(s"$format $key=$bad: ") {
+        e.getMessage should include(s"'$key'")
+      }
+    }
+  }
 }

@@ -157,6 +157,32 @@ class EtlPipelineSpec extends SparkSpec {
     closureNow() shouldBe want
   }
 
+  test("one batch that deletes AND adds edges keeps every closure pair") {
+    import graft.sources.ParquetStore
+    val base = tmpDir()
+    val dest = ParquetStore(s"$base/closure", Seq("ancestor", "descendant"), "rev", 4)
+    val edgeStore = ParquetStore(s"$base/edges", Seq("child", "parent"), "seq", 4)
+    val bm = s"$base/wm"
+    // two chains: 1←2←3 and 4←5←6
+    val ev1 = Seq((2L, 1L, "add", 1L), (3L, 2L, "add", 2L),
+      (5L, 4L, "add", 3L), (6L, 5L, "add", 4L))
+      .toDF("child", "parent", "op", "seq")
+    EtlPipeline.runWithDeletes(spark, ev1, "seq", dest, edgeStore, bm)
+    // one run: delete 3→2 and hang 5 under 2. The added edge's parent
+    // lies in the delete's re-close scope; the pairs it brings in
+    // below that scope — (1, 6, 3) and (2, 6, 2) — must land too
+    val ev2 = ev1.union(Seq((3L, 2L, "delete", 5L), (5L, 2L, "add", 6L))
+      .toDF("child", "parent", "op", "seq"))
+    val r2 = EtlPipeline.runWithDeletes(spark, ev2, "seq", dest, edgeStore, bm)
+    r2.extracted shouldBe 2
+    val finalEdges = Seq((2L, 1L), (5L, 4L), (6L, 5L), (5L, 2L))
+      .toDF("child", "parent")
+    val want = Hierarchy.closure(finalEdges).as[(Long, Long, Int)].collect().toSet
+    want should contain allOf ((1L, 6L, 3), (2L, 6L, 2))
+    dest.scan(spark).select($"ancestor", $"descendant", $"depth")
+      .as[(Long, Long, Int)].collect().toSet shouldBe want
+  }
+
   test("crash MID-WRITE (before/after dest effects, before the edge-state push) converges on rerun") {
     // The advisor's window: the run dies after some stores are written
     // but not others. The write order pins the edge state LAST, so a

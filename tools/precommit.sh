@@ -17,6 +17,8 @@ sbt -batch compile Test/compile >/tmp/precommit.log 2>&1 || {
   exit 1
 }
 echo "compile green"
+# net src/main Scala lines — the design-size number ROADMAP tracks
+echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
 
 if [[ "${1:-}" == "--test" ]]; then
   sbt -batch test >/tmp/precommit-test.log 2>&1 || {
