@@ -9,14 +9,16 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Design notes for 100 TB scale: every loader returns a plain parquet
   * scan DataFrame so Catalyst keeps predicate pushdown + column pruning;
   * no DATA is ever cached or collected here. The loaded frame (logical
-  * plan + resolved file index) IS memoized per (session, dir, table):
+  * plan + resolved file index) IS a stored artifact: [[load]] memoizes
+  * it in [[StoredArtifacts]] as kind `table` over (dir, name).
   * `spark.read.parquet` runs file listing + schema inference as Spark
   * jobs on every call, so an uncached loader re-lists the same static
   * directory for each of the ~90 gate builds — and a merely-constructed
   * plan should run zero jobs (PlanSpec pins that). The memo pins the
   * file listing for the session, which is correct for immutable
   * testdata (and for any production snapshot read); a moving directory
-  * needs a fresh session or an explicit new read.
+  * needs [[StoredArtifacts.clear]], a fresh session or an explicit new
+  * read.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -25,14 +27,11 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  private val loaded =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loaded.computeIfAbsent((spark, dir, name), _ => {
+    StoredArtifacts.getOrBuild("table", spark, dir, name) {
       val df = spark.read.parquet(path(dir, name))
       normalizeNtz(if (name == "events") normalizeEvents(df) else df)
-    })
+    }
 
   /** The generator writes timestamps with isAdjustedToUTC=false, which
     * Spark reads as TIMESTAMP_NTZ while every engine expression
@@ -48,9 +47,6 @@ object Tables {
     ntz.foldLeft(df)((d, f) =>
       d.withColumn(f.name, col(f.name).cast(TimestampType)))
   }
-
-  private[graft] def clearStored(s: SparkSession): Int =
-    graft.util.evictSession(loaded, s)
 
   /** events.ts is nanosecond parquet. Depending on the session conf Spark
     * reads it either as TimestampType (micros, truncated) or — with

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import graft.functions.{cosineFast, dotFast}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -48,19 +48,6 @@ object Ann extends QueryPack {
     */
   private[graft] val gateModelDir = "/tmp/graft_gate_models"
 
-  /** key → dataset dir whose model currently sits at the key's fixed
-    * path. The path is keyed only by model key (the oracle SQL is a
-    * static string), so serving a DIFFERENT dir must overwrite the
-    * file — memoizing (dir, key) pairs would let a second dir's
-    * Verify skip re-export and score the oracle against the first
-    * dir's stale model. Re-export on every dir change; skip only
-    * repeat requests for the dir already on disk.
-    */
-  private val exported = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def exportOnce(key: String, d: String)(write: String => Unit): Unit =
-    exported.compute(key, (k, prev) => { if (prev != d) write(s"$gateModelDir/$k.parquet"); d })
-
   /** Export every gate model for `d` — called by [[graft.Verify]]
     * AFTER planning, never from a query builder: builders are pinned
     * action-free at plan-construction time (PlanSpec), and a write
@@ -69,6 +56,7 @@ object Ann extends QueryPack {
     * have run against the same dir (Verify always does).
     */
   def exportGateModels(s: SparkSession, d: String): Unit = {
+    import StoredArtifacts.exportOnce
     exportOnce("lsh_planes_8x4", d)(p =>
       graft.sources.ModelStore.saveCentroids(s, p, planes(8 * 4, 64)))
     exportOnce("ivf_centroids_16_2", d)(p =>
@@ -81,18 +69,13 @@ object Ann extends QueryPack {
       .saveCentroids(s, p, pcaBasis(storedPcaModel(s, d, 8))))
   }
 
-  private val centsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int), Array[Array[Double]]]()
-
   def storedCentroids(s: SparkSession, d: String, nc: Int, iters: Int): Array[Array[Double]] =
-    centsMemo.computeIfAbsent((s, d, nc, iters), _ => ivfCentroids(emb(s, d), nc, iters))
-
-  private val cbsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int, Int, Int), Array[Array[Array[Double]]]]()
+    StoredArtifacts.getOrBuild("ivf_centroids", s, d, nc, iters)(ivfCentroids(emb(s, d), nc, iters))
 
   def storedCodebooks(s: SparkSession, d: String, m: Int, ksub: Int,
       iters: Int): Array[Array[Array[Double]]] =
-    cbsMemo.computeIfAbsent((s, d, m, ksub, iters), _ => pqCodebooks(emb(s, d), m, ksub, iters))
+    StoredArtifacts.getOrBuild("pq_codebooks", s, d, m, ksub, iters)(
+      pqCodebooks(emb(s, d), m, ksub, iters))
 
   /** Deterministic random-hyperplane directions (fixed seed). */
   private[graft] def planes(n: Int, dim: Int): Array[Array[Double]] = {
@@ -1057,11 +1040,9 @@ object Ann extends QueryPack {
     * model artifact like the IVF centroids; the projected table is
     * the pre-index reduced corpus a deployment stores).
     */
-  private val pcaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), DataFrame]()
-
-  private val pcaModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Int), org.apache.spark.ml.feature.PCAModel]()
+  def storedPcaProjection(s: SparkSession, d: String, k: Int): DataFrame =
+    StoredArtifacts.getOrBuild("pca", s, d, k)(
+      pcaProjectOn(emb(s, d), storedPcaModel(s, d, k)).localCheckpoint())
 
   /** The fitted gate-corpus basis itself — memoized so the projection
     * and the gate's model EXPORT (the oracle's input) share one model
@@ -1069,22 +1050,7 @@ object Ann extends QueryPack {
     * exporting a refit would not mirror the projection).
     */
   def storedPcaModel(s: SparkSession, d: String, k: Int): org.apache.spark.ml.feature.PCAModel =
-    pcaModelMemo.computeIfAbsent((s, d, k), _ => pcaFit(emb(s, d), k))
-
-  def storedPcaProjection(s: SparkSession, d: String, k: Int): DataFrame =
-    pcaMemo.computeIfAbsent((s, d, k),
-      _ => pcaProjectOn(emb(s, d), storedPcaModel(s, d, k)).localCheckpoint())
-
-  private[graft] def clearStored(s: SparkSession): Int = {
-    // the export memo is keyed (dir, key) — not session — but a
-    // cleared session means the models WILL retrain, so stale export
-    // files must not shadow them: drop every export marker (re-export
-    // is one tiny parquet write) or a same-JVM rerun would oracle
-    // fresh results against the previous run's models
-    exported.clear()
-    graft.util.evictSession(centsMemo, s) + graft.util.evictSession(cbsMemo, s) +
-      graft.util.evictSession(pcaMemo, s) + graft.util.evictSession(pcaModelMemo, s)
-  }
+    StoredArtifacts.getOrBuild("pca_model", s, d, k)(pcaFit(emb(s, d), k))
 
   val q92 = Q(
     "q92_pca_project",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import graft.functions.words
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -253,29 +253,18 @@ object Bpe extends QueryPack {
     */
   private val GateNumMerges = 20
 
-  private val mergesMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, String)]]()
-
   /** Session-scoped trained merge list over the gate corpus — the
     * same memoized-model pattern as [[Ann.storedCentroids]]: trained
     * once per (session, dir), every consumer (the q148 builder, the
     * gate export) reads the stored model.
     */
   def storedMerges(s: SparkSession, d: String): Seq[(String, String)] =
-    mergesMemo.computeIfAbsent((s, d), _ => {
+    StoredArtifacts.getOrBuild("bpe_merges", s, d) {
       import s.implicits._
       val dict = wordDict(Tables.documents(s, d), "text", 200000)
         .as[(String, Long)].collect().toSeq // model-sized by construction
       trainMerges(dict, GateNumMerges)
-    })
-
-  private[graft] def clearStored(s: SparkSession): Int = {
-    exported.clear() // the Dedup.clearStored rationale: stale export
-    // files must not shadow a retrained model on a same-JVM rerun
-    graft.util.evictSession(mergesMemo, s)
-  }
-
-  private val exported = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Export the q148 oracle's model tables — called by [[graft.Verify]]
     * after planning, never from a query builder (the
@@ -294,24 +283,22 @@ object Bpe extends QueryPack {
     *    split as the minhash/simhash signature exports.
     */
   def exportGateModel(s: SparkSession, d: String): Unit =
-    exported.compute(s"bpe_${GateNumMerges}", (_, prev) => {
-      if (prev != d) {
-        import s.implicits._
-        val merges = storedMerges(s, d)
-        merges.zipWithIndex
-          .map { case ((l, r), i) => (i, l, r) }.toDF("rank", "left", "right")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"${Ann.gateModelDir}/bpe_merges_${GateNumMerges}.parquet")
-        Tables.documents(s, d)
-          .select(explode(words(col("text"))).as("word"))
-          .where(length(col("word")) > 0).distinct()
-          .select(col("word"), graft.functions.bpeTokenize(col("word"), merges).as("toks"))
-          .select(col("word"), col("toks"), size(col("toks")).cast("int").as("n_toks"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"${Ann.gateModelDir}/bpe_word_tokens_${GateNumMerges}.parquet")
-      }
-      d
-    })
+    // one key, two tables: the write names its own paths
+    StoredArtifacts.exportOnce(s"bpe_${GateNumMerges}", d) { _ =>
+      import s.implicits._
+      val merges = storedMerges(s, d)
+      merges.zipWithIndex
+        .map { case ((l, r), i) => (i, l, r) }.toDF("rank", "left", "right")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${Ann.gateModelDir}/bpe_merges_${GateNumMerges}.parquet")
+      Tables.documents(s, d)
+        .select(explode(words(col("text"))).as("word"))
+        .where(length(col("word")) > 0).distinct()
+        .select(col("word"), graft.functions.bpeTokenize(col("word"), merges).as("toks"))
+        .select(col("word"), col("toks"), size(col("toks")).cast("int").as("n_toks"))
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"${Ann.gateModelDir}/bpe_word_tokens_${GateNumMerges}.parquet")
+    }
 
   /** Exact BPE token accounting per document under the session's
     * trained merges, with in-row validity verdicts (the consumer-step

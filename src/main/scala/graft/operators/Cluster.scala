@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -149,17 +149,10 @@ object Cluster extends QueryPack {
     * clustering, and a production pipeline stores it (dedupCorpus's
     * keeper table) rather than re-running the fixpoint per query.
     */
-  private val compsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def storedComponents(s: SparkSession, d: String): DataFrame =
-    compsMemo.computeIfAbsent((s, d), _ =>
+    StoredArtifacts.getOrBuild("components", s, d)(
       connectedComponents(Dedup.storedPairs(s, d).select(col("d1"), col("d2")))
         .localCheckpoint())
-
-  private[graft] def clearStored(s: SparkSession): Int =
-    graft.util.evictSession(compsMemo, s) +
-      graft.util.evictSession(incrCompsMemo, s)
 
   /** Incremental connected-components maintenance — fold a DELTA pair
     * batch into a stored component table at delta cost, the final
@@ -379,22 +372,19 @@ object Cluster extends QueryPack {
     * result against the recursive-CTE components of the UNIONED pair
     * set (q52's oracle verbatim: incremental ≡ full is the contract).
     */
-  private val incrCompsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The q119 artifact, memoized like q98's incremental closure: it IS
     * the stored component table a production run holds after the
     * nightly delta fold (base components from the even-pair-sum half,
     * the odd half folded in at delta cost).
     */
   def storedIncrementalComponents(s: SparkSession, d: String): DataFrame =
-    incrCompsMemo.computeIfAbsent((s, d), _ => {
+    StoredArtifacts.getOrBuild("incr_components", s, d) {
       val pairs = Dedup.storedPairs(s, d).select(col("d1"), col("d2"))
       val storedHalf = pairs.where((col("d1") + col("d2")) % 2 === 0)
       val deltaHalf = pairs.where((col("d1") + col("d2")) % 2 =!= 0)
       componentsIncrement(connectedComponents(storedHalf), deltaHalf)
         .localCheckpoint()
-    })
+    }
 
   /** One BATCH of the near-dedup corpus ingest — the NIGHTLY form of
     * [[graft.streaming.StreamOps.streamingNearDedupIngest]], which

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import graft.functions.{shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,10 +24,6 @@ object Dedup extends QueryPack {
 
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
 
-  /** key → dir currently on disk (see Ann.exportOnce: fixed paths
-    * mean a dir change must overwrite, never memo-skip). */
-  private val sigExported = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Export the deterministic signature tables the q32/q33 oracles
     * consume — called by [[graft.Verify]] after planning, never from
     * a query builder (the Ann.exportGateModels contract: builders are
@@ -36,16 +32,12 @@ object Dedup extends QueryPack {
     * the exact verify are recomputed independently by the oracle.
     */
   def exportGateSignatures(s: SparkSession, d: String): Unit = {
-    def once(key: String)(write: String => Unit): Unit =
-      sigExported.compute(key, (k, prev) => {
-        if (prev != d) write(s"${graft.operators.Ann.gateModelDir}/$k.parquet"); d
-      })
-    once("minhash_buckets_32_8") { p =>
+    StoredArtifacts.exportOnce("minhash_buckets_32_8", d) { p =>
       minhashSignatures(docs(s, d), 32, 8)
         .select(col("doc_id"), posexplode(col("bh")).as(Seq("band", "bh")))
         .coalesce(1).write.mode("overwrite").parquet(p)
     }
-    once("simhash_64") { p =>
+    StoredArtifacts.exportOnce("simhash_64", d) { p =>
       simhashValues(docs(s, d))
         .coalesce(1).write.mode("overwrite").parquet(p)
     }
@@ -317,28 +309,6 @@ object Dedup extends QueryPack {
       .select(col("p.contained_id"), col("p.container_id"), col("p.containment"))
       .where(col("containment") >= threshold)
 
-  /** Session-scoped STORED near-dup pair table over the gate corpus —
-    * the same materialized-artifact architecture as
-    * [[Hierarchy.storedClosure]]: a production dedup pipeline
-    * computes its pair list once and every downstream consumer
-    * (cluster resolution, cross-source matrices, threshold sweeps,
-    * leak-free splits) reads the stored table; the incremental path
-    * (`minhashDeltaPairs` + the signature store) is what keeps it
-    * current, not per-query recomputation. Carries the cut-inert
-    * gate guard, so the FIRST materialization also verifies
-    * oracle/cut equivalence. Library callers with their own corpora
-    * use [[jaccardPairs]] directly.
-    */
-  // each memo carries the thresholds its value was retention-trimmed
-  // at (see coocAtThresholds / requireAtLeastBuilt: a consumer asking
-  // below a build-time threshold must fail loudly — on MEMO HITS too,
-  // not only at first materialization — never silently read a store
-  // missing its rows)
-  private val pairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Double)]()
-  private val coocMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Double, Double)]()
-
   private[graft] def gateMaxShingleDf(s: SparkSession): Int =
     s.conf.get("graft.dedup.gateMaxShingleDf", "1024").toInt
 
@@ -402,14 +372,14 @@ object Dedup extends QueryPack {
   def storedCooc(s: SparkSession, d: String): DataFrame = storedCoocEntry(s, d)._1
 
   private def storedCoocEntry(s: SparkSession, d: String): (DataFrame, Double, Double) =
-    coocMemo.computeIfAbsent((s, d), _ => {
+    StoredArtifacts.getOrBuild("cooc", s, d) {
       val jT = gateJaccardThreshold(s)
       val cT = gateContainmentThreshold(s)
       // retention applied at build time: the checkpoint holds only
       // rows some gate consumer can keep (see retainForGate)
       (retainForGate(coocCounts(docs(s, d), gateMaxShingleDf(s)), jT, cT)
         .localCheckpoint(), jT, cT)
-    })
+    }
 
   /** The stored core, validated against a consumer's call-time
     * thresholds: retention keeps a row iff ANY disjunct passes, so a
@@ -436,25 +406,40 @@ object Dedup extends QueryPack {
     */
   private def requireAtLeastBuilt(jaccardT: Double, jBuilt: Double,
       containT: Double, cBuilt: Double,
-      remedy: String = "Dedup.clearStored(spark) (or StoredArtifacts.clear) " +
-        "to rebuild at the lower thresholds"): Unit =
+      remedy: String = "StoredArtifacts.clear(spark) to rebuild at the lower thresholds"): Unit =
     require(!(jaccardT < jBuilt) && !(containT < cBuilt),
       s"stored co-occurrence artifact was retention-trimmed at " +
         s"jaccard>=$jBuilt / containment>=$cBuilt; querying at " +
         s"$jaccardT / $containT would silently miss qualifying pairs — " +
         remedy)
 
+  // each memo carries the thresholds its value was retention-trimmed
+  // at (see coocAtThresholds / requireAtLeastBuilt: a consumer asking
+  // below a build-time threshold must fail loudly — on MEMO HITS too,
+  // not only at first materialization — never silently read a store
+  // missing its rows)
+  /** Session-scoped STORED near-dup pair table over the gate corpus —
+    * the same materialized-artifact architecture as
+    * [[Hierarchy.storedClosure]]: a production dedup pipeline
+    * computes its pair list once and every downstream consumer
+    * (cluster resolution, cross-source matrices, threshold sweeps,
+    * leak-free splits) reads the stored table; the incremental path
+    * (`minhashDeltaPairs` + the signature store) is what keeps it
+    * current, not per-query recomputation. Carries the cut-inert
+    * gate guard, so the FIRST materialization also verifies
+    * oracle/cut equivalence. Library callers with their own corpora
+    * use [[jaccardPairs]] directly.
+    */
   def storedPairs(s: SparkSession, d: String): DataFrame = {
-    val (pairs, jBuilt) = pairsMemo.computeIfAbsent((s, d),
-      // assertCutInert guard applied on the derived pairs: the gate
-      // run itself verifies oracle/cut equivalence (the max-df check
-      // is one linear aggregate over the corpus, not pair-shaped)
-      _ => {
-        val jT = gateJaccardThreshold(s)
-        (withCutInertGuard(
-          jaccardFromCooc(coocAtThresholds(s, d, jT, Double.NaN), jT),
-          docs(s, d), gateMaxShingleDf(s)).localCheckpoint(), jT)
-      })
+    // assertCutInert guard applied on the derived pairs: the gate
+    // run itself verifies oracle/cut equivalence (the max-df check
+    // is one linear aggregate over the corpus, not pair-shaped)
+    val (pairs, jBuilt) = StoredArtifacts.getOrBuild("pairs", s, d) {
+      val jT = gateJaccardThreshold(s)
+      (withCutInertGuard(
+        jaccardFromCooc(coocAtThresholds(s, d, jT, Double.NaN), jT),
+        docs(s, d), gateMaxShingleDf(s)).localCheckpoint(), jT)
+    }
     // re-checked on every MEMO HIT too: the build-time require alone
     // would let a threshold lowered after materialization read the
     // old-threshold pair list silently
@@ -762,9 +747,6 @@ object Dedup extends QueryPack {
   def readCoocStore(s: SparkSession, dir: String): DataFrame =
     readStoreTable(s, dir, "cooc", Seq("d1", "d2", "c", "n1", "n2"))
 
-  private val incrCoocMemo = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Double, Double)]()
-
   /** The q149 artifact, memoized like q119's incremental components:
     * the stored co-occurrence core a production run holds after the
     * nightly delta fold — day-0 store built from the doc_id % 10 ≠ 0
@@ -785,7 +767,7 @@ object Dedup extends QueryPack {
     */
   private def incrCoocAtThresholds(s: SparkSession, d: String,
       jaccardT: Double, containT: Double): DataFrame = {
-    val (core, jBuilt, cBuilt) = incrCoocMemo.computeIfAbsent((s, d), _ => {
+    val (core, jBuilt, cBuilt) = StoredArtifacts.getOrBuild("incr_cooc", s, d) {
       val all = docs(s, d)
       val maxDf = gateMaxShingleDf(s)
       val jT = gateJaccardThreshold(s)
@@ -794,19 +776,9 @@ object Dedup extends QueryPack {
         buildCoocStore(all.where(col("doc_id") % 10 =!= 0), maxDf, jT, cT),
         all.where(col("doc_id") % 10 === 0), maxDf, jT, cT)
         .cooc.localCheckpoint(), jT, cT)
-    })
+    }
     requireAtLeastBuilt(jaccardT, jBuilt, containT, cBuilt)
     core
-  }
-
-  private[graft] def clearStored(s: SparkSession): Int = {
-    sigExported.clear() // stale export files must not shadow retrained
-    // signatures on a same-JVM rerun (the Ann.clearStored rationale)
-    graft.util.evictSession(pairsMemo, s) +
-      graft.util.evictSession(coocMemo, s) +
-      graft.util.evictSession(incrCoocMemo, s) +
-      graft.util.evictSession(contamMemo, s) +
-      graft.util.evictSession(winsMemo, s)
   }
 
   val q31 = Q(
@@ -889,9 +861,6 @@ object Dedup extends QueryPack {
     * guard is needed. Library callers with their own split use
     * [[contaminationPairs]] / [[decontaminateOn]] directly.
     */
-  private val contamMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The gate corpus's split: sources src0..src9 are "train",
     * src10+ are "eval" — the two tables a real pipeline supplies. */
   private def gateSplit(s: SparkSession, d: String): (DataFrame, DataFrame) = {
@@ -901,10 +870,10 @@ object Dedup extends QueryPack {
   }
 
   def storedContamination(s: SparkSession, d: String): DataFrame =
-    contamMemo.computeIfAbsent((s, d), _ => {
+    StoredArtifacts.getOrBuild("contamination", s, d) {
       val (train, eval) = gateSplit(s, d)
       contaminationPairs(train, eval, 0.5).localCheckpoint()
-    })
+    }
 
   val q58 = Q(
     "q58_contamination",
@@ -1526,12 +1495,9 @@ object Dedup extends QueryPack {
     * window, kept current in production by unioning delta signatures).
     * q83 probes it instead of re-scanning the training corpus.
     */
-  private val winsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def storedWindowSignatures(s: SparkSession, d: String): DataFrame =
-    winsMemo.computeIfAbsent((s, d),
-      _ => windowSignatures(gateSplit(s, d)._1, n = 8).localCheckpoint())
+    StoredArtifacts.getOrBuild("memorization_wins", s, d)(
+      windowSignatures(gateSplit(s, d)._1, n = 8).localCheckpoint())
 
   val q83 = Q(
     "q83_memorization",

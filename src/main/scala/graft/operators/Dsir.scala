@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -177,8 +177,6 @@ object Dsir extends QueryPack {
 
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
 
-  private val exported = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Export the q151 oracle's feature table — called by [[graft.Verify]]
     * after planning, never from a query builder (the Ann.exportGateModels
     * contract). `dsir_feats_10000.parquet` (doc_id, b, cnt): the hashed
@@ -187,32 +185,15 @@ object Dsir extends QueryPack {
     * per-doc integer fact from scratch.
     */
   def exportGateFeatures(s: SparkSession, d: String): Unit =
-    exported.compute(s"dsir_feats_$Buckets", (_, prev) => {
-      if (prev != d) {
-        // unlike the model-sized gate exports (≤buckets/≤vocab rows,
-        // coalesce(1)) this table is O(corpus) — one row per
-        // doc×bucket — so keep the write parallel; the DuckDB oracle
-        // globs *.parquet and reads multi-file output unchanged
-        hashedFeatures(docs(s, d), isTargetGate, Buckets)
-          .select(col("doc_id"), col("b"), col("cnt"))
-          .coalesce(8).write.mode("overwrite")
-          .parquet(s"${Ann.gateModelDir}/dsir_feats_$Buckets.parquet")
-      }
-      d
-    })
-
-  /** Evict the gate-export memo (the Bpe.clearStored rationale: stale
-    * export files must not shadow re-derived features when the data
-    * under a dir changes on a same-JVM rerun). Wired into
-    * [[graft.StoredArtifacts.clear]]; the memo is path-keyed, not
-    * session-keyed, so any session's clear drops it — matching Bpe's
-    * `exported` handling.
-    */
-  private[graft] def clearStored(s: SparkSession): Int = {
-    val n = exported.size
-    exported.clear()
-    n
-  }
+    StoredArtifacts.exportOnce(s"dsir_feats_$Buckets", d) { p =>
+      // unlike the model-sized gate exports (≤buckets/≤vocab rows,
+      // coalesce(1)) this table is O(corpus) — one row per
+      // doc×bucket — so keep the write parallel; the DuckDB oracle
+      // globs *.parquet and reads multi-file output unchanged
+      hashedFeatures(docs(s, d), isTargetGate, Buckets)
+        .select(col("doc_id"), col("b"), col("cnt"))
+        .coalesce(8).write.mode("overwrite").parquet(p)
+    }
 
   /** DSIR with exact-integer gate facts (the consumer-step oracle
     * pattern): per document its side, feature mass n_feats = Σ n(b),

@@ -517,23 +517,17 @@ object Etl extends QueryPack {
     * against q115's full-history oracle verbatim: incremental ≡ full
     * is the contract.
     */
-  private val incrScd2Memo =
-    new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
   /** The q120 artifact, memoized like q98's incremental closure: it IS
     * the stored SCD2 history a warehouse holds after two nightly
     * appends (base from event_id%3==0, the other thirds folded in).
     */
   def storedIncrementalScd2(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    incrScd2Memo.computeIfAbsent((s, d), _ => {
+    graft.StoredArtifacts.getOrBuild("incr_scd2", s, d) {
       val events = ev(s, d)
       def part(r: Int) = events.where(col("event_id") % 3 === r)
       scd2Append(scd2Append(scd2History(part(0)), part(1)), part(2))
         .localCheckpoint()
-    })
-
-  private[graft] def clearStored(s: org.apache.spark.sql.SparkSession): Int =
-    graft.util.evictSession(incrScd2Memo, s)
+    }
 
   val q120 = Q(
     "q120_scd2_incr",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,14 +49,8 @@ object Hierarchy extends QueryPack {
     * Library callers with their OWN edge sets use [[closure]] /
     * [[incrementalClosure]] directly.
     */
-  private val closureMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def storedClosure(s: SparkSession, d: String): DataFrame =
-    closureMemo.computeIfAbsent((s, d), _ => closure(edges(s, d)).localCheckpoint())
-
-  private[graft] def clearStored(s: SparkSession): Int =
-    graft.util.evictSession(closureMemo, s) + graft.util.evictSession(incrMemo, s)
+    StoredArtifacts.getOrBuild("closure", s, d)(closure(edges(s, d)).localCheckpoint())
 
   /** Transitive closure of a (child, parent) edge set: one row per
     * reachable (ancestor, descendant) pair with the SHORTEST path
@@ -439,16 +433,13 @@ object Hierarchy extends QueryPack {
     * Memoized like every stored artifact (it IS the stored closure a
     * production run would have after the nightly patch).
     */
-  private val incrMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   def storedIncrementalClosure(s: SparkSession, d: String): DataFrame =
-    incrMemo.computeIfAbsent((s, d), _ => {
+    StoredArtifacts.getOrBuild("incr_closure", s, d) {
       val e = edges(s, d)
       val base = e.where(!(col("child") % 5 === 0))
       val late = e.where(col("child") % 5 === 0)
       incrementalClosure(closure(base), late).localCheckpoint()
-    })
+    }
 
   val q98 = Q(
     "q98_incremental_closure",

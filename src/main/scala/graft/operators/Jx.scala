@@ -157,9 +157,6 @@ object Jx extends QueryPack {
     * so building the nested table from flat TPC-H is testdata ETL,
     * not part of the nested-from operator under measurement.
     */
-  private val nestedMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]()
-
   /** Session-stored nested-orders table: each order with its line
     * items as an inner document array — the document shape a
     * reference deployment stores natively. One shuffle to nest
@@ -168,7 +165,7 @@ object Jx extends QueryPack {
     */
   def storedNestedOrders(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    nestedMemo.computeIfAbsent((s, d), _ => {
+    graft.StoredArtifacts.getOrBuild("nested_orders", s, d) {
       import org.apache.spark.sql.functions._
       graft.Tables.orders(s, d)
         .join(graft.Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
@@ -176,10 +173,7 @@ object Jx extends QueryPack {
         .agg(collect_list(struct(
           col("l_linenumber"), col("l_quantity"), col("l_extendedprice"))).as("lines"))
         .localCheckpoint()
-    })
-
-  private[graft] def clearStored(s: org.apache.spark.sql.SparkSession): Int =
-    graft.util.evictSession(nestedMemo, s)
+    }
 
   val q56Json: String =
     """{

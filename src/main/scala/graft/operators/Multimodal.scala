@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -779,10 +779,6 @@ object Multimodal extends QueryPack {
     png.unionByName(jpg).toDF()
   }
 
-  /** dir currently exported (Ann.exportOnce contract: a dir change
-    * must overwrite, never memo-skip). */
-  private val phExported = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Export the decoded-dHash table the q160 oracle consumes — called
     * by [[graft.Verify]] after planning, never from a query builder
     * (builders stay action-free at plan time). PNG/JPEG decode has no
@@ -791,12 +787,8 @@ object Multimodal extends QueryPack {
     * recovery are recomputed independently by the oracle.
     */
   def exportGateHashes(s: SparkSession, d: String): Unit =
-    phExported.compute("decoded_phash", (_, prev) => {
-      if (prev != d)
-        decodedHashes(realMediaTable(s, d)).coalesce(1).write.mode("overwrite")
-          .parquet(s"${graft.operators.Ann.gateModelDir}/decoded_phash.parquet")
-      d
-    })
+    StoredArtifacts.exportOnce("decoded_phash", d)(p =>
+      decodedHashes(realMediaTable(s, d)).coalesce(1).write.mode("overwrite").parquet(p))
 
   /** Gate query for the REAL image-decode path: seeded real PNGs (plus
     * the planted cross-codec JPEG re-encodes) through genuine ImageIO

@@ -1497,12 +1497,8 @@ object Text extends QueryPack {
     * classifier trains once, per-query retraining is not a thing;
     * the tf table is the tokenize-once artifact both phases share).
     */
-  private val tfMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
   def storedTrigramTf(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    tfMemo.computeIfAbsent((s, d),
-      _ => trigramTf(docs(s, d)).localCheckpoint())
+    graft.StoredArtifacts.getOrBuild("trigram_tf", s, d)(trigramTf(docs(s, d)).localCheckpoint())
 
   /** The gate corpus's TRAINED language-ID model (candidate list +
     * pivoted per-trigram count maps) as a session-stored artifact —
@@ -1510,20 +1506,13 @@ object Text extends QueryPack {
     * the [[buildLangModel]] collect must not run inside a gate
     * builder (the PlanSpec action-free contract).
     */
-  private val langModelMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), (Seq[String], DataFrame)]()
-
   private[graft] def storedLangModel(
       s: org.apache.spark.sql.SparkSession, d: String): (Seq[String], DataFrame) =
-    langModelMemo.computeIfAbsent((s, d), _ => {
+    graft.StoredArtifacts.getOrBuild("lang_model", s, d) {
       val profiles = storedTrigramTf(s, d).where(col("doc_id") % 10 < 8)
         .groupBy(col("lang"), col("tg")).agg(sum(col("tf")).as("cnt"))
       buildLangModel(profiles)
-    })
-
-  private[graft] def clearStored(s: org.apache.spark.sql.SparkSession): Int =
-    graft.util.evictSession(tfMemo, s) +
-      graft.util.evictSession(langModelMemo, s)
+    }
 
   val q125 = Q(
     "q125_lang_trigram",

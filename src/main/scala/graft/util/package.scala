@@ -175,61 +175,8 @@ package object util {
     */
   def reused(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // registered (weakly) so StoredArtifacts.clear can unpersist; the
-    // weak ref never pins a frame the caller has already dropped
-    reusedRegistry
-      .computeIfAbsent(df.sparkSession,
-        _ => new java.util.concurrent.ConcurrentLinkedQueue)
-      .add(new java.lang.ref.WeakReference(p))
+    graft.StoredArtifacts.trackReused(p) // so StoredArtifacts.clear can unpersist
     p
-  }
-
-  private val reusedRegistry = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession,
-    java.util.concurrent.ConcurrentLinkedQueue[java.lang.ref.WeakReference[DataFrame]]]()
-
-  /** Unpersist every still-referenced [[reused]] frame created under
-    * `s` and drop the registry entry. Part of
-    * [[graft.StoredArtifacts.clear]].
-    */
-  private[graft] def clearReused(s: SparkSession): Int = {
-    val q = reusedRegistry.remove(s)
-    var n = 0
-    if (q != null) {
-      var ref = q.poll()
-      while (ref != null) {
-        val df = ref.get()
-        if (df != null) { df.unpersist(blocking = false); n += 1 }
-        ref = q.poll()
-      }
-    }
-    n
-  }
-
-  /** Remove (and count) every entry of a session-keyed memo map whose
-    * key's FIRST element is `s`; DataFrame values are unpersisted
-    * (no-op for localCheckpointed frames — their blocks are freed by
-    * the ContextCleaner once the map reference is dropped and the
-    * backing RDD is garbage-collected).
-    */
-  private[graft] def evictSession[K <: Product, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V], s: SparkSession): Int = {
-    var n = 0
-    m.forEach { (k, v) =>
-      if (k.productElement(0).asInstanceOf[AnyRef] eq s) {
-        if (m.remove(k, v)) {
-          v match {
-            // erasure-safe: Dataset[_] covers DataFrame; unpersist is
-            // type-parameter-agnostic
-            case ds: org.apache.spark.sql.Dataset[_] =>
-              ds.unpersist(blocking = false); ()
-            case _ => ()
-          }
-          n += 1
-        }
-      }
-    }
-    n
   }
 
   /** Standard session builder config shared by Verify / Bench / specs. */

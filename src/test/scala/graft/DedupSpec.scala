@@ -410,7 +410,7 @@ class DedupSpec extends SparkSpec {
         Dedup.q136.build(spark, sfDir)
       }
       e.getMessage should include("retention-trimmed")
-      e.getMessage should include("clearStored")
+      e.getMessage should include("StoredArtifacts.clear")
     } finally spark.conf.unset("graft.dedup.gateContainmentThreshold")
     // back at (or above) the build-time thresholds: reads succeed
     Dedup.q136.build(spark, sfDir).count() should be > 0L

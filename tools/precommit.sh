@@ -16,6 +16,13 @@ sbt -batch compile Test/compile >/tmp/precommit.log 2>&1 || {
   tail -30 /tmp/precommit.log >&2
   exit 1
 }
+# one memo mechanism: session-scoped artifacts go through
+# StoredArtifacts.getOrBuild, never a per-owner map or evict hook
+if grep -rnE 'clearStored|evictSession' src/main ||
+   grep -rn 'ConcurrentHashMap' src/main/scala/graft/operators src/main/scala/graft/Tables.scala; then
+  echo "memo outside StoredArtifacts.getOrBuild — refusing to commit" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
