@@ -226,7 +226,7 @@ object Main {
         val merges = graft.operators.Bpe.trainMerges(dict, numMerges)
         graft.sources.ModelStore.saveMerges(spark, modelPath, merges)
         s"""{"mode":"train-tokenizer","merges":${merges.length},""" +
-          s""""dictWords":${dict.length},"model":${jstr(modelPath)}}"""
+          s""""dictWords":${dict.length},"model":${util.jsonString(modelPath)}}"""
       case "query" =>
         val qJson = queryJsonOf(cfg)
         // every named store is visible to the query's `from` — parquet,
@@ -253,7 +253,7 @@ object Main {
               case other => sys.error(
                 s"unknown query output type '$other' (parquet | jsonl)")
             }
-            s"""{"mode":"query","rows":$n,"output":${jstr(path)}}"""
+            s"""{"mode":"query","rows":$n,"output":${util.jsonString(path)}}"""
           case None =>
             // stdout is the ActiveData response shape: {"format","data"}.
             // It is a DRIVER COLLECT, so it is capped — a query result
@@ -265,7 +265,7 @@ object Main {
               s"query returned more than maxReturn=$max rows for stdout " +
                 "delivery — set an 'output' sink (parquet | jsonl) for large results")
             val fmt = graft.jx.JxCompiler.parse(qJson).path("format").asText("list")
-            s"""{"format":${jstr(fmt)},"rows":${rows.length},"data":[${rows.mkString(",")}]}"""
+            s"""{"format":${util.jsonString(fmt)},"rows":${rows.length},"data":[${rows.mkString(",")}]}"""
         }
       case "query-stream" =>
         // the streaming half of the query endpoint: a jx document with
@@ -293,7 +293,7 @@ object Main {
           graft.jx.JxCompiler.queryStream(src, qJson, eventTime, delay)
             .writeStream.format(fmt).option("path", path)
             .outputMode(opt(cfg, "outputMode").getOrElse("append")))
-        s"""{"stream":"query","output":${jstr(path)},"stopped":${!q.isActive}}"""
+        s"""{"stream":"query","output":${util.jsonString(path)},"stopped":${!q.isActive}}"""
       case "sync-stream" => sys.error(
         "sync cannot be a stream: sync is a point-in-time snapshot made " +
           "live by one atomic cutover, and an unbounded stream has no " +
@@ -366,12 +366,12 @@ object Main {
           override def scan(s: SparkSession): DataFrame =
             s.read.parquet(req(spec, "path"))
         }
-      // a remote source with a declared watermark column reads
-      // through the DSv2 connector: the extract's `wm > bookmark`
-      // predicate then pushes down as a server-side range inside the
-      // scroll — WITHOUT this, every incremental run would scroll the
-      // ENTIRE remote index and filter client-side
-      case "es" | "http" if spec.hasNonNull("wmCol") =>
+      // a remote source reads through its DSv2 connector, the path
+      // the stores read through too; with a declared watermark column
+      // the extract's `wm > bookmark` predicate pushes down as a
+      // server-side range inside the scroll — without one, every
+      // incremental run would scroll the ENTIRE remote index
+      case "es" | "http" =>
         val (format, schema, options) = connectorRead(spec, "alias", "wmCol")
         new DocumentSource {
           override def scan(s: SparkSession): DataFrame =
@@ -422,7 +422,8 @@ object Main {
     * and options, the spec's headers folded into `header.<name>`
     * options so the connector carries them on every exchange. The
     * batch and stream specs name the index and watermark fields
-    * differently (`alias`/`wmCol` vs `index`/`wmcol`).
+    * differently (`alias`/`wmCol` vs `index`/`wmcol`); the watermark
+    * is optional for a batch read.
     */
   private def connectorRead(spec: JsonNode, indexField: String,
       wmField: String): (String, StructType, Map[String, String]) = {
@@ -430,12 +431,14 @@ object Main {
     val format =
       if (es) "graft.sources.es.EsStoreProvider"
       else "graft.sources.http.HttpStoreProvider"
-    val options = Map("base" -> req(spec, "base"), "wmcol" -> req(spec, wmField),
+    val options = Map("base" -> req(spec, "base"),
         "slices" -> opt(spec, "slices").getOrElse("8")) ++
+      opt(spec, wmField).map("wmcol" -> _) ++
       (if (es) Map("index" -> req(spec, indexField),
+        "pagesize" -> opt(spec, "pageSize").getOrElse("500"),
         "readmode" -> opt(spec, "readMode").getOrElse("scroll"))
       else Map.empty) ++
-      headersOf(spec).map { case (k, v) => s"header.$k" -> v }
+      graft.sources.Connector.headerOptions(headersOf(spec))
     (format, StructType.fromDDL(req(spec, "schema")), options)
   }
 
@@ -469,19 +472,4 @@ object Main {
 
   private def resultJson(extracted: Long, pushed: Long, wm: Option[Long]): String =
     s"""{"extracted":$extracted,"pushed":$pushed,"watermark":${wm.getOrElse("null")}}"""
-
-  /** JSON string literal for a result line — config-derived values
-    * (paths, format names) interpolate through here, never raw: a
-    * path containing a quote/backslash/control char must not make
-    * the one machine-readable stdout line unparsable.
-    */
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

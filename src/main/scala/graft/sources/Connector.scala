@@ -2,6 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.sources.http.HttpRows
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -9,9 +10,11 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter, GreaterThan, GreaterThanOrEqual}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import scala.jdk.CollectionConverters._
 
 /** What differs between the two wire protocols the connector speaks
   * (ES, and the ES-shaped HTTP store). Serializable: it rides in
@@ -26,7 +29,7 @@ trait Wire extends Serializable {
   /** Table name, e.g. `graft-es(base/index)`. */
   def name: String
   /** The physical plan's scan node text. */
-  def describe(since: Option[Long]): String
+  def describe(since: Option[Long], until: Option[Long]): String
 
   /** One slice's documents (JSON object lines) in the half-open
     * `(since, until]` watermark bracket, walked lazily one page at a
@@ -50,6 +53,11 @@ trait Wire extends Serializable {
   def bulkLine(writeSchema: StructType): InternalRow => String
   /** Post one chunk of bulk units, failing the task on a lost write. */
   def postBulk(lines: IndexedSeq[String]): Unit
+  /** [[bulkLine]] for a keyed delete: each row carries the key columns
+    * and the version column. */
+  def deleteLine(writeSchema: StructType): InternalRow => String
+  /** [[postBulk]] for delete units. */
+  def postDelete(lines: IndexedSeq[String]): Unit
 }
 
 /** Option parsing shared by both providers. */
@@ -124,8 +132,13 @@ final class ConnectorOptions(label: String,
   *
   * Supported field types: LONG/INT/DOUBLE/STRING/BOOLEAN (the document
   * store contract's scalar payload; timestamps travel as epoch longs
-  * — the jx date family consumes them via timestamp_seconds). Missing
-  * fields and explicit JSON nulls read as SQL NULL.
+  * — the jx date family consumes them via timestamp_seconds). Values
+  * decode as Spark's JSON reader decodes them ([[HttpRows.parse]]):
+  * missing fields, JSON nulls, and values of the wrong JSON type or
+  * out of the field's range read as SQL NULL; a STRING field keeps a
+  * non-text value as its raw JSON; a DOUBLE field reads the strings
+  * `"NaN"`/`"Infinity"`/`"-Infinity"`, which is how non-finite
+  * doubles are written. A line that is not JSON fails the task.
   */
 abstract class ConnectorProvider(label: String)
     extends TableProvider with DataSourceRegister {
@@ -144,6 +157,54 @@ abstract class ConnectorProvider(label: String)
         "(supported: long, int, double, string, boolean; send timestamps as epoch longs)"))
     ConnectorTable(schema, w)
   }
+
+  /** The wire `options` configure, for [[Connector.delete]]. */
+  def wireOf(options: Map[String, String]): Wire =
+    wire(new ConnectorOptions(label, options.asJava))
+}
+
+/** How the network stores read, write and delete: every exchange goes
+  * through a provider's [[Wire]], so a store and a `graft-es` /
+  * `graft-http` read of the same index decode identically.
+  */
+object Connector {
+  def read(spark: SparkSession, provider: ConnectorProvider,
+      schema: StructType, options: Map[String, String]): DataFrame =
+    spark.read.format(provider.getClass.getName).schema(schema)
+      .options(options).load()
+
+  def write(df: DataFrame, provider: ConnectorProvider,
+      options: Map[String, String]): Unit =
+    df.write.format(provider.getClass.getName).options(options)
+      .mode("append").save()
+
+  /** Keyed delete: the writer's executor loop over the wire's delete
+    * encoder. A DSv2 write can only append, so this runs as one plain
+    * action on the keys' plan. */
+  def delete(keys: DataFrame, provider: ConnectorProvider,
+      options: Map[String, String]): Unit = {
+    val wire = provider.wireOf(options)
+    val ks = keys.schema
+    checkWrite(wire, ks)
+    wire.prepareWrite()
+    SQLExecution.withNewExecutionId(keys.queryExecution, Some("delete")) {
+      keys.queryExecution.toRdd.foreachPartition { rows =>
+        val w = new ConnectorWriter(wire.deleteLine(ks), wire.postDelete, wire.batchSize)
+        rows.foreach(w.write)
+        w.commit()
+      }
+    }
+  }
+
+  def checkWrite(wire: Wire, ws: StructType): Unit = {
+    wire.checkWrite(ws)
+    ws.fields.foreach(f => require(HttpRows.supported(f.dataType),
+      s"graft ${wire.label} sink: unsupported field type ${f.name}: ${f.dataType.simpleString}"))
+  }
+
+  /** Store headers as the connector's `header.<name>` options. */
+  def headerOptions(headers: Map[String, String]): Map[String, String] =
+    headers.map { case (k, v) => s"header.$k" -> v }
 }
 
 case class ConnectorTable(tableSchema: StructType, wire: Wire)
@@ -167,9 +228,7 @@ case class ConnectorTable(tableSchema: StructType, wire: Wire)
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val ws = info.schema()
-    wire.checkWrite(ws)
-    ws.fields.foreach(f => require(HttpRows.supported(f.dataType),
-      s"graft ${wire.label} sink: unsupported field type ${f.name}: ${f.dataType.simpleString}"))
+    Connector.checkWrite(wire, ws)
     new WriteBuilder {
       override def build(): Write = new Write {
         override def toBatch: BatchWrite = ConnectorWrite(wire, ws)
@@ -183,26 +242,35 @@ class ConnectorScanBuilder(schema: StructType, wire: Wire)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var since: Option[Long] = None
+  private var until: Option[Long] = None
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = schema
 
-  /** Consume watermark lower bounds into the walk's exclusive `since`:
-    * `wm > v` → since=v; `wm >= v` → since=v−1 (exact for integral
-    * watermarks). EVERY filter is also returned as residual: the
-    * server prune is an optimization the engine never has to trust.
+  /** Consume watermark bounds into the walk's `(since, until]` bracket:
+    * `wm > v` → since=v, `wm >= v` → since=v−1, `wm <= v` → until=v,
+    * `wm < v` → until=v−1 (exact for integral watermarks). EVERY
+    * filter is also returned as residual: the server prune is an
+    * optimization the engine never has to trust.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    def lower(f: Filter, v: Long): Unit = {
+      since = Some(since.fold(v)(math.max(_, v))); pushed :+= f
+    }
+    def upper(f: Filter, v: Long): Unit = {
+      until = Some(until.fold(v)(math.min(_, v))); pushed :+= f
+    }
     wire.wmCol.foreach { wc =>
       filters.foreach {
-        case GreaterThan(c, v: Long) if c == wc =>
-          since = Some(since.fold(v)(math.max(_, v)))
-          pushed :+= GreaterThan(c, v)
-        case GreaterThanOrEqual(c, v: Long) if c == wc && v != Long.MinValue =>
-          // v−1 would WRAP at Long.MinValue, pushing a range that
-          // excludes every row — the filter is a tautology anyway, so
-          // it stays residual-only (the guard skips the pushdown)
-          since = Some(since.fold(v - 1)(math.max(_, v - 1)))
-          pushed :+= GreaterThanOrEqual(c, v)
+        case f @ GreaterThan(c, v: Long) if c == wc => lower(f, v)
+        case f @ LessThanOrEqual(c, v: Long) if c == wc => upper(f, v)
+        // v−1 would WRAP at Long.MinValue, pushing a range that
+        // excludes every row — `wm >= MinValue` is a tautology anyway
+        // and `wm < MinValue` matches nothing, so both stay
+        // residual-only (the guards skip the pushdown)
+        case f @ GreaterThanOrEqual(c, v: Long) if c == wc && v != Long.MinValue =>
+          lower(f, v - 1)
+        case f @ LessThan(c, v: Long) if c == wc && v != Long.MinValue =>
+          upper(f, v - 1)
         case _ => ()
       }
     }
@@ -213,16 +281,16 @@ class ConnectorScanBuilder(schema: StructType, wire: Wire)
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  override def build(): Scan = ConnectorScan(wire, since, required)
+  override def build(): Scan = ConnectorScan(wire, since, until, required)
 }
 
-case class ConnectorScan(wire: Wire, since: Option[Long], required: StructType)
-    extends Scan with Batch {
+case class ConnectorScan(wire: Wire, since: Option[Long], until: Option[Long],
+    required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String = wire.describe(since)
+  override def description(): String = wire.describe(since, until)
   override def planInputPartitions(): Array[InputPartition] =
-    (0 until wire.slices).map(i => SlicePartition(i, since, None): InputPartition).toArray
+    (0 until wire.slices).map(i => SlicePartition(i, since, until): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
     SliceReaderFactory(wire, required)
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
@@ -341,28 +409,28 @@ case class ConnectorWrite(wire: Wire, writeSchema: StructType)
 case class ConnectorWriterFactory(wire: Wire, writeSchema: StructType)
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ConnectorWriter(wire, writeSchema)
+    new ConnectorWriter(wire.bulkLine(writeSchema), wire.postBulk, wire.batchSize)
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new ConnectorWriter(wire, writeSchema)
+    createWriter(partitionId, taskId)
 }
 
 private object ConnectorWriteCommit extends WriterCommitMessage
 
-/** Executor-side writer: buffers `batchSize` bulk units and posts
-  * them through the wire. */
-class ConnectorWriter(wire: Wire, writeSchema: StructType)
+/** Executor-side writer: encodes each row as one unit and posts them
+  * in `batchSize` chunks. */
+class ConnectorWriter(line: InternalRow => String,
+    post: IndexedSeq[String] => Unit, batchSize: Int)
     extends DataWriter[InternalRow] {
-  private val line = wire.bulkLine(writeSchema)
   private val buf = scala.collection.mutable.ArrayBuffer.empty[String]
 
   override def write(row: InternalRow): Unit = {
     buf += line(row)
-    if (buf.size >= wire.batchSize) flush()
+    if (buf.size >= batchSize) flush()
   }
   private def flush(): Unit =
     if (buf.nonEmpty) {
-      wire.postBulk(buf.toIndexedSeq)
+      post(buf.toIndexedSeq)
       buf.clear()
     }
   override def commit(): WriterCommitMessage = { flush(); ConnectorWriteCommit }

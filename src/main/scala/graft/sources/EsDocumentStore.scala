@@ -1,8 +1,11 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, concat_ws, lit, raise_error, regexp_replace, struct, to_json, when}
+import graft.sources.HttpDocumentStore.request
+import graft.sources.es.EsStoreProvider
+import graft.util.jsonString
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** [[DocumentStore]] speaking the REAL Elasticsearch 7/8 REST wire
@@ -53,9 +56,20 @@ import org.apache.spark.sql.types.StructType
   * creates generation 1 and the alias; [[sync]] rolls the generation
   * (and sweeps any orphaned generation a crashed earlier sync left
   * behind). Keys: the document `_id` is the `keyCols` values joined
-  * with `":"` after percent-escaping `%`/`:` inside each value (the
-  * join must be INJECTIVE — see `composedId`); `versionCol` must be
-  * a non-negative long (ES external versions are unsigned).
+  * with `":"` after percent-escaping `%`/`:` inside each value — an
+  * INJECTIVE join, so distinct key tuples never share an `_id` (a raw
+  * join would merge ("a:b","c") with ("a","b:c")); a NULL key fails
+  * the task, since a document with no key has no identity under the
+  * keyed-merge contract. `versionCol` must be a non-negative integral
+  * (ES external versions are unsigned).
+  *
+  * Every scan, push and sync bulk is a read or write of the `graft-es`
+  * connector ([[graft.sources.es.EsStoreProvider]]), and a keyed
+  * delete encodes its `_id`/version with the same wire — one decoder
+  * and one encoder for the store and the connector. `schema` fields
+  * are the connector's five scalar types (LONG, INT, DOUBLE, STRING,
+  * BOOLEAN), decoded with Spark's JSON-reader semantics (see
+  * [[graft.sources.ConnectorProvider]]).
   *
   * `headers` are merged into EVERY request the store makes (scroll,
   * bulk, mapping, alias, watermark, existence) — the auth seam:
@@ -80,69 +94,34 @@ final case class EsDocumentStore(base: String, alias: String,
 
   import EsDocumentStore._
 
-  /** Protocol headers win over configured auth headers — an auth map
-    * must not be able to break a bulk's NDJSON content type. */
-  private def hdr(proto: Map[String, String]): Map[String, String] =
-    headers ++ proto
+  /** The connector options this store reads and writes `index` through. */
+  private def options(index: String): Map[String, String] =
+    Map("base" -> base, "index" -> index, "keycols" -> keyCols.mkString(","),
+      "versioncol" -> versionCol, "slices" -> slices.toString,
+      "pagesize" -> pageSize.toString, "batchsize" -> batchSize.toString,
+      "readmode" -> readMode) ++ Connector.headerOptions(headers)
 
   override def scan(spark: SparkSession): DataFrame =
     scanSince(spark, None, None)
 
   /** Scan with an optional server-side watermark bracket on `wmField`
     * (since < wm <= until) — the range-query-inside-scroll that keeps
-    * an incremental extract's filter on the server.
+    * an incremental extract's filter on the server: the bracket is a
+    * filter the connector pushes into the scroll body.
     */
   def scanSince(spark: SparkSession, wmField: Option[String],
       since: Option[Long], until: Option[Long] = None): DataFrame = {
-    val (b, a, n, ps, hs, rm) = (base, alias, slices, pageSize, headers, readMode)
-    val (wf, lo, hi) = (wmField, since, until)
-    val lines = spark.createDataset(
-      spark.sparkContext.parallelize(0 until n, n)
-        .flatMap(slice =>
-          if (rm == "pit")
-            pitSlice(b, a, slice, n, ps, wf, lo, hi, headers = hs)
-          else
-            scrollSlice(b, a, slice, n, ps, wf, lo, hi, headers = hs)))(
-      Encoders.STRING)
-    spark.read.schema(schema).json(lines)
+    val all = Connector.read(spark, provider, schema,
+      options(alias) ++ wmField.map("wmcol" -> _))
+    wmField.toSeq.flatMap(f => since.map(col(f) > _) ++ until.map(col(f) <= _))
+      .foldLeft(all)(_ where _)
   }
 
-  override def push(updates: DataFrame): Unit = {
-    ensureIndex()
-    bulkTo(alias, "index", updates)
-  }
+  override def push(updates: DataFrame): Unit =
+    Connector.write(updates, provider, options(alias))
 
-  override def delete(keys: DataFrame): Unit = {
-    ensureIndex()
-    val (b, bs, vc, hs) = (base, batchSize, versionCol, headers)
-    val target = alias
-    keys
-      .select(composedId(keys).as("__id"), col(vc).cast("long").as("__v"))
-      .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-        it.grouped(bs).foreach { chunk =>
-          bulkWithRetry(b, hs, chunk.map(r =>
-            actionLine("delete", target, r.getString(0), r.getLong(1))).toIndexedSeq)
-        }
-      }
-  }
-
-  /** Injective composite `_id`: each key value is percent-escaped
-    * (`%`→`%25`, `:`→`%3A`) before the `":"` join, so distinct key
-    * tuples can NEVER share an `_id` — a raw join would merge
-    * ("a:b","c") with ("a","b:c") and latest-wins would silently
-    * collapse unrelated documents. A NULL key column fails the task
-    * loudly (concat_ws would silently SKIP it, aliasing (k,NULL)
-    * with (k)): a document with no key has no identity under the
-    * keyed-merge contract, exactly as the parquet sink requires
-    * non-null keys.
-    */
-  private def composedId(df: DataFrame): org.apache.spark.sql.Column =
-    concat_ws(":", keyCols.map { c =>
-      val s = col(c).cast("string")
-      when(s.isNull, raise_error(lit(
-        s"EsDocumentStore: null key column '$c' cannot compose an ES _id")))
-        .otherwise(regexp_replace(regexp_replace(s, "%", "%25"), ":", "%3A"))
-    }: _*)
+  override def delete(keys: DataFrame): Unit =
+    Connector.delete(keys, provider, options(alias))
 
   override def sync(snapshot: DataFrame): Unit = {
     // GC first: a crash in an EARLIER sync between cutover and delete
@@ -163,8 +142,8 @@ final case class EsDocumentStore(base: String, alias: String,
       case Some(m) => s"""{"mappings":$m}"""
       case None => "{}"
     }
-    request("PUT", s"$base/$staging", createBody, hdr(jsonHeaders))
-    bulkTo(staging, "index", snapshot)
+    request("PUT", s"$base/$staging", createBody, headers ++ jsonHeaders)
+    Connector.write(snapshot, provider, options(staging))
     // atomic cutover: one _aliases call removes EVERY index currently
     // behind the alias (an earlier partial failure can leave more
     // than one) and adds the staging one — readers never see a
@@ -173,14 +152,14 @@ final case class EsDocumentStore(base: String, alias: String,
     // next sync's sweep collects it)
     val old = resolveAliasAll()
     val actions =
-      old.map(o => s"""{"remove":{"index":"${escape(o)}","alias":"${escape(alias)}"}}""") :+
-        s"""{"add":{"index":"$staging","alias":"${escape(alias)}"}}"""
+      old.map(o => s"""{"remove":{"index":${jsonString(o)},"alias":${jsonString(alias)}}}""") :+
+        s"""{"add":{"index":"$staging","alias":${jsonString(alias)}}}"""
     request("POST", s"$base/_aliases",
-      s"""{"actions":[${actions.mkString(",")}]}""", hdr(jsonHeaders))
+      s"""{"actions":[${actions.mkString(",")}]}""", headers ++ jsonHeaders)
     // best-effort: a failure here is NOT a sync failure (the cutover
     // already happened); the orphan is collected by the next sweep
     old.foreach(o =>
-      try { request("DELETE", s"$base/$o", "", hdr(Map.empty)); () }
+      try { request("DELETE", s"$base/$o", "", headers); () }
       catch { case _: Exception => () })
   }
 
@@ -219,7 +198,7 @@ final case class EsDocumentStore(base: String, alias: String,
           Option(m.group(2)).forall(ms => now - ms.toLong > sweepMinAgeMs)
       }
       .foreach(o =>
-        try { request("DELETE", s"$base/$o", "", hdr(Map.empty)); () }
+        try { request("DELETE", s"$base/$o", "", headers); () }
         catch { case _: Exception => () })
   }
 
@@ -228,7 +207,7 @@ final case class EsDocumentStore(base: String, alias: String,
     * none match).
     */
   private def listIndices(expr: String): Seq[String] =
-    try topLevelNames(request("GET", s"$base/$expr", "", hdr(Map.empty)))
+    try topLevelNames(request("GET", s"$base/$expr", "", headers))
     catch { case _: Exception => Seq.empty }
 
   override def exists(spark: SparkSession): Boolean =
@@ -239,7 +218,7 @@ final case class EsDocumentStore(base: String, alias: String,
     */
   def putMapping(mapping: String): Unit = {
     ensureIndex()
-    request("PUT", s"$base/$alias/_mapping", mapping, hdr(jsonHeaders)); ()
+    request("PUT", s"$base/$alias/_mapping", mapping, headers ++ jsonHeaders); ()
   }
 
   /** The stored mapping, or None when the index doesn't exist or has
@@ -249,7 +228,7 @@ final case class EsDocumentStore(base: String, alias: String,
   def getMapping: Option[String] =
     if (!headOk(s"$base/$alias", headers)) None
     else {
-      val body = request("GET", s"$base/$alias/_mapping", "", hdr(Map.empty))
+      val body = request("GET", s"$base/$alias/_mapping", "", headers)
       val root = mapper.readTree(body)
       val inner = root.elements()
       if (!inner.hasNext) None
@@ -283,35 +262,17 @@ final case class EsDocumentStore(base: String, alias: String,
     */
   private def resolveAliasAll(): Seq[String] = {
     if (!headOk(s"$base/$alias", headers)) return Seq.empty
-    topLevelNames(request("GET", s"$base/_alias/$alias", "", hdr(Map.empty)))
-  }
-
-  /** Executor-side bulk of `df` into `target` as `action` docs: the
-    * action-and-metadata line carries the composed `_id` and the
-    * external version; the source line is the row's JSON.
-    */
-  private def bulkTo(target: String, action: String, df: DataFrame): Unit = {
-    val (b, bs, vc, hs) = (base, batchSize, versionCol, headers)
-    df
-      .select(composedId(df).as("__id"), col(vc).cast("long").as("__v"),
-        to_json(struct(df.columns.toIndexedSeq.map(col): _*)).as("__src"))
-      .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-        it.grouped(bs).foreach { chunk =>
-          bulkWithRetry(b, hs, chunk.map(r =>
-            actionLine(action, target, r.getString(0), r.getLong(1)) + "\n" +
-              r.getString(2)).toIndexedSeq)
-        }
-      }
+    topLevelNames(request("GET", s"$base/_alias/$alias", "", headers))
   }
 }
 
 object EsDocumentStore {
+  private val provider = new EsStoreProvider
   private val mapper = new ObjectMapper()
+  /** Appended after the configured headers (`headers ++ jsonHeaders`):
+    * an auth map must not be able to break a request's content type. */
   private val jsonHeaders = Map("Content-Type" -> "application/json")
 
-  /** Static watermark poll (max aggregation) — shared by the store's
-    * instance method and the DSv2 streaming source's latestOffset.
-    */
   /** Top-level field names of a JSON object body — the shape of both
     * `GET /_alias/{a}` and wildcard index listings. */
   private def topLevelNames(body: String): Seq[String] = {
@@ -321,11 +282,14 @@ object EsDocumentStore {
     out.result()
   }
 
+  /** Static watermark poll (max aggregation) — shared by the store's
+    * instance method and the DSv2 streaming source's latestOffset.
+    */
   private[sources] def maxWatermarkAt(base: String, index: String,
       field: String, headers: Map[String, String] = Map.empty): Option[Long] = {
     if (!headOk(s"$base/$index", headers)) return None
     val body = request("POST", s"$base/$index/_search",
-      s"""{"size":0,"aggs":{"wm":{"max":{"field":"$field"}}}}""",
+      s"""{"size":0,"aggs":{"wm":{"max":{"field":${jsonString(field)}}}}}""",
       headers ++ jsonHeaders)
     Option(mapper.readTree(body).at("/aggregations/wm/value"))
       .filter(v => v.isNumber).map(_.asLong())
@@ -337,7 +301,7 @@ object EsDocumentStore {
       headers: Map[String, String]): Unit =
     if (!headOk(s"$base/$alias", headers)) {
       request("PUT", s"$base/$alias-1",
-        s"""{"aliases":{"${escape(alias)}":{}}}""",
+        s"""{"aliases":{${jsonString(alias)}:{}}}""",
         headers ++ jsonHeaders)
       ()
     }
@@ -345,22 +309,9 @@ object EsDocumentStore {
   private[sources] def actionLine(action: String, index: String, id: String,
       version: Long): String = {
     require(version >= 0, s"ES external versions are unsigned; got $version")
-    s"""{"$action":{"_index":"${escape(index)}","_id":"${escape(id)}",""" +
+    s"""{"$action":{"_index":${jsonString(index)},"_id":${jsonString(id)},""" +
       s""""version":$version,"version_type":"external_gte"}}"""
   }
-
-  private def escape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def postBulk(base: String, body: String,
-      headers: Map[String, String]): String =
-    HttpDocumentStore.request("POST", s"$base/_bulk", body,
-      headers ++ Map("Content-Type" -> "application/x-ndjson"))
 
   /** How long a PER-ITEM transient rejection (429/503 inside an HTTP
     * 200 bulk response — ES's thread-pool pushback shape) is worth
@@ -386,7 +337,8 @@ object EsDocumentStore {
     var pending = entries
     var attempt = 1
     while (pending.nonEmpty) {
-      val resp = postBulk(base, pending.mkString("", "\n", "\n"), headers)
+      val resp = request("POST", s"$base/_bulk", pending.mkString("", "\n", "\n"),
+        headers ++ Map("Content-Type" -> "application/x-ndjson"))
       val retry = retryableItems(resp)
       if (retry.isEmpty) return
       if (attempt >= bulkItemAttempts)
@@ -443,24 +395,8 @@ object EsDocumentStore {
     */
   private def headOk(url: String,
       headers: Map[String, String] = Map.empty): Boolean =
-    HttpDocumentStore.withRetry(s"HEAD $url") {
-      val conn = new java.net.URL(url).openConnection()
-        .asInstanceOf[java.net.HttpURLConnection]
-      try {
-        conn.setRequestMethod("HEAD")
-        headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
-        conn.getResponseCode match {
-          case 200 => true
-          case 404 => false
-          case code => throw HttpDocumentStore.HttpStatusException(
-            code, s"HEAD $url -> HTTP $code")
-        }
-      } finally conn.disconnect()
-    }
-
-  private def request(method: String, url: String, body: String,
-      headers: Map[String, String]): String =
-    HttpDocumentStore.request(method, url, body, headers)
+    HttpDocumentStore.exchange("HEAD", url, "", headers, absentOk = true)(_ => ())
+      .isDefined
 
   /** Best-effort release of a server-side scroll context — scroll
     * contexts pin index segments until their keepalive expires, and a
@@ -472,7 +408,7 @@ object EsDocumentStore {
       headers: Map[String, String] = Map.empty): Unit =
     try {
       request("DELETE", s"$base/_search/scroll",
-        s"""{"scroll_id":["${escape(scrollId)}"]}""", headers ++ jsonHeaders); ()
+        s"""{"scroll_id":[${jsonString(scrollId)}]}""", headers ++ jsonHeaders); ()
     } catch { case _: Exception => () }
 
   /** Best-effort release of a point-in-time context (the PIT analogue
@@ -482,8 +418,22 @@ object EsDocumentStore {
       headers: Map[String, String] = Map.empty): Unit =
     try {
       request("DELETE", s"$base/_point_in_time",
-        s"""{"id":"${escape(pitId)}"}""", headers ++ jsonHeaders); ()
+        s"""{"id":${jsonString(pitId)}}""", headers ++ jsonHeaders); ()
     } catch { case _: Exception => () }
+
+  /** The body fields both slice walks share: the slice, the page size
+    * and the query — the watermark bracket as a `range` (since < wm <=
+    * until) when there is one, else `match_all`.
+    */
+  private def sliceSearch(slice: Int, slices: Int, pageSize: Int,
+      wmField: Option[String], since: Option[Long], until: Option[Long]): String = {
+    val bounds = since.map(v => s""""gt":$v""").toSeq ++ until.map(v => s""""lte":$v""")
+    val query = wmField.filter(_ => bounds.nonEmpty).fold("""{"match_all":{}}""")(f =>
+      s"""{"range":{${jsonString(f)}:{${bounds.mkString(",")}}}}""")
+    val sliceClause =
+      if (slices > 1) s""""slice":{"id":$slice,"max":$slices},""" else ""
+    s"""$sliceClause"size":$pageSize,"query":$query"""
+  }
 
   /** Lazy page walk of one slice via ES 8's PIT + `search_after` —
     * the API Elastic recommends over scroll for deep pagination
@@ -507,15 +457,7 @@ object EsDocumentStore {
         headers ++ jsonHeaders)).get("id")).map(_.asText())
       .getOrElse(sys.error(s"PIT open on $index returned no id"))
     onPitId(pitId)
-    val query = (wmField, since, until) match {
-      case (Some(f), lo, hi) if lo.isDefined || hi.isDefined =>
-        val bounds = lo.map(v => s""""gt":$v""").toSeq ++
-          hi.map(v => s""""lte":$v""").toSeq
-        s"""{"range":{"$f":{${bounds.mkString(",")}}}}"""
-      case _ => """{"match_all":{}}"""
-    }
-    val sliceClause =
-      if (slices > 1) s""""slice":{"id":$slice,"max":$slices},""" else ""
+    val search = sliceSearch(slice, slices, pageSize, wmField, since, until)
     // state: Some(None) = first page, Some(Some(sortJson)) = continue
     // after those sort values, None = exhausted
     Iterator.unfold(Some(None): Option[Option[String]]) {
@@ -523,8 +465,8 @@ object EsDocumentStore {
       case Some(after) =>
         val afterClause = after.fold("")(a => s""","search_after":$a""")
         val body = request("POST", s"$base/_search",
-          s"""{$sliceClause"size":$pageSize,"pit":{"id":"${escape(pitId)}","keep_alive":"1m"},""" +
-            s""""sort":[{"_shard_doc":"asc"}],"query":$query$afterClause}""",
+          s"""{$search,"pit":{"id":${jsonString(pitId)},"keep_alive":"1m"},""" +
+            s""""sort":[{"_shard_doc":"asc"}]$afterClause}""",
           headers ++ jsonHeaders)
         val root = mapper.readTree(body)
         val hits = root.at("/hits/hits")
@@ -552,16 +494,8 @@ object EsDocumentStore {
       since: Option[Long], until: Option[Long],
       onScrollId: String => Unit = _ => (),
       headers: Map[String, String] = Map.empty): Iterator[String] = {
-    val query = (wmField, since, until) match {
-      case (Some(f), lo, hi) if lo.isDefined || hi.isDefined =>
-        val bounds = lo.map(v => s""""gt":$v""").toSeq ++
-          hi.map(v => s""""lte":$v""").toSeq
-        s"""{"range":{"$f":{${bounds.mkString(",")}}}}"""
-      case _ => """{"match_all":{}}"""
-    }
-    val sliceClause =
-      if (slices > 1) s""""slice":{"id":$slice,"max":$slices},""" else ""
-    val first = s"""{$sliceClause"size":$pageSize,"sort":["_doc"],"query":$query}"""
+    val search = sliceSearch(slice, slices, pageSize, wmField, since, until)
+    val first = s"""{$search,"sort":["_doc"]}"""
 
     // state: Some(None) = initial search, Some(Some(id)) = continue
     // scroll id, None = exhausted
@@ -572,7 +506,7 @@ object EsDocumentStore {
           case None => request("POST",
             s"$base/$index/_search?scroll=1m", first, headers ++ jsonHeaders)
           case Some(id) => request("POST", s"$base/_search/scroll",
-            s"""{"scroll":"1m","scroll_id":"${escape(id)}"}""",
+            s"""{"scroll":"1m","scroll_id":${jsonString(id)}}""",
             headers ++ jsonHeaders)
         }
         val root = mapper.readTree(body)

@@ -3,7 +3,7 @@ package graft.sources
 import graft.operators.Hierarchy
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** The reference's MAIN LOOP as one composed library call — MoDevETL's
   * program is exactly this cycle (extract.py → hierarchy.py →
@@ -43,6 +43,9 @@ object EtlPipeline {
   private val closureSchema = StructType(Seq(
     StructField("ancestor", LongType), StructField("descendant", LongType),
     StructField("depth", IntegerType)))
+  private val edgeSchema = StructType(Seq(
+    StructField("child", LongType), StructField("parent", LongType),
+    StructField("op", StringType), StructField("seq", LongType)))
 
   /** One run of the loop. `edgesSrc` must carry (child, parent,
     * `wmCol`); `destDir` holds the closure table (upsert sink layout,
@@ -65,29 +68,38 @@ object EtlPipeline {
   def run(spark: SparkSession, edgesSrc: DataFrame, wmCol: String,
       dest: DocumentStore, bookmarkPath: String): RunResult = {
     val e = ExtractBookmark.extractSince(edgesSrc, wmCol, bookmarkPath)
-    val newEdges = e.batch.select(col("child"), col("parent")).distinct()
-      .localCheckpoint() // consumed by every delta round of the closure
-    val extracted = newEdges.count()
-    val existing =
-      if (dest.exists(spark))
-        dest.scan(spark).select(col("ancestor"), col("descendant"), col("depth"))
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        closureSchema)
-    val pushed =
-      if (extracted == 0) 0L
-      else {
-        val updated = Hierarchy.incrementalClosure(existing, newEdges)
-        val delta = updated
-          .join(existing, Seq("ancestor", "descendant", "depth"), "left_anti")
-          .withColumn("rev", lit(e.watermark.getOrElse(0L)))
-          .localCheckpoint() // counted AND pushed; one materialization
-        val n = delta.count()
-        if (n > 0) dest.push(delta)
-        n
-      }
+    val (extracted, pushed) =
+      applyEdgeAdds(spark, e.batch, dest, e.watermark.getOrElse(0L))
     ExtractBookmark.commit(e, bookmarkPath)
     RunResult(extracted, pushed, e.watermark)
   }
+
+  /** The shared add-only core of [[run]] / [[runStream]]: patch the
+    * stored closure with one batch of (child, parent) edges and push
+    * the new or depth-improved pairs versioned by `version`. Returns
+    * (distinct edges, closure rows pushed).
+    */
+  private def applyEdgeAdds(s: SparkSession, batch: DataFrame,
+      dest: DocumentStore, version: Long): (Long, Long) = {
+    val newEdges = batch.select(col("child"), col("parent")).distinct()
+      .localCheckpoint() // consumed by every delta round of the closure
+    val extracted = newEdges.count()
+    if (extracted == 0) return (0L, 0L)
+    val existing = stored(s, dest, closureSchema)
+    val delta = Hierarchy.incrementalClosure(existing, newEdges)
+      .join(existing, Seq("ancestor", "descendant", "depth"), "left_anti")
+      .withColumn("rev", lit(version))
+      .localCheckpoint() // counted AND pushed; one materialization
+    val pushed = delta.count()
+    if (pushed > 0) dest.push(delta)
+    (extracted, pushed)
+  }
+
+  /** `store`'s rows as `schema`'s columns; empty before its first push. */
+  private def stored(s: SparkSession, store: DocumentStore,
+      schema: StructType): DataFrame =
+    if (store.exists(s)) store.scan(s).select(schema.fieldNames.toSeq.map(col): _*)
+    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** The stored closure as a plain (ancestor, descendant, depth)
     * relation (rev dropped) — what consumers query.
@@ -149,20 +161,8 @@ object EtlPipeline {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val sink = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
         batchId: Long) => {
-      val s = batch.sparkSession
-      val newEdges = batch.toDF().select(col("child"), col("parent"))
-        .distinct().localCheckpoint()
-      if (newEdges.head(1).nonEmpty) {
-        val existing =
-          if (dest.exists(s))
-            dest.scan(s).select(col("ancestor"), col("descendant"), col("depth"))
-          else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            closureSchema)
-        val delta = Hierarchy.incrementalClosure(existing, newEdges)
-          .join(existing, Seq("ancestor", "descendant", "depth"), "left_anti")
-          .withColumn("rev", lit(batchId))
-        if (delta.head(1).nonEmpty) dest.push(delta)
-      }
+      applyEdgeAdds(batch.sparkSession, batch.toDF(), dest, batchId)
+      ()
     }
     edges.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
@@ -277,17 +277,8 @@ object EtlPipeline {
     val nEvents = collapsed.count()
     if (nEvents == 0) return (0L, 0L)
     val batchKeys = collapsed.select(col("child"), col("parent"))
-    val prevEdges = (
-      if (edgeStore.exists(s))
-        edgeStore.scan(s).select(col("child"), col("parent"), col("op"),
-          col("seq"))
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("child", LongType),
-          StructField("parent", LongType),
-          StructField("op", org.apache.spark.sql.types.StringType),
-          StructField("seq", LongType))))
-      ).localCheckpoint() // read for the transition AND the survivors
+    val prevEdges = stored(s, edgeStore, edgeSchema)
+      .localCheckpoint() // read for the transition AND the survivors
     // added/removed are the STORE TRANSITION on the touched keys, not
     // the batch's face value: a STALE event (older seq than the stored
     // row — cross-batch reordering, redelivery) loses the latest-wins
@@ -325,12 +316,8 @@ object EtlPipeline {
     val survivors = prevEdges.where(col("op") === "add")
       .select(col("child"), col("parent"))
       .join(removed, Seq("child", "parent"), "left_anti")
-    val existing = (
-      if (dest.exists(s))
-        dest.scan(s).select(col("ancestor"), col("descendant"), col("depth"))
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], closureSchema)
-      ).localCheckpoint() // diffed against twice below
+    val existing = stored(s, dest, closureSchema)
+      .localCheckpoint() // diffed against twice below
     val afterDel =
       if (removed.head(1).isEmpty) existing
       else Hierarchy.incrementalClosureDelete(existing, survivors,

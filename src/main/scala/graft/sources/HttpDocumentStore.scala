@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import graft.sources.http.HttpStoreProvider
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** [[DocumentStore]] over an HTTP document API — the seam carrying a
@@ -17,14 +18,15 @@ import org.apache.spark.sql.types.StructType
   *    server-side watermark range filter (docs with since < wm <=
   *    until — ES's range query inside the scroll); the DSv2
   *    connector ([[graft.sources.http.HttpStoreProvider]]) pushes an
-  *    extract's bookmark predicate down to `since` automatically,
-  *    and its streaming source brackets each micro-batch with both.
+  *    extract's bookmark bracket down to `since`/`until`
+  *    automatically, and its streaming source brackets each
+  *    micro-batch with both.
   *  - `GET  {base}/wm` → the store's current MAX watermark (the
   *    streaming source's latestOffset poll); "none" when empty.
   *  - `POST {base}/bulk` — keyed bulk upsert, LATEST VERSION WINS per
   *    key on the server (ES external versioning); idempotent under
   *    redelivery, so at-least-once transports above the seam are
-  *    safe. Pushed from `foreachPartition` in `batchSize` chunks —
+  *    safe. Every write task posts its rows in `batchSize` chunks —
   *    executor-side, never collected.
   *  - `POST {base}/delete` — keyed bulk delete (NDJSON key documents
   *    carrying the key and `rev`): the server removes a stored doc
@@ -56,74 +58,62 @@ import org.apache.spark.sql.types.StructType
   *    pipeline calls before its first push.
   *  - `GET  {base}/exists` → "true" | "false".
   *
+  * Every scan, bulk and sync push is a read or write of the `graft-http`
+  * connector ([[graft.sources.http.HttpStoreProvider]]), and a keyed
+  * delete posts through the same wire's row encoder — one decoder and
+  * one encoder for the store and the connector.
+  *
   * `schema` is explicit: inferring it would force a driver-side read
   * of the first page, and a store's schema is configuration, not
-  * data. Scan pages parse through Spark's JSON reader, so malformed
-  * rows surface per-record (columnNameOfCorruptRecord), not as a
-  * failed fetch.
+  * data. Its fields are the connector's five scalar types (LONG, INT,
+  * DOUBLE, STRING, BOOLEAN), decoded with Spark's JSON-reader
+  * semantics (see [[graft.sources.ConnectorProvider]]); a line that
+  * is not JSON fails the scan.
   */
 final case class HttpDocumentStore(base: String, schema: StructType,
     slices: Int = 8, batchSize: Int = 500,
     headers: Map[String, String] = Map.empty) extends DocumentStore {
   import HttpDocumentStore._
 
-  /** Configured auth/custom headers ride EVERY request this store
-    * makes (scan page, wm poll, bulk, delete, sync, mapping, exists);
-    * protocol headers (Content-Type, X-Sync-Epoch) win on collision
-    * so auth config can never break the wire format. Values are
-    * credentials — never logged, never echoed in errors.
+  /** The connector options this store reads and writes through.
+    * Configured auth/custom headers ride EVERY request this store
+    * makes (scan page, bulk, delete, sync, mapping, exists); the
+    * protocol's X-Sync-Epoch wins on collision so auth config can
+    * never break the wire format. Values are credentials — never
+    * logged, never echoed in errors.
     */
-  private def hdr(proto: Map[String, String]): Map[String, String] =
-    headers ++ proto
+  private def options(hs: Map[String, String] = headers): Map[String, String] =
+    Map("base" -> base, "slices" -> slices.toString,
+      "batchsize" -> batchSize.toString) ++ Connector.headerOptions(hs)
 
-  override def scan(spark: SparkSession): DataFrame = {
-    val (b, n, hs) = (base, slices, headers)
-    val lines = spark.createDataset(
-      spark.sparkContext.parallelize(0 until n, n)
-        .flatMap(slice => slicePages(b, slice, n, headers = hs)))(Encoders.STRING)
-    spark.read.schema(schema).json(lines)
-  }
+  override def scan(spark: SparkSession): DataFrame =
+    Connector.read(spark, provider, schema, options())
 
-  override def push(updates: DataFrame): Unit = {
-    val (b, bs, hs) = (base, batchSize, headers)
-    updates.toJSON.foreachPartition { it: Iterator[String] =>
-      it.grouped(bs).foreach(chunk =>
-        request("POST", s"$b/bulk", chunk.mkString("\n"), hs))
-    }
-  }
+  override def push(updates: DataFrame): Unit =
+    Connector.write(updates, provider, options())
 
-  override def delete(keys: DataFrame): Unit = {
-    val (b, bs, hs) = (base, batchSize, headers)
-    keys.toJSON.foreachPartition { it: Iterator[String] =>
-      it.grouped(bs).foreach(chunk =>
-        request("POST", s"$b/delete", chunk.mkString("\n"), hs))
-    }
-  }
+  override def delete(keys: DataFrame): Unit =
+    Connector.delete(keys, provider, options())
 
   override def sync(snapshot: DataFrame): Unit = {
-    val epoch = request("POST", s"$base/sync/begin", "", hdr(Map.empty))
-    val (b, bs, hs) = (base, batchSize, headers)
-    snapshot.toJSON.foreachPartition { it: Iterator[String] =>
-      it.grouped(bs).foreach(chunk =>
-        request("POST", s"$b/bulk", chunk.mkString("\n"),
-          hs ++ Map("X-Sync-Epoch" -> epoch)))
-    }
-    request("POST", s"$base/sync/commit", epoch, hdr(Map.empty))
+    val epoch = request("POST", s"$base/sync/begin", "", headers)
+    Connector.write(snapshot, provider, options(headers + ("X-Sync-Epoch" -> epoch)))
+    request("POST", s"$base/sync/commit", epoch, headers)
   }
 
   override def exists(spark: SparkSession): Boolean =
-    request("GET", s"$base/exists", "", hdr(Map.empty)) == "true"
+    request("GET", s"$base/exists", "", headers) == "true"
 
   /** Store the index mapping/settings document (driver-side: a
     * mapping is configuration, pushed once, never data-sized).
     */
   def putMapping(mapping: String): Unit = {
-    request("PUT", s"$base/mapping", mapping, hdr(Map.empty)); ()
+    request("PUT", s"$base/mapping", mapping, headers); ()
   }
 
   /** The stored mapping, or None when the index has none yet. */
   def getMapping: Option[String] =
-    Some(request("GET", s"$base/mapping", "", hdr(Map.empty))).filter(_.nonEmpty)
+    Some(request("GET", s"$base/mapping", "", headers)).filter(_.nonEmpty)
 
   /** Idempotent create-if-absent: write the mapping only when none is
     * stored — the reference's ensure-index step before the first
@@ -140,24 +130,7 @@ final case class HttpDocumentStore(base: String, schema: StructType,
 }
 
 object HttpDocumentStore {
-
-  /** Lazy page walk of one scan slice — executor-side; each `next`
-    * fetches at most one page, so a downstream `limit` stops early.
-    */
-  private[sources] def slicePages(base: String, slice: Int,
-      slices: Int, since: Option[Long] = None,
-      until: Option[Long] = None,
-      headers: Map[String, String] = Map.empty): Iterator[String] =
-    // state: Some(None) = first page, Some(Some(c)) = follow cursor c,
-    // None = cursor chain exhausted
-    Iterator.unfold(Some(None): Option[Option[String]]) {
-      case None => None
-      case Some(cursor) =>
-        val (body, next) =
-          fetchPage(base, slice, slices, cursor, since, until, headers)
-        val lines = body.linesIterator.filter(_.nonEmpty).toSeq
-        Some((lines, next.map(c => Some(c))))
-    }.flatten
+  private val provider = new HttpStoreProvider
 
   /** Bounded per-page retry with exponential backoff — the layer
     * BELOW Spark's task retry. Without it, a transient non-200 on
@@ -203,60 +176,42 @@ object HttpDocumentStore {
     sys.error("unreachable")
   }
 
-  private def fetchPage(base: String, slice: Int, slices: Int,
-      cursor: Option[String], since: Option[Long] = None,
-      until: Option[Long] = None,
-      headers: Map[String, String] = Map.empty): (String, Option[String]) = {
-    val url = s"$base/scan?slice=$slice&slices=$slices" +
-      cursor.fold("")(c => s"&cursor=$c") +
-      since.fold("")(v => s"&since=$v") + // server returns wm > since only
-      until.fold("")(v => s"&until=$v") // ... and wm <= until
-
-    withRetry(s"scan $url") {
+  /** One HTTP exchange with per-exchange retry (see [[withRetry]]):
+    * `read` of the 200 response alongside its body, or None on a 404
+    * when `absentOk`. Any other non-200 that survives the retries
+    * fails loudly — a partial bulk push must kill the task (Spark
+    * retries it), never drop documents silently.
+    */
+  private[graft] def exchange[A](method: String, url: String, body: String,
+      headers: Map[String, String], absentOk: Boolean = false)(
+      read: java.net.HttpURLConnection => A): Option[(String, A)] =
+    withRetry(s"$method $url") {
       val conn = new java.net.URL(url).openConnection()
         .asInstanceOf[java.net.HttpURLConnection]
       try {
-        conn.setRequestMethod("GET")
+        conn.setRequestMethod(method)
         headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
-        val code = conn.getResponseCode
-        if (code != 200) throw HttpStatusException(code, s"scan $url -> HTTP $code")
-        val body = new String(conn.getInputStream.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)
-        (body, Option(conn.getHeaderField("X-Next-Cursor")).filter(_.nonEmpty))
+        // any non-GET body must actually ship — ES's scroll/PIT release
+        // are DELETEs WITH a JSON body, and a release whose body never
+        // left the client silently leaks server contexts until their
+        // keepalive (found by the PIT spec's pits-empty assertion)
+        if (method == "POST" || method == "PUT" ||
+            (body.nonEmpty && method != "GET")) {
+          conn.setDoOutput(true)
+          conn.getOutputStream.write(
+            body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        }
+        conn.getResponseCode match {
+          case 404 if absentOk => None
+          case 200 => Some((new String(conn.getInputStream.readAllBytes(),
+            java.nio.charset.StandardCharsets.UTF_8), read(conn)))
+          case code => throw HttpStatusException(code, s"$method $url -> HTTP $code")
+        }
       } finally conn.disconnect()
     }
-  }
 
-  /** One HTTP exchange with per-exchange retry (see [[withRetry]]),
-    * failing loudly on a non-200 that survives the retries — a
-    * partial bulk push must kill the task (Spark retries it), never
-    * drop documents silently.
-    */
+  /** One exchange's 200 body (see [[exchange]]). */
   private[graft] def request(method: String, url: String, body: String,
       headers: Map[String, String]): String =
-    withRetry(s"$method $url")(requestOnce(method, url, body, headers))
-
-  private def requestOnce(method: String, url: String, body: String,
-      headers: Map[String, String]): String = {
-    val conn = new java.net.URL(url).openConnection()
-      .asInstanceOf[java.net.HttpURLConnection]
-    try {
-      conn.setRequestMethod(method)
-      headers.foreach { case (k, v) => conn.setRequestProperty(k, v) }
-      // any non-GET body must actually ship — ES's scroll/PIT release
-      // are DELETEs WITH a JSON body, and a release whose body never
-      // left the client silently leaks server contexts until their
-      // keepalive (found by the PIT spec's pits-empty assertion)
-      if (method == "POST" || method == "PUT" ||
-          (body.nonEmpty && method != "GET")) {
-        conn.setDoOutput(true)
-        conn.getOutputStream.write(
-          body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      val code = conn.getResponseCode
-      if (code != 200) throw HttpStatusException(code, s"$method $url -> HTTP $code")
-      new String(conn.getInputStream.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8)
-    } finally conn.disconnect()
-  }
+    exchange(method, url, body, headers)(_ => ()).get._1
 }

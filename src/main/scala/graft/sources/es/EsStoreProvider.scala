@@ -6,9 +6,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** The [[graft.sources.ConnectorProvider]] connector over a REAL
-  * Elasticsearch endpoint, speaking [[graft.sources.EsDocumentStore]]'s
-  * wire format: the watermark bound becomes a `range` query INSIDE the
-  * sliced scroll (or PIT, `readmode=pit`) body — evaluated by ES,
+  * Elasticsearch endpoint — the one path [[graft.sources.EsDocumentStore]]
+  * reads and writes through: the watermark bracket becomes a `range`
+  * query INSIDE the sliced scroll (or PIT, `readmode=pit`) body — evaluated by ES,
   * exactly the reference's incremental pull — with one scroll slice
   * (`"slice":{"id":i,"max":n}`) per partition; the streaming offsets
   * are the max-aggregation watermark; writes bulk external_gte with
@@ -49,9 +49,10 @@ case class EsWire(base: String, index: String, wmCol: Option[String],
 
   override def label: String = "es"
   override def name: String = s"graft-es($base/$index)"
-  override def describe(since: Option[Long]): String =
+  override def describe(since: Option[Long], until: Option[Long]): String =
     s"graft-es scan $base/$index slices=$slices" +
-      since.fold("")(v => s" since=$v (pushed range)")
+      since.fold("")(v => s" since=$v (pushed range)") +
+      until.fold("")(v => s" until=$v (pushed range)")
 
   /** close() releases the slice's live scroll/PIT context — an
     * early-terminated read must not pin index segments for the
@@ -94,11 +95,20 @@ case class EsWire(base: String, index: String, wmCol: Option[String],
   override def prepareWrite(): Unit =
     EsDocumentStore.ensureIndexAt(base, index, headers)
 
-  /** An index action line plus the source line. Key/version
-    * extraction mirrors EsDocumentStore.composedId (percent-escaped
-    * injective join; null keys fail loudly).
-    */
+  /** An index action line plus the source line. */
   override def bulkLine(ws: StructType): InternalRow => String = {
+    val action = actionOf("index", ws)
+    row => action(row) + "\n" + HttpRows.json(row, ws)
+  }
+  override def deleteLine(ws: StructType): InternalRow => String =
+    actionOf("delete", ws)
+
+  /** The action-and-metadata line: the `_id` is the key values, each
+    * percent-escaped (`%`→`%25`, `:`→`%3A`) before the `":"` join so
+    * distinct key tuples never share an `_id`; a NULL key fails the
+    * task. The version is the external version.
+    */
+  private def actionOf(action: String, ws: StructType): InternalRow => String = {
     val keyExtract: Array[InternalRow => String] = keyCols.toArray.map { n =>
       val i = ws.fieldIndex(n)
       val get: InternalRow => String = ws.fields(i).dataType match {
@@ -128,11 +138,11 @@ case class EsWire(base: String, index: String, wmCol: Option[String],
       val id = keyExtract.map(_(row)).mkString(":")
       require(!row.isNullAt(verIdx), s"graft es sink: null version column '$vc'")
       val version = if (verIsLong) row.getLong(verIdx) else row.getInt(verIdx).toLong
-      EsDocumentStore.actionLine("index", index, id, version) + "\n" +
-        HttpRows.json(row, ws)
+      EsDocumentStore.actionLine(action, index, id, version)
     }
   }
 
   override def postBulk(lines: IndexedSeq[String]): Unit =
     EsDocumentStore.bulkWithRetry(base, headers, lines)
+  override def postDelete(lines: IndexedSeq[String]): Unit = postBulk(lines)
 }

@@ -213,4 +213,12 @@ package object util {
     */
   def configureLocalHarness(b: SparkSession.Builder): SparkSession.Builder =
     configure(b).config("spark.sql.files.maxPartitionBytes", "4m")
+
+  /** `s` as a JSON string literal, quotes included — the one escaper
+    * behind every hand-built JSON text (result lines, ES request
+    * bodies, connector bulk rows).
+    */
+  def jsonString(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder
+      .getInstance().quoteAsString(s)) + "\""
 }

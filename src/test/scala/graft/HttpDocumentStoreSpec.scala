@@ -464,6 +464,7 @@ class HttpDocumentStoreSpec extends SparkSpec {
     import graft.sources.http.HttpRows
     val om = new ObjectMapper()
     val rnd = new scala.util.Random(7)
+    val nonFinite = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
     val hostile = Seq("plain", "with \"quotes\"", "back\\slash", "tab\there",
       "new\nline", "null", "", "percent%colon:", "\u0001ctl")
     val sch = StructType(Seq(
@@ -477,16 +478,52 @@ class HttpDocumentStoreSpec extends SparkSpec {
         else UTF8String.fromString(hostile(rnd.nextInt(hostile.size))),
         if (rnd.nextInt(5) == 0) null else rnd.nextLong(),
         if (rnd.nextInt(5) == 0) null else rnd.nextInt(),
-        if (rnd.nextInt(5) == 0) null else rnd.nextDouble(),
+        if (rnd.nextInt(5) == 0) null
+        else if (rnd.nextInt(4) == 0) nonFinite(rnd.nextInt(nonFinite.size))
+        else rnd.nextDouble(),
         if (rnd.nextInt(5) == 0) null else rnd.nextBoolean()))
       val back = HttpRows.parse(om.readTree(HttpRows.json(row, sch)), sch)
       (0 until sch.length).foreach { i =>
         withClue(s"field $i: ") {
           back.isNullAt(i) shouldBe row.isNullAt(i)
-          if (!row.isNullAt(i)) back.get(i, sch.fields(i).dataType) shouldBe
-            row.get(i, sch.fields(i).dataType)
+          // boxed equals: NaN equals NaN there, unlike `==`
+          if (!row.isNullAt(i)) assert(back.get(i, sch.fields(i).dataType)
+            .equals(row.get(i, sch.fields(i).dataType)),
+            s"${back.get(i, sch.fields(i).dataType)} != ${row.get(i, sch.fields(i).dataType)}")
         }
       }
     }
+  }
+
+  test("store scan and graft-http read decode mixed-type documents as Spark's JSON reader does") {
+    import org.apache.spark.sql.Row
+    val srv = new MockServer
+    val mixed = StructType.fromDDL(
+      "id BIGINT, rev BIGINT, n BIGINT, i INT, b BOOLEAN, d DOUBLE, s STRING")
+    val docs = Seq(
+      """{"id":1,"rev":1,"n":"abc","i":30000000000,"b":"yes","d":true,"s":12}""",
+      """{"id":2,"rev":1,"n":1.5,"i":"7","b":1,"d":"NaN","s":true}""",
+      """{"id":3,"rev":1,"n":"12","i":2.0,"b":"true","d":"Infinity","s":{"a":[1,"x"]}}""",
+      """{"id":4,"rev":1,"n":9223372036854775807,"i":-2147483648,"b":false,"d":"-Infinity","s":1.5}""",
+      """{"id":5,"rev":1,"n":12,"i":7,"b":true,"d":3,"s":"text"}""",
+      """{"id":6,"rev":1,"n":99999999999999999999,"i":null,"d":"nope","s":null}""")
+    // a mismatched or out-of-range value is NULL; a STRING field keeps
+    // non-text values as raw JSON; DOUBLE reads the non-finite strings
+    val want = Seq(
+      Row(1L, 1L, null, null, null, null, "12"),
+      Row(2L, 1L, null, null, null, Double.NaN, "true"),
+      Row(3L, 1L, null, null, null, Double.PositiveInfinity, """{"a":[1,"x"]}"""),
+      Row(4L, 1L, Long.MaxValue, Int.MinValue, false, Double.NegativeInfinity, "1.5"),
+      Row(5L, 1L, 12L, 7, true, 3.0, "text"),
+      Row(6L, 1L, null, null, null, null, null))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+      df.collect().sortBy(_.getLong(0)).toSeq
+    try {
+      rawPost(s"${srv.base}/bulk", docs.mkString("\n"))
+      rows(spark.read.schema(mixed).json(docs.toDS())) shouldBe want
+      rows(HttpDocumentStore(srv.base, mixed, slices = 2).scan(spark)) shouldBe want
+      rows(spark.read.format("graft-http").schema(mixed)
+        .option("base", srv.base).option("slices", "3").load()) shouldBe want
+    } finally srv.stop()
   }
 }

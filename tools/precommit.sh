@@ -23,6 +23,14 @@ if grep -rnE 'clearStored|evictSession' src/main ||
   echo "memo outside StoredArtifacts.getOrBuild — refusing to commit" >&2
   exit 1
 fi
+# one path to the network stores: sources encode and decode documents
+# through the connector wires (HttpRows), never Spark's JSON
+# writer/reader over a Dataset[String]; JsonLinesSource reads files
+if grep -rnE 'toJSON|to_json\(|\.json\(' src/main/scala/graft/sources \
+     --exclude=JsonLinesSource.scala | grep -v 'HttpRows\.json('; then
+  echo "Spark JSON codec under sources/ — use the connector wire" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
