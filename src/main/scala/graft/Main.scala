@@ -177,20 +177,18 @@ object Main {
         resultJson(r.extracted, r.pushed, r.watermark)
       case "replicate" =>
         val e = ExtractBookmark.extractSince(source.scan(spark), wmCol, bookmark)
-        // pin the batch BEFORE the count/push double evaluation: a
-        // live remote source can grow between the two jobs, and an
-        // unpinned plan would push rows beyond the counted set — and
-        // beyond the committed watermark (re-read later: idempotent
-        // but miscounted). The EtlPipeline pattern.
-        val batch = e.batch.localCheckpoint()
-        val n = batch.count()
+        // pinned: a live remote source can grow after the extract, and
+        // an unpinned plan would push rows beyond the counted set — and
+        // beyond the committed watermark
+        val (batch, n) = util.pin(e.batch)
         if (n > 0) dest.push(batch)
         ExtractBookmark.commit(e, bookmark)
         resultJson(n, n, e.watermark)
       case "sync" =>
-        val snapshot = source.scan(spark)
+        // pinned: the source is read once, and the count is of the rows
+        // the sync wrote
+        val (snapshot, n) = util.pin(source.scan(spark))
         dest.sync(snapshot)
-        val n = snapshot.count()
         resultJson(n, n, None)
       case "closure-stream" =>
         val q = startStream(spark, cfg,

@@ -18,8 +18,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   *    `closure`, `incr_cooc`, `ivf_centroids`, …; loaded tables are
   *    `table` with inputs `(dir, name)`); `inputs` are the dir and any
   *    build parameters. Sessions compare by identity.
-  *  - Values: loaded parquet frames, `localCheckpoint`ed derived
-  *    frames, driver-side models (centroid arrays, merge lists, a
+  *  - Values: loaded parquet frames, derived frames pinned by
+  *    [[util.pin]], driver-side models (centroid arrays, merge lists, a
   *    PCAModel), Dedup's `(frame, thresholds)` retention tuples, and
   *    one weak queue per session of [[util.reused]] frames.
   *  - Builds run OUTSIDE the map's lock: an entry is a [[Slot]]
@@ -36,7 +36,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * the gate/bench harness, UNBOUNDED for a long-lived service touching
   * many dirs or spawning many sessions. Such callers call [[clear]]
   * when done with a session (or dataset generation): persisted frames
-  * are unpersisted immediately; localCheckpointed blocks are released
+  * are unpersisted immediately; pinned (checkpointed) blocks are released
   * by Spark's ContextCleaner once the dropped references are
   * garbage-collected. A cleared artifact is rebuilt on next touch —
   * clear is an eviction, never a correctness event.

@@ -1042,7 +1042,7 @@ object Ann extends QueryPack {
     */
   def storedPcaProjection(s: SparkSession, d: String, k: Int): DataFrame =
     StoredArtifacts.getOrBuild("pca", s, d, k)(
-      pcaProjectOn(emb(s, d), storedPcaModel(s, d, k)).localCheckpoint())
+      graft.util.pin(pcaProjectOn(emb(s, d), storedPcaModel(s, d, k)))._1)
 
   /** The fitted gate-corpus basis itself — memoized so the projection
     * and the gate's model EXPORT (the oracle's input) share one model

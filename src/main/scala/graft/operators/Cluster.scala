@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, QueryPack, StoredArtifacts, Tables}
+import graft.util.pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,8 +35,7 @@ object Cluster extends QueryPack {
     // invariant: `edges` is symmetric (both directions present), so
     // each star step sees every node's full neighborhood from the
     // rows where it is the first column
-    var edges = symmetrize(pairs.select(col("d1").as("u"), col("d2").as("v")))
-      .localCheckpoint()
+    var edges = pin(symmetrize(pairs.select(col("d1").as("u"), col("d2").as("v"))))._1
     var stats = edgeStats(edges)
     var converged = false
     while (!converged) {
@@ -44,8 +44,7 @@ object Cluster extends QueryPack {
       // its dedup — a star step's per-node min is unaffected by
       // duplicate edges, so multiplicity only costs bounded row growth
       // (≤8× within a round), never correctness.
-      val next = symmetrize(smallStar(mirror(largeStar(edges))))
-        .localCheckpoint()
+      val next = pin(symmetrize(smallStar(mirror(largeStar(edges)))))._1
       val nextStats = edgeStats(next)
       converged = nextStats == stats
       stats = nextStats
@@ -151,8 +150,7 @@ object Cluster extends QueryPack {
     */
   def storedComponents(s: SparkSession, d: String): DataFrame =
     StoredArtifacts.getOrBuild("components", s, d)(
-      connectedComponents(Dedup.storedPairs(s, d).select(col("d1"), col("d2")))
-        .localCheckpoint())
+      pin(connectedComponents(Dedup.storedPairs(s, d).select(col("d1"), col("d2"))))._1)
 
   /** Incremental connected-components maintenance — fold a DELTA pair
     * batch into a stored component table at delta cost, the final
@@ -208,7 +206,7 @@ object Cluster extends QueryPack {
         coalesce(col("r2"), col("d2")).as("d2"))
       .where(col("d1") =!= col("d2")) // replayed/intra-component pairs vanish here
     // delta-sized fixpoint over touched roots + new nodes
-    val contracted = connectedComponents(contractedEdges).localCheckpoint()
+    val contracted = pin(connectedComponents(contractedEdges))._1
     // stored members of merged components take the merged root …
     val rename = contracted
       .select(col("node").as("component"), col("component").as("_nc"))
@@ -382,8 +380,7 @@ object Cluster extends QueryPack {
       val pairs = Dedup.storedPairs(s, d).select(col("d1"), col("d2"))
       val storedHalf = pairs.where((col("d1") + col("d2")) % 2 === 0)
       val deltaHalf = pairs.where((col("d1") + col("d2")) % 2 =!= 0)
-      componentsIncrement(connectedComponents(storedHalf), deltaHalf)
-        .localCheckpoint()
+      pin(componentsIncrement(connectedComponents(storedHalf), deltaHalf))._1
     }
 
   /** One BATCH of the near-dedup corpus ingest — the NIGHTLY form of
@@ -407,20 +404,20 @@ object Cluster extends QueryPack {
   def nearDedupIngest(docs0: DataFrame, docsPath: String, sigsPath: String,
       threshold: Double, numBuckets: Int = 64,
       compsPath: Option[String] = None): Long = {
-    val docs = docs0.localCheckpoint() // one materialization per batch
-    val s = docs.sparkSession
-    require(!docs.columns.contains("_rev"),
+    // schema-only check: a rejected input costs no job
+    require(!docs0.columns.contains("_rev"),
       "nearDedupIngest uses a scratch version column named _rev; " +
         "rename the input's _rev column first")
-    if (docs.head(1).isEmpty) return 0L
-    val sigD = Dedup.minhashSignatures(docs).localCheckpoint()
+    val (docs, nDocs) = pin(docs0)
+    if (nDocs == 0) return 0L
+    val s = docs.sparkSession
+    val sigD = pin(Dedup.minhashSignatures(docs))._1
     val stored =
       if (graft.sources.ParquetUpsertSink.tableExists(s, sigsPath))
         graft.sources.ParquetUpsertSink.read(s, sigsPath)
       else sigD.limit(0)
-    val pairs = Dedup
-      .minhashDeltaPairsFromSigs(stored, sigD, threshold)
-      .localCheckpoint() // pair set is small; verdicts reuse it twice
+    val (pairs, nPairs) = // pair set is small; verdicts reuse it twice
+      pin(Dedup.minhashDeltaPairsFromSigs(stored, sigD, threshold))
     // pairs are canonical (d1 < d2) and always touch the batch: drop
     // d2 when it is a batch doc (its neighbor d1 — stored or batch —
     // has the smaller id), and drop d1 when d2 is stored (a batch doc
@@ -431,8 +428,7 @@ object Cluster extends QueryPack {
       .union(pairs.join(storedIds.toDF("d2"), Seq("d2"), "left_semi")
         .select(col("d1").as("doc_id")))
       .distinct()
-    val kept = docs.join(drops, Seq("doc_id"), "left_anti").localCheckpoint()
-    val nKept = kept.count()
+    val (kept, nKept) = pin(docs.join(drops, Seq("doc_id"), "left_anti"))
     graft.sources.ParquetUpsertSink.upsert(
       kept.withColumn("_rev", lit(0L)), docsPath,
       Seq("doc_id"), "_rev", numBuckets)
@@ -442,7 +438,7 @@ object Cluster extends QueryPack {
       sigsPath, Seq("doc_id"), "_rev", numBuckets)
     // optional dedup-GROUP lineage: rejected docs stay attributable to
     // the cluster (and so the keeper) that rejected them
-    compsPath.foreach(cp => foldComponentsIntoStore(s, cp,
+    if (nPairs > 0) compsPath.foreach(cp => foldComponentsIntoStore(s, cp,
       pairs.select(col("d1"), col("d2")), numBuckets))
     nKept
   }
@@ -457,7 +453,8 @@ object Cluster extends QueryPack {
     */
   def foldComponentsIntoStore(s: SparkSession, compsPath: String,
       pairs: DataFrame, numBuckets: Int = 64): Unit = {
-    if (pairs.head(1).nonEmpty) {
+    val (pinned, nPairs) = pin(pairs)
+    if (nPairs > 0) {
       val stored =
         if (graft.sources.ParquetUpsertSink.tableExists(s, compsPath))
           graft.sources.ParquetUpsertSink.read(s, compsPath)
@@ -469,9 +466,8 @@ object Cluster extends QueryPack {
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("component",
               org.apache.spark.sql.types.LongType))))
-      val changed = componentsIncrementDelta(stored, pairs)
-        .localCheckpoint() // consumed by head(1) + the upsert; one materialization
-      if (changed.head(1).nonEmpty)
+      val (changed, n) = pin(componentsIncrementDelta(stored, pinned))
+      if (n > 0)
         graft.sources.ParquetUpsertSink.upsert(
           changed.withColumn("_rev", -col("component")), compsPath,
           Seq("node"), "_rev", numBuckets)

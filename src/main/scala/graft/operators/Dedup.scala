@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, QueryPack, StoredArtifacts, Tables}
+import graft.util.pin
 import graft.functions.{shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -377,8 +378,7 @@ object Dedup extends QueryPack {
       val cT = gateContainmentThreshold(s)
       // retention applied at build time: the checkpoint holds only
       // rows some gate consumer can keep (see retainForGate)
-      (retainForGate(coocCounts(docs(s, d), gateMaxShingleDf(s)), jT, cT)
-        .localCheckpoint(), jT, cT)
+      (pin(retainForGate(coocCounts(docs(s, d), gateMaxShingleDf(s)), jT, cT))._1, jT, cT)
     }
 
   /** The stored core, validated against a consumer's call-time
@@ -436,9 +436,9 @@ object Dedup extends QueryPack {
     // is one linear aggregate over the corpus, not pair-shaped)
     val (pairs, jBuilt) = StoredArtifacts.getOrBuild("pairs", s, d) {
       val jT = gateJaccardThreshold(s)
-      (withCutInertGuard(
+      (pin(withCutInertGuard(
         jaccardFromCooc(coocAtThresholds(s, d, jT, Double.NaN), jT),
-        docs(s, d), gateMaxShingleDf(s)).localCheckpoint(), jT)
+        docs(s, d), gateMaxShingleDf(s)))._1, jT)
     }
     // re-checked on every MEMO HIT too: the build-time require alone
     // would let a threshold lowered after materialization read the
@@ -703,11 +703,9 @@ object Dedup extends QueryPack {
         hotKeys = readStoreTable(s, dir, "hotkeys", Seq("shingle")),
         cooc = readStoreTable(s, dir, "cooc", Seq("d1", "d2", "c", "n1", "n2")))
       // redelivery guard: drop already-ingested docs (see scaladoc)
-      val fresh = batch
-        .join(stored.sizes.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .localCheckpoint() // one materialization per batch (the
-                           // nearDedupIngest rationale)
-      if (fresh.head(1).isEmpty) return 0L
+      val (fresh, nFresh) = pin(batch
+        .join(stored.sizes.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+      if (nFresh == 0) return 0L
       val parts = coocFoldParts(stored, fresh,
         meta.getInt(0), meta.getDouble(1), meta.getDouble(2))
       // sizes LAST: it is the redelivery guard's read table, so its
@@ -772,10 +770,9 @@ object Dedup extends QueryPack {
       val maxDf = gateMaxShingleDf(s)
       val jT = gateJaccardThreshold(s)
       val cT = gateContainmentThreshold(s)
-      (foldCoocDelta(
+      (pin(foldCoocDelta(
         buildCoocStore(all.where(col("doc_id") % 10 =!= 0), maxDf, jT, cT),
-        all.where(col("doc_id") % 10 === 0), maxDf, jT, cT)
-        .cooc.localCheckpoint(), jT, cT)
+        all.where(col("doc_id") % 10 === 0), maxDf, jT, cT).cooc)._1, jT, cT)
     }
     requireAtLeastBuilt(jaccardT, jBuilt, containT, cBuilt)
     core
@@ -872,7 +869,7 @@ object Dedup extends QueryPack {
   def storedContamination(s: SparkSession, d: String): DataFrame =
     StoredArtifacts.getOrBuild("contamination", s, d) {
       val (train, eval) = gateSplit(s, d)
-      contaminationPairs(train, eval, 0.5).localCheckpoint()
+      pin(contaminationPairs(train, eval, 0.5))._1
     }
 
   val q58 = Q(
@@ -1497,7 +1494,7 @@ object Dedup extends QueryPack {
     */
   def storedWindowSignatures(s: SparkSession, d: String): DataFrame =
     StoredArtifacts.getOrBuild("memorization_wins", s, d)(
-      windowSignatures(gateSplit(s, d)._1, n = 8).localCheckpoint())
+      pin(windowSignatures(gateSplit(s, d)._1, n = 8))._1)
 
   val q83 = Q(
     "q83_memorization",

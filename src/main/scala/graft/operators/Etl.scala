@@ -525,8 +525,7 @@ object Etl extends QueryPack {
     graft.StoredArtifacts.getOrBuild("incr_scd2", s, d) {
       val events = ev(s, d)
       def part(r: Int) = events.where(col("event_id") % 3 === r)
-      scd2Append(scd2Append(scd2History(part(0)), part(1)), part(2))
-        .localCheckpoint()
+      pin(scd2Append(scd2Append(scd2History(part(0)), part(1)), part(2)))._1
     }
 
   val q120 = Q(

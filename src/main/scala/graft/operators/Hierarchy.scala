@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, QueryPack, StoredArtifacts, Tables}
+import graft.util.pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,10 +13,10 @@ import org.apache.spark.sql.functions._
   * Spark-first design: the closure is an iterative frontier join — the
   * ONLY driver-side loop in the engine, bounded by graph depth (~log n
   * for these edges, ~20–40 for real bug graphs). Every iteration is a
-  * fully distributed join + dedup; `localCheckpoint` materializes each
-  * frontier so lineage stays O(1) instead of O(depth) (without it the
-  * plan tree doubles per iteration and the driver OOMs planning at
-  * depth ~30). At 100 TB the edges side is checkpointed once and
+  * fully distributed join + dedup; [[graft.util.pin]] materializes and
+  * counts each frontier in one job so lineage stays O(1), not O(depth)
+  * (without it the plan tree doubles per iteration and the driver OOMs
+  * planning at depth ~30). At 100 TB the edges side is checkpointed once and
   * reused; AQE sizes each iteration's shuffle from the live frontier,
   * which shrinks geometrically after the graph's widest level.
   */
@@ -44,13 +45,13 @@ object Hierarchy extends QueryPack {
     * that loop here); consumers of the hierarchy — ancestor rollups,
     * member lists, subtree aggregates — READ the stored table, they
     * never recompute the closure per query. Memoized per
-    * (session, dir) like Tables.load; localCheckpoint pins the
+    * (session, dir) like Tables.load; [[graft.util.pin]] pins the
     * computed partitions so every consumer scans, not recomputes.
     * Library callers with their OWN edge sets use [[closure]] /
     * [[incrementalClosure]] directly.
     */
   def storedClosure(s: SparkSession, d: String): DataFrame =
-    StoredArtifacts.getOrBuild("closure", s, d)(closure(edges(s, d)).localCheckpoint())
+    StoredArtifacts.getOrBuild("closure", s, d)(pin(closure(edges(s, d)))._1)
 
   /** Transitive closure of a (child, parent) edge set: one row per
     * reachable (ancestor, descendant) pair with the SHORTEST path
@@ -81,13 +82,12 @@ object Hierarchy extends QueryPack {
     // rediscoveries); each piece is checkpointed once and the final
     // closure is their union. Rounds: ⌈log2 D⌉; per-round cost is a
     // band×band join + one anti-join probe of the accumulator.
-    val first = edgesDf
+    val (first, edgeCount) = pin(edgesDf
       .select(col("parent").as("ancestor"), col("child").as("descendant"))
-      .withColumn("depth", lit(1))
-      .localCheckpoint()
+      .withColumn("depth", lit(1)))
     var pieces = List(first)
     var bound = 1L // closure is complete for all depths ≤ bound
-    var fresh = first.count()
+    var fresh = edgeCount
     // Termination on CYCLIC input: a cycle has walks at every length,
     // so the depth bands never empty and `fresh > 0` alone would loop
     // forever (bug graphs are supposed to be DAGs, but the engine must
@@ -97,7 +97,7 @@ object Hierarchy extends QueryPack {
     // (x, x) self-pairs at the cycle length, the transitive-closure
     // semantics for cyclic graphs. Adds ZERO work on DAGs (the band
     // empties first); worst case ⌈log2 edges⌉ rounds on cycles.
-    val cap = fresh
+    val cap = edgeCount
     while (fresh > 0 && bound < cap) {
       // No per-round anti-join against the accumulator (that reshuffles
       // the whole relation every round): rounds emit their band
@@ -108,14 +108,13 @@ object Hierarchy extends QueryPack {
       // stratum, instead of a confirming round over the full relation.
       val band = pieces.reduce(_ union _)
         .where(col("depth") >= math.max(1L, bound / 2) && col("depth") <= bound)
-      val cand = band.select(col("ancestor"), col("descendant").as("mid"), col("depth").as("d1"))
+      val (cand, n) = pin(band.select(col("ancestor"), col("descendant").as("mid"), col("depth").as("d1"))
         .join(band.select(col("ancestor").as("mid"), col("descendant"), col("depth").as("d2")), "mid")
         .select(col("ancestor"), col("descendant"), (col("d1") + col("d2")).as("depth"))
         .where(col("depth") <= bound * 2) // beyond-bound sums can't be minimal strata members
         .groupBy(col("ancestor"), col("descendant"))
-        .agg(min(col("depth")).as("depth"))
-        .localCheckpoint()
-      fresh = cand.count()
+        .agg(min(col("depth")).as("depth")))
+      fresh = n
       if (fresh > 0) pieces ::= cand
       bound *= 2
     }
@@ -157,16 +156,16 @@ object Hierarchy extends QueryPack {
         .where(col("old").isNull || col("depth") < col("old"))
         .select(col("ancestor"), col("descendant"), col("depth"))
 
-    var r = existing.select(col("ancestor"), col("descendant"), col("depth"))
-      .localCheckpoint()
-    var delta = improvements(
+    var r = pin(existing.select(col("ancestor"), col("descendant"), col("depth")))._1
+    var (delta, fresh) = pin(improvements(
       newEdges.select(col("parent").as("ancestor"), col("child").as("descendant"))
-        .withColumn("depth", lit(1)), r)
-      .localCheckpoint()
-    while (delta.count() > 0) {
-      r = r.join(delta, pairCols, "left_anti").union(delta).localCheckpoint()
+        .withColumn("depth", lit(1)), r))
+    while (fresh > 0) {
+      r = pin(r.join(delta, pairCols, "left_anti").union(delta))._1
       val cand = compose(delta, r).union(compose(r, delta)).union(compose(delta, delta))
-      delta = improvements(cand, r).localCheckpoint()
+      val (next, n) = pin(improvements(cand, r))
+      delta = next
+      fresh = n
     }
     r
   }
@@ -217,11 +216,10 @@ object Hierarchy extends QueryPack {
   def incrementalClosureDelete(existing: DataFrame, remainingEdges: DataFrame,
       removedEdges: DataFrame): DataFrame = {
     val delParents = removedEdges.select(col("parent").as("node")).distinct()
-    val affected = delParents.union(
+    val affected = pin(delParents.union(
         existing.join(delParents, existing("descendant") === delParents("node"))
           .select(col("ancestor").as("node")))
-      .distinct()
-      .localCheckpoint() // consumed by three joins; tiny vs the closure
+      .distinct())._1 // consumed by three joins; tiny vs the closure
     val keep = existing
       .join(affected, existing("ancestor") === affected("node"), "left_anti")
     val scope = affected.union(
@@ -438,7 +436,7 @@ object Hierarchy extends QueryPack {
       val e = edges(s, d)
       val base = e.where(!(col("child") % 5 === 0))
       val late = e.where(col("child") % 5 === 0)
-      incrementalClosure(closure(base), late).localCheckpoint()
+      pin(incrementalClosure(closure(base), late))._1
     }
 
   val q98 = Q(
@@ -526,7 +524,7 @@ object Hierarchy extends QueryPack {
     * against the current rank vector plus one map-side-combinable
     * sum keyed by destination — the canonical distributed PageRank
     * step. The edge list and out-degrees are computed once and
-    * reused across iterations. The rank vector localCheckpoints
+    * reused across iterations. The rank vector is pinned
     * every `checkpointEvery` rounds (the [[closure]] frontier
     * pattern), so plan depth — and with it analysis/codegen time and
     * lineage recovery cost — is bounded at a constant regardless of
@@ -579,7 +577,7 @@ object Hierarchy extends QueryPack {
         .agg(sum(pr(col("i.mass")) / col("c.deg")).as("mass"))
       // bound the unrolled lineage (not on the last round — the
       // caller decides whether the final vector materializes)
-      if (i % checkpointEvery == 0 && i < iters) inbound = inbound.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iters) inbound = pin(inbound)._1
     }
     nodes.as("n")
       .join(inbound.as("i"), col("n.node") === col("i.inode"), "left")

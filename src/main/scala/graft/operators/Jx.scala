@@ -167,12 +167,11 @@ object Jx extends QueryPack {
       d: String): org.apache.spark.sql.DataFrame =
     graft.StoredArtifacts.getOrBuild("nested_orders", s, d) {
       import org.apache.spark.sql.functions._
-      graft.Tables.orders(s, d)
+      graft.util.pin(graft.Tables.orders(s, d)
         .join(graft.Tables.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
         .groupBy(col("o_orderkey"), col("o_orderstatus"))
         .agg(collect_list(struct(
-          col("l_linenumber"), col("l_quantity"), col("l_extendedprice"))).as("lines"))
-        .localCheckpoint()
+          col("l_linenumber"), col("l_quantity"), col("l_extendedprice"))).as("lines")))._1
     }
 
   val q56Json: String =

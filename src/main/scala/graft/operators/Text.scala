@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Q, QueryPack, Tables}
+import graft.util.pin
 import graft.functions.{fingerprint, shingles, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1446,10 +1447,9 @@ object Text extends QueryPack {
     val cands = profiles.select(col("lang")).distinct()
       .orderBy(col("lang")).collect().map(_.getString(0)).toSeq
     require(cands.nonEmpty, "buildLangModel: empty profile table")
-    val profW = profiles.groupBy(col("tg"))
+    val profW = pin(profiles.groupBy(col("tg"))
       .agg(map_from_entries(collect_list(
-        struct(col("lang"), col("cnt")))).as("cm"))
-      .localCheckpoint()
+        struct(col("lang"), col("cnt")))).as("cm")))._1
     (cands, profW)
   }
 
@@ -1498,7 +1498,7 @@ object Text extends QueryPack {
     * the tf table is the tokenize-once artifact both phases share).
     */
   def storedTrigramTf(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    graft.StoredArtifacts.getOrBuild("trigram_tf", s, d)(trigramTf(docs(s, d)).localCheckpoint())
+    graft.StoredArtifacts.getOrBuild("trigram_tf", s, d)(pin(trigramTf(docs(s, d)))._1)
 
   /** The gate corpus's TRAINED language-ID model (candidate list +
     * pivoted per-trigram count maps) as a session-stored artifact —
@@ -1994,11 +1994,10 @@ object Text extends QueryPack {
       n: Int = 3, numBuckets: Int = 64): DataFrame = {
     val s = batch.sparkSession
     import s.implicits._
-    val grams = Dedup.ngrams(batch, n)
+    val grams = pin(Dedup.ngrams(batch, n)
       .select(xxhash64(col("shingle")).as("gh")).distinct()
       .withColumn("first_batch", lit(batchId))
-      .withColumn("_v", lit(-batchId))
-      .localCheckpoint() // verdict + upsert both read it; one gram pass
+      .withColumn("_v", lit(-batchId)))._1 // verdict + upsert both read it
     // ONE aggregate action answers all three verdict questions (is the
     // batch gram-less? how many grams? how many had an earlier owner?):
     // left-join the checkpointed gram table against the store's

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.operators.Hierarchy
+import graft.util.pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
@@ -31,7 +32,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * Scale note: the delta (new or depth-improved pairs vs the stored
   * closure) is one anti-join on (ancestor, descendant, depth) — both
   * sides hash-partition on the pair key, no broadcast of the big
-  * relation. Only the delta reaches the sink.
+  * relation. Only the delta reaches the sink. Every intermediate the
+  * loop branches on is pinned ([[graft.util.pin]]): its checkpoint job
+  * counts it, and what was counted is exactly what is pushed.
   */
 object EtlPipeline {
 
@@ -81,16 +84,13 @@ object EtlPipeline {
     */
   private def applyEdgeAdds(s: SparkSession, batch: DataFrame,
       dest: DocumentStore, version: Long): (Long, Long) = {
-    val newEdges = batch.select(col("child"), col("parent")).distinct()
-      .localCheckpoint() // consumed by every delta round of the closure
-    val extracted = newEdges.count()
+    val (newEdges, extracted) = // consumed by every delta round of the closure
+      pin(batch.select(col("child"), col("parent")).distinct())
     if (extracted == 0) return (0L, 0L)
     val existing = stored(s, dest, closureSchema)
-    val delta = Hierarchy.incrementalClosure(existing, newEdges)
+    val (delta, pushed) = pin(Hierarchy.incrementalClosure(existing, newEdges)
       .join(existing, Seq("ancestor", "descendant", "depth"), "left_anti")
-      .withColumn("rev", lit(version))
-      .localCheckpoint() // counted AND pushed; one materialization
-    val pushed = delta.count()
+      .withColumn("rev", lit(version)))
     if (pushed > 0) dest.push(delta)
     (extracted, pushed)
   }
@@ -147,11 +147,10 @@ object EtlPipeline {
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
       .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           _: Long) => {
-        // pin before the emptiness probe + push double evaluation — a
-        // remote-bracket re-read can differ between the two jobs (a
-        // doc's wm moves past the bracket); the runStream pattern
-        val b = batch.toDF().localCheckpoint()
-        if (b.head(1).nonEmpty) dest.push(b)
+        // pinned: a remote-bracket re-read could differ from what the
+        // emptiness test saw (a doc's wm moves past the bracket)
+        val (b, n) = pin(batch.toDF())
+        if (n > 0) dest.push(b)
       })
 
   /** Streaming loop against any [[DocumentStore]] (same seam as the
@@ -270,15 +269,13 @@ object EtlPipeline {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("child"), col("parent"))
       .orderBy(col("seq").desc)
-    val collapsed = batch
+    val (collapsed, nEvents) = pin(batch
       .select(col("child"), col("parent"), col("op"), col("seq"))
       .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .drop("__rn").localCheckpoint()
-    val nEvents = collapsed.count()
+      .drop("__rn"))
     if (nEvents == 0) return (0L, 0L)
     val batchKeys = collapsed.select(col("child"), col("parent"))
-    val prevEdges = stored(s, edgeStore, edgeSchema)
-      .localCheckpoint() // read for the transition AND the survivors
+    val prevEdges = pin(stored(s, edgeStore, edgeSchema))._1 // transition AND survivors read it
     // added/removed are the STORE TRANSITION on the touched keys, not
     // the batch's face value: a STALE event (older seq than the stored
     // row — cross-batch reordering, redelivery) loses the latest-wins
@@ -289,22 +286,19 @@ object EtlPipeline {
     // stored ∪ batch), NOT by re-scanning after the upsert — the
     // upsert hasn't happened yet; it lands last. Restricting to the
     // batch's keys keeps the merge window delta-sized.
-    val prevTouched = prevEdges
-      .join(batchKeys, Seq("child", "parent"), "left_semi")
-      .localCheckpoint() // prev side of the transition + merge input
+    val prevTouched = pin(prevEdges // prev side of the transition + merge input
+      .join(batchKeys, Seq("child", "parent"), "left_semi"))._1
     val postTouched = prevTouched.unionByName(collapsed)
       .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
       .drop("__rn")
-    val prevLiveTouched = prevTouched.where(col("op") === "add")
-      .select(col("child"), col("parent"))
-      .localCheckpoint() // compared twice below
-    val liveTouched = postTouched.where(col("op") === "add")
-      .select(col("child"), col("parent"))
-      .localCheckpoint()
-    val removed = prevLiveTouched
-      .join(liveTouched, Seq("child", "parent"), "left_anti")
-    val added = liveTouched
-      .join(prevLiveTouched, Seq("child", "parent"), "left_anti")
+    val prevLiveTouched = pin(prevTouched.where(col("op") === "add")
+      .select(col("child"), col("parent")))._1 // compared twice below
+    val liveTouched = pin(postTouched.where(col("op") === "add")
+      .select(col("child"), col("parent")))._1
+    val (removed, nRemoved) = pin(prevLiveTouched
+      .join(liveTouched, Seq("child", "parent"), "left_anti"))
+    val (added, nAdded) = pin(liveTouched
+      .join(prevLiveTouched, Seq("child", "parent"), "left_anti"))
     // The delete step rebuilds closure(survivors) exactly, so the add
     // fold below starts from a closed relation: it re-closes over the
     // SURVIVING OLD edges (stored live minus removed, never the added
@@ -316,26 +310,22 @@ object EtlPipeline {
     val survivors = prevEdges.where(col("op") === "add")
       .select(col("child"), col("parent"))
       .join(removed, Seq("child", "parent"), "left_anti")
-    val existing = stored(s, dest, closureSchema)
-      .localCheckpoint() // diffed against twice below
+    val existing = pin(stored(s, dest, closureSchema))._1 // diffed against twice below
     val afterDel =
-      if (removed.head(1).isEmpty) existing
+      if (nRemoved == 0) existing
       else Hierarchy.incrementalClosureDelete(existing, survivors,
         removed.unionByName(added))
-    val updated = (
-      if (added.head(1).isEmpty) afterDel
-      else Hierarchy.incrementalClosure(afterDel, added)
-      ).localCheckpoint() // push diff + delete diff both read it
-    val pushDelta = updated
+    val updated = pin(
+      if (nAdded == 0) afterDel
+      else Hierarchy.incrementalClosure(afterDel, added))._1 // both diffs read it
+    val (pushDelta, nPushed) = pin(updated
       .join(existing, Seq("ancestor", "descendant", "depth"), "left_anti")
-      .withColumn("rev", lit(version))
-      .localCheckpoint() // counted AND pushed; one materialization
-    val nPushed = pushDelta.count()
+      .withColumn("rev", lit(version)))
     if (nPushed > 0) dest.push(pushDelta)
-    val delDelta = existing.select(col("ancestor"), col("descendant"))
+    val (delDelta, nDeleted) = pin(existing.select(col("ancestor"), col("descendant"))
       .join(updated, Seq("ancestor", "descendant"), "left_anti")
-      .withColumn("rev", lit(version))
-    if (delDelta.head(1).nonEmpty) dest.delete(delDelta)
+      .withColumn("rev", lit(version)))
+    if (nDeleted > 0) dest.delete(delDelta)
     // Edge state LAST — committing it is what makes the batch's
     // transition empty on redelivery, so it must not land until every
     // dest effect it implies has been applied (see scaladoc).

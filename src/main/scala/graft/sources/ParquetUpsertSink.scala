@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.util.pin
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -512,8 +513,8 @@ object ParquetUpsertSink {
     }
     val live = manifest.get
     val buckets = readBucketCount(spark, path)
-    val desired = dedupLatest(withBucket(snapshot, keyCols, buckets),
-      keyCols, versionCol).localCheckpoint() // fingerprint + rewrite both read it
+    val desired = pin(dedupLatest(withBucket(snapshot, keyCols, buckets),
+      keyCols, versionCol))._1 // fingerprint + rewrite both read it
     def fingerprint(df: DataFrame, tag: String) = df
       .withColumn("__h", xxhash64((keyCols :+ versionCol).map(col): _*))
       .groupBy(col(bucketCol))
@@ -567,12 +568,11 @@ object ParquetUpsertSink {
     if (manifest.isEmpty) return
     val live = manifest.get
     val buckets = readBucketCount(spark, path)
-    val del = dedupLatest(
+    val del = pin(dedupLatest(
         withBucket(keys.select((keyCols :+ versionCol).map(col): _*),
           keyCols, buckets),
         keyCols, versionCol)
-      .withColumnRenamed(versionCol, "__delv")
-      .localCheckpoint() // touched-bucket probe + anti-join both read it
+      .withColumnRenamed(versionCol, "__delv"))._1 // touched-bucket probe + anti-join both read it
     val touched = del.select(col(bucketCol)).distinct().collect().map(_.getInt(0))
       .filter(live.contains) // buckets with no live data have nothing to delete
     if (touched.isEmpty) return
@@ -580,7 +580,7 @@ object ParquetUpsertSink {
       .where(col(bucketCol).isin(touched.toSeq: _*)) // partition-pruned scan
     val cond = keyCols.map(k => existing(k) === del(k)).reduce(_ && _) &&
       existing(versionCol) <= del("__delv")
-    val remaining = existing.join(del, cond, "left_anti").localCheckpoint()
+    val remaining = pin(existing.join(del, cond, "left_anti"))._1
     val still = remaining.select(col(bucketCol)).distinct()
       .collect().map(_.getInt(0)).toSet
     val gen = nextGen(live)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Q, QueryPack, Tables}
-import graft.util.dsum
+import graft.util.{dsum, pin}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -643,8 +643,8 @@ object StreamOps extends QueryPack {
         "rename the stream's _rev column first")
     val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
       val s = batch.sparkSession
-      val docs = batch.toDF().localCheckpoint() // one materialization per batch
-      if (docs.head(1).nonEmpty) {
+      val (docs, nDocs) = pin(batch.toDF())
+      if (nDocs > 0) {
         val wins = s.read.parquet(evalWinsPath)
         val drops = graft.operators.Dedup
           .memorizationRateAgainst(wins, docs, n)
@@ -706,8 +706,8 @@ object StreamOps extends QueryPack {
       org.apache.spark.sql.types.StructField("cr", org.apache.spark.sql.types.LongType)))
     val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
       val s = batch.sparkSession
-      val docs = batch.toDF().localCheckpoint() // one materialization per batch
-      if (docs.head(1).nonEmpty) {
+      val (docs, nDocs) = pin(batch.toDF())
+      if (nDocs > 0) {
         val counts = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](
             scala.jdk.CollectionConverters.SeqHasAsJava(frozen).asJava), frozenSchema)
@@ -741,7 +741,7 @@ object StreamOps extends QueryPack {
     * The freeze differs from the bucket-count/length-CDF monitors on
     * purpose: a bigram model grows with target vocabulary and is NOT
     * driver-snapshot-sized, so instead of a driver collect the models
-    * are `localCheckpoint`ed once at stream construction — one
+    * are pinned once at stream construction — one
     * cluster-side materialization reused by every batch. A republished
     * model takes effect on the next stream START, never mid-checkpoint;
     * and if a checkpoint block is lost the query fails LOUDLY rather
@@ -762,11 +762,11 @@ object StreamOps extends QueryPack {
       "streamingLmSelect uses a scratch version column named _rev; " +
         "rename the stream's _rev column first")
     val s0 = stream.sparkSession
-    val frozenBg = s0.read.parquet(bgPath).localCheckpoint()
-    val frozenVocab = s0.read.parquet(vocabPath).localCheckpoint()
+    val frozenBg = pin(s0.read.parquet(bgPath))._1
+    val frozenVocab = pin(s0.read.parquet(vocabPath))._1
     val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
-      val docs = batch.toDF().localCheckpoint() // one materialization per batch
-      if (docs.head(1).nonEmpty) {
+      val (docs, nDocs) = pin(batch.toDF())
+      if (nDocs > 0) {
         val kept = docs.join(
           graft.operators.Text.lmPerplexityUnder(docs, frozenBg, frozenVocab)
             .where(col("ppl") <= maxPpl)
@@ -811,8 +811,8 @@ object StreamOps extends QueryPack {
       org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType)))
     val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) => {
       val s = batch.sparkSession
-      val docs = batch.toDF().localCheckpoint() // one materialization per batch
-      if (docs.head(1).nonEmpty) {
+      val (docs, nDocs) = pin(batch.toDF())
+      if (nDocs > 0) {
         val baseline = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](
             scala.jdk.CollectionConverters.SeqHasAsJava(frozen).asJava), frozenSchema)
@@ -844,8 +844,8 @@ object StreamOps extends QueryPack {
       outPath: String, n: Int = 3, numBuckets: Int = 64)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) => {
-      val docs = batch.toDF().localCheckpoint() // one materialization per batch
-      if (docs.head(1).nonEmpty) {
+      val (docs, nDocs) = pin(batch.toDF())
+      if (nDocs > 0) {
         graft.sources.ParquetUpsertSink.upsert(
           graft.operators.Text.vocabNoveltyIngest(storePath, docs, batchId, n, numBuckets),
           outPath, Seq("batch_id"), "batch_id", numBuckets = 8)
@@ -888,8 +888,8 @@ object StreamOps extends QueryPack {
         "rename the stream's _rev column first")
     val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
       val s = batch.sparkSession
-      val docs = batch.toDF().localCheckpoint() // one materialization per batch
-      if (docs.head(1).nonEmpty) {
+      val (docs, nDocs) = pin(batch.toDF())
+      if (nDocs > 0) {
         val bloom = s.read.parquet(s"$artifactsDir/bloom").select(col("bf"))
         val fps = graft.operators.Dedup.fingerprints(docs)
         val probed = docs
@@ -944,10 +944,10 @@ object StreamOps extends QueryPack {
       numBuckets: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) => {
-      val partial = graft.operators.Etl.dailyCounts(batch.toDF())
+      val (partial, n) = pin(graft.operators.Etl.dailyCounts(batch.toDF())
         .withColumn("batch_id", lit(batchId))
-        .withColumn("_rev", lit(0L))
-      if (partial.head(1).nonEmpty)
+        .withColumn("_rev", lit(0L)))
+      if (n > 0)
         graft.sources.ParquetUpsertSink.upsert(partial, path,
           Seq("batch_id", "day", "event_type"), "_rev", numBuckets)
     }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.operators.{Cluster, Dedup, Etl, Hierarchy}
+import graft.util.pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -89,16 +90,15 @@ object IncrAudit {
         "fold ≡ rebuild is the exact claim being audited")
     println(s"SAMPLE 1/$sample: ${sampled.count()} docs, max shingle df " +
       s"$sampleMaxDf (cut $maxDf inert)")
-    val rebuiltCooc = Dedup.buildCoocStore(sampled, maxDf, jT, cT)
-      .cooc.localCheckpoint()
+    val rebuiltCooc = pin(Dedup.buildCoocStore(sampled, maxDf, jT, cT).cooc)._1
     val base = sampled.where(col("doc_id") % 10 =!= 0)
     val delta = sampled.where(col("doc_id") % 10 === 0)
     val coocOk = diff(s"cooc_incr ≡ rebuild [sampled 1/$sample]")(
       Dedup.foldCoocDelta(
         Dedup.buildCoocStore(base, maxDf, jT, cT), delta, maxDf, jT, cT).cooc,
       rebuiltCooc)
-    val pairs = Dedup.jaccardFromCooc(rebuiltCooc, jT)
-      .select(col("d1"), col("d2")).localCheckpoint()
+    val pairs = pin(Dedup.jaccardFromCooc(rebuiltCooc, jT)
+      .select(col("d1"), col("d2")))._1
     val storedHalf = pairs.where((col("d1") + col("d2")) % 2 === 0)
     val deltaHalf = pairs.where((col("d1") + col("d2")) % 2 =!= 0)
     val compsOk = diff(s"components_incr ≡ connectedComponents [sampled 1/$sample]")(
@@ -221,9 +221,8 @@ object IncrAudit {
         val docs = graft.Tables.documents(spark, sfDir)
         val base = docs.where(col("doc_id") % 10 =!= 0)
         val delta = docs.where(col("doc_id") % 10 === 0)
-        val deltaIds = delta.select(col("doc_id")).localCheckpoint()
-        val full = Dedup.minhashPairs(docs, 0.5).select(col("d1"), col("d2"))
-          .localCheckpoint()
+        val deltaIds = pin(delta.select(col("doc_id")))._1
+        val full = pin(Dedup.minhashPairs(docs, 0.5).select(col("d1"), col("d2")))._1
         val touching = full
           .join(deltaIds.toDF("d1"), Seq("d1"), "left_semi")
           .unionByName(full.join(deltaIds.toDF("d2"), Seq("d2"), "left_semi"))

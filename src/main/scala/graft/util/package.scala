@@ -171,12 +171,37 @@ package object util {
     * NOT for iterative drivers (hierarchy closure, connected
     * components, Lloyd rounds): a fixpoint loop measures convergence
     * with actions anyway and NEEDS lineage truncation per round —
-    * `localCheckpoint` remains correct there.
+    * [[pin]] remains correct there.
     */
   def reused(df: DataFrame): DataFrame = {
     val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     graft.StoredArtifacts.trackReused(p) // so StoredArtifacts.clear can unpersist
     p
+  }
+
+  /** The engine's one EAGER materialization: `localCheckpoint` `df`
+    * and return it with its row count, observed in the checkpoint's
+    * own job (a `count()`/`head(1)` probe after it would start one or
+    * two more). Drivers — fixpoint loops, per-batch ingest, stored
+    * artifacts — pin once and branch on the count; query builders
+    * never pin (they stay action-free, [[reused]] is theirs). The
+    * checkpoint runs under the caller's call site (Spark's
+    * `callSite.*` local properties, restored after), so the UI, event
+    * logs and stage attribution name the caller, not this helper.
+    */
+  def pin(df: DataFrame): (DataFrame, Long) = {
+    val sc = df.sparkSession.sparkContext
+    val frames = Thread.currentThread.getStackTrace.toSeq.dropWhile(f =>
+      f.getClassName == "java.lang.Thread" || f.getClassName.startsWith("graft.util.package"))
+    val site = Seq("callSite.long" -> frames.take(20).mkString("\n"), "callSite.short" ->
+      s"localCheckpoint at ${frames.head.getFileName}:${frames.head.getLineNumber}")
+    val saved = site.map { case (k, _) => k -> sc.getLocalProperty(k) }
+    site.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    try {
+      val rows = org.apache.spark.sql.Observation()
+      val pinned = df.observe(rows, count(lit(1)).as("n")).localCheckpoint()
+      (pinned, rows.get("n").asInstanceOf[Long])
+    } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
 
   /** Standard session builder config shared by Verify / Bench / specs. */

@@ -1,0 +1,56 @@
+package graft
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+/** What `f` started: its Spark jobs and the call-site `details` of its
+  * SQL executions. A marked sentinel job runs after `f`; listener
+  * events arrive in order, so once the sentinel is seen every job of
+  * `f` has been counted.
+  */
+private[graft] object JobProbe {
+  final case class Run[T](value: T, jobs: Int, details: Seq[String])
+
+  private val Mark = "graft.test.sentinel"
+
+  def apply[T](spark: SparkSession)(f: => T): Run[T] = {
+    val sc = spark.sparkContext
+    val mark = java.util.UUID.randomUUID.toString
+    val jobs = new AtomicInteger(0)
+    val details = new ConcurrentLinkedQueue[String]()
+    @volatile var done = false
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(Mark) == mark)) done = true
+        else { jobs.incrementAndGet(); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => details.add(x.details); ()
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      val v = f
+      sc.setLocalProperty(Mark, mark)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(Mark, null)
+      val deadline = System.currentTimeMillis() + 30000
+      while (!done && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(done, "sentinel job never reached the listener")
+      Run(v, jobs.get(), details.asScala.toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private val GraftFrame = """(?:^|[\s/])graft\.([\w.]+?)(?:\$[\w$]*)?\.[\w$<>]+\(""".r
+
+  /** The first `graft.` frame of a call site, as `operators.Hierarchy`
+    * or `util.package` (the object path, frames' method names dropped).
+    */
+  def firstGraftFrame(details: String): Option[String] =
+    Option(details).iterator.flatMap(_.linesIterator)
+      .flatMap(l => GraftFrame.findFirstMatchIn(l).map(_.group(1))).nextOption()
+}

@@ -457,4 +457,36 @@ class MainSpec extends SparkSpec {
       f.badRequests shouldBe 0
     } finally f.stop()
   }
+
+  test("sync scans an ES source once and reports the rows it synced") {
+    val base = tmp()
+    val f = new EsFixture
+    try {
+      val schema = "id BIGINT, v STRING, rev BIGINT"
+      graft.sources.EsDocumentStore(f.base, "docs", Seq("id"), "rev",
+        org.apache.spark.sql.types.StructType.fromDDL(schema))
+        .push(Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "c", 3L)).toDF("id", "v", "rev"))
+      val cfg = mapper.readTree(s"""{
+        "mode": "sync",
+        "source": {"type": "es", "base": "${f.base}", "alias": "docs",
+                   "schema": "$schema"},
+        "dest": {"type": "parquet", "path": "$base/dst",
+                 "keyCols": ["id"], "versionCol": "rev", "numBuckets": 4}
+      }""")
+      val before = f.searchRequests
+      val out = mapper.readTree(Main.run(spark, cfg))
+      val bySync = f.searchRequests - before
+      // one standalone scan of the same source, as Main reads it
+      val scanned = spark.read.format("graft-es").schema(schema)
+        .options(Map("base" -> f.base, "index" -> "docs")).load().count()
+      val byScan = f.searchRequests - before - bySync
+      scanned shouldBe 3L
+      out.get("pushed").asLong shouldBe 3L
+      graft.sources.ParquetUpsertSink.read(spark, s"$base/dst").count() shouldBe 3L
+      withClue(s"search requests: sync $bySync, one scan $byScan") {
+        bySync shouldBe byScan
+      }
+      f.badRequests shouldBe 0
+    } finally f.stop()
+  }
 }

@@ -31,6 +31,12 @@ if grep -rnE 'toJSON|to_json\(|\.json\(' src/main/scala/graft/sources \
   echo "Spark JSON codec under sources/ — use the connector wire" >&2
   exit 1
 fi
+# one materialization primitive: eager checkpoints go through
+# util.pin, which counts the rows in the checkpoint's own job
+if grep -rn '\.localCheckpoint(' src/main | grep -v '^src/main/scala/graft/util/'; then
+  echo "bare localCheckpoint outside graft.util — use util.pin" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
