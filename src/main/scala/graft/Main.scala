@@ -177,16 +177,14 @@ object Main {
         resultJson(r.extracted, r.pushed, r.watermark)
       case "replicate" =>
         val e = ExtractBookmark.extractSince(source.scan(spark), wmCol, bookmark)
-        // pinned: a live remote source can grow after the extract, and
-        // an unpinned plan would push rows beyond the counted set — and
-        // beyond the committed watermark
+        // pinned: a live source can grow after the extract; an unpinned
+        // plan would push rows beyond the counted set and the watermark
         val (batch, n) = util.pin(e.batch)
         if (n > 0) dest.push(batch)
         ExtractBookmark.commit(e, bookmark)
         resultJson(n, n, e.watermark)
       case "sync" =>
-        // pinned: the source is read once, and the count is of the rows
-        // the sync wrote
+        // pinned: one read of the source, counted as the sync wrote it
         val (snapshot, n) = util.pin(source.scan(spark))
         dest.sync(snapshot)
         resultJson(n, n, None)

@@ -16,9 +16,9 @@ import org.apache.spark.sql.functions._
   * fully distributed join + dedup; [[graft.util.pin]] materializes and
   * counts each frontier in one job so lineage stays O(1), not O(depth)
   * (without it the plan tree doubles per iteration and the driver OOMs
-  * planning at depth ~30). At 100 TB the edges side is checkpointed once and
-  * reused; AQE sizes each iteration's shuffle from the live frontier,
-  * which shrinks geometrically after the graph's widest level.
+  * planning at depth ~30). At 100 TB the edges side is checkpointed
+  * once and reused; AQE sizes each iteration's shuffle from the live
+  * frontier, which shrinks geometrically after the graph's widest level.
   */
 object Hierarchy extends QueryPack {
 
