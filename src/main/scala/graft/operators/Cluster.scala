@@ -466,11 +466,9 @@ object Cluster extends QueryPack {
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("component",
               org.apache.spark.sql.types.LongType))))
-      val (changed, n) = pin(componentsIncrementDelta(stored, pinned))
-      if (n > 0)
-        graft.sources.ParquetUpsertSink.upsert(
-          changed.withColumn("_rev", -col("component")), compsPath,
-          Seq("node"), "_rev", numBuckets)
+      graft.sources.ParquetUpsertSink.upsert(
+        componentsIncrementDelta(stored, pinned).withColumn("_rev", -col("component")),
+        compsPath, Seq("node"), "_rev", numBuckets)
     }
   }
 

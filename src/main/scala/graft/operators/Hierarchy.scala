@@ -77,11 +77,8 @@ object Hierarchy extends QueryPack {
     // into two shortest sub-paths whose depths both lie in
     // [2^(i-1), 2^i] — so round i+1 only needs to compose that DEPTH
     // BAND with itself, and newly found pairs are exactly the
-    // (2^i, 2^(i+1)] stratum with exact depths. The accumulated
-    // relation is never re-aggregated (an anti-join discards
-    // rediscoveries); each piece is checkpointed once and the final
-    // closure is their union. Rounds: ⌈log2 D⌉; per-round cost is a
-    // band×band join + one anti-join probe of the accumulator.
+    // (2^i, 2^(i+1)] stratum with exact depths. Each piece is
+    // checkpointed once. Rounds: ⌈log2 D⌉, each one band×band join.
     val (first, edgeCount) = pin(edgesDf
       .select(col("parent").as("ancestor"), col("child").as("descendant"))
       .withColumn("depth", lit(1)))

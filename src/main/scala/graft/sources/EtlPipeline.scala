@@ -266,13 +266,9 @@ object EtlPipeline {
   private def applyEdgeEvents(s: SparkSession, batch: DataFrame,
       dest: DocumentStore, edgeStore: DocumentStore,
       version: Long): (Long, Long) = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("child"), col("parent"))
-      .orderBy(col("seq").desc)
-    val (collapsed, nEvents) = pin(batch
-      .select(col("child"), col("parent"), col("op"), col("seq"))
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .drop("__rn"))
+    val (collapsed, nEvents) = pin(ParquetUpsertSink.dedupLatest(
+      batch.select(col("child"), col("parent"), col("op"), col("seq")),
+      Seq("child", "parent"), "seq"))
     if (nEvents == 0) return (0L, 0L)
     val batchKeys = collapsed.select(col("child"), col("parent"))
     val prevEdges = pin(stored(s, edgeStore, edgeSchema))._1 // transition AND survivors read it
@@ -288,9 +284,8 @@ object EtlPipeline {
     // batch's keys keeps the merge window delta-sized.
     val prevTouched = pin(prevEdges // prev side of the transition + merge input
       .join(batchKeys, Seq("child", "parent"), "left_semi"))._1
-    val postTouched = prevTouched.unionByName(collapsed)
-      .withColumn("__rn", row_number().over(w)).where(col("__rn") === 1)
-      .drop("__rn")
+    val postTouched = ParquetUpsertSink.dedupLatest(
+      prevTouched.unionByName(collapsed), Seq("child", "parent"), "seq")
     val prevLiveTouched = pin(prevTouched.where(col("op") === "add")
       .select(col("child"), col("parent")))._1 // compared twice below
     val liveTouched = pin(postTouched.where(col("op") === "add")

@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   *
   * Layout (snapshot-isolated): the table is partitioned by
   * `__bucket = pmod(hash(keys), n)` and, inside each bucket, by a
-  * monotonically increasing generation `__gen=G`. A mutation never
-  * rewrites a live file: it writes the merged rows of the touched
-  * buckets into FRESH `__gen` directories, then commits by atomically
-  * swapping the `_graft_manifest` pointer file at the table root
+  * monotonically increasing generation `__gen=G`. [[upsert]],
+  * [[delete]] and [[sync]] are one mutation protocol (see [[mutate]])
+  * that differs only in which buckets it rewrites and with what rows.
+  * A mutation never rewrites a live file: it reads its input once,
+  * writes the new rows of the touched buckets into FRESH `__gen`
+  * directories, then commits by atomically swapping the
+  * `_graft_manifest` pointer file at the table root
   * (hadoop `FileContext.rename(OVERWRITE)` — one atomic metadata op
   * on HDFS/local, NOT on S3-class object stores: there, install a
   * conditional-put [[ParquetUpsertSink.CommitIO]] — see
@@ -83,52 +86,63 @@ object ParquetUpsertSink {
     */
   def upsert(updates: DataFrame, path: String, keyCols: Seq[String],
       versionCol: String, numBuckets: Int = 64): Unit =
-    withWriteLock(updates.sparkSession, path) {
-      doUpsert(updates, path, keyCols, versionCol, numBuckets)
+    mutate(updates, path, keyCols, Some(numBuckets)) { (live, in, inBuckets) =>
+      // additive schema evolution: either side may carry columns the
+      // other lacks (see the class doc) — absent cells become null
+      val all = liveRows(in.sparkSession, path, live, inBuckets)
+        .fold(in)(_.unionByName(in, allowMissingColumns = true))
+      (inBuckets, Some(dedupLatest(all, keyCols, versionCol)))
     }
 
-  private def doUpsert(updates: DataFrame, path: String, keyCols: Seq[String],
-      versionCol: String, numBuckets: Int): Unit = {
-    val spark = updates.sparkSession
-    // anchor the commit precondition BEFORE reading the manifest: with
-    // begin-after-read, a manifest swap in the window between read and
-    // begin would let a stale mutation publish under the NEW etag — a
-    // silent lost update. Observed-before-read is fail-safe: a swap in
-    // the window makes the read see newer-or-equal state than the
-    // precondition, so the worst case is a spurious LOUD failure.
-    commitIO.begin(spark.sparkContext.hadoopConfiguration, manifestPath(path))
-    val manifest = readManifest(spark, path)
-    if (manifest.isEmpty) assertNoPreManifestData(spark, path)
-    val buckets = if (manifest.isDefined) readBucketCount(spark, path) else numBuckets
-    val keyed = withBucket(updates, keyCols, buckets)
-    // the touched-bucket probe is the only extra pass over `updates`;
-    // the merge itself streams straight into the new generation — the
-    // read set (old generations) and write set (a fresh generation)
-    // are disjoint directories, so no materialization barrier is
-    // needed between them
-    val touched = keyed.select(col(bucketCol)).distinct()
-      .collect().map(_.getInt(0))
-    if (touched.isEmpty) return
-    val merged = manifest match {
-      case None => dedupLatest(keyed, keyCols, versionCol)
-      case Some(live) =>
-        val existing = readRaw(spark, path, live)
-          .where(col(bucketCol).isin(touched.toSeq: _*)) // partition-pruned scan
-        // additive schema evolution: either side may carry columns the
-        // other lacks (see the class doc) — absent cells become null
-        dedupLatest(existing.unionByName(keyed, allowMissingColumns = true),
-          keyCols, versionCol)
+  /** The one mutation protocol behind [[upsert]], [[delete]] and
+    * [[sync]], under the write lock:
+    *  1. [[CommitIO.begin]] BEFORE the manifest is read: begin-after-read
+    *     would let a manifest swap in the window publish a stale
+    *     mutation under the NEW etag (a silent lost update); this order
+    *     makes the worst case a spurious LOUD failure.
+    *  1. Resolve the manifest and bucket count. `numBuckets` sizes a
+    *     first write; `None` (a delete) makes an absent table a no-op.
+    *  1. Pin the bucketed input once, observing its buckets in the
+    *     checkpoint's own job: a computed input is evaluated once.
+    *  1. `rewrite(live, input, inputBuckets)` picks the touched buckets
+    *     and their complete new rows (`None`: no rows at all).
+    *  1. Write those rows as one fresh generation.
+    *  1. Commit `live -- touched ++ written -> gen`, `written` being the
+    *     touched buckets whose directory of this (per-attempt unique)
+    *     generation exists: a bucket the rewrite emptied leaves.
+    */
+  private def mutate(rows: DataFrame, path: String, keyCols: Seq[String],
+      numBuckets: Option[Int])(
+      rewrite: (Map[Int, Long], DataFrame, Set[Int]) => (Set[Int], Option[DataFrame])): Unit = {
+    val spark = rows.sparkSession
+    val conf = spark.sparkContext.hadoopConfiguration
+    withWriteLock(spark, path) {
+      commitIO.begin(conf, manifestPath(path))
+      val manifest = readManifest(spark, path)
+      if (manifest.isDefined || numBuckets.isDefined) {
+        if (manifest.isEmpty) assertNoPreManifestData(spark, path)
+        val live = manifest.getOrElse(Map.empty[Int, Long])
+        val buckets = if (manifest.isDefined) readBucketCount(spark, path) else numBuckets.get
+        val seen = org.apache.spark.sql.Observation()
+        val (in, _) = pin(withBucket(rows, keyCols, buckets)
+          .observe(seen, collect_set(col(bucketCol)).as("b")))
+        val (touched, rewritten) = rewrite(live, in,
+          seen.get("b").asInstanceOf[scala.collection.Seq[Int]].toSet)
+        if (touched.nonEmpty) {
+          val gen = nextGen(live)
+          rewritten.foreach(writeBuckets(_, path, gen))
+          val fs = manifestPath(path).getFileSystem(conf)
+          val written = touched.filter(b =>
+            fs.exists(new org.apache.hadoop.fs.Path(genDir(path, b, gen))))
+          // sidecar BEFORE the manifest commit: the commit is what makes
+          // the table visible, and a visible table must already carry its
+          // bucket count (a crash in between leaves an invisible,
+          // vacuumable write)
+          if (manifest.isEmpty) writeBucketCount(spark, path, buckets)
+          commit(spark, path, live, live -- touched ++ written.map(_ -> gen))
+        }
+      }
     }
-    val prev = manifest.getOrElse(Map.empty[Int, Long])
-    val gen = nextGen(prev)
-    writeBuckets(merged, path, gen)
-    // sidecar BEFORE the manifest commit: the commit is what makes the
-    // table visible, and a visible table must already carry its bucket
-    // count (a crash in between leaves an invisible, vacuumable write)
-    if (manifest.isEmpty) writeBucketCount(spark, path, buckets)
-    // an upsert never empties a bucket (it only adds or replaces rows),
-    // so every touched bucket is live at the new generation
-    commit(spark, path, prev, prev ++ touched.map(_ -> gen))
   }
 
   /** Bucket-partitioned write of one fresh generation, COMPACTED:
@@ -148,12 +162,8 @@ object ParquetUpsertSink {
     * target size (parquet files are splittable, so READS of a large
     * bucket still parallelize across row groups; it is the
     * single-task WRITE of a hot bucket that numBuckets bounds).
-    *
-    * Generation ids are unique per attempt ([[nextGen]]), so this
-    * write can never land in — or dynamically overwrite — a directory
-    * any other attempt (crashed, concurrent, or committed) produced;
-    * a crashed attempt's partial directory stays an invisible orphan
-    * until [[vacuum]].
+    * Generation ids are unique per attempt ([[nextGen]]), so the
+    * dynamic overwrite never touches another attempt's directory.
     */
   private def writeBuckets(df: DataFrame, path: String, gen: Long): Unit =
     df.withColumn(genCol, lit(gen))
@@ -164,6 +174,8 @@ object ParquetUpsertSink {
       .mode(SaveMode.Overwrite)
       .parquet(path)
 
+  private val lastGen = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** A generation id for THIS mutation attempt: strictly above every
     * committed generation AND unique across attempts. Uniqueness is
     * the split-brain DATA guard (r16): two writers that both read the
@@ -171,19 +183,20 @@ object ParquetUpsertSink {
     * model) must never share a generation DIRECTORY, or the loser's
     * writeBuckets (dynamic-partition overwrite) would replace the
     * winner's already-committed files before the loser's conditional
-    * publish fails — a silent lost update behind a loud error. A
+    * publish fails — a silent lost update behind a loud error. Within
+    * one JVM the id is strictly increasing (a high-water mark), so
+    * same-millisecond attempts never collide; across processes a
     * millisecond timestamp in the high bits plus a 22-bit random salt
-    * makes collision need same-ms attempts AND a 1-in-4M salt match;
-    * the committed-max floor covers clock skew. Costs: generations
-    * are large opaque numbers (they were never contiguous anyway —
-    * only manifest references matter), and a crashed attempt's
-    * partial directory is no longer overwritten by the retry (it
-    * stays an invisible orphan until [[vacuum]]).
+    * makes collision need same-ms attempts AND a 1-in-4M salt match.
+    * The committed-max floor covers clock skew. Generations are large
+    * opaque numbers: only manifest references matter, and a crashed
+    * attempt's directory stays an invisible orphan until [[vacuum]].
     */
   private[graft] def nextGen(manifest: Map[Int, Long]): Long = {
     val floor = if (manifest.isEmpty) 0L else manifest.values.max + 1
-    math.max(floor, genNonce(System.currentTimeMillis(),
-      java.util.concurrent.ThreadLocalRandom.current().nextInt(1 << 22)))
+    val nonce = genNonce(System.currentTimeMillis(),
+      java.util.concurrent.ThreadLocalRandom.current().nextInt(1 << 22))
+    lastGen.updateAndGet(last => math.max(math.max(floor, nonce), last + 1))
   }
 
   /** Mask the timestamp to 41 bits so the shifted nonce never sets the
@@ -281,11 +294,12 @@ object ParquetUpsertSink {
     * implementation is the entire storage-portability surface.
     */
   trait CommitIO {
-    /** Called when a mutation resolves the live manifest (under the
-      * write lock), BEFORE any data is written: observe whatever
-      * precondition the commit will be conditioned on (object etag /
-      * generation). Default: nothing — rename-based commits have no
-      * precondition.
+    /** Called once per mutation, under the write lock, as the first
+      * step of the sink's one mutation protocol — BEFORE the live
+      * manifest is read and before any data is written: observe
+      * whatever precondition the commit will be conditioned on
+      * (object etag / generation). Default: nothing — rename-based
+      * commits have no precondition.
       */
     def begin(conf: org.apache.hadoop.conf.Configuration,
         dst: org.apache.hadoop.fs.Path): Unit = ()
@@ -445,6 +459,13 @@ object ParquetUpsertSink {
     readRaw(spark, path, live).drop(bucketCol)
   }
 
+  /** The live rows of `buckets` only; None when none of them is live. */
+  private def liveRows(spark: SparkSession, path: String, live: Map[Int, Long],
+      buckets: Set[Int]): Option[DataFrame] = {
+    val hit = live.filter { case (b, _) => buckets(b) }
+    if (hit.isEmpty) None else Some(readRaw(spark, path, hit))
+  }
+
   /** Physical read of one manifest's file set: ONLY the referenced
     * `__bucket=b/__gen=g` leaf directories are listed (basePath keeps
     * `__bucket` available for pruning merges), so uncommitted or
@@ -461,9 +482,7 @@ object ParquetUpsertSink {
     */
   private def readRaw(spark: SparkSession, path: String,
       live: Map[Int, Long]): DataFrame = {
-    val dirs = live.toSeq.sorted.map { case (b, g) =>
-      s"$path/$bucketCol=$b/$genCol=$g"
-    }
+    val dirs = live.toSeq.sorted.map { case (b, g) => genDir(path, b, g) }
     spark.read
       .option("mergeSchema", "true")
       .option("basePath", path)
@@ -496,44 +515,24 @@ object ParquetUpsertSink {
     */
   def sync(snapshot: DataFrame, path: String, keyCols: Seq[String],
       versionCol: String, numBuckets: Int = 64): Unit =
-    withWriteLock(snapshot.sparkSession, path) {
-      doSync(snapshot, path, keyCols, versionCol, numBuckets)
+    mutate(dedupLatest(snapshot, keyCols, versionCol), path, keyCols,
+        Some(numBuckets)) { (live, desired, inBuckets) =>
+      if (live.isEmpty) (inBuckets, Some(desired))
+      else {
+        def fingerprint(df: DataFrame, tag: String) = df
+          .withColumn("__h", xxhash64((keyCols :+ versionCol).map(col): _*))
+          .groupBy(col(bucketCol))
+          .agg(bit_xor(col("__h")).as(s"fp_$tag"), count(lit(1)).as(s"n_$tag"))
+        val drift = fingerprint(readRaw(desired.sparkSession, path, live), "e")
+          .join(fingerprint(desired, "d"), Seq(bucketCol), "full_outer")
+          .where(!(col("fp_e") <=> col("fp_d")) || !(col("n_e") <=> col("n_d")))
+          .select(col(bucketCol), col("n_d").isNotNull)
+          .collect().map(r => r.getInt(0) -> r.getBoolean(1))
+        val changed = drift.collect { case (b, true) => b }
+        (drift.map(_._1).toSet,
+          Option.when(changed.nonEmpty)(desired.where(col(bucketCol).isin(changed.toSeq: _*))))
+      }
     }
-
-  private def doSync(snapshot: DataFrame, path: String, keyCols: Seq[String],
-      versionCol: String, numBuckets: Int): Unit = {
-    val spark = snapshot.sparkSession
-    // precondition BEFORE the read (see doUpsert); the empty branch
-    // delegates to doUpsert, whose begin re-observes the same state
-    commitIO.begin(spark.sparkContext.hadoopConfiguration, manifestPath(path))
-    val manifest = readManifest(spark, path)
-    if (manifest.isEmpty) {
-      doUpsert(snapshot, path, keyCols, versionCol, numBuckets)
-      return
-    }
-    val live = manifest.get
-    val buckets = readBucketCount(spark, path)
-    val desired = pin(dedupLatest(withBucket(snapshot, keyCols, buckets),
-      keyCols, versionCol))._1 // fingerprint + rewrite both read it
-    def fingerprint(df: DataFrame, tag: String) = df
-      .withColumn("__h", xxhash64((keyCols :+ versionCol).map(col): _*))
-      .groupBy(col(bucketCol))
-      .agg(bit_xor(col("__h")).as(s"fp_$tag"), count(lit(1)).as(s"n_$tag"))
-    val fpE = fingerprint(readRaw(spark, path, live), "e")
-    val fpD = fingerprint(desired, "d")
-    val drift = fpE.join(fpD, Seq(bucketCol), "full_outer")
-      .where(!(col("fp_e") <=> col("fp_d")) || !(col("n_e") <=> col("n_d")))
-      .select(col(bucketCol), col("n_d").isNotNull.as("has_rows"))
-      .collect()
-    if (drift.nonEmpty) {
-      val changed = drift.filter(_.getBoolean(1)).map(_.getInt(0))
-      val emptied = drift.filter(!_.getBoolean(1)).map(_.getInt(0))
-      val gen = nextGen(live)
-      if (changed.nonEmpty)
-        writeBuckets(desired.where(col(bucketCol).isin(changed.toSeq: _*)), path, gen)
-      commit(spark, path, live, live -- emptied ++ changed.map(_ -> gen))
-    }
-  }
 
   /** Bulk keyed DELETE, bucket-pruned: only buckets containing a
     * requested key are read, anti-joined, and rewritten — delete cost
@@ -555,39 +554,15 @@ object ParquetUpsertSink {
     */
   def delete(keys: DataFrame, path: String, keyCols: Seq[String],
       versionCol: String): Unit =
-    withWriteLock(keys.sparkSession, path) {
-      doDelete(keys, path, keyCols, versionCol)
+    mutate(keys.select(keyCols.map(col) :+ col(versionCol).as("__delv"): _*),
+        path, keyCols, None) { (live, del, inBuckets) =>
+      val touched = inBuckets.filter(live.contains) // buckets with no live data have nothing to delete
+      (touched, liveRows(del.sparkSession, path, live, touched).map { existing =>
+        val cond = keyCols.map(k => existing(k) === del(k)).reduce(_ && _) &&
+          existing(versionCol) <= del("__delv")
+        existing.join(del, cond, "left_anti")
+      })
     }
-
-  private def doDelete(keys: DataFrame, path: String, keyCols: Seq[String],
-      versionCol: String): Unit = {
-    val spark = keys.sparkSession
-    // precondition BEFORE the read (see doUpsert)
-    commitIO.begin(spark.sparkContext.hadoopConfiguration, manifestPath(path))
-    val manifest = readManifest(spark, path)
-    if (manifest.isEmpty) return
-    val live = manifest.get
-    val buckets = readBucketCount(spark, path)
-    val del = pin(dedupLatest(
-        withBucket(keys.select((keyCols :+ versionCol).map(col): _*),
-          keyCols, buckets),
-        keyCols, versionCol)
-      .withColumnRenamed(versionCol, "__delv"))._1 // touched-bucket probe + anti-join both read it
-    val touched = del.select(col(bucketCol)).distinct().collect().map(_.getInt(0))
-      .filter(live.contains) // buckets with no live data have nothing to delete
-    if (touched.isEmpty) return
-    val existing = readRaw(spark, path, live)
-      .where(col(bucketCol).isin(touched.toSeq: _*)) // partition-pruned scan
-    val cond = keyCols.map(k => existing(k) === del(k)).reduce(_ && _) &&
-      existing(versionCol) <= del("__delv")
-    val remaining = pin(existing.join(del, cond, "left_anti"))._1
-    val still = remaining.select(col(bucketCol)).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val gen = nextGen(live)
-    if (still.nonEmpty)
-      writeBuckets(remaining, path, gen)
-    commit(spark, path, live, live -- touched ++ still.map(_ -> gen))
-  }
 
   private val lockName = "_graft_lock"
 
@@ -657,7 +632,7 @@ object ParquetUpsertSink {
     df.withColumn(bucketCol, pmod(hash(keyCols.map(col): _*), lit(n)).cast("int"))
 
   /** One window shuffle on the key: newest version per key survives. */
-  private def dedupLatest(df: DataFrame, keyCols: Seq[String], versionCol: String): DataFrame = {
+  private[graft] def dedupLatest(df: DataFrame, keyCols: Seq[String], versionCol: String): DataFrame = {
     val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col(versionCol).desc)
     df.withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1)
@@ -674,6 +649,9 @@ object ParquetUpsertSink {
   /** Test/ops seam: the live generation directory of every bucket. */
   private[graft] def liveDataDirs(spark: SparkSession, path: String): Map[Int, String] =
     readManifest(spark, path).getOrElse(Map.empty).map { case (b, g) =>
-      b -> s"$path/$bucketCol=$b/$genCol=$g"
+      b -> genDir(path, b, g)
     }
+
+  private def genDir(path: String, bucket: Int, gen: Long): String =
+    s"$path/$bucketCol=$bucket/$genCol=$gen"
 }

@@ -943,14 +943,12 @@ object StreamOps extends QueryPack {
   def streamingKpiIngest(events: DataFrame, path: String,
       numBuckets: Int = 16)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) => {
-      val (partial, n) = pin(graft.operators.Etl.dailyCounts(batch.toDF())
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("_rev", lit(0L)))
-      if (n > 0)
-        graft.sources.ParquetUpsertSink.upsert(partial, path,
-          Seq("batch_id", "day", "event_type"), "_rev", numBuckets)
-    }
+    val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+      graft.sources.ParquetUpsertSink.upsert(
+        graft.operators.Etl.dailyCounts(batch.toDF())
+          .withColumn("batch_id", lit(batchId))
+          .withColumn("_rev", lit(0L)),
+        path, Seq("batch_id", "day", "event_type"), "_rev", numBuckets)
     events.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch(sink)

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Hierarchy
-import graft.sources.{EtlPipeline, ParquetStore}
+import graft.sources.{EtlPipeline, ParquetStore, ParquetUpsertSink}
 
 /** Spark jobs started by the ETL loop's eager drivers. Every
   * intermediate they branch on is pinned and counted in its
@@ -41,5 +41,56 @@ class JobCountSpec extends SparkSpec {
     run.value.count() shouldBe 63L * 64 / 2
     info(s"closure jobs: ${run.jobs}")
     run.jobs should be <= 29 // 27 observed; 41 with a count() per round
+  }
+
+  /** A 2,000-row table over 8 buckets, ids 1..2000 at rev 1. */
+  private def sinkTable(): String = {
+    val path = java.nio.file.Files.createTempDirectory("graft-jobs-sink").toString + "/t"
+    ParquetUpsertSink.upsert((1L to 2000L).map(i => (i, 1L, s"p$i"))
+      .toDF("id", "rev", "payload"), path, Seq("id"), "rev", numBuckets = 8)
+    path
+  }
+
+  private def ids(path: String): Set[Long] =
+    ParquetUpsertSink.read(spark, path).select($"id").as[Long].collect().toSet
+
+  test("an upsert into a bucketed table starts at most 5 jobs") {
+    val path = sinkTable()
+    val (updates, _) = util.pin((1L to 60L).map(i => (i * 40, 2L, s"u$i"))
+      .toDF("id", "rev", "payload"))
+    val run = JobProbe(spark)(ParquetUpsertSink.upsert(updates, path, Seq("id"), "rev"))
+    ParquetUpsertSink.read(spark, path).where($"rev" === 2L).count() shouldBe 60L
+    ids(path).size shouldBe 2010
+    info(s"upsert jobs: ${run.jobs}")
+    run.jobs should be <= 5 // 6 with a touched-bucket collect before the merge
+  }
+
+  test("a delete from a bucketed table starts at most 6 jobs") {
+    val path = sinkTable()
+    val keys = (1L to 10L).map(i => (i * 100, 5L)).toDF("id", "rev")
+    val run = JobProbe(spark)(ParquetUpsertSink.delete(keys, path, Seq("id"), "rev"))
+    ids(path) shouldBe (1L to 2000L).toSet -- (1L to 10L).map(_ * 100)
+    info(s"delete jobs: ${run.jobs}")
+    run.jobs should be <= 6 // 11 with two bucket collects and two checkpoints
+  }
+
+  test("a sync starts no more jobs than its change detection and one rewrite need") {
+    val path = sinkTable()
+    val same = (1L to 2000L).map(i => (i, 1L, s"p$i")).toDF("id", "rev", "payload")
+    val noop = JobProbe(spark)(ParquetUpsertSink.sync(same, path, Seq("id"), "rev"))
+    val drop = JobProbe(spark)(ParquetUpsertSink.sync(same.where($"id" % 7 =!= 0),
+      path, Seq("id"), "rev"))
+    ids(path) shouldBe (1L to 2000L).filter(_ % 7 != 0).toSet
+    info(s"sync jobs: unchanged ${noop.jobs}, dropping rows ${drop.jobs}")
+    noop.jobs should be <= 6
+    drop.jobs should be <= 8
+  }
+
+  test("a delete against a path with no table is a no-op that starts no job") {
+    val path = java.nio.file.Files.createTempDirectory("graft-jobs-none").toString + "/t"
+    val keys = Seq((1L, 5L)).toDF("id", "rev")
+    val run = JobProbe(spark)(ParquetUpsertSink.delete(keys, path, Seq("id"), "rev"))
+    run.jobs shouldBe 0
+    ParquetUpsertSink.tableExists(spark, path) shouldBe false
   }
 }

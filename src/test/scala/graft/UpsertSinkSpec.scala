@@ -768,4 +768,37 @@ class UpsertSinkSpec extends SparkSpec {
     // live data untouched
     ParquetUpsertSink.read(spark, path).count() shouldBe 4L
   }
+
+  test("an upsert evaluates an unpinned input once") {
+    val dir = Files.createTempDirectory("graft-once").toFile
+    dir.deleteOnExit()
+    val path = dir.getPath + "/table"
+    ParquetUpsertSink.upsert((1L to 100L).map(i => (i, 1L, s"p$i"))
+      .toDF("id", "rev", "payload"), path, Seq("id"), "rev", numBuckets = 8)
+    // a computed frame that counts every row it produces
+    val evals = spark.sparkContext.longAccumulator("upsert-input-evals")
+    val updates = (61L to 120L).toDS().map { i => evals.add(1); (i, 2L, s"u$i") }
+      .toDF("id", "rev", "payload")
+    ParquetUpsertSink.upsert(updates, path, Seq("id"), "rev")
+    evals.value shouldBe 60L
+    val got = ParquetUpsertSink.read(spark, path).as[(Long, Long, String)].collect()
+    got.length shouldBe 120
+    got.filter(_._2 == 2L).map(_._1).toSet shouldBe (61L to 120L).toSet
+  }
+
+  test("an empty input commits nothing: no table is created and no generation changes") {
+    val dir = Files.createTempDirectory("graft-empty").toFile
+    dir.deleteOnExit()
+    val path = dir.getPath + "/table"
+    val empty = Seq.empty[(Long, Long, String)].toDF("id", "rev", "payload")
+    ParquetUpsertSink.upsert(empty, path, Seq("id"), "rev", numBuckets = 4)
+    ParquetUpsertSink.sync(empty, path, Seq("id"), "rev", numBuckets = 4)
+    ParquetUpsertSink.tableExists(spark, path) shouldBe false
+    ParquetUpsertSink.upsert(Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("id", "rev", "payload"),
+      path, Seq("id"), "rev", numBuckets = 4)
+    val dirs = ParquetUpsertSink.liveDataDirs(spark, path)
+    ParquetUpsertSink.upsert(empty, path, Seq("id"), "rev")
+    ParquetUpsertSink.delete(empty.select($"id", $"rev"), path, Seq("id"), "rev")
+    ParquetUpsertSink.liveDataDirs(spark, path) shouldBe dirs
+  }
 }

@@ -37,6 +37,12 @@ if grep -rn '\.localCheckpoint(' src/main | grep -v '^src/main/scala/graft/util/
   echo "bare localCheckpoint outside graft.util — use util.pin" >&2
   exit 1
 fi
+# one mutation path for the parquet sink: upsert, delete and sync run
+# one protocol, so the commit precondition is observed at one site
+if (( $(grep -c 'commitIO\.begin(' src/main/scala/graft/sources/ParquetUpsertSink.scala) > 1 )); then
+  echo "more than one commitIO.begin( in ParquetUpsertSink — mutations share one protocol" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
