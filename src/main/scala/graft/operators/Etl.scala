@@ -639,7 +639,7 @@ object Etl extends QueryPack {
     * adjacent 7-day activity windows as added / removed / changed /
     * unchanged — the CDC report between two incremental-extract
     * windows, and the oracle-able counterpart of the full-sync xor
-    * fingerprint seam (ParquetUpsertSink.fullSync detects THAT a
+    * fingerprint seam (ParquetUpsertSink.sync detects THAT a
     * keyed store drifted; this says WHICH keys and HOW).
     *
     * State per window = the key's latest event (q23's deterministic
