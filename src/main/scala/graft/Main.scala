@@ -109,9 +109,10 @@ import org.apache.spark.sql.types.StructType
   *    HTTP store protocol ([[HttpDocumentStore]]).
   *  - `{"type":"jsonl","path":...}` — NDJSON export, source-only.
   *
-  * Prints one JSON result line (extracted/pushed/watermark) on
-  * success; any failure exits non-zero with the error on stderr —
-  * the exit code is the scheduler's signal, same as the reference.
+  * Prints one JSON result line (extracted/pushed/watermark, plus
+  * deleted for the closure modes) on success; any failure exits
+  * non-zero with the error on stderr — the exit code is the
+  * scheduler's signal, same as the reference.
   */
 object Main {
   private val mapper = new ObjectMapper()
@@ -169,12 +170,12 @@ object Main {
     mode match {
       case "closure" =>
         val r = EtlPipeline.run(spark, source.scan(spark), wmCol, dest, bookmark)
-        resultJson(r.extracted, r.pushed, r.watermark)
+        resultJson(r.extracted, r.pushed, r.watermark, Some(r.deleted))
       case "closure-deletes" =>
         val edgeStore = storeOf(cfg.get("edgeStore"))
         val r = EtlPipeline.runWithDeletes(spark, source.scan(spark), wmCol,
           dest, edgeStore, bookmark)
-        resultJson(r.extracted, r.pushed, r.watermark)
+        resultJson(r.extracted, r.pushed, r.watermark, Some(r.deleted))
       case "replicate" =>
         val e = ExtractBookmark.extractSince(source.scan(spark), wmCol, bookmark)
         // pinned: a live source can grow after the extract; an unpinned
@@ -466,6 +467,9 @@ object Main {
     (0 until a.size()).map(a.get(_).asText())
   }
 
-  private def resultJson(extracted: Long, pushed: Long, wm: Option[Long]): String =
-    s"""{"extracted":$extracted,"pushed":$pushed,"watermark":${wm.getOrElse("null")}}"""
+  private def resultJson(extracted: Long, pushed: Long, wm: Option[Long],
+      deleted: Option[Long] = None): String = {
+    val del = deleted.fold("")(d => s""","deleted":$d""")
+    s"""{"extracted":$extracted,"pushed":$pushed$del,"watermark":${wm.getOrElse("null")}}"""
+  }
 }

@@ -155,7 +155,7 @@ object Cluster extends QueryPack {
   /** Incremental connected-components maintenance — fold a DELTA pair
     * batch into a stored component table at delta cost, the final
     * rebuild-only stage of the nightly near-dedup pipeline made
-    * incremental (closure: [[Hierarchy.incrementalClosure]];
+    * incremental (closure: [[Hierarchy.closurePatch]];
     * signatures: [[Dedup.minhashDeltaPairs]]; components: this).
     *
     * Algorithm — contract, solve small, relabel:

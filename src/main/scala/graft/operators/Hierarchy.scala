@@ -48,7 +48,7 @@ object Hierarchy extends QueryPack {
     * (session, dir) like Tables.load; [[graft.util.pin]] pins the
     * computed partitions so every consumer scans, not recomputes.
     * Library callers with their OWN edge sets use [[closure]] /
-    * [[incrementalClosure]] directly.
+    * [[closurePatch]] directly.
     */
   def storedClosure(s: SparkSession, d: String): DataFrame =
     StoredArtifacts.getOrBuild("closure", s, d)(pin(closure(edges(s, d)))._1)
@@ -120,115 +120,127 @@ object Hierarchy extends QueryPack {
       .agg(min(col("depth")).as("depth"))
   }
 
-  /** Incrementally fold newly-arrived edges into an existing closure —
-    * the reference's actual ETL loop (hierarchy.py re-pulls only bugs
-    * modified since the last run and patches the stored hierarchy,
-    * never rebuilding the world).
+  private val pairKey = Seq("ancestor", "descendant")
+  private def pairs(df: DataFrame) = df.select(col("ancestor"), col("descendant"))
+  private def triples(df: DataFrame) = df.select(col("ancestor"), col("descendant"), col("depth"))
+
+  /** What one batch of edge changes does to a stored closure: the new
+    * or depth-changed (ancestor, descendant, depth) pairs to upsert and
+    * the (ancestor, descendant) pairs to delete, each pinned and
+    * counted.
+    */
+  final case class ClosurePatch(upserts: DataFrame, nUpserts: Long,
+      deletes: DataFrame, nDeletes: Long) {
+    def applyTo(existing: DataFrame): DataFrame =
+      triples(existing).join(pairs(deletes).union(pairs(upserts)), pairKey, "left_anti")
+        .union(upserts)
+  }
+
+  /** The patch one batch of (child, parent) edge changes makes to the
+    * exact closure `existing` — the reference's ETL loop (hierarchy.py
+    * re-pulls only bugs modified since the last run and patches the
+    * stored hierarchy). One semi-naive [[fold]] serves adds and
+    * removals, and the patch holds only the pairs it changes. Every
+    * round reads `existing`, so callers pin it.
     *
-    * Semi-naive delta iteration: each round composes only the DELTA
-    * (pairs improved this round) with the big relation — Δ∘R, R∘Δ,
-    * Δ∘Δ — and keeps compositions that create a new pair or shorten an
-    * existing one. The full R∘R self-join never runs, so per-round
-    * cost scales with the change footprint: the delta side of every
-    * join is broadcast-sized for localized updates, while R is only
-    * probed on join keys. Terminates when a round yields no
-    * improvement; handles both new connectivity and min-depth
-    * shortening (a new shortcut edge lowers depths downstream of it).
-    * Edge DELETION invalidates stored pairs non-monotonically —
-    * handled by [[incrementalClosureDelete]], which re-closes only
-    * the affected subgraph (the reference's re-close-from-the-
-    * modified-set loop).
+    *  - **Adds only** (`removed` is None): adds only create or shorten
+    *    pairs, so the fold runs the added edges over `existing`,
+    *    read-only, and its gains ARE the upserts.
+    *  - **With removals**: let A be the parents of the removed and
+    *    added edges plus their stored ancestors. No node outside A
+    *    reaches A, so its pairs cannot change and are kept verbatim.
+    *    The fold runs the live edges out of A (A's stored depth-1
+    *    pairs, minus the removed, plus the added) over `existing`
+    *    without A's pairs, so its output is exactly A's new pairs:
+    *    upserts = output ▷ A's stored pairs on (a, d, depth), deletes =
+    *    A's stored pairs ▷ output on (a, d). After a partly applied
+    *    patch (upserts stored, deletes lost) the stored pairs through
+    *    the added edges put their ancestors in A too, so a rerun
+    *    completes the patch.
+    *
+    * Everything pinned is sized by the changed region; a removal under
+    * a huge component's root re-derives that component (as the
+    * reference does).
+    */
+  def closurePatch(existing: DataFrame, added: DataFrame,
+      removed: Option[DataFrame] = None): ClosurePatch = {
+    def edgePairs(edges: DataFrame) =
+      edges.select(col("parent").as("ancestor"), col("child").as("descendant"))
+    removed match {
+      case None =>
+        val (gains, n) = fold(existing, edgePairs(added))
+        ClosurePatch(gains, n, pairs(gains).where(lit(false)), 0L)
+      case Some(rm) =>
+        val parents = edgePairs(added).union(edgePairs(rm)).select(col("ancestor").as("node"))
+        val (region, _) = pin(parents.union(existing
+            .join(broadcast(parents), col("descendant") === col("node"), "left_semi")
+            .select(col("ancestor").as("node")))
+          .distinct())
+        def inRegion(df: DataFrame, how: String) =
+          df.join(broadcast(region), col("ancestor") === col("node"), how)
+        val (mine, _) = pin(triples(inRegion(existing, "left_semi")))
+        val seeds = pairs(mine.where(col("depth") === 1))
+          .join(edgePairs(rm), pairKey, "left_anti").union(edgePairs(added))
+        val (out, _) = fold(inRegion(existing, "left_anti"), seeds)
+        val (upserts, nUpserts) = pin(out.join(broadcast(mine), pairKey :+ "depth", "left_anti"))
+        val (deletes, nDeletes) = pin(pairs(mine).join(broadcast(out), pairKey, "left_anti"))
+        ClosurePatch(upserts, nUpserts, deletes, nDeletes)
+    }
+  }
+
+  /** `existing` with new (child, parent) edges folded in by
+    * [[closurePatch]] (q98's build). From an empty relation it equals
+    * [[closure]] but costs more, since every round re-pins all gains so
+    * far; full builds use [[closure]].
     */
   def incrementalClosure(existing: DataFrame, newEdges: DataFrame): DataFrame = {
-    val pairCols = Seq("ancestor", "descendant")
+    val (r, _) = pin(triples(existing))
+    closurePatch(r, newEdges).applyTo(r)
+  }
+
+  /** Semi-naive min-plus fold of depth-1 `seeds` (ancestor,
+    * descendant) into `base`, which it only reads. Returns the gains —
+    * pairs absent from `base` or shorter there — pinned and counted.
+    *
+    * Each round composes the pairs the previous round improved (Δ,
+    * broadcast) with `base` ∪ gains on either side and merges the
+    * candidates into the gains in one aggregate, which reads base's
+    * depths through a broadcast semi-join probe. A round pins one
+    * frame — the gains, its improvements flagged `fresh` and counted
+    * by an Observation in the checkpoint's own job — and every round
+    * after the first plans the same shape with no per-round literal.
+    * Depths only fall and pairs are finite, so it ends, on cycles too.
+    */
+  private def fold(base: DataFrame, seeds: DataFrame): (DataFrame, Long) = {
     def compose(l: DataFrame, r: DataFrame): DataFrame =
       l.select(col("ancestor"), col("descendant").as("mid"), col("depth").as("d1"))
         .join(r.select(col("ancestor").as("mid"), col("descendant"), col("depth").as("d2")), "mid")
         .select(col("ancestor"), col("descendant"), (col("d1") + col("d2")).as("depth"))
-    /** candidate pairs that beat (or are absent from) the relation */
-    def improvements(cand: DataFrame, rel: DataFrame): DataFrame =
-      cand.groupBy(pairCols.map(col): _*).agg(min(col("depth")).as("depth"))
-        .join(rel.select(col("ancestor"), col("descendant"), col("depth").as("old")),
-          pairCols, "left")
-        .where(col("old").isNull || col("depth") < col("old"))
-        .select(col("ancestor"), col("descendant"), col("depth"))
-
-    var r = pin(existing.select(col("ancestor"), col("descendant"), col("depth")))._1
-    var (delta, fresh) = pin(improvements(
-      newEdges.select(col("parent").as("ancestor"), col("child").as("descendant"))
-        .withColumn("depth", lit(1)), r))
-    while (fresh > 0) {
-      r = pin(r.join(delta, pairCols, "left_anti").union(delta))._1
-      val cand = compose(delta, r).union(compose(r, delta)).union(compose(delta, delta))
-      val (next, n) = pin(improvements(cand, r))
-      delta = next
-      fresh = n
+    def merge(gains: DataFrame, cand: DataFrame): (DataFrame, Long, Long) = {
+      def tagged(df: DataFrame, tag: Int) = triples(df).withColumn("src", lit(tag))
+      def best(tag: Int) = min(when(col("src") === tag, col("depth")))
+      val stored = base.join(broadcast(pairs(cand)), pairKey, "left_semi")
+      // per pair: c = best candidate depth, g = gained depth, b = base's
+      val fresh = coalesce(col("c") < coalesce(col("g"), col("b"), lit(Int.MaxValue)), lit(false))
+      val improved = org.apache.spark.sql.Observation()
+      val (next, n) = pin(tagged(cand, 0).union(tagged(gains, 1)).union(tagged(stored, 2))
+        .groupBy(pairKey.map(col): _*)
+        .agg(best(0).as("c"), best(1).as("g"), best(2).as("b"))
+        .where(col("g").isNotNull || fresh)
+        .select(col("ancestor"), col("descendant"),
+          when(fresh, col("c")).otherwise(col("g")).as("depth"), fresh.as("fresh"))
+        .observe(improved, count(when(col("fresh"), lit(1))).as("n")))
+      (next, improved.get("n").asInstanceOf[Long], n)
     }
-    r
-  }
-
-  /** Fold edge DELETIONS into a stored closure without rebuilding the
-    * world — the reference's re-close-from-the-modified-set loop
-    * (hierarchy.py patches the stored hierarchy from the changed bug
-    * set; deletions re-close the touched region).
-    *
-    * Deletion is non-monotonic (a stored pair's shortest path may have
-    * used a removed edge), so the patch is: isolate, then re-close.
-    *
-    *  - `affected` = the deleted edges' parents plus every stored
-    *    ANCESTOR of them: any path through a deleted edge (c, p)
-    *    starts at p or an ancestor of p, so a stored pair whose
-    *    ancestor is NOT in this set cannot have used a deleted edge —
-    *    its depth is still exact and it is kept verbatim (no
-    *    recompute, no reshuffle beyond the anti-join probe).
-    *  - the re-close SCOPE is the affected nodes plus their OLD
-    *    descendants (old reachability over-approximates new: deletion
-    *    only shrinks reach), restricted to the surviving edges whose
-    *    parent lies in scope. `closure` on that subgraph is exact for
-    *    every affected ancestor; pairs it finds for unaffected
-    *    ancestors inside the scope are already kept, so the re-closed
-    *    half is filtered to affected ancestors before the union.
-    *
-    * Cost scales with the deletion footprint (the affected region's
-    * subgraph), not the stored closure: for localized deletions the
-    * affected/scope dims are broadcast-sized probes of the big
-    * relation. Worst case (deleting a root-adjacent edge of one huge
-    * component) degrades to re-closing that component — exactly the
-    * reference's behavior.
-    *
-    * Precondition: the result is exactly `closure(remainingEdges)`
-    * when (1) `existing` agrees with that closure on every ancestor
-    * outside the affected set, and (2) every node an affected ancestor
-    * reaches over `remainingEdges` is already stored as its
-    * descendant. A caller that folds additions in afterwards
-    * ([[incrementalClosure]]) therefore passes only the surviving OLD
-    * edges as `remainingEdges` — an added edge would break (2): it is
-    * re-closed only within the old descendant scope, and the add fold
-    * then finds it stored and never propagates it further. Where the
-    * stored closure may already hold pairs through the added edges (a
-    * rerun after a partially applied patch), the added edges join
-    * `removedEdges` so their parents' ancestors are affected too,
-    * which restores (1).
-    */
-  def incrementalClosureDelete(existing: DataFrame, remainingEdges: DataFrame,
-      removedEdges: DataFrame): DataFrame = {
-    val delParents = removedEdges.select(col("parent").as("node")).distinct()
-    val affected = pin(delParents.union(
-        existing.join(delParents, existing("descendant") === delParents("node"))
-          .select(col("ancestor").as("node")))
-      .distinct())._1 // consumed by three joins; tiny vs the closure
-    val keep = existing
-      .join(affected, existing("ancestor") === affected("node"), "left_anti")
-    val scope = affected.union(
-        existing.join(affected, existing("ancestor") === affected("node"))
-          .select(col("descendant").as("node")))
-      .distinct()
-    val subEdges = remainingEdges
-      .join(scope, remainingEdges("parent") === scope("node"), "left_semi")
-    val reclosed = closure(subEdges)
-    reclosed
-      .join(affected, reclosed("ancestor") === affected("node"), "left_semi")
-      .union(keep.select(col("ancestor"), col("descendant"), col("depth")))
+    val seeded = seeds.withColumn("depth", lit(1))
+    var (gains, improved, n) = merge(seeded.withColumn("fresh", lit(false)).where(lit(false)), seeded)
+    while (improved > 0) {
+      val delta = broadcast(gains.where(col("fresh")))
+      val rel = triples(base).union(triples(gains))
+      val (next, i, m) = merge(gains, compose(delta, rel).union(compose(rel, delta)))
+      gains = next; improved = i; n = m
+    }
+    (triples(gains), n)
   }
 
   /** Roots of an edge set: nodes that appear as a parent but never as
@@ -420,8 +432,8 @@ object Hierarchy extends QueryPack {
   /** Oracle-verified incremental maintenance — the reference's
     * SIGNATURE loop, as a gate row: build the closure of a base graph
     * (all edges whose child is not divisible by 5), then fold the
-    * held-out edges in via [[incrementalClosure]]'s semi-naive delta
-    * iteration. The oracle is the plain recursive closure of the FULL
+    * held-out edges in via [[incrementalClosure]] (the ETL loop's
+    * [[closurePatch]] fold). The oracle is the plain recursive closure of the FULL
     * edge set — the gate therefore hash-verifies incremental ≡ full
     * rebuild against an independent engine, not just against our own
     * recompute (HierarchySpec pins that too, plus the deletion path).

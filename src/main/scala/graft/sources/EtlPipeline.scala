@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.operators.Hierarchy
 import graft.util.pin
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
@@ -17,8 +17,9 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * their guarantees:
   *  - [[ExtractBookmark]]: snapshot-bounded two-phase window —
   *    at-least-once on crash, rows arriving mid-run never skipped;
-  *  - [[Hierarchy.incrementalClosure]]: semi-naive delta iteration —
-  *    per-run cost scales with the change footprint, not the graph;
+  *  - [[Hierarchy.closurePatch]]: one semi-naive fold that returns the
+  *    pairs the batch changes — per-run cost scales with the change
+  *    footprint, not the graph;
   *  - [[ParquetUpsertSink]]: bucket-pruned latest-wins merge — push
   *    cost proportional to the delta, idempotent under redelivery.
   *
@@ -29,19 +30,22 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * untouched, and the commit completes — exactly-once EFFECT on an
   * at-least-once loop, the reference's own contract.
   *
-  * Scale note: the delta (new or depth-improved pairs vs the stored
-  * closure) is one anti-join on (ancestor, descendant, depth) — both
-  * sides hash-partition on the pair key, no broadcast of the big
-  * relation. Only the delta reaches the sink. Every intermediate the
-  * loop branches on is pinned ([[graft.util.pin]]): its checkpoint job
-  * counts it, and what was counted is exactly what is pushed.
+  * Scale note: the stored closure is read and pinned once per run;
+  * the patch is computed change-sized from it (the fold's delta side
+  * is broadcast, the big relation is only probed) and never diffed
+  * against it as a whole. Only the patch reaches the sink. Every
+  * intermediate the loop branches on is pinned ([[graft.util.pin]]):
+  * its checkpoint job counts it, and what was counted is exactly what
+  * is pushed or deleted.
   */
 object EtlPipeline {
 
   /** Counts are of ACTIONS the run took (this is the driver loop — an
-    * eager summary is the point, not a plan).
+    * eager summary is the point, not a plan): events extracted,
+    * closure pairs pushed and closure pairs deleted.
     */
-  final case class RunResult(extracted: Long, pushed: Long, watermark: Option[Long])
+  final case class RunResult(extracted: Long, pushed: Long, watermark: Option[Long],
+      deleted: Long)
 
   private val closureSchema = StructType(Seq(
     StructField("ancestor", LongType), StructField("descendant", LongType),
@@ -71,28 +75,27 @@ object EtlPipeline {
   def run(spark: SparkSession, edgesSrc: DataFrame, wmCol: String,
       dest: DocumentStore, bookmarkPath: String): RunResult = {
     val e = ExtractBookmark.extractSince(edgesSrc, wmCol, bookmarkPath)
-    val (extracted, pushed) =
-      applyEdgeAdds(spark, e.batch, dest, e.watermark.getOrElse(0L))
+    val (added, extracted) = pin(e.batch.select(col("child"), col("parent")).distinct())
+    val (pushed, _) = patchClosure(spark, dest, added, extracted, None, e.watermark.getOrElse(0L))
     ExtractBookmark.commit(e, bookmarkPath)
-    RunResult(extracted, pushed, e.watermark)
+    RunResult(extracted, pushed, e.watermark, 0L)
   }
 
-  /** The shared add-only core of [[run]] / [[runStream]]: patch the
-    * stored closure with one batch of (child, parent) edges and push
-    * the new or depth-improved pairs versioned by `version`. Returns
-    * (distinct edges, closure rows pushed).
+  /** The one closure core of every loop mode: fold a batch's added and
+    * (CRUD modes) removed (child, parent) edges into the stored closure
+    * as one [[Hierarchy.closurePatch]], push its upserts and delete its
+    * deletes, both versioned by `version`. Returns (closure pairs
+    * pushed, closure pairs deleted). `changes` counts the edges of
+    * `added` and `removed`; with none, the store is not read.
     */
-  private def applyEdgeAdds(s: SparkSession, batch: DataFrame,
-      dest: DocumentStore, version: Long): (Long, Long) = {
-    val (newEdges, extracted) = // consumed by every delta round of the closure
-      pin(batch.select(col("child"), col("parent")).distinct())
-    if (extracted == 0) return (0L, 0L)
-    val existing = stored(s, dest, closureSchema)
-    val (delta, pushed) = pin(Hierarchy.incrementalClosure(existing, newEdges)
-      .join(existing, Seq("ancestor", "descendant", "depth"), "left_anti")
-      .withColumn("rev", lit(version)))
-    if (pushed > 0) dest.push(delta)
-    (extracted, pushed)
+  private def patchClosure(s: SparkSession, dest: DocumentStore, added: DataFrame,
+      changes: Long, removed: Option[DataFrame], version: Long): (Long, Long) = {
+    if (changes == 0) return (0L, 0L)
+    val existing = pin(stored(s, dest, closureSchema))._1 // every fold round reads it
+    val p = Hierarchy.closurePatch(existing, added, removed)
+    if (p.nUpserts > 0) dest.push(p.upserts.withColumn("rev", lit(version)))
+    if (p.nDeletes > 0) dest.delete(p.deletes.withColumn("rev", lit(version)))
+    (p.nUpserts, p.nDeletes)
   }
 
   /** `store`'s rows as `schema`'s columns; empty before its first push. */
@@ -160,7 +163,8 @@ object EtlPipeline {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val sink = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
         batchId: Long) => {
-      applyEdgeAdds(batch.sparkSession, batch.toDF(), dest, batchId)
+      val (added, n) = pin(batch.select(col("child"), col("parent")).distinct())
+      patchClosure(batch.sparkSession, dest, added, n, None, batchId)
       ()
     }
     edges.writeStream
@@ -191,20 +195,20 @@ object EtlPipeline {
     *     touched keys — never the batch's face value: a stale event
     *     (older seq than the stored row) loses the latest-wins merge
     *     and must not patch the closure;
-    *  4. patch the closure: [[Hierarchy.incrementalClosureDelete]]
-    *     re-closes only the deletion-affected region against the
-    *     surviving edges, then [[Hierarchy.incrementalClosure]] folds
-    *     the new edges in semi-naive;
-    *  5. ship the closure diff: new/depth-changed pairs via
-    *     `dest.push`, invalidated pairs via `dest.delete` — both
-    *     versioned by the checkpoint's stable batchId, so redelivery
-    *     is latest-wins idempotent.
+    *  4. compute the closure patch: one [[Hierarchy.closurePatch]]
+    *     fold over the stored closure, which returns only the pairs
+    *     the transition changes (adds alone fold in read-only; with
+    *     removals, the removed and added edges' region is re-derived
+    *     from its live edges);
+    *  5. ship the patch: its upserts via `dest.push`, its deletes via
+    *     `dest.delete` — both versioned by the checkpoint's stable
+    *     batchId, so redelivery is latest-wins idempotent.
     *
     * Redelivered batch: the edge-state diff (step 2) is empty (the
-    * state already reflects it), both closure patches find nothing to
-    * improve, the diffs are empty — exactly-once EFFECT, the same
-    * contract as [[runStream]]. Spec: an interleaved add/delete stream
-    * converges to `Hierarchy.closure` of the final edge set.
+    * state already reflects it), the closure patch is empty —
+    * exactly-once EFFECT, the same contract as [[runStream]]. Spec: an
+    * interleaved add/delete stream converges to `Hierarchy.closure` of
+    * the final edge set.
     */
   def runStreamWithDeletes(edgeEvents: DataFrame, dest: DocumentStore,
       edgeStore: DocumentStore)
@@ -233,99 +237,69 @@ object EtlPipeline {
       bookmarkPath: String): RunResult = {
     val e = ExtractBookmark.extractSince(edgeEventsSrc, wmCol, bookmarkPath)
     val batch = e.batch.select(col("child"), col("parent"), col("op"), col("seq"))
-    val counts = applyEdgeEvents(spark, batch, dest, edgeStore,
+    val (extracted, pushed, deleted) = applyEdgeEvents(spark, batch, dest, edgeStore,
       e.watermark.getOrElse(0L))
     ExtractBookmark.commit(e, bookmarkPath)
-    RunResult(counts._1, counts._2, e.watermark)
+    RunResult(extracted, pushed, e.watermark, deleted)
   }
 
-  /** The shared CRUD core of [[runWithDeletes]] / [[runStreamWithDeletes]]:
+  /** The shared CRUD front of [[runWithDeletes]] / [[runStreamWithDeletes]]:
     * fold one batch of (child, parent, op, seq) edge events into the
     * edge-state store and patch the closure store, at delta cost.
-    * Returns (events applied, closure rows pushed). Steps (each
-    * documented on [[runStreamWithDeletes]]): collapse latest-seq per
-    * edge; derive the INTENDED post-merge edge state IN-PLAN
-    * (latest-seq-wins over stored ∪ batch on the touched keys — the
+    * Returns (events applied, closure pairs pushed, closure pairs
+    * deleted). Steps (each documented on [[runStreamWithDeletes]]):
+    * collapse latest-seq per edge; derive the edge TRANSITION on the
+    * touched keys in-plan (latest-seq-wins over stored ∪ batch — the
     * same merge the sink will apply, computed without writing it);
-    * patch the closure — scoped delete re-close then semi-naive add
-    * fold; ship the diff as keyed push + keyed delete versioned by
-    * `version`; and only THEN upsert the edge state.
+    * ship the closure patch ([[patchClosure]]); and only THEN upsert
+    * the edge state.
     *
     * Write order is load-bearing (crash safety): the edge-state push
     * comes LAST. A crash or foreachBatch redelivery anywhere before it
     * leaves the edge store at its previous state, so the rerun
     * re-derives the identical transition and re-applies the closure
-    * patches — dest pushes/deletes are latest-wins idempotent, so the
-    * partial first attempt is absorbed. (The old order — edge state
-    * first — had a window where a crash after the edge push made the
-    * rerun see an empty transition and skip the closure patch
-    * forever.) A crash AFTER the edge push means every dest effect
-    * already landed; the rerun's transition is empty and correctly
-    * does nothing.
+    * patch — dest pushes/deletes are latest-wins idempotent, so the
+    * partial first attempt is absorbed. A crash AFTER the edge push
+    * means every dest effect already landed; the rerun's transition is
+    * empty and correctly does nothing.
     */
   private def applyEdgeEvents(s: SparkSession, batch: DataFrame,
       dest: DocumentStore, edgeStore: DocumentStore,
-      version: Long): (Long, Long) = {
+      version: Long): (Long, Long, Long) = {
     val (collapsed, nEvents) = pin(ParquetUpsertSink.dedupLatest(
       batch.select(col("child"), col("parent"), col("op"), col("seq")),
       Seq("child", "parent"), "seq"))
-    if (nEvents == 0) return (0L, 0L)
-    val batchKeys = collapsed.select(col("child"), col("parent"))
-    val prevEdges = pin(stored(s, edgeStore, edgeSchema))._1 // transition AND survivors read it
-    // added/removed are the STORE TRANSITION on the touched keys, not
+    if (nEvents == 0) return (0L, 0L, 0L)
+    val edge = Seq("child", "parent")
+    // The transition is the STORE TRANSITION on the touched keys, not
     // the batch's face value: a STALE event (older seq than the stored
     // row — cross-batch reordering, redelivery) loses the latest-wins
     // merge, and taking the batch at face value would patch the
     // closure with an edge change the store rejected (a stale add
     // would graft pairs through a dead edge). The post state is
-    // derived IN-PLAN (the sink's own latest-seq-wins merge over
-    // stored ∪ batch), NOT by re-scanning after the upsert — the
-    // upsert hasn't happened yet; it lands last. Restricting to the
-    // batch's keys keeps the merge window delta-sized.
-    val prevTouched = pin(prevEdges // prev side of the transition + merge input
-      .join(batchKeys, Seq("child", "parent"), "left_semi"))._1
-    val postTouched = ParquetUpsertSink.dedupLatest(
-      prevTouched.unionByName(collapsed), Seq("child", "parent"), "seq")
-    val prevLiveTouched = pin(prevTouched.where(col("op") === "add")
-      .select(col("child"), col("parent")))._1 // compared twice below
-    val liveTouched = pin(postTouched.where(col("op") === "add")
-      .select(col("child"), col("parent")))._1
-    val (removed, nRemoved) = pin(prevLiveTouched
-      .join(liveTouched, Seq("child", "parent"), "left_anti"))
-    val (added, nAdded) = pin(liveTouched
-      .join(prevLiveTouched, Seq("child", "parent"), "left_anti"))
-    // The delete step rebuilds closure(survivors) exactly, so the add
-    // fold below starts from a closed relation: it re-closes over the
-    // SURVIVING OLD edges (stored live minus removed, never the added
-    // ones — an added edge re-closed inside the old descendant scope
-    // would be stored already and the fold would never propagate it
-    // beyond that scope), and the added edges' parents seed the
-    // re-close region too (a rerun after a partially applied patch
-    // finds pairs through the added edges already stored).
-    val survivors = prevEdges.where(col("op") === "add")
-      .select(col("child"), col("parent"))
-      .join(removed, Seq("child", "parent"), "left_anti")
-    val existing = pin(stored(s, dest, closureSchema))._1 // diffed against twice below
-    val afterDel =
-      if (nRemoved == 0) existing
-      else Hierarchy.incrementalClosureDelete(existing, survivors,
-        removed.unionByName(added))
-    val updated = pin(
-      if (nAdded == 0) afterDel
-      else Hierarchy.incrementalClosure(afterDel, added))._1 // both diffs read it
-    val (pushDelta, nPushed) = pin(updated
-      .join(existing, Seq("ancestor", "descendant", "depth"), "left_anti")
-      .withColumn("rev", lit(version)))
-    if (nPushed > 0) dest.push(pushDelta)
-    val (delDelta, nDeleted) = pin(existing.select(col("ancestor"), col("descendant"))
-      .join(updated, Seq("ancestor", "descendant"), "left_anti")
-      .withColumn("rev", lit(version)))
-    if (nDeleted > 0) dest.delete(delDelta)
+    // derived IN-PLAN (the sink's own latest-seq-wins rule over
+    // stored ∪ batch, one aggregate per touched edge), NOT by
+    // re-scanning after the upsert — the upsert hasn't happened yet;
+    // it lands last, and pinning the transition reads the edge store
+    // before that upsert rewrites it. t = post live − stored live.
+    def live(op: Column) = when(op === "add", 1).otherwise(0)
+    val changed = org.apache.spark.sql.Observation()
+    val (transition, nChanged) = pin(stored(s, edgeStore, edgeSchema)
+      .join(broadcast(collapsed.select(edge.map(col): _*)), edge, "left_semi")
+      .withColumn("stored", lit(true))
+      .unionByName(collapsed.withColumn("stored", lit(false)))
+      .groupBy(edge.map(col): _*)
+      .agg((live(max_by(col("op"), col("seq"))) - live(max(when(col("stored"), col("op"))))).as("t"))
+      .where(col("t") =!= 0)
+      .observe(changed, count(when(col("t") < 0, lit(1))).as("removed")))
+    def side(sign: Column) = transition.where(sign).select(edge.map(col): _*)
+    val removed = Option.when(changed.get("removed").asInstanceOf[Long] > 0)(side(col("t") < 0))
+    val (pushed, deleted) = patchClosure(s, dest, side(col("t") > 0), nChanged, removed, version)
     // Edge state LAST — committing it is what makes the batch's
     // transition empty on redelivery, so it must not land until every
     // dest effect it implies has been applied (see scaladoc).
     edgeStore.push(collapsed)
-    (nEvents, nPushed)
+    (nEvents, pushed, deleted)
   }
 
 }

@@ -589,7 +589,7 @@ object ParquetUpsertSink {
   private def withWriteLock[A](spark: SparkSession, path: String)(body: => A): A = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) fs.mkdirs(root)
+    val created = !fs.exists(root) && fs.mkdirs(root)
     val lock = new org.apache.hadoop.fs.Path(root, lockName)
     val holder = s"pid=${ProcessHandle.current().pid()} " +
       s"host=${java.net.InetAddress.getLocalHost.getHostName} " +
@@ -616,7 +616,14 @@ object ParquetUpsertSink {
       try out.write(holder.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       body
-    } finally fs.delete(lock, false)
+    } finally {
+      fs.delete(lock, false)
+      // a mutation that wrote nothing leaves no empty table root behind
+      // (non-recursive: a writer that took the lock since keeps it)
+      if (created)
+        try { if (fs.listStatus(root).isEmpty) fs.delete(root, false) }
+        catch { case _: java.io.IOException => () }
+    }
   }
 
   /** Operator override for a crashed writer's abandoned lock. Returns

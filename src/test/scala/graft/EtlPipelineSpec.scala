@@ -280,6 +280,108 @@ class EtlPipelineSpec extends SparkSpec {
       (10L, 1L, "add", 1L), (11L, 1L, "add", 2L), (12L, 10L, "delete", 5L))
   }
 
+  test("a CRUD run reports the closure pairs that left the store as deleted") {
+    import graft.sources.ParquetStore
+    val base = tmpDir()
+    val dest = ParquetStore(s"$base/closure", Seq("ancestor", "descendant"), "rev", 4)
+    val edgeStore = ParquetStore(s"$base/edges", Seq("child", "parent"), "seq", 4)
+    val bm = s"$base/wm"
+    def closureNow() = dest.scan(spark).select($"ancestor", $"descendant", $"depth")
+      .as[(Long, Long, Int)].collect().toSet
+    val ev1 = Seq((10L, 1L, "add", 1L), (11L, 1L, "add", 2L),
+      (12L, 10L, "add", 3L), (13L, 12L, "add", 4L))
+      .toDF("child", "parent", "op", "seq")
+    EtlPipeline.runWithDeletes(spark, ev1, "seq", dest, edgeStore, bm).deleted shouldBe 0
+    val before = closureNow()
+    // cut 12 off 10: (10,12) (10,13) leave, (1,12) (1,13) lengthen
+    // under the new route through 11, whose own pairs are new
+    val ev2 = ev1.union(Seq((12L, 10L, "delete", 5L), (12L, 11L, "add", 6L))
+      .toDF("child", "parent", "op", "seq"))
+    val r2 = EtlPipeline.runWithDeletes(spark, ev2, "seq", dest, edgeStore, bm)
+    val after = closureNow()
+    def pairs(c: Set[(Long, Long, Int)]) = c.map(t => (t._1, t._2))
+    pairs(before) -- pairs(after) shouldBe Set((10L, 12L), (10L, 13L))
+    r2.deleted shouldBe 2
+    r2.pushed shouldBe (after -- before).size.toLong
+  }
+
+  test("differential fuzz: random add/delete batches keep the store equal to the closure of the live edges") {
+    import graft.sources.{DocumentStore, ParquetStore}
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    // A dest whose next delete dies: the run's push has landed, its
+    // delete and edge-state push have not, and its window stays
+    // uncommitted.
+    final class DeleteCrash(inner: DocumentStore) extends DocumentStore {
+      var fired = false
+      override def scan(s: SparkSession) = inner.scan(s)
+      override def exists(s: SparkSession) = inner.exists(s)
+      override def sync(snapshot: DataFrame): Unit = inner.sync(snapshot)
+      override def push(updates: DataFrame): Unit = inner.push(updates)
+      override def delete(keys: DataFrame): Unit = { fired = true; sys.error("crash before dest.delete") }
+    }
+    val base = tmpDir()
+    val dest = ParquetStore(s"$base/closure", Seq("ancestor", "descendant"), "rev", 4)
+    val edgeStore = ParquetStore(s"$base/edges", Seq("child", "parent"), "seq", 4)
+    val bm = s"$base/wm"
+    def closureNow() =
+      if (!dest.exists(spark)) Set.empty[(Long, Long, Int)]
+      else dest.scan(spark).select($"ancestor", $"descendant", $"depth")
+        .as[(Long, Long, Int)].collect().toSet
+    def pairs(c: Set[(Long, Long, Int)]) = c.map(t => (t._1, t._2))
+    val rnd = new scala.util.Random(29)
+    var state = Map.empty[(Long, Long), (String, Long)] // edge -> (op, seq)
+    val used = scala.collection.mutable.Set.empty[(Long, Long, Long)]
+    var events = Seq.empty[(Long, Long, String, Long, Long)] // child, parent, op, seq, m
+    var next = 0L
+    var (crashes, stales, mixed) = (0, 0, 0)
+    def liveEdges = state.toSeq.collect { case (e, ("add", _)) => e }.toSet
+    (1 to 20).foreach { m =>
+      // 2–5 events over a DAG on nodes 1..8 (child > parent); normal
+      // revisions are multiples of 10, a STALE one sits just below the
+      // edge's stored revision and must lose the latest-wins merge
+      val batch = (0 until 2 + rnd.nextInt(4)).map { _ =>
+        val p = 1L + rnd.nextInt(7)
+        val c = p + 1 + rnd.nextInt((8 - p).toInt)
+        val op = if (rnd.nextInt(5) < 3) "add" else "delete"
+        val stale = state.get((c, p)).map(_._2 - 1 - rnd.nextInt(9))
+          .filter(s => s > 0 && rnd.nextInt(4) == 0 && !used((c, p, s)))
+        if (stale.isDefined) stales += 1
+        val seq = stale.getOrElse { next += 10; next }
+        used += ((c, p, seq))
+        (c, p, op, seq, m.toLong)
+      }
+      events ++= batch
+      val liveBefore = liveEdges
+      batch.groupBy(e => (e._1, e._2)).values.map(_.maxBy(_._4)).foreach { e =>
+        if (!state.get((e._1, e._2)).exists(_._2 >= e._4)) state = state.updated((e._1, e._2), (e._3, e._4))
+      }
+      val src = events.toDF("child", "parent", "op", "seq", "m")
+      // from batch 10 on, until it fires once, a run dies before its
+      // delete; the rerun of its uncommitted window must complete it
+      if (m >= 10 && crashes == 0) {
+        val flaky = new DeleteCrash(dest)
+        try EtlPipeline.runWithDeletes(spark, src, "m", flaky, edgeStore, bm)
+        catch { case _: RuntimeException if flaky.fired => crashes += 1 }
+      }
+      val before = closureNow()
+      val r = EtlPipeline.runWithDeletes(spark, src, "m", dest, edgeStore, bm)
+      val live = liveEdges
+      if ((liveBefore -- live).nonEmpty && (live -- liveBefore).nonEmpty) mixed += 1
+      val want = Hierarchy.closure(live.toSeq.toDF("child", "parent"))
+        .as[(Long, Long, Int)].collect().toSet
+      val after = closureNow()
+      withClue(s"batch $m ${batch.mkString(", ")}: ") {
+        after shouldBe want
+        r.pushed shouldBe (after -- before).size.toLong
+        r.deleted shouldBe (pairs(before) -- pairs(after)).size.toLong
+      }
+    }
+    info(s"stale events $stales, batches that both delete and add edges $mixed")
+    crashes shouldBe 1
+    stales should be > 0
+    mixed should be > 0
+  }
+
   test("streaming adds AND deletes converge to the batch closure of the final edge set") {
     import org.apache.spark.sql.streaming.Trigger
     import graft.sources.ParquetStore

@@ -19,6 +19,8 @@ class HierarchySpec extends SparkSpec {
     (13L, 12L), (20L, 2L), (31L, 30L))
     .toDF("child", "parent")
 
+  private lazy val noEdges = Seq.empty[(Long, Long)].toDF("child", "parent")
+
   test("closure finds all reachable pairs with min depth") {
     val cl = Hierarchy.closure(edges)
       .as[(Long, Long, Int)].collect().toSet
@@ -64,7 +66,7 @@ class HierarchySpec extends SparkSpec {
     val removed = Seq((13L, 1L), (12L, 10L), (31L, 30L)).toDF("child", "parent")
     val remaining = Seq((10L, 1L), (11L, 1L), (12L, 11L), (13L, 12L), (20L, 2L))
       .toDF("child", "parent")
-    val incr = Hierarchy.incrementalClosureDelete(base, remaining, removed)
+    val incr = Hierarchy.closurePatch(base, noEdges, Some(removed)).applyTo(base)
       .as[(Long, Long, Int)].collect().toSet
     val full = Hierarchy.closure(remaining).as[(Long, Long, Int)].collect().toSet
     incr shouldBe full
@@ -76,8 +78,7 @@ class HierarchySpec extends SparkSpec {
 
   test("incremental closure deletion with nothing removed is a no-op") {
     val base = Hierarchy.closure(edges)
-    val incr = Hierarchy.incrementalClosureDelete(base, edges,
-      Seq.empty[(Long, Long)].toDF("child", "parent"))
+    val incr = Hierarchy.closurePatch(base, noEdges, Some(noEdges)).applyTo(base)
       .as[(Long, Long, Int)].collect().toSet
     incr shouldBe base.as[(Long, Long, Int)].collect().toSet
   }

@@ -30,9 +30,47 @@ class JobCountSpec extends SparkSpec {
       Hierarchy.closure(Seq((10L, 1L), (11L, 1L), (12L, 11L), (13L, 12L))
         .toDF("child", "parent")).as[(Long, Long, Int)].collect().toSet
     info(s"delta run jobs: ${run.jobs}")
-    // 98–99 observed (119 with count()/head(1) probes); the slack
+    // 63 observed (90 with a scoped delete re-close, a re-pinned
+    // relation per fold round and two whole-closure diffs); the slack
     // absorbs AQE's run-to-run stage variation
-    run.jobs should be <= 100
+    run.jobs should be <= 70
+  }
+
+  test("a one-edge add and its delete cost the same beside a 64-chain and a 512-chain closure") {
+    import org.apache.spark.sql.functions.lit
+    /** (add run, delete run, stored pairs before the add) beside an n-chain */
+    def besideChain(n: Long) = {
+      val base = java.nio.file.Files.createTempDirectory("graft-jobs-size").toString
+      val dest = ParquetStore(s"$base/closure", Seq("ancestor", "descendant"), "rev", 4)
+      val edgeStore = ParquetStore(s"$base/edges", Seq("child", "parent"), "seq", 4)
+      val chain = (1L until n).map(i => (i, i - 1)).toDF("child", "parent")
+      dest.push(Hierarchy.closure(chain).withColumn("rev", lit(0L)))
+      edgeStore.push(chain.withColumn("op", lit("add")).withColumn("seq", lit(0L)))
+      val add = Seq((100001L, 100000L, "add", 1L)).toDF("child", "parent", "op", "seq")
+      val del = add.union(Seq((100001L, 100000L, "delete", 2L)).toDF("child", "parent", "op", "seq"))
+      val stored = n * (n - 1) / 2
+      val a = JobProbe(spark)(EtlPipeline.runWithDeletes(spark, add, "seq", dest, edgeStore, s"$base/wm"))
+      val d = JobProbe(spark)(EtlPipeline.runWithDeletes(spark, del, "seq", dest, edgeStore, s"$base/wm"))
+      (a.value.pushed, d.value.deleted) shouldBe ((1L, 1L))
+      dest.scan(spark).count() shouldBe stored
+      (a, d, stored)
+    }
+    val (smallAdd, smallDel, smallStored) = besideChain(64)
+    val (largeAdd, largeDel, largeStored) = besideChain(512)
+    info(s"add jobs ${smallAdd.jobs} / ${largeAdd.jobs}, delete jobs ${smallDel.jobs} / ${largeDel.jobs}")
+    info(s"checkpoint rows beside 64: add ${smallAdd.checkpointRows}, delete ${smallDel.checkpointRows}")
+    info(s"checkpoint rows beside 512: add ${largeAdd.checkpointRows}, delete ${largeDel.checkpointRows}")
+    largeAdd.jobs shouldBe smallAdd.jobs
+    largeDel.jobs shouldBe smallDel.jobs
+    // the one store-sized checkpoint is the stored closure's read
+    def besideStore(rows: Seq[Long], store: Long) = {
+      rows.count(_ == store) shouldBe 1
+      rows.filterNot(_ == store)
+    }
+    besideStore(largeAdd.checkpointRows, largeStored) shouldBe
+      besideStore(smallAdd.checkpointRows, smallStored)
+    besideStore(largeDel.checkpointRows, largeStored + 1) shouldBe
+      besideStore(smallDel.checkpointRows, smallStored + 1)
   }
 
   test("Hierarchy.closure on a 64-node chain starts a bounded number of jobs") {

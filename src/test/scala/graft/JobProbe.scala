@@ -2,19 +2,24 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{EmptyRelationExec, QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-/** What `f` started: its Spark jobs and the call-site `details` of its
-  * SQL executions. A marked sentinel job runs after `f`; listener
-  * events arrive in order, so once the sentinel is seen every job of
-  * `f` has been counted.
+/** What `f` started: its Spark jobs, the call-site `details` of its
+  * SQL executions and the rows each checkpoint (`localCheckpoint`)
+  * materialized, read from the executed plan's row metrics. A marked
+  * sentinel job runs after `f`; listener events arrive in order, so
+  * once the sentinel is seen every job of `f` has been counted.
   */
 private[graft] object JobProbe {
-  final case class Run[T](value: T, jobs: Int, details: Seq[String])
+  final case class Run[T](value: T, jobs: Int, details: Seq[String],
+      checkpointRows: Seq[Long])
 
   private val Mark = "graft.test.sentinel"
 
@@ -33,7 +38,14 @@ private[graft] object JobProbe {
         case _ => ()
       }
     }
+    val rows = new ConcurrentLinkedQueue[java.lang.Long]()
+    val q = new QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        if (func == "localCheckpoint") { rows.add(outputRows(qe.executedPlan)); () }
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
     sc.addSparkListener(l)
+    spark.listenerManager.register(q)
     try {
       val v = f
       sc.setLocalProperty(Mark, mark)
@@ -41,9 +53,26 @@ private[graft] object JobProbe {
       val deadline = System.currentTimeMillis() + 30000
       while (!done && System.currentTimeMillis() < deadline) Thread.sleep(20)
       assert(done, "sentinel job never reached the listener")
-      Run(v, jobs.get(), details.asScala.toSeq)
-    } finally sc.removeSparkListener(l)
+      Run(v, jobs.get(), details.asScala.toSeq, rows.asScala.toSeq.map(_.longValue))
+    } finally {
+      sc.removeSparkListener(l)
+      spark.listenerManager.unregister(q)
+    }
   }
+
+  /** Rows a plan produced: the nearest row metric down its
+    * row-preserving spine (projections, exchanges, stage wrappers),
+    * summed over a union's branches; an emptied relation has none.
+    */
+  private def outputRows(p: SparkPlan): Long =
+    p.metrics.get("numOutputRows").map(_.value).getOrElse(p match {
+      case a: AdaptiveSparkPlanExec => outputRows(a.executedPlan)
+      case s: QueryStageExec => outputRows(s.plan)
+      case u: UnionExec => u.children.map(outputRows).sum
+      case _: EmptyRelationExec => 0L
+      case _ if p.children.size == 1 => outputRows(p.children.head)
+      case _ => sys.error(s"no row metric on ${p.nodeName}")
+    })
 
   private val GraftFrame = """(?:^|[\s/])graft\.([\w.]+?)(?:\$[\w$]*)?\.[\w$<>]+\(""".r
 

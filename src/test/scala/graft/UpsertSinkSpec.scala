@@ -801,4 +801,20 @@ class UpsertSinkSpec extends SparkSpec {
     ParquetUpsertSink.delete(empty.select($"id", $"rev"), path, Seq("id"), "rev")
     ParquetUpsertSink.liveDataDirs(spark, path) shouldBe dirs
   }
+
+  test("a mutation that writes nothing leaves no table directory behind") {
+    val dir = Files.createTempDirectory("graft-noroot").toFile
+    dir.deleteOnExit()
+    val path = dir.getPath + "/table"
+    val root = new java.io.File(path)
+    ParquetUpsertSink.delete(Seq((1L, 5L)).toDF("id", "rev"), path, Seq("id"), "rev")
+    root.exists() shouldBe false
+    ParquetUpsertSink.upsert(Seq.empty[(Long, Long, String)].toDF("id", "rev", "payload"),
+      path, Seq("id"), "rev", numBuckets = 4)
+    root.exists() shouldBe false
+    // a root that was there before the mutation stays
+    root.mkdirs()
+    ParquetUpsertSink.delete(Seq((1L, 5L)).toDF("id", "rev"), path, Seq("id"), "rev")
+    root.isDirectory shouldBe true
+  }
 }

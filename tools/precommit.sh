@@ -43,6 +43,14 @@ if (( $(grep -c 'commitIO\.begin(' src/main/scala/graft/sources/ParquetUpsertSin
   echo "more than one commitIO.begin( in ParquetUpsertSink — mutations share one protocol" >&2
   exit 1
 fi
+# one closure patch path: the ETL loop folds adds and deletes into the
+# stored closure through Hierarchy.closurePatch, never a re-close over
+# the from-scratch builder
+if grep -rn 'incrementalClosureDelete' src ||
+   grep -rn 'Hierarchy\.closure(' src/main/scala/graft/sources; then
+  echo "second closure patch path — use Hierarchy.closurePatch" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
