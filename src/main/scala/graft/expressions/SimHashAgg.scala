@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * and the aggregate buffer layout; this keeps a single opaque slot).
   *
   * Semantics match `graft.functions.simhash64` ∘ xxhash64 and the
-  * exploded formulation in `operators.Dedup.simhashPairs`
+  * exploded formulation in `operators.Dedup.simhashValues`
   * (FunctionsSpec pins all three).
   */
 case class SimHashAgg(

@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.{Q, QueryPack, StoredArtifacts, Tables}
+import graft.sources.ParquetStore
 import graft.util.pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Dedup clustering: connected components over the near-duplicate
   * pair graph — the step that turns q31-style PAIRS into dedup
@@ -35,8 +37,7 @@ object Cluster extends QueryPack {
     // invariant: `edges` is symmetric (both directions present), so
     // each star step sees every node's full neighborhood from the
     // rows where it is the first column
-    var edges = pin(symmetrize(pairs.select(col("d1").as("u"), col("d2").as("v"))))._1
-    var stats = edgeStats(edges)
+    var (edges, stats) = pinWithStats(symmetrize(pairs.select(col("d1").as("u"), col("d2").as("v"))))
     var converged = false
     while (!converged) {
       // three shuffles per round: large-star window, small-star
@@ -44,8 +45,7 @@ object Cluster extends QueryPack {
       // its dedup — a star step's per-node min is unaffected by
       // duplicate edges, so multiplicity only costs bounded row growth
       // (≤8× within a round), never correctness.
-      val next = pin(symmetrize(smallStar(mirror(largeStar(edges)))))._1
-      val nextStats = edgeStats(next)
+      val (next, nextStats) = pinWithStats(symmetrize(smallStar(mirror(largeStar(edges)))))
       converged = nextStats == stats
       stats = nextStats
       edges = next
@@ -89,16 +89,16 @@ object Cluster extends QueryPack {
   private def symmetrize(edges: DataFrame): DataFrame =
     mirror(edges).distinct()
 
-  /** (edge count, order-independent content hash) — fixpoint test.
+  /** `edges` pinned, with its (edge count, order-independent content
+    * hash) — the fixpoint test — observed in the checkpoint's own job.
     * Hashes sum through decimal so ANSI mode can't overflow.
     */
-  private def edgeStats(edges: DataFrame): (Long, String) = {
-    val row = edges
-      .agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(30,0)")),
-          lit(0).cast("decimal(30,0)")))
-      .head()
-    (row.getLong(0), row.getDecimal(1).toString)
+  private def pinWithStats(edges: DataFrame): (DataFrame, (Long, String)) = {
+    val hash = org.apache.spark.sql.Observation()
+    val (pinned, n) = pin(edges.observe(hash,
+      coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(30,0)")),
+        lit(0).cast("decimal(30,0)")).as("h")))
+    (pinned, (n, hash.get("h").toString))
   }
 
   val q52 = Q(
@@ -412,10 +412,8 @@ object Cluster extends QueryPack {
     if (nDocs == 0) return 0L
     val s = docs.sparkSession
     val sigD = pin(Dedup.minhashSignatures(docs))._1
-    val stored =
-      if (graft.sources.ParquetUpsertSink.tableExists(s, sigsPath))
-        graft.sources.ParquetUpsertSink.read(s, sigsPath)
-      else sigD.limit(0)
+    val sigStore = ParquetStore(sigsPath, Seq("doc_id"), "_rev", numBuckets)
+    val stored = sigStore.scanOrEmpty(s, sigD.schema)
     val (pairs, nPairs) = // pair set is small; verdicts reuse it twice
       pin(Dedup.minhashDeltaPairsFromSigs(stored, sigD, threshold))
     // pairs are canonical (d1 < d2) and always touch the batch: drop
@@ -429,13 +427,10 @@ object Cluster extends QueryPack {
         .select(col("d1").as("doc_id")))
       .distinct()
     val (kept, nKept) = pin(docs.join(drops, Seq("doc_id"), "left_anti"))
-    graft.sources.ParquetUpsertSink.upsert(
-      kept.withColumn("_rev", lit(0L)), docsPath,
-      Seq("doc_id"), "_rev", numBuckets)
-    graft.sources.ParquetUpsertSink.upsert(
-      sigD.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .withColumn("_rev", lit(0L)),
-      sigsPath, Seq("doc_id"), "_rev", numBuckets)
+    ParquetStore(docsPath, Seq("doc_id"), "_rev", numBuckets)
+      .push(kept.withColumn("_rev", lit(0L)))
+    sigStore.push(sigD.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .withColumn("_rev", lit(0L)))
     // optional dedup-GROUP lineage: rejected docs stay attributable to
     // the cluster (and so the keeper) that rejected them
     if (nPairs > 0) compsPath.foreach(cp => foldComponentsIntoStore(s, cp,
@@ -455,20 +450,10 @@ object Cluster extends QueryPack {
       pairs: DataFrame, numBuckets: Int = 64): Unit = {
     val (pinned, nPairs) = pin(pairs)
     if (nPairs > 0) {
-      val stored =
-        if (graft.sources.ParquetUpsertSink.tableExists(s, compsPath))
-          graft.sources.ParquetUpsertSink.read(s, compsPath)
-            .select(col("node"), col("component"))
-        else s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("component",
-              org.apache.spark.sql.types.LongType))))
-      graft.sources.ParquetUpsertSink.upsert(
-        componentsIncrementDelta(stored, pinned).withColumn("_rev", -col("component")),
-        compsPath, Seq("node"), "_rev", numBuckets)
+      val store = ParquetStore(compsPath, Seq("node"), "_rev", numBuckets)
+      val stored = store.scanOrEmpty(s, StructType(Seq(
+        StructField("node", LongType), StructField("component", LongType))))
+      store.push(componentsIncrementDelta(stored, pinned).withColumn("_rev", -col("component")))
     }
   }
 

@@ -120,6 +120,101 @@ object Dedup extends QueryPack {
       .write.mode("overwrite").parquet(s"$dir/bloom")
   }
 
+  /** Hashed DISTINCT (doc_id, shingle) postings — the 16 B/row schema
+    * the co-occurrence family joins on, and the POSTING STORE a
+    * production pipeline persists (bucketed by `shingle`) to maintain
+    * the core incrementally via [[foldCoocDelta]]. 64-bit shingle
+    * hashes, not strings: same co-occurrence counts (a cross-doc hash
+    * collision would need ~2^32 distinct shingles to become likely),
+    * but every downstream join hashes/compares/ships 8-byte keys
+    * instead of ~20-char strings.
+    */
+  def coocPostings(df: DataFrame): DataFrame =
+    shingleSets(df).select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
+
+  /** Exact per-pair shingle co-occurrence under the df-cut:
+    * (d1, d2, c, n1, n2) for unordered pairs d1 < d2 sharing at least
+    * one non-hot shingle — the shared core of [[jaccardPairs]]
+    * (resemblance) and [[containmentPairs]] (the asymmetric measure),
+    * [[coocKernel]]'s self orientation over [[coocPostings]]. The
+    * counts are EXACT (hot shingles re-enter via the per-doc
+    * sorted-array intersect); the cut bounds candidate volume only.
+    */
+  private[graft] def coocCounts(df: DataFrame, maxShingleDf: Int): DataFrame =
+    // NOT materialized, by measurement: sh's four consumers (both
+    // self-join sides, the size agg, the hot-set agg) shuffle on the
+    // same keys, so ReuseExchange dedupes the heavy subplans, and a
+    // persist here only adds columnar cache encode/decode to every
+    // consumer — q31 ran ~45% slower with it, and the loss rippled
+    // into every downstream component-clustering query (q61/q86/q52).
+    // Reuse that IS load-bearing (the full pair list feeding multiple
+    // aggregates, e.g. dedupSweep) persists at that level instead.
+    coocFromPostings(coocPostings(df), maxShingleDf)
+
+  /** Shingles of `postings` in more than `maxShingleDf` documents.
+    * Document frequency via groupBy (map-side partial aggregation:
+    * reducers see near-1 row per shingle, so the df computation CANNOT
+    * itself skew on the hot key — a whole-partition window here would
+    * buffer every occurrence of the hottest shingle in one task,
+    * recreating the exact straggler the cut removes). The list is tiny
+    * by construction (≤ occurrences/maxShingleDf distinct values).
+    */
+  private def hotShingles(postings: DataFrame, maxShingleDf: Int): DataFrame =
+    postings.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+      .where(col("df") > maxShingleDf).select(col("shingle"))
+
+  /** [[coocCounts]] from an already-built posting table — the form
+    * [[buildCoocStore]] shares with the from-scratch path.
+    */
+  private[graft] def coocFromPostings(sh: DataFrame, maxShingleDf: Int): DataFrame = {
+    val end = CoocEnd.of(sh)
+    coocKernel(sh, sh, hotShingles(sh, maxShingleDf),
+      _.where(col("l") < col("r")).select(col("l").as("d1"), col("r").as("d2")), end, end)
+  }
+
+  /** One end of a [[coocKernel]] pair: the (doc_id, shingle) postings
+    * its docs' hot-shingle arrays are read from, and their (doc_id, n)
+    * distinct-shingle counts.
+    */
+  private final case class CoocEnd(postings: DataFrame, sizes: DataFrame)
+  private object CoocEnd {
+    def of(postings: DataFrame): CoocEnd =
+      CoocEnd(postings, postings.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
+  }
+
+  /** THE exact shingle co-occurrence kernel: (d1, d2, c, n1, n2) for
+    * the pairs of the rare-shingle equi-join of `left` × `right`
+    * postings. `pairs` maps the join rows (shingle, l, r, plus any
+    * extra columns of `right`) to (d1, d2), one row per shared rare
+    * shingle; their count is `cr`, and c = cr + |h1 ∩ h2| over the
+    * ends' sorted hot-shingle arrays (a merge-style array_intersect).
+    * Per-shingle join output is bounded by maxShingleDf², so the
+    * candidate volume is linear in shingle occurrences. The three
+    * callers differ only in what they pass:
+    *  - self ([[coocFromPostings]]): sh × sh, kept where d1 < d2;
+    *  - fold ([[coocFoldParts]]): delta × (delta ∪ touched stored),
+    *    delta×delta pairs kept once, delta×stored pairs canonicalized;
+    *  - cross ([[contaminationPairs]]): train × eval, each end its own
+    *    side, because the two id sets are separate namespaces.
+    */
+  private def coocKernel(left: DataFrame, right: DataFrame, hotKeys: DataFrame,
+      pairs: DataFrame => DataFrame, end1: CoocEnd, end2: CoocEnd): DataFrame = {
+    def rare(p: DataFrame, id: String) =
+      p.join(hotKeys, Seq("shingle"), "left_anti").withColumnRenamed("doc_id", id)
+    def hot(e: CoocEnd, d: String, h: String) = e.postings.join(hotKeys, Seq("shingle"), "left_semi")
+      .groupBy(col("doc_id").as(d)).agg(sort_array(collect_list(col("shingle"))).as(h))
+    val noHot = array().cast("array<bigint>")
+    pairs(rare(left, "l").join(rare(right, "r"), "shingle"))
+      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("cr"))
+      .join(hot(end1, "d1", "h1"), Seq("d1"), "left")
+      .join(hot(end2, "d2", "h2"), Seq("d2"), "left")
+      .withColumn("c", col("cr") +
+        size(array_intersect(coalesce(col("h1"), noHot), coalesce(col("h2"), noHot))))
+      .join(end1.sizes.toDF("d1", "n1"), "d1")
+      .join(end2.sizes.toDF("d2", "n2"), "d2")
+      .select(col("d1"), col("d2"), col("c"), col("n1"), col("n2"))
+  }
+
   /** Exact Jaccard over word-3-gram sets for all pairs sharing at least
     * one *non-ubiquitous* shingle, thresholded. Co-occurrence counting
     * via shingle join: |A∩B| = shared shingles, |A∪B| = nA + nB − |A∩B|.
@@ -153,77 +248,6 @@ object Dedup extends QueryPack {
     * is raising maxShingleDf (the oracle-equivalence knob), not the
     * pair math.
     */
-  /** Exact per-pair shingle co-occurrence under the df-cut:
-    * (d1, d2, c, n1, n2) for unordered pairs d1 < d2 sharing at least
-    * one non-hot shingle — the shared core of [[jaccardPairs]]
-    * (resemblance) and [[containmentPairs]] (the asymmetric measure).
-    * The counts are EXACT (hot shingles re-enter via the per-doc
-    * sorted-array intersect); the cut bounds candidate volume only.
-    */
-  /** Hashed DISTINCT (doc_id, shingle) postings — the 16 B/row schema
-    * the co-occurrence family joins on, and the POSTING STORE a
-    * production pipeline persists (bucketed by `shingle`) to maintain
-    * the core incrementally via [[foldCoocDelta]]. 64-bit shingle
-    * hashes, not strings: same co-occurrence counts (a cross-doc hash
-    * collision would need ~2^32 distinct shingles to become likely),
-    * but every downstream join hashes/compares/ships 8-byte keys
-    * instead of ~20-char strings.
-    */
-  def coocPostings(df: DataFrame): DataFrame =
-    shingleSets(df).select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-
-  private[graft] def coocCounts(df: DataFrame, maxShingleDf: Int): DataFrame =
-    // NOT materialized, by measurement: sh's four consumers (both
-    // self-join sides, the size agg, the hot-set agg) shuffle on the
-    // same keys, so ReuseExchange dedupes the heavy subplans, and a
-    // persist here only adds columnar cache encode/decode to every
-    // consumer — q31 ran ~45% slower with it, and the loss rippled
-    // into every downstream component-clustering query (q61/q86/q52).
-    // Reuse that IS load-bearing (the full pair list feeding multiple
-    // aggregates, e.g. dedupSweep) persists at that level instead.
-    coocFromPostings(coocPostings(df), maxShingleDf)
-
-  /** [[coocCounts]] from an already-built posting table — the form
-    * [[buildCoocStore]] shares with the from-scratch path.
-    */
-  private[graft] def coocFromPostings(sh: DataFrame, maxShingleDf: Int): DataFrame = {
-    // Document frequency via groupBy (map-side partial aggregation:
-    // reducers see near-1 row per shingle, so the df computation
-    // CANNOT itself skew on the hot key — a whole-partition window
-    // here would buffer every occurrence of the hottest shingle in
-    // one task, recreating the exact straggler the cut removes). The
-    // hot-key list is tiny by construction (≤ occurrences/maxDf
-    // distinct values), so both derived joins broadcast it: no
-    // shingle-keyed shuffle of `sh` happens before the cut.
-    val shingleDf = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val hotKeys = shingleDf
-      .where(col("df") > maxShingleDf)
-      .select(col("shingle"))
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    // USING joins put the join column first — rename explicitly
-    val rare = sh.join(hotKeys, Seq("shingle"), "left_anti")
-      .select(col("doc_id"), col("shingle"))
-    // Per-doc hot-shingle sets: small by construction, sorted for a
-    // merge-style array_intersect.
-    val hot = sh.join(hotKeys, Seq("shingle"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("shingle"))).as("hs"))
-    val noHot = array().cast("array<bigint>")
-    val a = rare.toDF("d1", "shingle")
-    val b = rare.toDF("d2", "shingle")
-    a.join(b, "shingle")
-      .where(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("cr"))
-      .join(hot.toDF("d1", "h1"), Seq("d1"), "left")
-      .join(hot.toDF("d2", "h2"), Seq("d2"), "left")
-      .withColumn("c", col("cr") +
-        size(array_intersect(coalesce(col("h1"), noHot), coalesce(col("h2"), noHot))))
-      .join(sz.toDF("d1", "n1"), "d1")
-      .join(sz.toDF("d2", "n2"), "d2")
-      .select(col("d1"), col("d2"), col("c"), col("n1"), col("n2"))
-  }
-
   def jaccardPairs(df: DataFrame, threshold: Double,
       maxShingleDf: Int = 128, assertCutInert: Boolean = false): DataFrame = {
     val pairs = jaccardFromCooc(coocCounts(df, maxShingleDf), threshold)
@@ -471,7 +495,8 @@ object Dedup extends QueryPack {
     *    ingest and the fold only APPENDS delta-touching pairs.
     *
     * Every table is append-only under the fold — upsert-sink friendly
-    * with no rewrite amplification.
+    * with no rewrite amplification. Day 0 and every fold derive `cooc`
+    * through the one [[coocKernel]] (self, then fold orientation).
     */
   final case class CoocStore(postings: DataFrame, sizes: DataFrame,
       hotKeys: DataFrame, cooc: DataFrame)
@@ -485,8 +510,7 @@ object Dedup extends QueryPack {
     CoocStore(
       postings = post,
       sizes = post.groupBy(col("doc_id")).agg(count(lit(1)).as("n")),
-      hotKeys = post.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .where(col("df") > maxShingleDf).select(col("shingle")),
+      hotKeys = hotShingles(post, maxShingleDf),
       cooc = retainForGate(coocFromPostings(post, maxShingleDf), jaccardT, containT))
   }
 
@@ -579,53 +603,31 @@ object Dedup extends QueryPack {
       .where(col("df") > maxShingleDf)
       .join(store.hotKeys.select(col("shingle")), Seq("shingle"), "left_anti")
       .select(col("shingle"))
-    // model-sized (≤ occurrences/maxDf keys) — broadcast everywhere
     val hotNew = graft.util.reused(
       store.hotKeys.select(col("shingle")).unionByName(newlyHot))
-    val rareDelta = graft.util.reused(
-      deltaPost.join(broadcast(hotNew), Seq("shingle"), "left_anti"))
-    val rareOldTouched = touched.join(broadcast(hotNew), Seq("shingle"), "left_anti")
-    // delta × stored: the old side never appears on the delta side,
-    // so least/greatest normalization emits each shared rare shingle
-    // exactly once per unordered pair
-    val candDO = rareDelta.select(col("doc_id").as("dd"), col("shingle"))
-      .join(rareOldTouched.select(col("doc_id").as("od"), col("shingle")), "shingle")
-      .select(least(col("dd"), col("od")).as("d1"),
-        greatest(col("dd"), col("od")).as("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("cr"))
-    // delta × delta: the d1 < d2 filter (not least/greatest) keeps
-    // exactly one of the two join orderings per shared shingle
-    val candDD = rareDelta.select(col("doc_id").as("d1"), col("shingle"))
-      .join(rareDelta.select(col("doc_id").as("d2"), col("shingle")), "shingle")
-      .where(col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("cr"))
-    // disjoint pair sets (a delta id is never on candDO's old side)
-    val cand = candDO.unionByName(candDD)
-    // hot re-entry arrays under the updated classification: delta
-    // docs carry their full hot set; old docs only their delta-
-    // touched hot shingles (sufficient — see scaladoc)
-    val hotArrays = deltaPost.join(broadcast(hotNew), Seq("shingle"), "left_semi")
-      .unionByName(touched.select(col("doc_id"), col("shingle"))
-        .join(broadcast(hotNew), Seq("shingle"), "left_semi"))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("shingle"))).as("hs"))
-    val noHot = array().cast("array<bigint>")
     val deltaSizes = deltaPost.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val sizesAll = store.sizes.select(col("doc_id"), col("n")).unionByName(deltaSizes)
-    val newRows = cand
-      .join(hotArrays.select(col("doc_id").as("d1"), col("hs").as("h1")), Seq("d1"), "left")
-      .join(hotArrays.select(col("doc_id").as("d2"), col("hs").as("h2")), Seq("d2"), "left")
-      .withColumn("c", col("cr") + size(array_intersect(
-        coalesce(col("h1"), noHot), coalesce(col("h2"), noHot))))
-      .join(sizesAll.select(col("doc_id").as("d1"), col("n").as("n1")), "d1")
-      .join(sizesAll.select(col("doc_id").as("d2"), col("n").as("n2")), "d2")
-      .select(col("d1"), col("d2"), col("c"), col("n1"), col("n2"))
+    // delta × (delta ∪ touched stored): a stored doc is never on the
+    // left, so delta×stored pairs meet once per shared shingle and are
+    // canonicalized; delta×delta pairs meet in both orders and keep
+    // l < r. Hot arrays under the updated classification: delta docs
+    // carry their full hot set, old docs only their delta-touched hot
+    // shingles (sufficient — see scaladoc).
+    val end = CoocEnd(deltaPost.unionByName(touched),
+      store.sizes.select(col("doc_id"), col("n")).unionByName(deltaSizes))
+    val newRows = coocKernel(deltaPost,
+      deltaPost.withColumn("stored", lit(false))
+        .unionByName(touched.withColumn("stored", lit(true))),
+      // model-sized (≤ occurrences/maxDf keys) — broadcast everywhere
+      broadcast(hotNew),
+      _.where(col("stored") || col("l") < col("r"))
+        .select(least(col("l"), col("r")).as("d1"), greatest(col("l"), col("r")).as("d2")),
+      end, end)
     CoocFoldParts(
       deltaPostings = deltaPost,
       deltaSizes = deltaSizes,
       newlyHot = newlyHot,
       newCooc = retainForGate(newRows, jaccardT, containT),
-      pinned = Seq(deltaPost, touched, hotNew, rareDelta))
+      pinned = Seq(deltaPost, touched, hotNew))
   }
 
   /** PERSISTED [[CoocStore]] maintenance — the production form of
@@ -716,7 +718,7 @@ object Dedup extends QueryPack {
       up(parts.deltaSizes, "sizes", Seq("doc_id"))
       val n = fresh.select(col("doc_id")).distinct().count()
       // the fold's reused() intermediates are per-batch scratch: a
-      // long-running stream would otherwise pin 4 cached frames per
+      // long-running stream would otherwise pin 3 cached frames per
       // micro-batch in the CacheManager until session teardown
       parts.pinned.foreach(_.unpersist(false))
       n
@@ -728,14 +730,14 @@ object Dedup extends QueryPack {
     * corpus never crosses the df-cut) and for `cooc` (a corpus with
     * no retained pairs): an upsert of zero rows creates no table.
     * Every column of every store table is a 64-bit long, so the
-    * empty schema is uniform.
+    * empty schema is uniform; the handle only reads, so its key is
+    * just the columns.
     */
   private def readStoreTable(s: SparkSession, dir: String, name: String,
       cols: Seq[String]): DataFrame = {
-    import graft.sources.ParquetUpsertSink
-    if (ParquetUpsertSink.tableExists(s, s"$dir/$name"))
-      ParquetUpsertSink.read(s, s"$dir/$name").select(cols.map(col): _*)
-    else s.range(0).select(cols.map(c => col("id").as(c)): _*)
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    graft.sources.ParquetStore(s"$dir/$name", cols, "_rev")
+      .scanOrEmpty(s, StructType(cols.map(StructField(_, LongType))))
   }
 
   /** Read the live pair table of a persisted store (the table every
@@ -804,47 +806,24 @@ object Dedup extends QueryPack {
     * detection, the pre-training hygiene pass: every (train, eval)
     * pair whose word-3-gram Jaccard meets the threshold, i.e. eval
     * documents leaked (verbatim or lightly edited) into the training
-    * corpus. Same skew-guarded candidate machinery as `jaccardPairs`
-    * (df-cut hot shingles computed over BOTH corpora, exact Jaccard
-    * via rare-join counts + per-doc hot-set intersections), but the
-    * candidate join is train-side × eval-side — never within a
-    * corpus — so candidate volume is bounded by the CROSS overlap,
-    * which for a clean pipeline is near zero.
+    * corpus. [[coocKernel]]'s cross orientation: df-cut hot shingles
+    * computed over BOTH corpora, exact Jaccard via rare-join counts +
+    * per-doc hot-set intersections, and the candidate join is
+    * train-side × eval-side — never within a corpus — so candidate
+    * volume is bounded by the CROSS overlap, which for a clean
+    * pipeline is near zero.
     */
   def contaminationPairs(train: DataFrame, eval: DataFrame, threshold: Double,
       maxShingleDf: Int = 128): DataFrame = {
-    def hashed(df: DataFrame) = shingleSets(df)
-      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-    val shT = graft.util.reused(hashed(train))
-    val shE = graft.util.reused(hashed(eval))
+    val shT = graft.util.reused(coocPostings(train))
+    val shE = graft.util.reused(coocPostings(eval))
     // hotness is a GLOBAL property: a boilerplate shingle is hot no
     // matter which corpus each occurrence lives in
-    val hot = shT.select(col("shingle")).union(shE.select(col("shingle")))
-      .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .where(col("df") > maxShingleDf)
-      .select(col("shingle"))
-    // USING joins put the join column first in their output, so name
-    // columns explicitly rather than positionally
-    def rare(sh: DataFrame, id: String) = sh.join(hot, Seq("shingle"), "left_anti")
-      .select(col("doc_id").as(id), col("shingle"))
-    def hotSet(sh: DataFrame) = sh.join(hot, Seq("shingle"))
-      .groupBy(col("doc_id")).agg(sort_array(collect_list(col("shingle"))).as("hs"))
-    val szT = shT.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val szE = shE.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val noHot = array().cast("array<bigint>")
-    rare(shT, "train_id")
-      .join(rare(shE, "eval_id"), "shingle")
-      .groupBy(col("train_id"), col("eval_id"))
-      .agg(count(lit(1)).as("cr"))
-      .join(hotSet(shT).toDF("train_id", "h1"), Seq("train_id"), "left")
-      .join(hotSet(shE).toDF("eval_id", "h2"), Seq("eval_id"), "left")
-      .withColumn("c", col("cr") +
-        size(array_intersect(coalesce(col("h1"), noHot), coalesce(col("h2"), noHot))))
-      .join(szT.toDF("train_id", "n1"), "train_id")
-      .join(szE.toDF("eval_id", "n2"), "eval_id")
-      .withColumn("jac", col("c").cast("double") / (col("n1") + col("n2") - col("c")))
-      .where(col("jac") >= threshold)
-      .select(col("train_id"), col("eval_id"), col("jac"))
+    val hot = hotShingles(shT.select(col("shingle")).union(shE.select(col("shingle"))),
+      maxShingleDf)
+    jaccardFromCooc(coocKernel(shT, shE, hot,
+      _.select(col("l").as("d1"), col("r").as("d2")), CoocEnd.of(shT), CoocEnd.of(shE)),
+      threshold).toDF("train_id", "eval_id", "jac")
   }
 
   /** Session-scoped STORED contamination audit over the gate corpus's
@@ -939,14 +918,6 @@ object Dedup extends QueryPack {
            |  AND doc_id NOT IN (SELECT train_id FROM bad)""".stripMargin),
     "decontaminated train corpus: q58's audit applied as an anti-join")
 
-  /** MinHash signatures (k seeded xxhash64 minima) banded into
-    * `bands` buckets of `rows` signature slots each. Two docs land in
-    * the same bucket for band i iff their signatures agree on all of
-    * that band's slots — P[candidate] = 1−(1−s^rows)^bands for true
-    * Jaccard s. Candidates are then verified with EXACT Jaccard on the
-    * shingle sets, so output precision is exact; only recall is
-    * probabilistic (spec-tested against q31).
-    */
   /** MinHash signatures + LSH band hashes, one compact row per doc:
     * (doc_id, sh: array&lt;string&gt; — the shingle set for exact verify,
     * bh: array&lt;long&gt; — `bands` band hashes). This is the table a
@@ -981,30 +952,20 @@ object Dedup extends QueryPack {
       .select(col("doc_id"), col("sh"), bandHashes.as("bh"))
   }
 
+  /** MinHash signatures (k seeded xxhash64 minima) banded into
+    * `bands` buckets of `rows` signature slots each. Two docs land in
+    * the same bucket for band i iff their signatures agree on all of
+    * that band's slots — P[candidate] = 1−(1−s^rows)^bands for true
+    * Jaccard s. Candidates are then verified with EXACT Jaccard on the
+    * shingle sets, so output precision is exact; only recall is
+    * probabilistic (spec-tested against q31). This is
+    * [[minhashBandPairs]] with every document on the probe side and no
+    * stored side.
+    */
   def minhashPairs(df: DataFrame, threshold: Double,
-      k: Int = 32, bands: Int = 8): DataFrame = {
-    val sig = graft.util.reused(minhashSignatures(df, k, bands)) // signature pipeline runs once, not per join side
-    // Candidate generation and dedup carry ONLY (d1, d2): on clustered
-    // corpora the band join emits each hot pair once per agreeing band,
-    // and shuffling the shingle arrays through that dedup dominates the
-    // query. The arrays re-join after dedup from the 1-row-per-doc
-    // signature table (small side — AQE broadcasts it at this scale).
-    val buckets = sig.select(col("doc_id"), posexplode(col("bh")).as(Seq("band", "bh")))
-    val docSets = sig.select(col("doc_id"), col("sh"))
-    val cand = buckets.toDF("d1", "band", "bh")
-      .join(buckets.toDF("d2", "band", "bh"), Seq("band", "bh"))
-      .where(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"))
-      .dropDuplicates("d1", "d2")
-    cand
-      .join(docSets.toDF("d1", "sh1"), "d1")
-      .join(docSets.toDF("d2", "sh2"), "d2")
-      .withColumn("jac",
-        size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
-          size(array_union(col("sh1"), col("sh2"))))
-      .where(col("jac") >= threshold)
-      .select(col("d1"), col("d2"), col("jac"))
-  }
+      k: Int = 32, bands: Int = 8): DataFrame =
+    // signature pipeline runs once, not per join side
+    minhashBandPairs(graft.util.reused(minhashSignatures(df, k, bands)), None, threshold)
 
   /** Incremental (nightly-delta) near-dup detection: all MinHash+LSH
     * pairs that TOUCH a new batch — delta×corpus and delta×delta —
@@ -1022,7 +983,8 @@ object Dedup extends QueryPack {
     * exactly as in q32; candidates are narrowed to (d1, d2) before
     * dedup; exact Jaccard verify joins shingle sets back from the
     * stored rows. A daily 0.1% delta therefore costs ~0.1% of the
-    * full-run band join, not a corpus re-scan.
+    * full-run band join, not a corpus re-scan. One core,
+    * [[minhashBandPairs]], serves this and the full run.
     */
   def minhashDeltaPairs(corpusSigs: DataFrame, delta: DataFrame,
       threshold: Double, k: Int = 32, bands: Int = 8): DataFrame =
@@ -1036,23 +998,40 @@ object Dedup extends QueryPack {
     * reuses the rows here and in the signature-store upsert).
     */
   def minhashDeltaPairsFromSigs(corpusSigs: DataFrame, sigD: DataFrame,
+      threshold: Double): DataFrame =
+    minhashBandPairs(sigD, Some(corpusSigs), threshold)
+
+  /** THE MinHash band join and exact verify: the pairs of `probe`
+    * signatures with each other and with the `stored` ones; a full run
+    * ([[minhashPairs]]) is a probe with no store. The store is an
+    * Option, not an empty frame: Spark's empty-relation propagation
+    * stops at posexplode, so an empty stored side would still plan
+    * (and broadcast) its band join. Probe×probe candidates are emitted
+    * once (d1 < d2), probe×stored ones canonicalized (a redelivered
+    * doc stored under its own id is no rival of itself), and only
+    * (d1, d2) reaches the dedup: on clustered corpora the band join
+    * emits each hot pair once per agreeing band, and shuffling the
+    * shingle arrays through that dedup dominates the query. The
+    * arrays re-join after the dedup from the 1-row-per-doc signature
+    * tables (small side — AQE broadcasts it at this scale), and the
+    * Jaccard test is the last join's condition.
+    */
+  private def minhashBandPairs(probe: DataFrame, stored: Option[DataFrame],
       threshold: Double): DataFrame = {
-    val all = corpusSigs.select(col("doc_id"), col("sh"), col("bh"))
-      .union(sigD.select(col("doc_id"), col("sh"), col("bh")))
-    val bucketsAll = all.select(col("doc_id"), posexplode(col("bh")).as(Seq("band", "bh")))
-    val bucketsD = sigD.select(col("doc_id"), posexplode(col("bh")).as(Seq("band", "bh")))
-    val docSets = all.select(col("doc_id"), col("sh"))
-    val cand = bucketsD.toDF("da", "band", "bh")
-      .join(bucketsAll.toDF("db", "band", "bh"), Seq("band", "bh"))
+    def buckets(sig: DataFrame, id: String) =
+      sig.select(col("doc_id").as(id), posexplode(col("bh")).as(Seq("band", "bh")))
+    def docSets(sig: DataFrame) = sig.select(col("doc_id"), col("sh"))
+    val mine = buckets(probe, "da")
+    val within = mine.join(buckets(probe, "db"), Seq("band", "bh"))
+      .where(col("da") < col("db"))
+      .select(col("da").as("d1"), col("db").as("d2"))
+    val cand = stored.fold(within)(st => within.union(mine.join(buckets(st, "db"), Seq("band", "bh"))
       .where(col("da") =!= col("db"))
-      // delta-delta pairs arrive in both orientations; canonicalize
-      // before the narrow dedup so each survives once, as in q32
-      .select(least(col("da"), col("db")).as("d1"),
-        greatest(col("da"), col("db")).as("d2"))
-      .dropDuplicates("d1", "d2")
-    cand
-      .join(docSets.toDF("d1", "sh1"), "d1")
-      .join(docSets.toDF("d2", "sh2"), "d2")
+      .select(least(col("da"), col("db")).as("d1"), greatest(col("da"), col("db")).as("d2"))))
+    val sets = stored.fold(docSets(probe))(st => docSets(st).union(docSets(probe)))
+    cand.dropDuplicates("d1", "d2")
+      .join(sets.toDF("d1", "sh1"), "d1")
+      .join(sets.toDF("d2", "sh2"), "d2")
       .withColumn("jac",
         size(array_intersect(col("sh1"), col("sh2"))).cast("double") /
           size(array_union(col("sh1"), col("sh2"))))
@@ -1096,10 +1075,22 @@ object Dedup extends QueryPack {
            |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""".stripMargin),
     "MinHash+LSH banded near-dup: 8 buckets/doc, exact-verify candidates")
 
-  /** SimHash candidate pairs: 64-bit simhash split into `64/chunkBits`
-    * chunks; docs sharing any chunk value at the same position become
-    * candidates (pigeonhole: hamming ≤ chunks−1 guarantees a shared
-    * chunk). Emits pairs with hamming ≤ maxHamming.
+  /** Per-doc 64-bit SimHash — the deterministic signature q33's
+    * banding consumes (seeded xxhash64 token hashes through the
+    * native mergeable vote aggregate; order-independent, so the
+    * exported copy equals the in-query recompute bit-for-bit).
+    */
+  def simhashValues(df: DataFrame): DataFrame = df
+    .select(col("doc_id"), explode(words(col("text"))).as("t"))
+    .select(col("doc_id"), xxhash64(col("t")).as("h"))
+    .groupBy(col("doc_id"))
+    .agg(graft.functions.simhashAgg(col("h")).as("sh"))
+
+  /** SimHash near-dup pairs: [[hammingPairs]] over [[simhashValues]]
+    * with 64 bits in `64/chunkBits` chunks; docs sharing any chunk
+    * value at the same position become candidates (pigeonhole:
+    * hamming ≤ chunks−1 guarantees a shared chunk). Emits pairs with
+    * hamming ≤ maxHamming (INT).
     *
     * Chunk width is the scale knob, and it is AUTO-SELECTED from the
     * corpus size by default (chunkBits = 0): 8-bit chunks (8 chunks,
@@ -1112,17 +1103,6 @@ object Dedup extends QueryPack {
     * candidate volume on billion-doc corpora. Pass chunkBits
     * explicitly to pin either regime (specs pin 8-bit behavior).
     */
-  /** Per-doc 64-bit SimHash — the deterministic signature q33's
-    * banding consumes (seeded xxhash64 token hashes through the
-    * native mergeable vote aggregate; order-independent, so the
-    * exported copy equals the in-query recompute bit-for-bit).
-    */
-  def simhashValues(df: DataFrame): DataFrame = df
-    .select(col("doc_id"), explode(words(col("text"))).as("t"))
-    .select(col("doc_id"), xxhash64(col("t")).as("h"))
-    .groupBy(col("doc_id"))
-    .agg(graft.functions.simhashAgg(col("h")).as("sh"))
-
   def simhashPairs(df: DataFrame, maxHamming: Int, chunkBits: Int = 0,
       nDocs: Long = -1L): DataFrame = {
     val bits =
@@ -1151,41 +1131,92 @@ object Dedup extends QueryPack {
           16
         }
       }
-    val nChunks = 64 / bits
-    val mask = (1L << bits) - 1
-    // Same algorithm as graft.functions.simhash64, via the native
-    // mergeable SimHashAgg aggregate (one 256-byte vote buffer per
-    // group; see graft.expressions.SimHashAgg) — one expression where
-    // the composed formulation needs 64 conditional-sum columns.
-    // FunctionsSpec pins the three formulations to each other.
-    val hashed = simhashValues(df)
-    // LAZY persist, not localCheckpoint: the vote aggregation feeds
-    // both self-join sides, and one side broadcast-exchanges — the
-    // exchanges differ canonically, so ReuseExchange cannot dedupe
-    // them and an unpersisted diamond would compute the aggregation
-    // twice. persist() builds no RDD and runs no job at
-    // plan-construction time (PlanSpec pins zero jobs; localCheckpoint
-    // — even eager=false — materializes upstream AQE stages while the
-    // plan is merely being BUILT); the first action materializes the
-    // chunk table once, spilling to disk if it outgrows memory.
-    val chunks = hashed.select(col("doc_id"), col("sh"),
-      posexplode(array((0 until nChunks).map(i =>
-        shiftrightunsigned(col("sh"), i * bits).bitwiseAND(mask)): _*))
-        .as(Seq("pos", "cv")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Filter BEFORE dedup: on clustered corpora (templated docs) the
-    // chunk join emits millions of candidate rows, and shuffling them
-    // all through dropDuplicates dominates the query. bit_count runs
-    // codegen'd on the join output, so only matching pairs — orders of
-    // magnitude fewer — reach the dedup shuffle. (hamming is a pure
-    // function of the pair, so filter∘dedup ≡ dedup∘filter.)
-    chunks.toDF("d1", "sh1", "pos", "cv")
-      .join(chunks.toDF("d2", "sh2", "pos", "cv"), Seq("pos", "cv"))
-      .where(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"),
-        bit_count(col("sh1").bitwiseXOR(col("sh2"))).as("hamming"))
+    hammingPairs(simhashValues(df).select(col("doc_id"), col("sh").as("ph")),
+      64, bits, maxHamming)
+  }
+
+  /** THE hamming-ball pair core of the fingerprint family (q33's
+    * SimHash, the media pHash paths of [[Multimodal]]): every pair of
+    * `(doc_id: long, ph: long)` rows whose `bits`-bit fingerprints
+    * differ in at most `maxHamming` bits and agree on at least one of
+    * the `bits/chunkBits` aligned chunks — all such pairs when
+    * maxHamming < chunks (pigeonhole). Output (d1, d2, hamming: INT),
+    * d1 < d2, each pair once.
+    */
+  private[graft] def hammingPairs(hashes: DataFrame, bits: Int, chunkBits: Int,
+      maxHamming: Int): DataFrame = {
+    require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
+    val chunks = bits / chunkBits
+    // Hash ONCE (guide §8: the fingerprint pass runs once, everything
+    // downstream works over 16-byte proxy rows): the persist is the
+    // materialization point for all five consumers below (the
+    // distinct, both clique-join sides, both member attaches) — block-
+    // level locking makes concurrent first-touch stages wait on one
+    // compute instead of re-running the decode. Builders stay
+    // action-free at plan time (the PlanSpec contract), so this is a
+    // lazy persist, not an eager checkpoint.
+    val hashed = graft.util.reused(hashes)
+    // Hot-bucket cap (guide §2.5; the r18 verdict watch item): band at
+    // DISTINCT-fingerprint grain, never member grain. A degenerate
+    // corpus (mass identical payloads — blank thumbnails, silence,
+    // templated documents) used to drop its whole population into one
+    // (chunk, cv) bucket, and the member-grain self-join went quadratic
+    // in members × chunks BEFORE its distinct. At hash grain the
+    // banding join is quadratic only in distinct co-bucketed
+    // fingerprints; doc pairs are re-attached afterwards at OUTPUT
+    // size via streaming equi-joins (never a per-row array
+    // materialization). The emitted pair set is IDENTICAL for any
+    // maxHamming: identical-fingerprint pairs share every chunk, so
+    // they were always candidates (hamming 0 — the member self-join on
+    // ph); distinct-fingerprint pairs share a chunk iff their
+    // fingerprints do, so hash-grain banding finds exactly the
+    // member-grain candidate set. The unsigned shift keeps a 64-bit
+    // fingerprint's top chunk free of sign fill.
+    val bucketed = hashed.select(col("ph")).distinct().select(col("ph"),
+      posexplode(array((0 until chunks).map(c =>
+        shiftrightunsigned(col("ph"), c * chunkBits).bitwiseAND(lit((1L << chunkBits) - 1))): _*))
+        .as(Seq("chunk", "cv")))
+    // hamming verify BEFORE the dedup, explicitly: candidates are
+    // quadratic in co-bucketed hashes (482M at sf10p for 544 real
+    // pairs — the synthetic corpus's chunk values collide heavily)
+    // while bit_count is one codegen op per row, so the filter runs
+    // in the join stage and the distinct only ever sees survivors
+    // (multiplicity ≤ chunks per pair). Spelled in this order rather
+    // than relying on the optimizer pushing a post-distinct filter
+    // through the aggregate: the pushdown is real but fragile, and a
+    // 482M-row distinct measured 451 s when it missed.
+    // Quadratic-fanout stage width: the banding join's INPUT is tiny
+    // (16-byte rows per distinct fingerprint) but its match fanout is
+    // quadratic in co-bucketed hashes, so AQE's byte-based partition
+    // coalescing collapses the post-shuffle stage to ONE partition
+    // (measured at sf10p: the 482M-candidate probe ran as a single
+    // ~100 s task). Explicit user partitioning at runtime-derived
+    // width is respected by AQE; both sides share the (chunk, cv)
+    // layout and count, so the join adds no further exchange.
+    val par = math.max(hashes.sparkSession.sparkContext.defaultParallelism, 1)
+    val bucketedP = bucketed.repartition(par, col("chunk"), col("cv"))
+    val phPairs = bucketedP.select(col("ph").as("p1"), col("chunk"), col("cv"))
+      .join(bucketedP.select(col("ph").as("p2"), col("chunk"), col("cv")),
+        Seq("chunk", "cv"))
+      .where(col("p1") < col("p2"))
+      .withColumn("hamming", bit_count(col("p1").bitwiseXOR(col("p2"))))
       .where(col("hamming") <= maxHamming)
-      .dropDuplicates("d1", "d2")
+      .select(col("p1"), col("p2"), col("hamming"))
+      .distinct()
+    // exact-duplicate cliques: identical fingerprints need no hamming
+    // search — they are hamming-0 pairs by definition
+    val intra = hashed.select(col("doc_id").as("d1"), col("ph"))
+      .join(hashed.select(col("doc_id").as("d2"), col("ph")), Seq("ph"))
+      .where(col("d1") < col("d2"))
+      .select(col("d1"), col("d2"), lit(0).as("hamming"))
+    // near-duplicate fingerprint pairs re-attached to their members;
+    // every member of p1 pairs with every member of p2 (output-sized)
+    val inter = phPairs
+      .join(hashed.select(col("doc_id").as("da"), col("ph").as("p1")), Seq("p1"))
+      .join(hashed.select(col("doc_id").as("db"), col("ph").as("p2")), Seq("p2"))
+      .select(least(col("da"), col("db")).as("d1"),
+        greatest(col("da"), col("db")).as("d2"), col("hamming"))
+    intra.unionByName(inter)
   }
 
   val q33 = Q(
@@ -1448,42 +1479,31 @@ object Dedup extends QueryPack {
     *
     * The eval set is the SMALL side of this audit by construction (a
     * release report probes a fixed benchmark suite against the whole
-    * training corpus), so the default path broadcasts eval's distinct
-    * window hashes and SEMI-JOINS the store against them: the stored
-    * table — the 100 TB side — STREAMS through a broadcast hash join
-    * and never shuffles, never re-sorts, never re-distincts; the only
-    * shuffled rows are the matched windows (≤ eval's window count),
-    * collapsed by a partial-aggregate distinct. Duplicate rows in the
-    * store (a union of per-delta signature files without compaction)
-    * stay correct: the semi join emits each matched window, and the
-    * eval-sized distinct collapses them. Set `broadcastEval = false`
-    * for an eval side too large to broadcast — the fallback shuffles
-    * both sides on the window hash (the pre-r8 shape).
+    * training corpus), so the audit broadcasts eval's distinct window
+    * hashes and SEMI-JOINS the store against them: the stored table —
+    * the 100 TB side — STREAMS through a broadcast hash join and never
+    * shuffles, never re-sorts, never re-distincts; the only shuffled
+    * rows are the matched windows (≤ eval's window count), collapsed
+    * by a partial-aggregate distinct. Duplicate rows in the store (a
+    * union of per-delta signature files without compaction) stay
+    * correct: the semi join emits each matched window, and the
+    * eval-sized distinct collapses them.
     */
   def memorizationRateAgainst(storedWins: DataFrame, eval: DataFrame,
-      n: Int = 8, broadcastEval: Boolean = true): DataFrame = {
-    val evalWins0 = eval
+      n: Int = 8): DataFrame = {
+    val evalWins = graft.util.reused(eval
       .select(col("doc_id"),
         explode(graft.functions.wordNgrams(col("text"), n)).as("w"))
       .select(col("doc_id"), xxhash64(col("w")).as("win"))
-      .distinct()
-    def rollup(joined: DataFrame): DataFrame = joined
+      .distinct())
+    val hits = storedWins.select(col("win"))
+      .join(broadcast(evalWins.select(col("win")).distinct()), Seq("win"), "leftsemi")
+      .distinct().withColumn("hit", lit(1))
+    evalWins.join(broadcast(hits), Seq("win"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_win"),
         sum(coalesce(col("hit"), lit(0))).cast("long").as("n_seen"))
       .withColumn("seen_rate", col("n_seen").cast("double") / col("n_win"))
-    if (broadcastEval) {
-      val evalWins = graft.util.reused(evalWins0)
-      val hits = storedWins.select(col("win"))
-        .join(broadcast(evalWins.select(col("win")).distinct()),
-          Seq("win"), "leftsemi")
-        .distinct().withColumn("hit", lit(1))
-      rollup(evalWins.join(broadcast(hits), Seq("win"), "left"))
-    } else {
-      val trainWins = storedWins.select(col("win")).distinct()
-        .withColumn("hit", lit(1))
-      rollup(evalWins0.join(trainWins, Seq("win"), "left"))
-    }
   }
 
   /** Session-scoped STORED train-window table over the gate corpus —

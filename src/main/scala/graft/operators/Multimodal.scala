@@ -549,10 +549,8 @@ object Multimodal extends QueryPack {
     * candidates come from 4 narrow equi-join buckets per record —
     * never all-pairs — and only candidates pay the bit_count verify.
     * Records shorter than 2 characters have no adjacent samples and
-    * are excluded (mirrored in the oracle). A decoded-media corpus
-    * with mega-duplicate groups makes chunk buckets hot the same way
-    * hot shingles do — the df-cut of `jaccardPairs` applies verbatim
-    * if that arises.
+    * are excluded (mirrored in the oracle). Mega-duplicate groups
+    * band once per distinct fingerprint ([[Dedup.hammingPairs]]).
     */
   def mediaPhashPairs(media: DataFrame, maxHamming: Int = 3): DataFrame =
     phashPairsFromHashes(stubHashes(media), maxHamming)
@@ -578,89 +576,16 @@ object Multimodal extends QueryPack {
       .select(col("doc_id"), phash.as("ph"))
   }
 
-  /** The dHash pair machinery downstream of hashing — shared verbatim
-    * by the stub-sampled path ([[mediaPhashPairs]]) and the decoded
-    * path ([[mediaPhashPairsDecoded]]): pigeonhole chunk buckets,
-    * narrow equi-join candidates, bit_count verify. Input: one row per
-    * record, `(doc_id: long, ph: long)` with ph a 48-bit fingerprint.
+  /** The dHash pair machinery downstream of hashing — shared by the
+    * stub-sampled path ([[mediaPhashPairs]]), the decoded path
+    * ([[mediaPhashPairsDecoded]]) and audio ([[audioPhashPairs]]):
+    * [[Dedup.hammingPairs]] over 48-bit fingerprints in 4 chunks of 12
+    * bits, hamming as BIGINT. Input: one row per record,
+    * `(doc_id: long, ph: long)`.
     */
-  private[graft] def phashPairsFromHashes(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0, s"maxHamming must be >= 0, got $maxHamming")
-    val bits = 48
-    val chunks = 4
-    val chunkBits = bits / chunks // 12
-    // Hash ONCE (guide §8: the fingerprint pass runs once, everything
-    // downstream works over 16-byte proxy rows): the persist is the
-    // materialization point for all five consumers below (the
-    // distinct, both clique-join sides, both member attaches) — block-
-    // level locking makes concurrent first-touch stages wait on one
-    // compute instead of re-running the decode. Builders stay
-    // action-free at plan time (the PlanSpec contract), so this is a
-    // lazy persist, not an eager checkpoint.
-    val hashed = hashes.transform(graft.util.reused)
-    // Hot-bucket cap (guide §2.5; the r18 verdict watch item): band at
-    // DISTINCT-fingerprint grain, never member grain. A degenerate
-    // media corpus (mass identical payloads — blank thumbnails,
-    // silence) used to drop its whole population into one (chunk, cv)
-    // bucket, and the member-grain self-join went quadratic in
-    // members × chunks BEFORE its distinct. At hash grain the banding
-    // join is quadratic only in distinct co-bucketed fingerprints;
-    // doc pairs are re-attached afterwards at OUTPUT size via
-    // streaming equi-joins (never a per-row array materialization).
-    // The emitted pair set is IDENTICAL for any maxHamming:
-    // identical-fingerprint pairs share every chunk, so they were
-    // always candidates (hamming 0 — the member self-join on ph);
-    // distinct-fingerprint pairs share a chunk iff their fingerprints
-    // do, so hash-grain banding finds exactly the member-grain
-    // candidate set.
-    val distinctPh = hashed.select(col("ph")).distinct()
-    val bucketed = distinctPh.select(col("ph"),
-      posexplode(array((0 until chunks).map(c =>
-        shiftright(col("ph"), c * chunkBits).bitwiseAND(lit((1 << chunkBits) - 1))): _*))
-        .as(Seq("chunk", "cv")))
-    // hamming verify BEFORE the dedup, explicitly: candidates are
-    // quadratic in co-bucketed hashes (482M at sf10p for 544 real
-    // pairs — the synthetic corpus's chunk values collide heavily)
-    // while bit_count is one codegen op per row, so the filter runs
-    // in the join stage and the distinct only ever sees survivors
-    // (multiplicity ≤ chunks per pair). Spelled in this order rather
-    // than relying on the optimizer pushing a post-distinct filter
-    // through the aggregate: the pushdown is real but fragile, and a
-    // 482M-row distinct measured 451 s when it missed.
-    // Quadratic-fanout stage width: the banding join's INPUT is tiny
-    // (16-byte rows per distinct fingerprint) but its match fanout is
-    // quadratic in co-bucketed hashes, so AQE's byte-based partition
-    // coalescing collapses the post-shuffle stage to ONE partition
-    // (measured at sf10p: the 482M-candidate probe ran as a single
-    // ~100 s task). Explicit user partitioning at runtime-derived
-    // width is respected by AQE; both sides share the (chunk, cv)
-    // layout and count, so the join adds no further exchange.
-    val par = math.max(hashes.sparkSession.sparkContext.defaultParallelism, 1)
-    val bucketedP = bucketed.repartition(par, col("chunk"), col("cv"))
-    val phPairs = bucketedP.select(col("ph").as("p1"), col("chunk"), col("cv"))
-      .join(bucketedP.select(col("ph").as("p2"), col("chunk"), col("cv")),
-        Seq("chunk", "cv"))
-      .where(col("p1") < col("p2"))
-      .withColumn("hamming", bit_count(col("p1").bitwiseXOR(col("p2"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("p1"), col("p2"), col("hamming"))
-      .distinct()
-    // exact-duplicate cliques: identical fingerprints need no hamming
-    // search — they are hamming-0 pairs by definition
-    val intra = hashed.select(col("doc_id").as("d1"), col("ph"))
-      .join(hashed.select(col("doc_id").as("d2"), col("ph")), Seq("ph"))
-      .where(col("d1") < col("d2"))
-      .select(col("d1"), col("d2"), lit(0L).as("hamming"))
-    // near-duplicate fingerprint pairs re-attached to their members;
-    // every member of p1 pairs with every member of p2 (output-sized)
-    val inter = phPairs
-      .join(hashed.select(col("doc_id").as("da"), col("ph").as("p1")), Seq("p1"))
-      .join(hashed.select(col("doc_id").as("db"), col("ph").as("p2")), Seq("p2"))
-      .select(least(col("da"), col("db")).as("d1"),
-        greatest(col("da"), col("db")).as("d2"),
-        col("hamming").cast("long").as("hamming"))
-    intra.unionByName(inter)
-  }
+  private[graft] def phashPairsFromHashes(hashes: DataFrame, maxHamming: Int): DataFrame =
+    Dedup.hammingPairs(hashes, bits = 48, chunkBits = 12, maxHamming)
+      .withColumn("hamming", col("hamming").cast("long"))
 
   /** Gate query: the corpus's text stand-ins are all mutually distant
     * under dHash (measured min cross-doc hamming = 7 at sf0.01), so

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The engine's connector seam — SURVEY §3's data-model mapping as a
@@ -60,6 +61,14 @@ trait DocumentSink {
   */
 trait DocumentStore extends DocumentSource with DocumentSink {
   def exists(spark: SparkSession): Boolean
+
+  /** The stored rows as `schema`'s columns; before the first push, an
+    * empty frame of `schema` (a local relation, so the optimizer drops
+    * the joins and union branches it feeds).
+    */
+  def scanOrEmpty(spark: SparkSession, schema: StructType): DataFrame =
+    if (exists(spark)) scan(spark).select(schema.fieldNames.toSeq.map(col): _*)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 }
 
 /** The engine-native store: bucket-pruned keyed parquet

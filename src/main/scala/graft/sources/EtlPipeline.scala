@@ -91,18 +91,12 @@ object EtlPipeline {
   private def patchClosure(s: SparkSession, dest: DocumentStore, added: DataFrame,
       changes: Long, removed: Option[DataFrame], version: Long): (Long, Long) = {
     if (changes == 0) return (0L, 0L)
-    val existing = pin(stored(s, dest, closureSchema))._1 // every fold round reads it
+    val existing = pin(dest.scanOrEmpty(s, closureSchema))._1 // every fold round reads it
     val p = Hierarchy.closurePatch(existing, added, removed)
     if (p.nUpserts > 0) dest.push(p.upserts.withColumn("rev", lit(version)))
     if (p.nDeletes > 0) dest.delete(p.deletes.withColumn("rev", lit(version)))
     (p.nUpserts, p.nDeletes)
   }
-
-  /** `store`'s rows as `schema`'s columns; empty before its first push. */
-  private def stored(s: SparkSession, store: DocumentStore,
-      schema: StructType): DataFrame =
-    if (store.exists(s)) store.scan(s).select(schema.fieldNames.toSeq.map(col): _*)
-    else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** The stored closure as a plain (ancestor, descendant, depth)
     * relation (rev dropped) — what consumers query.
@@ -284,7 +278,7 @@ object EtlPipeline {
     // before that upsert rewrites it. t = post live − stored live.
     def live(op: Column) = when(op === "add", 1).otherwise(0)
     val changed = org.apache.spark.sql.Observation()
-    val (transition, nChanged) = pin(stored(s, edgeStore, edgeSchema)
+    val (transition, nChanged) = pin(edgeStore.scanOrEmpty(s, edgeSchema)
       .join(broadcast(collapsed.select(edge.map(col): _*)), edge, "left_semi")
       .withColumn("stored", lit(true))
       .unionByName(collapsed.withColumn("stored", lit(false)))

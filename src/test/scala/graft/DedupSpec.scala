@@ -63,6 +63,62 @@ class DedupSpec extends SparkSpec {
     e.getMessage should include("nDocs")
   }
 
+  /** `f`'s value and the output rows of every join in the plans its
+    * `collect` actions executed, read by a QueryExecutionListener.
+    */
+  private def withJoinRows[T](f: => T): (T, Seq[Long]) = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import scala.jdk.CollectionConverters._
+    def joins(p: SparkPlan): Seq[Long] = (p match {
+      case j: BaseJoinExec => j.metrics.get("numOutputRows").map(_.value).toSeq
+      case _ => Nil
+    }) ++ (p match {
+      case a: AdaptiveSparkPlanExec => joins(a.executedPlan)
+      case q: QueryStageExec => joins(q.plan)
+      case _ => p.children.flatMap(joins)
+    })
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val done = new java.util.concurrent.Semaphore(0)
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(func: String, qe: QueryExecution, ns: Long): Unit =
+        if (func == "collect") { joins(qe.executedPlan).foreach(n => rows.add(n)); done.release() }
+      override def onFailure(func: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val v = f
+      done.tryAcquire(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      (v, rows.asScala.toSeq.map(_.longValue))
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("degenerate mass-identical corpus: simhash pairs are the brute-force hamming ball at output size") {
+    // MultimodalSpec's pHash clique case on q33's path: 300 identical
+    // documents put the whole population in every (chunk, cv) bucket.
+    // Banding at distinct-fingerprint grain keeps every join's output
+    // within a small multiple of the pairs emitted; member-grain
+    // banding emits about chunks × members² rows in the chunk join.
+    val a = "the quick brown fox jumps over the lazy dog near the river bank"
+    val corpus = ((0 until 300).map(i => (i.toLong, a)) ++
+      Seq((5000L, a + " today"), (6000L, "x"), (7000L, null.asInstanceOf[String])))
+      .toDF("doc_id", "text")
+    val hs = Dedup.simhashValues(corpus).as[(Long, Long)].collect().toSeq
+    hs.map(_._1) should not contain 7000L // no words, no fingerprint
+    val expected = (for {
+      (d1, h1) <- hs; (d2, h2) <- hs if d1 < d2
+      hm = java.lang.Long.bitCount(h1 ^ h2) if hm <= 5
+    } yield (d1, d2, hm)).toSet
+    val (got, joinRows) = withJoinRows(
+      Dedup.simhashPairs(corpus, maxHamming = 5, chunkBits = 8)
+        .as[(Long, Long, Int)].collect().toSet)
+    got shouldBe expected
+    expected.size should be >= 300 * 299 / 2
+    info(s"pairs ${got.size}, join output rows ${joinRows.sorted.reverse.mkString(", ")}")
+    joinRows.max should be <= 2L * got.size
+  }
+
   test("gate cut-inert assertion passes on the test corpus and fails loudly past the cut") {
     // inert regime (max df well under 128): guarded result == unguarded
     val guarded = Dedup.jaccardPairs(documents, 0.5, assertCutInert = true)

@@ -81,6 +81,20 @@ class JobCountSpec extends SparkSpec {
     run.jobs should be <= 29 // 27 observed; 41 with a count() per round
   }
 
+  test("connectedComponents tests its fixpoint in each round's checkpoint job") {
+    // a 40-node chain and a 21-node star: several rounds to converge
+    val pairs = ((1L until 40L).map(i => (i, i + 1)) ++
+      (101L to 120L).map(i => (100L, i))).toDF("d1", "d2")
+    val run = JobProbe(spark)(graft.operators.Cluster.connectedComponents(pairs))
+    run.value.as[(Long, Long)].collect().toMap shouldBe
+      ((1L to 40L).map(_ -> 1L) ++ (100L to 120L).map(_ -> 100L)).toMap
+    info(s"components jobs: ${run.jobs}, checkpoints: ${run.checkpointRows.size}")
+    // every SQL execution is a round's pin: the edge count and content
+    // hash ride the checkpoint's own job, not an aggregate after it
+    run.details.size shouldBe run.checkpointRows.size
+    run.jobs should be <= 32 // 30 observed; 46 with an aggregate after each pin
+  }
+
   /** A 2,000-row table over 8 buckets, ids 1..2000 at rev 1. */
   private def sinkTable(): String = {
     val path = java.nio.file.Files.createTempDirectory("graft-jobs-sink").toString + "/t"

@@ -51,6 +51,13 @@ if grep -rn 'incrementalClosureDelete' src ||
   echo "second closure patch path — use Hierarchy.closurePatch" >&2
   exit 1
 fi
+# one pair core per near-dup signature: the hamming verify lives in
+# Dedup.hammingPairs, the hot-array re-entry in Dedup.coocKernel
+if (( $(grep -rn 'bit_count(col(' src/main/scala/graft/operators/ | wc -l) > 1 )) ||
+   (( $(grep -c 'size(array_intersect(coalesce(' src/main/scala/graft/operators/Dedup.scala) > 1 )); then
+  echo "second near-dup pair core — use Dedup.hammingPairs / Dedup.coocKernel" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
