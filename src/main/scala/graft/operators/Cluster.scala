@@ -413,18 +413,20 @@ object Cluster extends QueryPack {
     val s = docs.sparkSession
     val sigD = pin(Dedup.minhashSignatures(docs))._1
     val sigStore = ParquetStore(sigsPath, Seq("doc_id"), "_rev", numBuckets)
-    val stored = sigStore.scanOrEmpty(s, sigD.schema)
+    // a first batch has no store to band-join against: no stored side
+    val stored = Option.when(sigStore.exists(s))(
+      sigStore.scan(s).select(sigD.columns.toSeq.map(col): _*))
     val (pairs, nPairs) = // pair set is small; verdicts reuse it twice
       pin(Dedup.minhashDeltaPairsFromSigs(stored, sigD, threshold))
     // pairs are canonical (d1 < d2) and always touch the batch: drop
     // d2 when it is a batch doc (its neighbor d1 — stored or batch —
     // has the smaller id), and drop d1 when d2 is stored (a batch doc
     // near-dupping an admitted doc of larger id)
-    val storedIds = stored.select(col("doc_id"))
-    val drops = pairs.select(col("d2").as("doc_id"))
+    val rivals = pairs.select(col("d2").as("doc_id"))
       .join(docs.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .union(pairs.join(storedIds.toDF("d2"), Seq("d2"), "left_semi")
-        .select(col("d1").as("doc_id")))
+    val drops = stored.fold(rivals)(st => rivals
+      .union(pairs.join(st.select(col("doc_id").as("d2")), Seq("d2"), "left_semi")
+        .select(col("d1").as("doc_id"))))
       .distinct()
     val (kept, nKept) = pin(docs.join(drops, Seq("doc_id"), "left_anti"))
     ParquetStore(docsPath, Seq("doc_id"), "_rev", numBuckets)

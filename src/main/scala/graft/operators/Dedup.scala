@@ -988,18 +988,19 @@ object Dedup extends QueryPack {
     */
   def minhashDeltaPairs(corpusSigs: DataFrame, delta: DataFrame,
       threshold: Double, k: Int = 32, bands: Int = 8): DataFrame =
-    minhashDeltaPairsFromSigs(corpusSigs,
+    minhashDeltaPairsFromSigs(Some(corpusSigs),
       // delta hashed once, reused on both join sides
       graft.util.reused(minhashSignatures(delta, k, bands)), threshold)
 
   /** The band-join core of the incremental path, taking the delta's
     * signatures directly — for callers that also persist them (the
     * streaming ingest dedup hashes each micro-batch exactly once and
-    * reuses the rows here and in the signature-store upsert).
+    * reuses the rows here and in the signature-store upsert). A first
+    * batch, with no stored signatures yet, passes None.
     */
-  def minhashDeltaPairsFromSigs(corpusSigs: DataFrame, sigD: DataFrame,
+  def minhashDeltaPairsFromSigs(corpusSigs: Option[DataFrame], sigD: DataFrame,
       threshold: Double): DataFrame =
-    minhashBandPairs(sigD, Some(corpusSigs), threshold)
+    minhashBandPairs(sigD, corpusSigs, threshold)
 
   /** THE MinHash band join and exact verify: the pairs of `probe`
     * signatures with each other and with the `stored` ones; a full run

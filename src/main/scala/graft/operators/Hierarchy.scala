@@ -10,15 +10,19 @@ import org.apache.spark.sql.functions._
   * `blocks` edges producing each bug's full `descendants` and
   * `ancestors` sets).
   *
-  * Spark-first design: the closure is an iterative frontier join — the
-  * ONLY driver-side loop in the engine, bounded by graph depth (~log n
-  * for these edges, ~20–40 for real bug graphs). Every iteration is a
-  * fully distributed join + dedup; [[graft.util.pin]] materializes and
-  * counts each frontier in one job so lineage stays O(1), not O(depth)
-  * (without it the plan tree doubles per iteration and the driver OOMs
-  * planning at depth ~30). At 100 TB the edges side is checkpointed
-  * once and reused; AQE sizes each iteration's shuffle from the live
-  * frontier, which shrinks geometrically after the graph's widest level.
+  * Spark-first design: the closure is a driver-side loop of
+  * distributed joins, bounded by graph depth (⌈log2 depth⌉ rounds of
+  * path doubling), as are [[closurePatch]]'s semi-naive fold (rounds ∝
+  * the changed paths' length) and [[pageRank]]'s iterations
+  * (`Cluster.connectedComponents` loops the same way). Every
+  * iteration is a fully distributed join + dedup; [[graft.util.pin]]
+  * materializes and counts each round's frame in one job so lineage
+  * stays O(1), not O(depth) (without it the plan tree doubles per
+  * iteration and the driver OOMs planning at depth ~30). A round's
+  * cost on small frames is its Spark jobs, not its rows, so each loop
+  * keeps its jobs per round few and fixed. AQE sizes each iteration's
+  * shuffle from the live frontier, which shrinks geometrically after
+  * the graph's widest level.
   */
 object Hierarchy extends QueryPack {
 
@@ -123,11 +127,13 @@ object Hierarchy extends QueryPack {
   private val pairKey = Seq("ancestor", "descendant")
   private def pairs(df: DataFrame) = df.select(col("ancestor"), col("descendant"))
   private def triples(df: DataFrame) = df.select(col("ancestor"), col("descendant"), col("depth"))
+  private def tagged(df: DataFrame, tag: Int) = triples(df).withColumn("src", lit(tag))
+  private def best(tag: Int) = min(when(col("src") === tag, col("depth")))
 
   /** What one batch of edge changes does to a stored closure: the new
     * or depth-changed (ancestor, descendant, depth) pairs to upsert and
-    * the (ancestor, descendant) pairs to delete, each pinned and
-    * counted.
+    * the (ancestor, descendant) pairs to delete, each read from a
+    * pinned frame and counted.
     */
   final case class ClosurePatch(upserts: DataFrame, nUpserts: Long,
       deletes: DataFrame, nDeletes: Long) {
@@ -140,23 +146,25 @@ object Hierarchy extends QueryPack {
     * exact closure `existing` — the reference's ETL loop (hierarchy.py
     * re-pulls only bugs modified since the last run and patches the
     * stored hierarchy). One semi-naive [[fold]] serves adds and
-    * removals, and the patch holds only the pairs it changes. Every
-    * round reads `existing`, so callers pin it.
+    * removals, and the patch holds only the pairs it changes. Callers
+    * pin `existing`: the add fold streams it every round.
     *
     *  - **Adds only** (`removed` is None): adds only create or shorten
     *    pairs, so the fold runs the added edges over `existing`,
     *    read-only, and its gains ARE the upserts.
     *  - **With removals**: let A be the parents of the removed and
     *    added edges plus their stored ancestors. No node outside A
-    *    reaches A, so its pairs cannot change and are kept verbatim.
-    *    The fold runs the live edges out of A (A's stored depth-1
-    *    pairs, minus the removed, plus the added) over `existing`
-    *    without A's pairs, so its output is exactly A's new pairs:
-    *    upserts = output ▷ A's stored pairs on (a, d, depth), deletes =
-    *    A's stored pairs ▷ output on (a, d). After a partly applied
-    *    patch (upserts stored, deletes lost) the stored pairs through
-    *    the added edges put their ancestors in A too, so a rerun
-    *    completes the patch.
+    *    reaches A, so its pairs cannot change and are kept verbatim,
+    *    and a path out of A leaves it once and never returns. So A's
+    *    new pairs are the closure of the live edges out of A (A's
+    *    stored depth-1 pairs, minus the removed, plus the added) —
+    *    a fold with no base, since no stored pair starts or ends in A —
+    *    optionally followed by one stored pair from outside A. One
+    *    aggregate merges those with A's stored pairs: a pair only A
+    *    stored is a delete, a new or re-depthed one an upsert. After a
+    *    partly applied patch (upserts stored, deletes lost) the stored
+    *    pairs through the added edges put their ancestors in A too, so
+    *    a rerun completes the patch.
     *
     * Everything pinned is sized by the changed region; a removal under
     * a huge component's root re-derives that component (as the
@@ -168,7 +176,7 @@ object Hierarchy extends QueryPack {
       edges.select(col("parent").as("ancestor"), col("child").as("descendant"))
     removed match {
       case None =>
-        val (gains, n) = fold(existing, edgePairs(added))
+        val (gains, n) = fold(Some(existing), edgePairs(added))
         ClosurePatch(gains, n, pairs(gains).where(lit(false)), 0L)
       case Some(rm) =>
         val parents = edgePairs(added).union(edgePairs(rm)).select(col("ancestor").as("node"))
@@ -181,10 +189,27 @@ object Hierarchy extends QueryPack {
         val (mine, _) = pin(triples(inRegion(existing, "left_semi")))
         val seeds = pairs(mine.where(col("depth") === 1))
           .join(edgePairs(rm), pairKey, "left_anti").union(edgePairs(added))
-        val (out, _) = fold(inRegion(existing, "left_anti"), seeds)
-        val (upserts, nUpserts) = pin(out.join(broadcast(mine), pairKey :+ "depth", "left_anti"))
-        val (deletes, nDeletes) = pin(pairs(mine).join(broadcast(out), pairKey, "left_anti"))
-        ClosurePatch(upserts, nUpserts, deletes, nDeletes)
+        val (reach, nReach) = fold(None, seeds)
+        // A's new pairs: a live-edge path, then optionally one stored
+        // pair from outside A (no store pass when A keeps no live edge)
+        val exits = inRegion(existing, "left_anti")
+          .select(col("ancestor").as("mid"), col("descendant"), col("depth").as("d2"))
+          .join(broadcast(reach.select(col("ancestor"), col("descendant").as("mid"), col("depth").as("d1"))),
+            "mid")
+          .select(col("ancestor"), col("descendant"), (col("d1") + col("d2")).as("depth"))
+        val found = if (nReach == 0) reach else reach.union(exits)
+        // per pair: c = new depth, m = A's stored depth; a pair whose
+        // depth stands is no change
+        val dropped = org.apache.spark.sql.Observation()
+        val (patch, n) = pin(tagged(found, 0).union(tagged(mine, 1))
+          .groupBy(pairKey.map(col): _*)
+          .agg(best(0).as("c"), best(1).as("m"))
+          .where(!(col("c") <=> col("m")))
+          .observe(dropped, count(when(col("c").isNull, lit(1))).as("n")))
+        val nDeletes = dropped.get("n").asInstanceOf[Long]
+        ClosurePatch(patch.where(col("c").isNotNull).select(col("ancestor"), col("descendant"),
+            col("c").as("depth")), n - nDeletes,
+          pairs(patch.where(col("c").isNull)), nDeletes)
     }
   }
 
@@ -199,33 +224,66 @@ object Hierarchy extends QueryPack {
   }
 
   /** Semi-naive min-plus fold of depth-1 `seeds` (ancestor,
-    * descendant) into `base`, which it only reads. Returns the gains —
-    * pairs absent from `base` or shorter there — pinned and counted.
+    * descendant) into `base`, which it only reads; with no base it is
+    * the closure of the seeds alone. Returns the gains — pairs absent
+    * from `base` or shorter there — pinned and counted.
     *
-    * Each round composes the pairs the previous round improved (Δ,
-    * broadcast) with `base` ∪ gains on either side and merges the
-    * candidates into the gains in one aggregate, which reads base's
-    * depths through a broadcast semi-join probe. A round pins one
-    * frame — the gains, its improvements flagged `fresh` and counted
-    * by an Observation in the checkpoint's own job — and every round
+    * A round composes Δ, the pairs the previous round improved, with
+    * rel = `base` ∪ gains on both sides (the first round's Δ is the
+    * seeds, which are also its candidates, and rel holds them too):
+    *  - Δ is broadcast once, keyed both ways — by its descendant for
+    *    Δ∘rel and by its ancestor for rel∘Δ — and rel is streamed once,
+    *    each pair probing at its ancestor and at its descendant, so one
+    *    pass emits both compositions and evaluates them once;
+    *  - one shuffle aggregate merges the candidates with the gains;
+    *  - with a base, base's depths of the merged pairs not gained yet
+    *    are read through a broadcast of those pairs, taken from the
+    *    round's own shuffle, so the lookup is keyed by the round's
+    *    candidates and never grows with `base`;
+    *  - one checkpoint pins the next gains, improvements flagged `fresh`
+    *    and counted by an Observation in the checkpoint's own job.
+    *
+    * A round is 5 jobs with a base (Δ broadcast, map stage, pair
+    * broadcast, base probe, checkpoint) and 3 without; every round
     * after the first plans the same shape with no per-round literal.
     * Depths only fall and pairs are finite, so it ends, on cycles too.
     */
-  private def fold(base: DataFrame, seeds: DataFrame): (DataFrame, Long) = {
-    def compose(l: DataFrame, r: DataFrame): DataFrame =
-      l.select(col("ancestor"), col("descendant").as("mid"), col("depth").as("d1"))
-        .join(r.select(col("ancestor").as("mid"), col("descendant"), col("depth").as("d2")), "mid")
-        .select(col("ancestor"), col("descendant"), (col("d1") + col("d2")).as("depth"))
+  private def fold(base: Option[DataFrame], seeds: DataFrame): (DataFrame, Long) = {
+    def compositions(delta: DataFrame, gains: DataFrame): DataFrame = {
+      // side 0 meets rel's ancestor at Δ's descendant (Δ∘rel), side 1
+      // meets rel's descendant at Δ's ancestor (rel∘Δ)
+      def keyed(side: Int, mid: String, end: String) =
+        delta.select(lit(side).as("side"), col(mid).as("mid"), col(end).as("end"), col("depth").as("d1"))
+      val first = col("side") === 0
+      base.fold(triples(gains))(b => triples(b).union(triples(gains)))
+        .select(col("ancestor"), col("descendant"), col("depth").as("d2"),
+          posexplode(array(col("ancestor"), col("descendant"))).as(Seq("side", "mid")))
+        .join(broadcast(keyed(0, "descendant", "ancestor").union(keyed(1, "ancestor", "descendant"))),
+          Seq("side", "mid"))
+        .select(when(first, col("end")).otherwise(col("ancestor")).as("ancestor"),
+          when(first, col("descendant")).otherwise(col("end")).as("descendant"),
+          (col("d1") + col("d2")).as("depth"))
+    }
     def merge(gains: DataFrame, cand: DataFrame): (DataFrame, Long, Long) = {
-      def tagged(df: DataFrame, tag: Int) = triples(df).withColumn("src", lit(tag))
-      def best(tag: Int) = min(when(col("src") === tag, col("depth")))
-      val stored = base.join(broadcast(pairs(cand)), pairKey, "left_semi")
-      // per pair: c = best candidate depth, g = gained depth, b = base's
+      // per pair: c = best candidate depth, g = gained depth, b = base's.
+      // Pairs are never null: saying so up front leaves the base probe's
+      // join nothing to infer, so its side plans the same shuffle as the
+      // result's and AQE runs it once
+      val merged = tagged(cand, 0).union(tagged(gains, 1))
+        .where(col("ancestor").isNotNull && col("descendant").isNotNull)
+        .groupBy(pairKey.map(col): _*)
+        .agg(best(0).as("c"), best(1).as("g"))
+      val withBase = base.fold(merged.withColumn("b", lit(null).cast("int"))) { b =>
+        // a gained pair is already shorter than base: probe the rest
+        // (reading c keeps the aggregate, and so its shuffle, shared)
+        val probe = pairs(merged.where(col("g").isNull && col("c").isNotNull))
+        val stored = b.join(broadcast(probe), pairKey, "left_semi")
+          .select(col("ancestor"), col("descendant"), col("depth").as("b"))
+        merged.join(broadcast(stored), pairKey, "left_outer")
+      }
       val fresh = coalesce(col("c") < coalesce(col("g"), col("b"), lit(Int.MaxValue)), lit(false))
       val improved = org.apache.spark.sql.Observation()
-      val (next, n) = pin(tagged(cand, 0).union(tagged(gains, 1)).union(tagged(stored, 2))
-        .groupBy(pairKey.map(col): _*)
-        .agg(best(0).as("c"), best(1).as("g"), best(2).as("b"))
+      val (next, n) = pin(withBase
         .where(col("g").isNotNull || fresh)
         .select(col("ancestor"), col("descendant"),
           when(fresh, col("c")).otherwise(col("g")).as("depth"), fresh.as("fresh"))
@@ -233,11 +291,10 @@ object Hierarchy extends QueryPack {
       (next, improved.get("n").asInstanceOf[Long], n)
     }
     val seeded = seeds.withColumn("depth", lit(1))
-    var (gains, improved, n) = merge(seeded.withColumn("fresh", lit(false)).where(lit(false)), seeded)
+    var (gains, improved, n) = merge(seeded.withColumn("fresh", lit(false)).where(lit(false)),
+      seeded.union(compositions(seeded, seeded)))
     while (improved > 0) {
-      val delta = broadcast(gains.where(col("fresh")))
-      val rel = triples(base).union(triples(gains))
-      val (next, i, m) = merge(gains, compose(delta, rel).union(compose(rel, delta)))
+      val (next, i, m) = merge(gains, compositions(gains.where(col("fresh")), gains))
       gains = next; improved = i; n = m
     }
     (triples(gains), n)

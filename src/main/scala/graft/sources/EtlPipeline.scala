@@ -31,9 +31,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
   * at-least-once loop, the reference's own contract.
   *
   * Scale note: the stored closure is read and pinned once per run;
-  * the patch is computed change-sized from it (the fold's delta side
-  * is broadcast, the big relation is only probed) and never diffed
-  * against it as a whole. Only the patch reaches the sink. Every
+  * the patch is computed change-sized from it and never diffed
+  * against it as a whole. An add fold round broadcasts its delta,
+  * streams the stored closure once, shuffles only its candidates and
+  * gains, and reads stored depths through a broadcast of the round's
+  * candidate pairs; a removal's fold never reads the store, which one
+  * final pass joins. Only the patch reaches the sink. Every
   * intermediate the loop branches on is pinned ([[graft.util.pin]]):
   * its checkpoint job counts it, and what was counted is exactly what
   * is pushed or deleted.

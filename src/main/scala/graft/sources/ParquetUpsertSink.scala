@@ -91,7 +91,11 @@ object ParquetUpsertSink {
       // other lacks (see the class doc) — absent cells become null
       val all = liveRows(in.sparkSession, path, live, inBuckets)
         .fold(in)(_.unionByName(in, allowMissingColumns = true))
-      (inBuckets, Some(dedupLatest(all, keyCols, versionCol)))
+      // the bucket is a function of the keys: routed by bucket once, the
+      // newest-version window needs no shuffle of its own and the
+      // write's bucket repartition is already satisfied
+      (inBuckets, Some(dedupLatest(all.repartition(col(bucketCol)),
+        bucketCol +: keyCols, versionCol)))
     }
 
   /** The one mutation protocol behind [[upsert]], [[delete]] and
@@ -155,7 +159,9 @@ object ParquetUpsertSink {
     * first costs one extra exchange of the (update-footprint-sized)
     * rewrite set and makes every rewritten bucket exactly ONE parquet
     * file, so live file count stays equal to bucket count forever —
-    * merges never degrade the layout.
+    * merges never degrade the layout. An input already routed by
+    * bucket (an upsert's, see [[upsert]]) pays no second exchange:
+    * Spark drops a repartition its input already satisfies.
     *
     * Sizing: one file per bucket makes `numBuckets` the parallelism
     * AND file-size knob — pick it so a bucket is ~1 GB at the table's

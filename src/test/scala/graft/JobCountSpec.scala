@@ -30,10 +30,11 @@ class JobCountSpec extends SparkSpec {
       Hierarchy.closure(Seq((10L, 1L), (11L, 1L), (12L, 11L), (13L, 12L))
         .toDF("child", "parent")).as[(Long, Long, Int)].collect().toSet
     info(s"delta run jobs: ${run.jobs}")
-    // 63 observed (90 with a scoped delete re-close, a re-pinned
-    // relation per fold round and two whole-closure diffs); the slack
-    // absorbs AQE's run-to-run stage variation
-    run.jobs should be <= 70
+    // 41 observed (63 with seven jobs per fold round and the removal's
+    // two diffs pinned apart; 90 with a scoped delete re-close, a
+    // re-pinned relation per fold round and two whole-closure diffs);
+    // the slack absorbs AQE's run-to-run stage variation
+    run.jobs should be <= 48
   }
 
   test("a one-edge add and its delete cost the same beside a 64-chain and a 512-chain closure") {
@@ -73,6 +74,85 @@ class JobCountSpec extends SparkSpec {
       besideStore(smallDel.checkpointRows, smallStored + 1)
   }
 
+  /** `closurePatch` over a pinned stored closure: the probe covers
+    * the store's read and pin, as the ETL loop's patch does.
+    */
+  private def probePatch(store: ParquetStore, added: Seq[(Long, Long)],
+      removed: Seq[(Long, Long)] = Nil) = {
+    val add = added.toDF("child", "parent")
+    val rm = Option.when(removed.nonEmpty)(removed.toDF("child", "parent"))
+    JobProbe(spark) {
+      val (existing, _) = util.pin(store.scan(spark).select($"ancestor", $"descendant", $"depth"))
+      val p = Hierarchy.closurePatch(existing, add, rm)
+      (existing, p)
+    }
+  }
+
+  private def storedClosure(edges: Seq[(Long, Long)]): ParquetStore = {
+    import org.apache.spark.sql.functions.lit
+    val base = java.nio.file.Files.createTempDirectory("graft-jobs-patch").toString
+    val store = ParquetStore(s"$base/closure", Seq("ancestor", "descendant"), "rev", 4)
+    store.push(Hierarchy.closure(edges.toDF("child", "parent")).withColumn("rev", lit(0L)))
+    store
+  }
+
+  private def patched(r: JobProbe.Run[(org.apache.spark.sql.DataFrame, Hierarchy.ClosurePatch)]) =
+    r.value._2.applyTo(r.value._1).as[(Long, Long, Int)].collect().toSet
+
+  private def closureOf(edges: Seq[(Long, Long)]) =
+    Hierarchy.closure(edges.toDF("child", "parent")).as[(Long, Long, Int)].collect().toSet
+
+  test("a one-edge add under the root of a 64-chain and a 512-chain shuffles the same records") {
+    // the new leaf's ancestor is the root of the whole chain: a round
+    // that reads the root's stored subtree would grow with the chain
+    def underRoot(n: Long) = {
+      val chain = (1L until n).map(i => (i, i - 1))
+      val run = probePatch(storedClosure(chain), Seq((100000L, 0L)))
+      run.value._2.upserts.as[(Long, Long, Int)].collect().toSet shouldBe Set((0L, 100000L, 1))
+      run.value._2.nDeletes shouldBe 0L
+      (run, n * (n - 1) / 2)
+    }
+    val (small, smallStored) = underRoot(64)
+    val (large, largeStored) = underRoot(512)
+    info(s"jobs ${small.jobs} / ${large.jobs}, shuffle records ${small.shuffleRecords} / ${large.shuffleRecords}")
+    info(s"checkpoint rows: ${small.checkpointRows} / ${large.checkpointRows}")
+    large.jobs shouldBe small.jobs
+    large.shuffleRecords shouldBe small.shuffleRecords
+    small.checkpointRows.count(_ == smallStored) shouldBe 1
+    large.checkpointRows.count(_ == largeStored) shouldBe 1
+    large.checkpointRows.filterNot(_ == largeStored) shouldBe
+      small.checkpointRows.filterNot(_ == smallStored)
+  }
+
+  test("closurePatch starts a bounded number of jobs over several fold rounds, adds and removals") {
+    // three 12-chains; the adds join them end to end, so the new pairs
+    // need several rounds of composition
+    val chains = Seq(0L, 100L, 200L).flatMap(b => (1L until 12L).map(i => (b + i, b + i - 1)))
+    val store = storedClosure(chains)
+    val links = Seq((100L, 11L), (200L, 111L))
+    val add = probePatch(store, links)
+    patched(add) shouldBe closureOf(chains ++ links)
+    // the probe pins the store once; every other pin is a fold round
+    val addRounds = add.checkpointRows.size - 1
+    info(s"add: ${add.jobs} jobs, $addRounds fold rounds")
+    addRounds should be >= 3
+    // removing a mid-chain edge re-derives its ancestors' pairs: the
+    // region, its stored pairs and the patch are pinned beside the
+    // fold's rounds
+    val cut = Seq((106L, 105L))
+    val del = probePatch(store, Nil, cut)
+    patched(del) shouldBe closureOf(chains.filterNot(cut.contains))
+    val delRounds = del.checkpointRows.size - 4
+    info(s"removal: ${del.jobs} jobs, $delRounds fold rounds")
+    delRounds should be >= 3
+    // 21 and 24 observed: a round is 5 jobs over a base and 3 without,
+    // and the removal's diffs are one aggregate (33 and 48 with seven
+    // jobs per round, one round more per fold, the store under every
+    // removal round and two diffs pinned apart)
+    add.jobs should be <= 23
+    del.jobs should be <= 26
+  }
+
   test("Hierarchy.closure on a 64-node chain starts a bounded number of jobs") {
     val chain = (1L to 63L).map(i => (i, i - 1)).toDF("child", "parent")
     val run = JobProbe(spark)(Hierarchy.closure(chain))
@@ -95,6 +175,17 @@ class JobCountSpec extends SparkSpec {
     run.jobs should be <= 32 // 30 observed; 46 with an aggregate after each pin
   }
 
+  test("a first near-dedup batch plans no band join against the absent store") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-jobs-ingest").toString
+    def text(tag: Int) = (0 until 20).map(j => s"t${tag}w$j").mkString(" ")
+    val docs = Seq((1L, text(1)), (2L, text(1)), (3L, text(3))).toDF("doc_id", "text")
+    val run = JobProbe(spark)(
+      graft.operators.Cluster.nearDedupIngest(docs, s"$tmp/docs", s"$tmp/sigs", 0.5))
+    run.value shouldBe 2L
+    info(s"first-batch ingest jobs: ${run.jobs}")
+    run.jobs should be <= 20 // 19 observed; 22 with a band join against an empty store
+  }
+
   /** A 2,000-row table over 8 buckets, ids 1..2000 at rev 1. */
   private def sinkTable(): String = {
     val path = java.nio.file.Files.createTempDirectory("graft-jobs-sink").toString + "/t"
@@ -106,7 +197,7 @@ class JobCountSpec extends SparkSpec {
   private def ids(path: String): Set[Long] =
     ParquetUpsertSink.read(spark, path).select($"id").as[Long].collect().toSet
 
-  test("an upsert into a bucketed table starts at most 5 jobs") {
+  test("an upsert into a bucketed table starts at most 4 jobs") {
     val path = sinkTable()
     val (updates, _) = util.pin((1L to 60L).map(i => (i * 40, 2L, s"u$i"))
       .toDF("id", "rev", "payload"))
@@ -114,7 +205,9 @@ class JobCountSpec extends SparkSpec {
     ParquetUpsertSink.read(spark, path).where($"rev" === 2L).count() shouldBe 60L
     ids(path).size shouldBe 2010
     info(s"upsert jobs: ${run.jobs}")
-    run.jobs should be <= 5 // 6 with a touched-bucket collect before the merge
+    // 4 observed; 5 with a key shuffle for the dedup and a bucket
+    // shuffle for the write, 6 with a touched-bucket collect as well
+    run.jobs should be <= 4
   }
 
   test("a delete from a bucketed table starts at most 6 jobs") {

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{EmptyRelationExec, QueryExecution, SparkPlan, UnionExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -8,18 +9,20 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 
 /** What `f` started: its Spark jobs, the call-site `details` of its
-  * SQL executions and the rows each checkpoint (`localCheckpoint`)
-  * materialized, read from the executed plan's row metrics. A marked
-  * sentinel job runs after `f`; listener events arrive in order, so
-  * once the sentinel is seen every job of `f` has been counted.
+  * SQL executions, the rows each checkpoint (`localCheckpoint`)
+  * materialized, read from the executed plan's row metrics, and the
+  * shuffle records its tasks wrote, read from their task metrics. A
+  * marked sentinel job runs after `f`; listener events arrive in
+  * order, so once the sentinel is seen every job and task of `f` has
+  * been counted.
   */
 private[graft] object JobProbe {
   final case class Run[T](value: T, jobs: Int, details: Seq[String],
-      checkpointRows: Seq[Long])
+      checkpointRows: Seq[Long], shuffleRecords: Long)
 
   private val Mark = "graft.test.sentinel"
 
@@ -27,12 +30,15 @@ private[graft] object JobProbe {
     val sc = spark.sparkContext
     val mark = java.util.UUID.randomUUID.toString
     val jobs = new AtomicInteger(0)
+    val shuffled = new AtomicLong(0L)
     val details = new ConcurrentLinkedQueue[String]()
     @volatile var done = false
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty(Mark) == mark)) done = true
         else { jobs.incrementAndGet(); () }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => shuffled.addAndGet(m.shuffleWriteMetrics.recordsWritten))
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case x: SparkListenerSQLExecutionStart => details.add(x.details); ()
         case _ => ()
@@ -53,7 +59,7 @@ private[graft] object JobProbe {
       val deadline = System.currentTimeMillis() + 30000
       while (!done && System.currentTimeMillis() < deadline) Thread.sleep(20)
       assert(done, "sentinel job never reached the listener")
-      Run(v, jobs.get(), details.asScala.toSeq, rows.asScala.toSeq.map(_.longValue))
+      Run(v, jobs.get(), details.asScala.toSeq, rows.asScala.toSeq.map(_.longValue), shuffled.get())
     } finally {
       sc.removeSparkListener(l)
       spark.listenerManager.unregister(q)

@@ -58,6 +58,13 @@ if (( $(grep -rn 'bit_count(col(' src/main/scala/graft/operators/ | wc -l) > 1 )
   echo "second near-dup pair core — use Dedup.hammingPairs / Dedup.coocKernel" >&2
   exit 1
 fi
+# one pass per closure-patch fold round: the stored-depth probe reads
+# the round's own aggregated pairs, never a broadcast of the candidate
+# compositions (that re-evaluates them)
+if grep -n 'broadcast(pairs(' src/main/scala/graft/operators/Hierarchy.scala; then
+  echo "broadcast(pairs( in Hierarchy.scala re-evaluates a fold round's compositions" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
