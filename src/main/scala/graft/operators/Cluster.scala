@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.{Q, QueryPack, StoredArtifacts, Tables}
 import graft.sources.ParquetStore
-import graft.util.pin
+import graft.util.{pin, requireNoScratchRev}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -385,8 +385,7 @@ object Cluster extends QueryPack {
 
   /** One BATCH of the near-dedup corpus ingest — the NIGHTLY form of
     * [[graft.streaming.StreamOps.streamingNearDedupIngest]], which
-    * wraps exactly this per micro-batch (batch/stream parity the same
-    * way EtlPipeline.runWithDeletes mirrors runStreamWithDeletes).
+    * runs exactly this per micro-batch.
     * Admits each delta document unless it near-dups a STORED doc or a
     * smaller-id batch doc (stored-wins, then min-id — deterministic
     * under retries), appends admitted docs + their signatures to the
@@ -404,10 +403,7 @@ object Cluster extends QueryPack {
   def nearDedupIngest(docs0: DataFrame, docsPath: String, sigsPath: String,
       threshold: Double, numBuckets: Int = 64,
       compsPath: Option[String] = None): Long = {
-    // schema-only check: a rejected input costs no job
-    require(!docs0.columns.contains("_rev"),
-      "nearDedupIngest uses a scratch version column named _rev; " +
-        "rename the input's _rev column first")
+    requireNoScratchRev(docs0, "nearDedupIngest")
     val (docs, nDocs) = pin(docs0)
     if (nDocs == 0) return 0L
     val s = docs.sparkSession

@@ -1,9 +1,10 @@
 package graft.sources
 
 import graft.operators.Hierarchy
-import graft.util.pin
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.util.{perBatch, pin}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 /** The reference's MAIN LOOP as one composed library call — MoDevETL's
@@ -114,14 +115,11 @@ object EtlPipeline {
     * replaces the extract bookmark — the transport already bounds
     * each window — and the crash contract carries over unchanged: a
     * redelivered batch's closure patch finds nothing to improve, the
-    * delta is empty, the push is a no-op (the version is the
-    * checkpoint's stable batchId, so even a concurrent rewrite is
-    * latest-wins-idempotent). Each batch does the exact work of
-    * [[run]]: semi-naive delta closure sized by the batch's change
-    * footprint, bucket-pruned keyed merge.
+    * delta is empty, the push is a no-op (its batchId version makes
+    * even a concurrent rewrite latest-wins-idempotent).
     */
   def runStream(edges: DataFrame, destDir: String, numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      : DataStreamWriter[Row] =
     runStream(edges,
       ParquetStore(destDir, Seq("ancestor", "descendant"), "rev", numBuckets))
 
@@ -141,33 +139,22 @@ object EtlPipeline {
     * (replicate-stream), then run batch "sync" when a consistent
     * snapshot is wanted.
     */
-  def replicateStream(rows: DataFrame, dest: DocumentStore)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    rows.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-      .foreachBatch((batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          _: Long) => {
-        // pinned: a remote-bracket re-read could differ from what the
-        // emptiness test saw (a doc's wm moves past the bracket)
-        val (b, n) = pin(batch.toDF())
-        if (n > 0) dest.push(b)
-      })
+  def replicateStream(rows: DataFrame, dest: DocumentStore): DataStreamWriter[Row] =
+    perBatch(rows) { (batch, _) =>
+      // pinned: a remote-bracket re-read could differ from what the
+      // emptiness test saw (a doc's wm moves past the bracket)
+      val (b, n) = pin(batch)
+      if (n > 0) dest.push(b)
+    }
 
   /** Streaming loop against any [[DocumentStore]] (same seam as the
-    * batch overload; the version is the checkpoint's stable batchId).
+    * batch overload).
     */
-  def runStream(edges: DataFrame, dest: DocumentStore)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        batchId: Long) => {
+  def runStream(edges: DataFrame, dest: DocumentStore): DataStreamWriter[Row] =
+    perBatch(edges) { (batch, batchId) =>
       val (added, n) = pin(batch.select(col("child"), col("parent")).distinct())
       patchClosure(batch.sparkSession, dest, added, n, None, batchId)
-      ()
     }
-    edges.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-      .foreachBatch(sink)
-  }
 
   /** The streaming loop under edge ADDS AND DELETES — the full CRUD
     * form of [[runStream]] (the reference's hierarchy maintenance
@@ -208,17 +195,9 @@ object EtlPipeline {
     * the final edge set.
     */
   def runStreamWithDeletes(edgeEvents: DataFrame, dest: DocumentStore,
-      edgeStore: DocumentStore)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-        batchId: Long) => {
-      applyEdgeEvents(batch.sparkSession, batch.toDF(), dest, edgeStore, batchId)
-      ()
-    }
-    edgeEvents.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-      .foreachBatch(sink)
-  }
+      edgeStore: DocumentStore): DataStreamWriter[Row] =
+    perBatch(edgeEvents)((batch, batchId) =>
+      applyEdgeEvents(batch.sparkSession, batch, dest, edgeStore, batchId))
 
   /** One run of the BATCH loop under edge ADDS AND DELETES — [[run]]
     * upgraded to the full CRUD contract of [[runStreamWithDeletes]]

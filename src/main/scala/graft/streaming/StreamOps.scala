@@ -1,10 +1,12 @@
 package graft.streaming
 
 import graft.{Q, QueryPack, Tables}
-import graft.util.{dsum, pin}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.operators.{Cluster, Dedup, Dsir, Etl, Text}
+import graft.sources.ParquetUpsertSink
+import graft.util.{dsum, perBatch, pin, requireNoScratchRev}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** One event entering the streaming sessionizer. `ts` is the
@@ -66,6 +68,14 @@ case class AnomOut(event_type: String, day: Long, n: Long,
   * check of streaming logic (q42's DuckDB oracle verifies the batch
   * application; StreamingSpec verifies the stream application agrees
   * with batch on the same files).
+  *
+  * Sinks: every operator here that writes a store is
+  * [[graft.util.perBatch]] over its batch twin — one micro-batch is
+  * one run of the batch function, and where the twin needs a version
+  * it is the checkpoint's stable `batchId` — so stream ≡ batch holds
+  * at that one site. The four scoring gates share one
+  * [[admissionGate]] (pin, skip-if-empty, `_rev = 0` keyed upsert on
+  * `doc_id`) and supply only their scoring.
   *
   * State store at deployment scale: set
   * `spark.sql.streaming.stateStore.providerClass` to
@@ -497,9 +507,8 @@ object StreamOps extends QueryPack {
       .select(col("r.*"))
 
   /** Streaming ingest into the keyed upsert sink — the reference's
-    * push loop (`push_to_es.py`) as a stream: every micro-batch goes
-    * through the SAME latest-revision-wins merge the batch push uses
-    * ([[graft.sources.ParquetUpsertSink.upsert]]). Because the merge
+    * push loop (`push_to_es.py`) as a stream, over
+    * [[graft.sources.ParquetUpsertSink.upsert]]. Because the merge
     * is associative and idempotent per key (latest version wins,
     * provided versions are unique per key — the sink's documented
     * contract), micro-batch boundaries and at-least-once redelivery
@@ -507,31 +516,24 @@ object StreamOps extends QueryPack {
     * of the whole input. Exactly-once-EFFECTIVE ingest on an
     * at-least-once transport, spec-verified against the batch result
     * under multi-batch + redelivered input.
-    *
-    * Returns the configured writer; the caller sets trigger /
-    * checkpoint and starts it.
     */
   def streamingUpsertIngest(stream: DataFrame, path: String,
-      keyCols: Seq[String], versionCol: String, numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-      graft.sources.ParquetUpsertSink.upsert(
-        batch.toDF(), path, keyCols, versionCol, numBuckets)
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
+      keyCols: Seq[String], versionCol: String, numBuckets: Int = 64): DataStreamWriter[Row] =
+    perBatch(stream)((batch, _) =>
+      ParquetUpsertSink.upsert(batch, path, keyCols, versionCol, numBuckets))
 
-  /** Streaming ingest NEAR-dedup: each micro-batch of documents
-    * (doc_id, text, ...) is deduped against the persisted MinHash
-    * signature store AND itself before admission — the production
-    * pattern where a corpus grows continuously and near-duplicates of
-    * anything already admitted must never land. Per batch: hash the
-    * batch once (`Dedup.minhashSignatures`), band-join it against the
-    * stored signatures (`minhashDeltaPairsFromSigs` — the corpus is
-    * never re-hashed), then admit a document unless it near-dups a
-    * STORED document or a SMALLER-ID batch document; admitted docs and
-    * their signatures upsert into their keyed stores.
+  /** Streaming ingest NEAR-dedup over
+    * [[graft.operators.Cluster.nearDedupIngest]]: each micro-batch of
+    * documents (doc_id, text, ...) is deduped against the persisted
+    * MinHash signature store AND itself before admission — the
+    * production pattern where a corpus grows continuously and
+    * near-duplicates of anything already admitted must never land.
+    * Per batch: hash the batch once (`Dedup.minhashSignatures`),
+    * band-join it against the stored signatures
+    * (`minhashDeltaPairsFromSigs` — the corpus is never re-hashed),
+    * then admit a document unless it near-dups a STORED document or a
+    * SMALLER-ID batch document; admitted docs and their signatures
+    * upsert into their keyed stores.
     *
     * The admission rule is the greedy pairwise one (not connected-
     * component keeper selection): deterministic, one pass, and
@@ -547,27 +549,17 @@ object StreamOps extends QueryPack {
     */
   def streamingNearDedupIngest(stream: DataFrame, docsPath: String,
       sigsPath: String, threshold: Double, numBuckets: Int = 64,
-      compsPath: Option[String] = None)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
-      // one micro-batch = one run of the nightly batch ingest —
-      // batch/stream parity by construction (the EtlPipeline
-      // runWithDeletes/runStreamWithDeletes pattern)
-      graft.operators.Cluster.nearDedupIngest(batch.toDF(), docsPath,
-        sigsPath, threshold, numBuckets, compsPath)
-      ()
-    }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
+      compsPath: Option[String] = None): DataStreamWriter[Row] = {
+    requireNoScratchRev(stream, "streamingNearDedupIngest")
+    perBatch(stream)((batch, _) => Cluster.nearDedupIngest(batch, docsPath,
+      sigsPath, threshold, numBuckets, compsPath))
   }
 
   /** Streaming maintenance of the persisted EXACT co-occurrence store:
     * each micro-batch of documents folds into the four
     * [[graft.operators.Dedup.foldCoocIntoStore]] sink tables at delta
-    * cost — the q149 nightly fold as a stream, batch/stream parity by
-    * construction (one micro-batch = one batch fold). Idempotent on
-    * an at-least-once transport: the fold drops already-ingested
+    * cost — the q149 nightly fold as a stream. Idempotent on an
+    * at-least-once transport: the fold drops already-ingested
     * doc_ids up front and every table is append-only immutable rows,
     * so a replayed batch upserts nothing new. StreamingSpec pins
     * stream ≡ one-shot [[graft.operators.Dedup.buildCoocStore]]
@@ -575,23 +567,14 @@ object StreamOps extends QueryPack {
     */
   def streamingCoocIngest(stream: DataFrame, storeDir: String,
       maxShingleDf: Int = 128, jaccardT: Double = 0.5, containT: Double = 0.9,
-      numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
-      graft.operators.Dedup.foldCoocIntoStore(batch.sparkSession, storeDir,
-        batch.toDF(), maxShingleDf, jaccardT, containT, numBuckets)
-      ()
-    }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
-
+      numBuckets: Int = 64): DataStreamWriter[Row] =
+    perBatch(stream)((batch, _) => Dedup.foldCoocIntoStore(batch.sparkSession,
+      storeDir, batch, maxShingleDf, jaccardT, containT, numBuckets))
 
   /** Streaming incremental CONNECTED-COMPONENTS maintenance: each
     * micro-batch of near-dup pairs (d1, d2) folds into a persisted
     * (node, component) table via
-    * [[graft.operators.Cluster.componentsIncrementDelta]] — the
+    * [[graft.operators.Cluster.foldComponentsIntoStore]] — the
     * nightly dedup pipeline's last rebuild-only stage made
     * incremental, at per-batch cost ∝ the batch and the touched
     * components, never the corpus.
@@ -607,15 +590,39 @@ object StreamOps extends QueryPack {
     * full pair set, across batch splits and redelivery.
     */
   def streamingComponentsIngest(pairStream: DataFrame, compsPath: String,
-      numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-      graft.operators.Cluster.foldComponentsIntoStore(batch.sparkSession,
-        compsPath, batch.toDF().select(col("d1"), col("d2")), numBuckets)
-    pairStream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
+      numBuckets: Int = 64): DataStreamWriter[Row] =
+    perBatch(pairStream)((batch, _) => Cluster.foldComponentsIntoStore(
+      batch.sparkSession, compsPath, batch.select(col("d1"), col("d2")), numBuckets))
+
+  /** The one admission gate behind the four scoring gates
+    * ([[streamingDecontaminate]], [[streamingDsirSelect]],
+    * [[streamingLmSelect]], [[streamingBloomDecontaminate]]): per
+    * micro-batch it pins the candidate documents, skips an empty
+    * batch, and upserts the `kept` documents into `cleanPath` keyed
+    * on `doc_id` at `_rev = 0`, so a redelivered doc is a same-key
+    * no-op (the [[streamingUpsertIngest]] argument). A gate supplies
+    * only its scoring. `kept` is evaluated once, after the
+    * construction-time `_rev` check, so a frozen side model is read
+    * only for a stream the gate accepts.
+    */
+  private def admissionGate(stream: DataFrame, op: String, cleanPath: String,
+      numBuckets: Int)(kept: => DataFrame => DataFrame): DataStreamWriter[Row] = {
+    requireNoScratchRev(stream, op)
+    val keep = kept
+    perBatch(stream) { (batch, _) =>
+      val (docs, nDocs) = pin(batch)
+      if (nDocs > 0) ParquetUpsertSink.upsert(keep(docs).withColumn("_rev", lit(0L)),
+        cleanPath, Seq("doc_id"), "_rev", numBuckets)
+    }
   }
+
+  /** A model-sized frame collected once to the driver and returned as
+    * a local relation with the frame's own schema: every later batch
+    * — a crash-redelivered one included — scores under these rows,
+    * whatever happens to the source path afterwards.
+    */
+  private def driverSnapshot(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Contamination firewall at ingest: each micro-batch of candidate
     * TRAINING documents is scored against a static eval-set window
@@ -623,11 +630,9 @@ object StreamOps extends QueryPack {
     * `evalWinsPath`), and docs whose memorization rate meets the
     * threshold are dropped before they ever reach the corpus — the
     * streaming form of q68's decontamination, keyed on q83's rate
-    * instead of a pair threshold. Surviving docs land in the keyed
-    * upsert sink, so redelivery is a no-op (same exactly-once-
-    * effective argument as [[streamingUpsertIngest]]). Docs shorter
-    * than n tokens have no windows — nothing to memorize — and are
-    * admitted (they produce no rate row).
+    * instead of a pair threshold. Docs shorter than n tokens have no
+    * windows — nothing to memorize — and are admitted (they produce
+    * no rate row).
     *
     * The eval store is STATIC by design (an eval set is frozen the
     * moment it is published); re-reading it per batch keeps the plan
@@ -635,31 +640,14 @@ object StreamOps extends QueryPack {
     */
   def streamingDecontaminate(stream: DataFrame, evalWinsPath: String,
       cleanPath: String, threshold: Double, n: Int = 8, numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // the stream schema is static — fail at CONSTRUCTION, not mid-run
-    // after the checkpoint has advanced past earlier batches
-    require(!stream.columns.contains("_rev"),
-      "streamingDecontaminate uses a scratch version column named _rev; " +
-        "rename the stream's _rev column first")
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
-      val s = batch.sparkSession
-      val (docs, nDocs) = pin(batch.toDF())
-      if (nDocs > 0) {
-        val wins = s.read.parquet(evalWinsPath)
-        val drops = graft.operators.Dedup
-          .memorizationRateAgainst(wins, docs, n)
-          .where(col("seen_rate") >= threshold)
-          .select(col("doc_id"))
-        val kept = docs.join(drops, Seq("doc_id"), "left_anti")
-        graft.sources.ParquetUpsertSink.upsert(
-          kept.withColumn("_rev", lit(0L)), cleanPath,
-          Seq("doc_id"), "_rev", numBuckets)
-      }
+      : DataStreamWriter[Row] =
+    admissionGate(stream, "streamingDecontaminate", cleanPath, numBuckets) { docs =>
+      val drops = Dedup
+        .memorizationRateAgainst(docs.sparkSession.read.parquet(evalWinsPath), docs, n)
+        .where(col("seen_rate") >= threshold)
+        .select(col("doc_id"))
+      docs.join(drops, Seq("doc_id"), "left_anti")
     }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
 
   /** DSIR selection at ingest — the streaming form of q151's
     * consumer: each micro-batch of candidate training documents is
@@ -670,12 +658,10 @@ object StreamOps extends QueryPack {
     * every batch — including a crash-redelivered one — scores under
     * the identical model even if the table is republished mid-run; a
     * published update takes effect on the next stream start. Docs
-    * whose log importance weight meets
-    * `minLogW` land in the keyed upsert sink (redelivery no-op, the
-    * streamingUpsertIngest argument). Scoring is
-    * [[graft.operators.Dsir.importanceWeightsUnder]] verbatim —
-    * model-broadcast, nothing about the batch ever shuffles to the
-    * model — so stream ≡ batch selection by construction
+    * whose log importance weight meets `minLogW` are admitted.
+    * Scoring is [[graft.operators.Dsir.importanceWeightsUnder]]
+    * verbatim — model-broadcast, nothing about the batch ever
+    * shuffles to the model — so stream ≡ batch selection
     * (StreamingSpec pins it across batch splits + redelivery). The
     * THRESHOLD consumer is the streaming-appropriate one: Gumbel
     * top-k ([[graft.operators.Dsir.resampleTopK]]) needs the whole
@@ -684,48 +670,23 @@ object StreamOps extends QueryPack {
     */
   def streamingDsirSelect(stream: DataFrame, countsPath: String,
       cleanPath: String, minLogW: Double,
-      buckets: Int = graft.operators.Dsir.Buckets,
-      numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // the stream schema is static — fail at CONSTRUCTION, not mid-run
-    require(!stream.columns.contains("_rev"),
-      "streamingDsirSelect uses a scratch version column named _rev; " +
-        "rename the stream's _rev column first")
-    // FREEZE the side models at stream construction: the redelivery
-    // no-op guarantee (same doc scores the same on redelivery) only
-    // holds if every batch — original and redelivered — scores under
-    // the same model. The table is model-sized (≤ buckets rows), so a
-    // one-time driver snapshot is cheap; a countsIncrement-published
-    // update takes effect on the NEXT stream start, never mid-checkpoint.
-    val frozen = stream.sparkSession.read.parquet(countsPath)
-      .select(col("b").cast("long"), col("ct").cast("long"), col("cr").cast("long"))
-      .collect().toSeq
-    val frozenSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("b", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ct", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cr", org.apache.spark.sql.types.LongType)))
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
-      val s = batch.sparkSession
-      val (docs, nDocs) = pin(batch.toDF())
-      if (nDocs > 0) {
-        val counts = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(frozen).asJava), frozenSchema)
-        val kept = docs.join(
-          graft.operators.Dsir.importanceWeightsUnder(docs, counts, buckets)
-            .where(col("log_w") >= minLogW)
-            .select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-        graft.sources.ParquetUpsertSink.upsert(
-          kept.withColumn("_rev", lit(0L)), cleanPath,
-          Seq("doc_id"), "_rev", numBuckets)
-      }
-      ()
+      buckets: Int = Dsir.Buckets,
+      numBuckets: Int = 64): DataStreamWriter[Row] =
+    admissionGate(stream, "streamingDsirSelect", cleanPath, numBuckets) {
+      // FREEZE the side models at stream construction: the redelivery
+      // no-op guarantee (same doc scores the same on redelivery) only
+      // holds if every batch — original and redelivered — scores under
+      // the same model. The table is model-sized (≤ buckets rows), so a
+      // one-time driver snapshot is cheap; a countsIncrement-published
+      // update takes effect on the NEXT stream start, never mid-checkpoint.
+      val counts = driverSnapshot(stream.sparkSession.read.parquet(countsPath)
+        .select(col("b").cast("long"), col("ct").cast("long"), col("cr").cast("long")))
+      docs => docs.join(
+        Dsir.importanceWeightsUnder(docs, counts, buckets)
+          .where(col("log_w") >= minLogW)
+          .select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
     }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
 
   /** LM-quality selection at ingest — q154's consumer as the streaming
     * twin of [[streamingDsirSelect]], completing the model-based
@@ -735,8 +696,7 @@ object StreamOps extends QueryPack {
     * vocab tables a release publishes once from
     * `Text.lmBigramCounts` / `Text.lmVocab` — or maintains at delta
     * cost with the lmBigramIncrement/lmVocabIncrement folds), and docs
-    * whose perplexity is at most `maxPpl` land in the keyed upsert
-    * sink (redelivery no-op, the streamingUpsertIngest argument).
+    * whose perplexity is at most `maxPpl` are admitted.
     *
     * The freeze differs from the bucket-count/length-CDF monitors on
     * purpose: a bigram model grows with target vocabulary and is NOT
@@ -755,33 +715,17 @@ object StreamOps extends QueryPack {
     * means nothing-to-memorize and admission is safe).
     */
   def streamingLmSelect(stream: DataFrame, bgPath: String, vocabPath: String,
-      cleanPath: String, maxPpl: Double, numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // the stream schema is static — fail at CONSTRUCTION, not mid-run
-    require(!stream.columns.contains("_rev"),
-      "streamingLmSelect uses a scratch version column named _rev; " +
-        "rename the stream's _rev column first")
-    val s0 = stream.sparkSession
-    val frozenBg = pin(s0.read.parquet(bgPath))._1
-    val frozenVocab = pin(s0.read.parquet(vocabPath))._1
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
-      val (docs, nDocs) = pin(batch.toDF())
-      if (nDocs > 0) {
-        val kept = docs.join(
-          graft.operators.Text.lmPerplexityUnder(docs, frozenBg, frozenVocab)
-            .where(col("ppl") <= maxPpl)
-            .select(col("doc_id")),
-          Seq("doc_id"), "left_semi")
-        graft.sources.ParquetUpsertSink.upsert(
-          kept.withColumn("_rev", lit(0L)), cleanPath,
-          Seq("doc_id"), "_rev", numBuckets)
-      }
-      ()
+      cleanPath: String, maxPpl: Double, numBuckets: Int = 64): DataStreamWriter[Row] =
+    admissionGate(stream, "streamingLmSelect", cleanPath, numBuckets) {
+      val s0 = stream.sparkSession
+      val frozenBg = pin(s0.read.parquet(bgPath))._1
+      val frozenVocab = pin(s0.read.parquet(vocabPath))._1
+      docs => docs.join(
+        Text.lmPerplexityUnder(docs, frozenBg, frozenVocab)
+          .where(col("ppl") <= maxPpl)
+          .select(col("doc_id")),
+        Seq("doc_id"), "left_semi")
     }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
 
   /** Streaming length-drift monitor — q156's operational twin: each
     * micro-batch of ingested documents is KS-tested per source
@@ -792,41 +736,24 @@ object StreamOps extends QueryPack {
     * or concatenate trips the monitor within one batch, before any
     * content metric moves. Scoring is
     * [[graft.operators.Text.lengthDriftAgainst]] verbatim (stateless,
-    * per-batch-pure), so stream ≡ batch by construction; the baseline
-    * is SNAPSHOTTED at stream construction (model-sized: distinct
-    * lengths) — the streamingDsirSelect redelivery argument: a
-    * redelivered batch scores under the identical baseline, and with
-    * the sink keyed on (source, batch_id) redelivery is a same-key
-    * no-op.
+    * per-batch-pure), so stream ≡ batch; the baseline is SNAPSHOTTED
+    * at stream construction (model-sized: distinct lengths) — the
+    * streamingDsirSelect redelivery argument: a redelivered batch
+    * scores under the identical baseline, and with the sink keyed on
+    * (source, batch_id) redelivery is a same-key no-op.
     */
   def streamingLengthDrift(stream: DataFrame, baselinePath: String,
-      outPath: String, ksThreshold: Double, numBuckets: Int = 8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val frozen = stream.sparkSession.read.parquet(baselinePath)
-      .select(col("len").cast("long"), col("gcum").cast("long"), col("n").cast("long"))
-      .collect().toSeq
-    val frozenSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("len", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("gcum", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType)))
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) => {
-      val s = batch.sparkSession
-      val (docs, nDocs) = pin(batch.toDF())
-      if (nDocs > 0) {
-        val baseline = s.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(frozen).asJava), frozenSchema)
-        val verdicts = graft.operators.Text.lengthDriftAgainst(docs, baseline)
+      outPath: String, ksThreshold: Double, numBuckets: Int = 8): DataStreamWriter[Row] = {
+    val baseline = driverSnapshot(stream.sparkSession.read.parquet(baselinePath)
+      .select(col("len").cast("long"), col("gcum").cast("long"), col("n").cast("long")))
+    perBatch(stream) { (batch, batchId) =>
+      val (docs, nDocs) = pin(batch)
+      if (nDocs > 0) ParquetUpsertSink.upsert(
+        Text.lengthDriftAgainst(docs, baseline)
           .withColumn("batch_id", lit(batchId))
-          .withColumn("drifted", col("ks") >= ksThreshold)
-        graft.sources.ParquetUpsertSink.upsert(
-          verdicts, outPath, Seq("source", "batch_id"), "batch_id", numBuckets)
-      }
-      ()
+          .withColumn("drifted", col("ks") >= ksThreshold),
+        outPath, Seq("source", "batch_id"), "batch_id", numBuckets)
     }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
   }
 
   /** Streaming vocabulary-novelty monitor — q157's live form: each
@@ -841,21 +768,13 @@ object StreamOps extends QueryPack {
     * upserts keyed on batch_id.
     */
   def streamingVocabNovelty(stream: DataFrame, storePath: String,
-      outPath: String, n: Int = 3, numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) => {
-      val (docs, nDocs) = pin(batch.toDF())
-      if (nDocs > 0) {
-        graft.sources.ParquetUpsertSink.upsert(
-          graft.operators.Text.vocabNoveltyIngest(storePath, docs, batchId, n, numBuckets),
-          outPath, Seq("batch_id"), "batch_id", numBuckets = 8)
-      }
-      ()
+      outPath: String, n: Int = 3, numBuckets: Int = 64): DataStreamWriter[Row] =
+    perBatch(stream) { (batch, batchId) =>
+      val (docs, nDocs) = pin(batch)
+      if (nDocs > 0) ParquetUpsertSink.upsert(
+        Text.vocabNoveltyIngest(storePath, docs, batchId, n, numBuckets),
+        outPath, Seq("batch_id"), "batch_id", numBuckets = 8)
     }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
 
   /** Two-tier fingerprint decontamination at ingest — the broadcast-
     * SKETCH form of the contamination firewall. Each micro-batch of
@@ -874,46 +793,28 @@ object StreamOps extends QueryPack {
     *
     * Docs with fewer than 5 words have no fingerprint — nothing to
     * match — and are admitted (left join keeps them, null fp probes
-    * as non-suspect). Survivors land in the keyed upsert sink, so
-    * redelivery is a no-op (same exactly-once-effective argument as
-    * [[streamingUpsertIngest]]).
+    * as non-suspect).
     */
   def streamingBloomDecontaminate(stream: DataFrame, artifactsDir: String,
-      cleanPath: String, numBits: Int = 1 << 20, numBuckets: Int = 64)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.functions.bloomContains
-    // the stream schema is static — fail at CONSTRUCTION, not mid-run
-    require(!stream.columns.contains("_rev"),
-      "streamingBloomDecontaminate uses a scratch version column named _rev; " +
-        "rename the stream's _rev column first")
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], _: Long) => {
-      val s = batch.sparkSession
-      val (docs, nDocs) = pin(batch.toDF())
-      if (nDocs > 0) {
-        val bloom = s.read.parquet(s"$artifactsDir/bloom").select(col("bf"))
-        val fps = graft.operators.Dedup.fingerprints(docs)
-        val probed = docs
-          .join(fps, Seq("doc_id"), "left")
-          .crossJoin(broadcast(bloom))
-          .withColumn("suspect",
-            col("fp").isNotNull &&
-              coalesce(bloomContains(col("bf"), xxhash64(col("fp")), numBits), lit(false)))
-        val evalFps = s.read.parquet(s"$artifactsDir/fps")
-        // suspects that are EXACT members drop; bloom false positives
-        // survive the anti-join and are admitted like everyone else
-        val kept = probed.where(!col("suspect"))
-          .unionByName(probed.where(col("suspect"))
-            .join(broadcast(evalFps), Seq("fp"), "left_anti"))
-          .drop("fp", "bf", "suspect")
-        graft.sources.ParquetUpsertSink.upsert(
-          kept.withColumn("_rev", lit(0L)), cleanPath,
-          Seq("doc_id"), "_rev", numBuckets)
-      }
+      cleanPath: String, numBits: Int = 1 << 20, numBuckets: Int = 64): DataStreamWriter[Row] =
+    admissionGate(stream, "streamingBloomDecontaminate", cleanPath, numBuckets) { docs =>
+      import graft.functions.bloomContains
+      val s = docs.sparkSession
+      val bloom = s.read.parquet(s"$artifactsDir/bloom").select(col("bf"))
+      val probed = docs
+        .join(Dedup.fingerprints(docs), Seq("doc_id"), "left")
+        .crossJoin(broadcast(bloom))
+        .withColumn("suspect",
+          col("fp").isNotNull &&
+            coalesce(bloomContains(col("bf"), xxhash64(col("fp")), numBits), lit(false)))
+      val evalFps = s.read.parquet(s"$artifactsDir/fps")
+      // suspects that are EXACT members drop; bloom false positives
+      // survive the anti-join and are admitted like everyone else
+      probed.where(!col("suspect"))
+        .unionByName(probed.where(col("suspect"))
+          .join(broadcast(evalFps), Seq("fp"), "left_anti"))
+        .drop("fp", "bf", "suspect")
     }
-    stream.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
 
   /** Streaming ingest for an ADDITIVE store — the exactly-once form
     * the batch additive stores (Etl.kpiIncrement, the corpus-stats
@@ -941,18 +842,12 @@ object StreamOps extends QueryPack {
     * batch dailyCounts and identical-boundary replay convergence.
     */
   def streamingKpiIngest(events: DataFrame, path: String,
-      numBuckets: Int = 16)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val sink = (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-      graft.sources.ParquetUpsertSink.upsert(
-        graft.operators.Etl.dailyCounts(batch.toDF())
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("_rev", lit(0L)),
-        path, Seq("batch_id", "day", "event_type"), "_rev", numBuckets)
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch(sink)
-  }
+      numBuckets: Int = 16): DataStreamWriter[Row] =
+    perBatch(events)((batch, batchId) => ParquetUpsertSink.upsert(
+      Etl.dailyCounts(batch)
+        .withColumn("batch_id", lit(batchId))
+        .withColumn("_rev", lit(0L)),
+      path, Seq("batch_id", "day", "event_type"), "_rev", numBuckets))
 
   /** The daily-KPI view over the batch-partial store: identical
     * schema and values to `Etl.dailyCounts` over all ingested events.

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 package object util {
@@ -203,6 +204,31 @@ package object util {
       (pinned, rows.get("n").asInstanceOf[Long])
     } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
+
+  /** The one micro-batch adapter behind every streaming sink: one
+    * micro-batch is one run of `f`, the sink's batch twin, so
+    * batch/stream parity holds here, by construction. `f` gets the
+    * batch and the checkpoint's stable `batchId`; a twin that needs a
+    * version takes it from the `batchId` (a redelivered batch keeps
+    * its id, so its rewrite is a latest-wins no-op). The adapter adds
+    * no pin and no count: the twin's jobs are the batch's jobs.
+    * Returns the configured writer; the caller sets trigger and
+    * checkpoint and starts it.
+    */
+  private[graft] def perBatch(stream: DataFrame)(f: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    stream.writeStream.outputMode(OutputMode.Update()).foreachBatch(f)
+
+  /** Rejects `df` when it carries `_rev`, the scratch version column
+    * `op` writes its keyed stores with. A schema-only check: it costs
+    * no job, and a stream's schema is static, so a streaming sink runs
+    * it at construction, not mid-run after the checkpoint has advanced
+    * past earlier batches.
+    */
+  private[graft] def requireNoScratchRev(df: DataFrame, op: String): Unit =
+    require(!df.columns.contains("_rev"),
+      s"$op uses a scratch version column named _rev; " +
+        s"rename the ${if (df.isStreaming) "stream" else "input"}'s _rev column first")
 
   /** Standard session builder config shared by Verify / Bench / specs. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =

@@ -186,6 +186,43 @@ class JobCountSpec extends SparkSpec {
     run.jobs should be <= 20 // 19 observed; 22 with a band join against an empty store
   }
 
+  test("an AvailableNow stream over two micro-batches starts a bounded number of jobs, gate and closure loop") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+    val base = java.nio.file.Files.createTempDirectory("graft-jobs-stream").toString
+    /** `batches` staged one file each, read one file per trigger */
+    def stream(name: String, batches: DataFrame*): DataFrame = {
+      batches.foreach(_.coalesce(1).write.mode("append").parquet(s"$base/$name"))
+      spark.readStream.schema(batches.head.schema)
+        .option("maxFilesPerTrigger", "1").parquet(s"$base/$name")
+    }
+    def drain(name: String, w: DataStreamWriter[Row]) = JobProbe(spark) {
+      val q = w.option("checkpointLocation", s"$base/$name-ck")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      q.recentProgress.count(_.numInputRows > 0)
+    }
+    def text(tag: Int) = (0 until 12).map(j => s"t${tag}w$j").mkString(" ")
+    graft.operators.Dedup.windowSignatures(Seq((100L, text(1))).toDF("doc_id", "text"))
+      .write.parquet(s"$base/wins")
+    val docs = stream("docs", Seq((1L, text(1)), (2L, text(2))).toDF("doc_id", "text"),
+      Seq((3L, text(3)), (4L, "short")).toDF("doc_id", "text"))
+    val gate = drain("gate",
+      graft.streaming.StreamOps.streamingDecontaminate(docs, s"$base/wins", s"$base/clean", 0.5))
+    gate.value shouldBe 2
+    ParquetUpsertSink.read(spark, s"$base/clean").select($"doc_id").as[Long]
+      .collect().toSet shouldBe Set(2L, 3L, 4L)
+    val edges = stream("edges", Seq((10L, 1L), (11L, 1L), (12L, 10L)).toDF("child", "parent"),
+      Seq((12L, 1L), (13L, 12L)).toDF("child", "parent"))
+    val loop = drain("loop", EtlPipeline.runStream(edges, s"$base/closure", numBuckets = 4))
+    loop.value shouldBe 2
+    info(s"two-batch stream jobs: gate ${gate.jobs}, closure loop ${loop.jobs}")
+    // 27 and 31 observed, as with one hand-rolled foreachBatch per
+    // sink: the micro-batch adapter and the gate combinator add no job
+    gate.jobs should be <= 27
+    loop.jobs should be <= 31
+  }
+
   /** A 2,000-row table over 8 buckets, ids 1..2000 at rev 1. */
   private def sinkTable(): String = {
     val path = java.nio.file.Files.createTempDirectory("graft-jobs-sink").toString + "/t"

@@ -555,8 +555,8 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream.schema(spark.read.parquet(dir).schema)
       .parquet(dir)
     val out = Files.createTempDirectory("graft-rev-out").toString
-    // all three foreachBatch selectors validate the STATIC stream
-    // schema eagerly — the require fires here, not mid-checkpoint
+    // the four selectors and the near-dedup ingest validate the STATIC
+    // stream schema eagerly — the require fires here, not mid-checkpoint
     an[IllegalArgumentException] should be thrownBy
       StreamOps.streamingDecontaminate(stream, out + "/w", out + "/t", 0.5)
     an[IllegalArgumentException] should be thrownBy
@@ -565,6 +565,8 @@ class StreamingSpec extends SparkSpec {
       StreamOps.streamingBloomDecontaminate(stream, out + "/a", out + "/t")
     an[IllegalArgumentException] should be thrownBy
       StreamOps.streamingLmSelect(stream, out + "/bg", out + "/v", out + "/t", 100.0)
+    an[IllegalArgumentException] should be thrownBy
+      StreamOps.streamingNearDedupIngest(stream, out + "/d", out + "/s", 0.5)
   }
 
   test("streaming bloom decontamination: admitted set ≡ exact fingerprint anti-join, redelivery no-op") {

@@ -65,6 +65,13 @@ if grep -n 'broadcast(pairs(' src/main/scala/graft/operators/Hierarchy.scala; th
   echo "broadcast(pairs( in Hierarchy.scala re-evaluates a fold round's compositions" >&2
   exit 1
 fi
+# one micro-batch adapter: every streaming sink is util.perBatch over
+# its batch twin, so src/main holds one .foreachBatch( call, in graft.util
+if (( $(grep -rn '\.foreachBatch(' src/main | wc -l) > 1 )) ||
+   grep -rn '\.foreachBatch(' src/main | grep -v '^src/main/scala/graft/util/'; then
+  echo "more than one .foreachBatch( in src/main — use util.perBatch" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
