@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.{ArrayPairs, BloomAgg, BloomMightContain, BpeTokenize, CharNgrams, CmEstimate, CosineSimilarity, CountMinAgg, DotProduct, ExciseWords, PqAdcDistance, SimHashAgg, ThetaEstimate, ThetaSetOp, ThetaSketchAgg, WordNgrams, WordStats}
+import graft.expressions.{ArrayPairs, BloomAgg, BloomMightContain, BpeTokenize, CharNgrams, CmEstimate, CosineSimilarity, CountMinAgg, DotProduct, ExciseWords, PqAdcDistance, SimHashAgg, WordNgrams, WordStats}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -103,40 +103,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         else BloomMightContain(children.head, children(1),
           intLit(children(2), "bloom_contains numBits"),
           intLit(children(3), "bloom_contains numHashes"))
-      }))
-    // theta_agg(keyHash[, lgK]) / theta_set_op(a, b, op) /
-    // theta_estimate(sk): the set-operation sketch family — lgK fixes
-    // the buffer like the Count-Min sizes; op is a string literal
-    ext.injectFunction((
-      new FunctionIdentifier("theta_agg"),
-      new ExpressionInfo(classOf[ThetaSketchAgg].getName, "theta_agg"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1 || children.size == 2,
-          "theta_agg expects (keyHash) or (keyHash, lgK)")
-        if (children.size == 1) ThetaSketchAgg(children.head).toAggregateExpression()
-        else ThetaSketchAgg(children.head,
-          intLit(children(1), "theta_agg lgK")).toAggregateExpression()
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("theta_set_op"),
-      new ExpressionInfo(classOf[ThetaSetOp].getName, "theta_set_op"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 3 || children.size == 4,
-          "theta_set_op expects (sketchA, sketchB, op) or (sketchA, sketchB, op, lgK)")
-        if (children.size == 3)
-          ThetaSetOp(children.head, children(1),
-            ThetaSetOp.opLit(children(2), "theta_set_op"))
-        else
-          ThetaSetOp(children.head, children(1),
-            ThetaSetOp.opLit(children(2), "theta_set_op"),
-            intLit(children(3), "theta_set_op lgK"))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo(classOf[ThetaEstimate].getName, "theta_estimate"),
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-        require(children.size == 1, "theta_estimate expects (sketch)")
-        ThetaEstimate(children.head)
       }))
     // bpe_tokenize(text, merges): merges must be an array<string>
     // LITERAL of "left right" pairs in rank order — it is the model,

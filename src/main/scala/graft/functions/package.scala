@@ -107,37 +107,36 @@ package object functions {
       numBits: Int = 65536, numHashes: Int = 4): Column =
     call_function("bloom_contains", filter, keyHash, lit(numBits), lit(numHashes))
 
-  /** Native mergeable Theta-sketch aggregate over 64-bit key hashes
-    * (see [[graft.expressions.ThetaSketchAgg]]): the SET-OPERATION
-    * sketch — unlike HLL++, built sketches compose via
-    * [[thetaIntersect]]/[[thetaUnionOf]]/[[thetaAnotB]] and read out
-    * with [[thetaEstimate]]. Set semantics: duplicates are no-ops, so
-    * the raw token stream feeds it without a distinct shuffle.
+  /** Theta sketch of a column of 64-bit key hashes — Spark's built-in
+    * `theta_sketch_agg` (DataSketches theta family; SQL users call the
+    * `theta_*` built-ins directly). The SET-OPERATION sketch: unlike
+    * HLL++, built sketches compose via [[thetaIntersect]] /
+    * [[thetaUnionOf]] / [[thetaAnotB]] and read out with
+    * [[thetaEstimate]]. Set semantics: duplicates are no-ops and null
+    * hashes are skipped, so the raw token stream feeds it without a
+    * distinct shuffle. The bytes are a function of the key SET alone,
+    * whatever the partitioning.
     */
   def thetaAgg(keyHash: Column, lgK: Int = 14): Column =
-    call_function("theta_agg", keyHash, lit(lgK))
-
-  /** Estimated |A∩B| composes from these: sketch-set intersection.
-    * lgK must match the building aggregate's (default 14 on both —
-    * the library's own builder default of 12 would silently
-    * downsample exact lgK-14 inputs into estimates).
-    */
-  def thetaIntersect(a: Column, b: Column, lgK: Int = 14): Column =
-    call_function("theta_set_op", a, b, lit("intersect"), lit(lgK))
+    theta_sketch_agg(keyHash, lgK)
 
   /** Sketch-set union (binary scalar form; the aggregate form is
-    * [[thetaAgg]] over the concatenated input).
+    * [[thetaAgg]] over the concatenated input). lgK must match the
+    * building aggregate's (14 on both): Spark's `theta_union` defaults
+    * to lgK 12, which silently downsamples exact lgK-14 inputs into
+    * estimates.
     */
   def thetaUnionOf(a: Column, b: Column, lgK: Int = 14): Column =
-    call_function("theta_set_op", a, b, lit("union"), lit(lgK))
+    theta_union(a, b, lgK)
+
+  /** Sketch-set intersection: estimated |A∩B| composes from this. */
+  def thetaIntersect(a: Column, b: Column): Column = theta_intersection(a, b)
 
   /** Sketch-set difference A \ B. */
-  def thetaAnotB(a: Column, b: Column, lgK: Int = 14): Column =
-    call_function("theta_set_op", a, b, lit("anotb"), lit(lgK))
+  def thetaAnotB(a: Column, b: Column): Column = theta_difference(a, b)
 
-  /** Estimated distinct count of a theta sketch. */
-  def thetaEstimate(sk: Column): Column =
-    call_function("theta_estimate", sk)
+  /** Estimated distinct count of a theta sketch, rounded (BIGINT). */
+  def thetaEstimate(sk: Column): Column = theta_sketch_estimate(sk)
 
   /** BPE tokenization under a trained merge list (see
     * [[graft.operators.Bpe]] / [[graft.expressions.BpeTokenize]]):
@@ -163,12 +162,19 @@ package object functions {
   /** Multiplicative split/priority hash on a stable numeric id
     * (Knuth's 2654435761), the id reduced mod a prime FIRST so the
     * product stays < 2^63 for any 64-bit id (ANSI mode throws on
-    * overflow rather than wrapping). Deterministic: no RNG, stable
-    * under re-partitioning and incremental appends. Shared by the
-    * train/val/test split (q53) and token-budget sampling (q59);
-    * mirror in oracle SQL as `id % 100000007 * 2654435761`.
+    * overflow rather than wrapping). A nonzero `salt` gives an
+    * independent ordering; it is added AFTER that reduction and
+    * reduced again (adding it to the raw id would overflow near
+    * Long.MaxValue). Deterministic: no RNG, stable under
+    * re-partitioning and incremental appends. Shared by the
+    * train/val/test split (q53) and, `% 2^32`, by every priority
+    * order (q59, q65, q73, q76, q104); mirror in oracle SQL as
+    * `id % 100000007 * 2654435761`, or salted as
+    * `(id % 100000007 + salt) % 100000007 * 2654435761`.
     */
-  def splitHash(id: Column): Column = id % 100000007L * 2654435761L
+  def splitHash(id: Column, salt: Long = 0L): Column =
+    if (salt == 0L) id % 100000007L * 2654435761L
+    else (id % 100000007L + salt) % 100000007L * 2654435761L
 
   /** Native codegen'd word n-gram shingles (see
     * [[graft.expressions.WordNgrams]]): all complete n-grams of

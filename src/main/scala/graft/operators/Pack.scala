@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{Q, QueryPack, Tables}
-import graft.functions.words
+import graft.functions.{splitHash, words}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,29 +17,39 @@ object Pack extends QueryPack {
 
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
 
-  /** Deterministic shuffle priority — q53/q59's multiplicative hash:
-    * stable under re-partitioning, appends, and engine changes.
+  /** Deterministic shuffle priority — q53/q59's multiplicative hash
+    * on the doc id, in [0, 2^32); a nonzero salt gives an independent
+    * order. Stable under re-partitioning, appends, and engine changes.
     */
-  private val pri = (col("doc_id") % 100000007L * 2654435761L % 4294967296L).as("pri")
+  private[operators] def priority(salt: Long = 0L): Column =
+    splitHash(col("doc_id"), salt) % 4294967296L
 
-  /** Sequence packing: concatenate each source's documents, in
-    * deterministic pseudo-random order, into back-to-back `seqLen`-
-    * token training sequences (GPT-style concat-then-chunk: documents
-    * may straddle a boundary; `seq_id`/`seq_off` locate each doc's
-    * start). The running token sum uses the SAME bucketed shape as
-    * q59's take-while (range-bucket the priority space, per-bucket
-    * totals prefix-summed — a tiny window — then in-bucket running
-    * sums offset by the bucket base): no single task ever sorts a
-    * whole source, and the largest sort partition shrinks
-    * buckets-fold. Unlike q59 nothing prunes — every document packs.
+  /** Per-source running token sum in [[priority]] order, bucketed —
+    * the one shape behind q59's take-while and q65's packing. A plain
+    * per-source running window sorts a whole source in one task (a
+    * billion-doc source = one straggler). Instead the priority space
+    * is range-bucketed (order-preserving: every doc in bucket i
+    * precedes bucket i+1, and priority ties share a bucket),
+    * per-(source, bucket) token totals are prefix-summed (≤ `buckets`
+    * rows per source — a tiny window, broadcast), and each bucket
+    * sorts only its own slice, its running sum offset by the bucket
+    * base. `cum_tok` is the exact global inclusive running sum; the
+    * largest sort partition shrinks `buckets`-fold. With a `budget`,
+    * buckets whose base already reaches it are pruned BEFORE the
+    * in-bucket sort (the bulk of a big stratum).
+    *
+    * Returns (doc_id, source, n_tok, pri, bkt, bbase, cum_tok).
     */
-  def packSequences(docsDf: DataFrame, seqLen: Long,
-      buckets: Int = 64): DataFrame = {
+  private[operators] def bucketedTokenSum(docsDf: DataFrame, nTok: Column,
+      buckets: Int, budget: Option[Long] = None): DataFrame = {
     val width = 4294967296L / buckets
     val base = docsDf
-      .select(col("doc_id"), col("source"),
-        size(words(col("text"))).cast("long").as("n_tok"), pri)
+      .select(col("doc_id"), col("source"), nTok.as("n_tok"), priority().as("pri"))
       .withColumn("bkt", floor(col("pri") / width).cast("int"))
+    // deliberately NOT checkpointed: the tokenization pass runs twice
+    // (bucket totals + probe side), but building the plan stays lazy,
+    // and the result recomputes under executor loss instead of dying
+    // with pinned checkpoint blocks
     val wB = Window.partitionBy(col("source")).orderBy(col("bkt").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val prefixes = base.groupBy(col("source"), col("bkt"))
@@ -49,12 +59,27 @@ object Pack extends QueryPack {
     val wD = Window.partitionBy(col("source"), col("bkt"))
       .orderBy(col("pri").asc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base.join(broadcast(prefixes), Seq("source", "bkt"))
-      .withColumn("start", col("bbase") + sum(col("n_tok")).over(wD) - col("n_tok"))
+    // prefix table is <= buckets rows per source — pin the broadcast
+    // rather than trusting stats propagation (PlanSpec asserts it)
+    val joined = base.join(broadcast(prefixes), Seq("source", "bkt"))
+    budget.fold(joined)(b => joined.where(col("bbase") < b))
+      .withColumn("cum_tok", col("bbase") + sum(col("n_tok")).over(wD))
+  }
+
+  /** Sequence packing: concatenate each source's documents, in
+    * deterministic pseudo-random order, into back-to-back `seqLen`-
+    * token training sequences (GPT-style concat-then-chunk: documents
+    * may straddle a boundary; `seq_id`/`seq_off` locate each doc's
+    * start). The running token sum is [[bucketedTokenSum]], q59's
+    * shape; unlike q59 nothing prunes — every document packs.
+    */
+  def packSequences(docsDf: DataFrame, seqLen: Long,
+      buckets: Int = 64): DataFrame =
+    bucketedTokenSum(docsDf, size(words(col("text"))).cast("long"), buckets)
+      .withColumn("start", col("cum_tok") - col("n_tok"))
       .select(col("doc_id"), col("source"), col("n_tok"),
         floor(col("start") / seqLen).cast("long").as("seq_id"),
         (col("start") % seqLen).as("seq_off"))
-  }
 
   val q65 = Q(
     "q65_seq_pack",
@@ -284,10 +309,7 @@ object Pack extends QueryPack {
     */
   def applyMixture(docsDf: DataFrame): DataFrame = {
     val w = mixtureWeights(docsDf).select(col("source"), col("weight"))
-    // id reduced mod the prime BEFORE the salt add (splitHash's rule):
-    // (id + salt) first would overflow ANSI-fatally near Long.MaxValue
-    val gate =
-      (col("doc_id") % 100000007L + 7919L) % 100000007L * 2654435761L % 4294967296L
+    val gate = priority(7919L)
     docsDf.select(col("doc_id"), col("source"))
       .join(broadcast(w), Seq("source"))
       .where(gate < col("weight") * lit(4294967296L))
@@ -356,8 +378,7 @@ object Pack extends QueryPack {
       val withDom = docs(s, d).select(col("doc_id"),
         concat(lit("d"), (col("doc_id") % 37).cast("string"),
           lit(".example.com")).as("domain"),
-        // same overflow-safe salt ordering as applyMixture's gate
-        ((col("doc_id") % 100000007L + 104729L) % 100000007L * 2654435761L % 4294967296L).as("pri"))
+        priority(104729L).as("pri"))
       capPerKey(withDom, "domain", "pri", "doc_id", k = 8)
         .select(col("doc_id"), col("domain"))
     },
@@ -391,7 +412,7 @@ object Pack extends QueryPack {
     val stratum = concat_ws("\u0001", dims.map(col): _*)
     val withPri = docsDf.select(
       (col("doc_id") +: dims.map(col)) :+ stratum.as("_stratum") :+
-        ((col("doc_id") % 100000007L + 7919L) % 100000007L * 2654435761L % 4294967296L).as("_pri"): _*)
+        priority(7919L).as("_pri"): _*)
     capPerKey(withPri, "_stratum", "_pri", "doc_id", k)
       .drop("_stratum", "_pri")
   }
@@ -431,8 +452,7 @@ object Pack extends QueryPack {
     val capped =
       if (maxDocsPerSource <= 0) deduped
       else capPerKey(
-        deduped.withColumn("_pri",
-          (col("doc_id") % 100000007L + 104729L) % 100000007L * 2654435761L % 4294967296L),
+        deduped.withColumn("_pri", priority(104729L)),
         "source", "_pri", "doc_id", maxDocsPerSource).drop("_pri")
     val sampled = capped.join(
       applyMixture(capped).select(col("doc_id")), Seq("doc_id"), "left_semi")

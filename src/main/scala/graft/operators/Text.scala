@@ -312,20 +312,11 @@ object Text extends QueryPack {
     * budget (so the budget may overshoot by at most one document,
     * never undershoot).
     *
-    * Scale shape — distributed take-while. A naive per-source running
-    * window sorts the WHOLE stratum in one task (a billion-doc source
-    * = one straggler). Instead the priority space is range-bucketed
-    * (order-preserving: every doc in bucket i precedes bucket i+1,
-    * and priority ties share a bucket), per-bucket token totals are
-    * prefix-summed per source (≤ `buckets` rows per source — a tiny
-    * window), and then:
-    *   - buckets whose running START is already ≥ budget are pruned
-    *     BEFORE any per-doc sort (the bulk of a big stratum),
-    *   - surviving buckets sort only their own 1/buckets slice, with
-    *     the bucket's base offset added to the in-bucket running sum —
-    *     reproducing the exact global cumulative sum.
-    * Output is identical to the single-window formulation
-    * (spec-pinned); the largest sort partition shrinks `buckets`-fold.
+    * Scale shape — distributed take-while over
+    * [[Pack.bucketedTokenSum]]: dead buckets (running START already
+    * ≥ budget) are pruned before any per-doc sort, and survivors sort
+    * only their own 1/buckets slice. Output is identical to the
+    * single-window formulation (spec-pinned).
     *
     * `nTok` is the per-document token accounting — whitespace words by
     * default (the oracle-expressible gate form); pass
@@ -334,36 +325,10 @@ object Text extends QueryPack {
     */
   def tokenBudgetSample(docsDf: DataFrame, tokensPerSource: Long,
       buckets: Int = 64,
-      nTok: Column = size(words(col("text"))).cast("long")): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val width = 4294967296L / buckets
-    val base = docsDf
-      .select(col("doc_id"), col("source"),
-        nTok.as("n_tok"),
-        (graft.functions.splitHash(col("doc_id")) % 4294967296L).as("pri"))
-      .withColumn("bkt", floor(col("pri") / width).cast("int"))
-    // deliberately NOT checkpointed: the tokenization pass runs twice
-    // (bucket totals + probe side), but building the plan stays lazy,
-    // and the result recomputes under executor loss instead of dying
-    // with pinned checkpoint blocks; callers reusing `base` hot can
-    // persist it themselves
-    val wB = Window.partitionBy(col("source")).orderBy(col("bkt").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val prefixes = base.groupBy(col("source"), col("bkt"))
-      .agg(sum(col("n_tok")).as("btok"))
-      .withColumn("bbase", sum(col("btok")).over(wB) - col("btok"))
-      .select(col("source"), col("bkt"), col("bbase"))
-    val wD = Window.partitionBy(col("source"), col("bkt"))
-      .orderBy(col("pri").asc, col("doc_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // prefix table is <= buckets rows per source — pin the broadcast
-    // rather than trusting stats propagation (PlanSpec asserts it)
-    base.join(broadcast(prefixes), Seq("source", "bkt"))
-      .where(col("bbase") < tokensPerSource) // prune dead buckets pre-sort
-      .withColumn("cum_tok", col("bbase") + sum(col("n_tok")).over(wD))
+      nTok: Column = size(words(col("text"))).cast("long")): DataFrame =
+    Pack.bucketedTokenSum(docsDf, nTok, buckets, Some(tokensPerSource))
       .where(col("cum_tok") - col("n_tok") < tokensPerSource)
       .select(col("doc_id"), col("source"), col("n_tok"), col("cum_tok"))
-  }
 
   /** The single-window formulation of `tokenBudgetSample` — the
     * readable spec of the semantics, used only to pin the bucketed
@@ -373,13 +338,12 @@ object Text extends QueryPack {
   private[graft] def tokenBudgetSampleSingleSort(
       docsDf: DataFrame, tokensPerSource: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pri = graft.functions.splitHash(col("doc_id")) % 4294967296L
     val w = Window.partitionBy(col("source"))
       .orderBy(col("pri").asc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     docsDf
       .select(col("doc_id"), col("source"),
-        size(words(col("text"))).cast("long").as("n_tok"), pri.as("pri"))
+        size(words(col("text"))).cast("long").as("n_tok"), Pack.priority().as("pri"))
       .withColumn("cum_tok", sum(col("n_tok")).over(w))
       .where(col("cum_tok") - col("n_tok") < tokensPerSource)
       .select(col("doc_id"), col("source"), col("n_tok"), col("cum_tok"))

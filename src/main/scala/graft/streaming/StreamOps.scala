@@ -111,10 +111,11 @@ object StreamOps extends QueryPack {
     * per-source theta sketches maintained ON the document stream —
     * literally the same declarative plan (the batch function applies
     * unchanged to a streaming DataFrame; this wrapper exists to pin
-    * the contract). State is ONE lgK-sized union buffer per source
-    * (kilobytes; sources are a mixture's tens, not millions), no
-    * watermark needed: theta union is order- and duplicate-insensitive
-    * so late or redelivered documents fold in exactly. Run in
+    * the contract). State is ONE lgK-sized theta sketch per source
+    * (Spark's `theta_sketch_agg`; kilobytes; sources are a mixture's
+    * tens, not millions), no watermark needed: theta union is order-
+    * and duplicate-insensitive so late or redelivered documents fold
+    * in exactly. Run in
     * complete/update output mode; downstream set-ops
     * (thetaIntersect / vocabOverlapSketch machinery) consume each
     * emitted snapshot as the batch artifact.

@@ -316,6 +316,35 @@ class FunctionsSpec extends SparkSpec {
     math.abs(back - 100000.0) should be <= 150000.0 * 0.032
   }
 
+  test("theta sketches round-trip through parquet as BINARY; null key hashes are skipped") {
+    // a stored sketch column is the cross-run artifact: read back, it
+    // must compose exactly like the in-memory sketches (30k keys each,
+    // past 2^14 nominal entries, so both are in estimation mode)
+    val a = (1L to 30000L).toDF("k").withColumn("h", xxhash64($"k"))
+      .agg(thetaAgg($"h").as("ska"))
+    val b = (20001L to 50000L).toDF("k").withColumn("h", xxhash64($"k"))
+      .agg(thetaAgg($"h").as("skb"))
+    val both = a.crossJoin(b)
+    val dir = java.nio.file.Files.createTempDirectory("graft-theta").toString + "/sk"
+    both.write.parquet(dir)
+    val back = spark.read.parquet(dir)
+    back.schema("ska").dataType shouldBe org.apache.spark.sql.types.BinaryType
+    def ests(df: org.apache.spark.sql.DataFrame): (Long, Long) = df.select(
+        thetaEstimate(thetaUnionOf($"ska", $"skb")),
+        thetaEstimate(thetaIntersect($"ska", $"skb")))
+      .as[(Long, Long)].head()
+    ests(back) shouldBe ests(both)
+    // null hashes are no-ops: every 7th key nulled out gives the same
+    // bytes as the column without those rows
+    val keys = (1L to 5000L).toDF("k")
+    val withNulls = keys.select(
+      when($"k" % 7 === 0, lit(null)).otherwise(xxhash64($"k")).as("h"))
+    val without = keys.where($"k" % 7 =!= 0).select(xxhash64($"k").as("h"))
+    def bytes(df: org.apache.spark.sql.DataFrame): Seq[Byte] =
+      df.agg(thetaAgg($"h")).as[Array[Byte]].head().toSeq
+    bytes(withNulls) shouldBe bytes(without)
+  }
+
   test("vocabOverlapSketch estimates match the exact pairwise overlap on the gate corpus") {
     val full = Tables.documents(spark, sfDir)
     val exact = graft.operators.Text.vocabOverlapThetaAudit(full)

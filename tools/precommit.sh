@@ -72,6 +72,13 @@ if (( $(grep -rn '\.foreachBatch(' src/main | wc -l) > 1 )) ||
   echo "more than one .foreachBatch( in src/main — use util.perBatch" >&2
   exit 1
 fi
+# one sketch source: sketch families come from Spark's built-ins
+# (theta_*) or from graft's own expressions/, never a second copy
+# written against the DataSketches library
+if grep -rn 'org\.apache\.datasketches' src/main; then
+  echo "org.apache.datasketches under src/main — use Spark's built-in sketches" >&2
+  exit 1
+fi
 echo "compile green"
 # net src/main Scala lines — the design-size number ROADMAP tracks
 echo "src/main scala lines: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l)"
